@@ -6,8 +6,11 @@ Public API surface (see README.md for the full layout):
 - aggregation: ddsketch / ddsketch_percentile / ddsketch_percentile_of /
   ddsketch_avg / ddsketch_sum (+ *_from_sketches), sketch_agg (generic),
   merge_sketches
-- extraction UDFs: sketch_quantile / sketch_rank_of / sketch_trimmed /
-  sketch_count / sketch_info / sketch_buckets / sketch_union / sketch_add
+- extraction UDFs: one row function per scalar in functions/rows.py,
+  exposed as Column helpers (functions/sketch_udfs.py: sketch_quantile /
+  sketch_rank_of / sketch_trimmed / sketch_count / sketch_info /
+  sketch_buckets / sketch_union / sketch_add; functions/estimators.py)
+  and as SQL functions (functions/register.py: register_sql_functions)
 - training-data ops: exact_dedup, minhash_lsh_pairs, simhash(_dup_pairs),
   ngram_jaccard_pairs, connected_components, hash_sample, cosine_topk,
   ann_lsh_topk, cosine_dup_pairs_lsh

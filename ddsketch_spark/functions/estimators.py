@@ -1,95 +1,38 @@
-"""Scalar pandas UDFs extracting estimates from the sibling sketches'
-BinaryType columns (HLL / count-min / Bloom / KLL / t-digest) — the
-FINALFUNC layer for the north rule's sketch family, vectorized per Arrow
-batch like :mod:`ddsketch_spark.functions.sketch_udfs`.
+"""Estimates from the sibling sketches' BinaryType columns (HLL /
+count-min / Bloom / KLL / t-digest) as Column expressions — the
+FINALFUNC layer for the north rule's sketch family, over the same row
+functions as their SQL names (:mod:`ddsketch_spark.functions.rows`).
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, functions as F
-from pyspark.sql.types import (
-    ArrayType, BooleanType, DoubleType, LongType,
-)
+from pyspark.sql.types import ArrayType, BooleanType, DoubleType, LongType
 
-from ddsketch_spark.core.bloom import Bloom
-from ddsketch_spark.core.cms import CMS
-from ddsketch_spark.core.hll import HLL
-from ddsketch_spark.core.kll import KLL
-from ddsketch_spark.core.tdigest import TDigest
+from ddsketch_spark.functions import rows
+from ddsketch_spark.functions.rows import per_value, vectorize
 
 
 def hll_estimate(col) -> Column:
     """Distinct-count estimate from a serialized HLL."""
-    @F.pandas_udf(DoubleType())
-    def _e(s: pd.Series) -> pd.Series:
-        return s.map(lambda b: HLL.from_bytes(bytes(b)).estimate()
-                     if b is not None else None)
-    return _e(col)
+    return vectorize(rows.hll_ndv, DoubleType())(col)
 
 
 def cms_estimate(col, hashes: list[int]) -> Column:
     """Frequency estimates (int64 array) for pre-hashed probe values."""
-    hs = [int(h) for h in hashes]
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _e(s: pd.Series) -> pd.Series:
-        return s.map(lambda b: CMS.from_bytes(bytes(b)).estimate(hs).tolist()
-                     if b is not None else None)
-    return _e(col)
+    return vectorize(rows.cms_estimate, ArrayType(LongType()))(
+        col, F.array(*[F.lit(int(h)) for h in hashes]))
 
 
 def bloom_contains(col, hashes: list[int]) -> Column:
     """Membership booleans for pre-hashed probe values."""
-    hs = [int(h) for h in hashes]
-
-    @F.pandas_udf(ArrayType(BooleanType()))
-    def _c(s: pd.Series) -> pd.Series:
-        return s.map(lambda b: Bloom.from_bytes(bytes(b)).contains(hs).tolist()
-                     if b is not None else None)
-    return _c(col)
+    return vectorize(rows.bloom_contains, ArrayType(BooleanType()))(
+        col, F.array(*[F.lit(int(h)) for h in hashes]))
 
 
-def _quantile_udf(cls):
-    def maker(col, q) -> Column:
-        if np.isscalar(q):
-            @F.pandas_udf(DoubleType())
-            def _q(s: pd.Series) -> pd.Series:
-                return s.map(lambda b: float(cls.from_bytes(bytes(b)).quantile(q))
-                             if b is not None else None)
-            return _q(col)
-        qs = [float(x) for x in q]
-
-        @F.pandas_udf(ArrayType(DoubleType()))
-        def _qa(s: pd.Series) -> pd.Series:
-            return s.map(lambda b: cls.from_bytes(bytes(b)).quantile(qs).tolist()
-                         if b is not None else None)
-        return _qa(col)
-    return maker
+def kll_quantile(col, q) -> Column:
+    return per_value(rows.kll_quantile, col, q)
 
 
-kll_quantile = _quantile_udf(KLL)
-tdigest_quantile = _quantile_udf(TDigest)
-
-
-def _rank_udf(cls):
-    def maker(col, x) -> Column:
-        if np.isscalar(x):
-            @F.pandas_udf(DoubleType())
-            def _r(s: pd.Series) -> pd.Series:
-                return s.map(lambda b: float(cls.from_bytes(bytes(b)).rank_of(x))
-                             if b is not None else None)
-            return _r(col)
-        xs = [float(v) for v in x]
-
-        @F.pandas_udf(ArrayType(DoubleType()))
-        def _ra(s: pd.Series) -> pd.Series:
-            return s.map(lambda b: cls.from_bytes(bytes(b)).rank_of(xs).tolist()
-                         if b is not None else None)
-        return _ra(col)
-    return maker
-
-
-kll_rank_of = _rank_udf(KLL)
-tdigest_rank_of = _rank_udf(TDigest)
+def tdigest_quantile(col, q) -> Column:
+    return per_value(rows.tdigest_quantile, col, q)

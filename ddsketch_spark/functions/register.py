@@ -1,220 +1,22 @@
-"""Spark SQL function registration — lets SQL users query sketch tables
-the way the reference's SQL users do::
-
-    SELECT lang, ddsketch_percentile(sketch, 0.95) FROM lang_sketches
-    SELECT ddsketch_count(sketch), ddsketch_out(sketch) FROM ...
-    SELECT ddsketch_union(a.sketch, b.sketch) FROM ...
-
-Aggregation (building sketches from raw rows) stays a DataFrame-API
-operation (`api.ddsketch` / `sketch_agg`) because PySpark cannot register
-partial-aggregating UDAFs from Python — the 2-stage pipeline IS that UDAF
-(SURVEY §3.2). Everything downstream of a built sketch is available in
-SQL after ``register_sql_functions(spark)``.
-
-Unlike the closure-parameter UDFs in sketch_udfs.py, these take their
-arguments as columns, so they work with SQL literals.
+"""Spark SQL names for the sketch scalars, e.g.
+``SELECT lang, ddsketch_percentile(sketch, 0.95) FROM lang_sketches``.
+Building sketches stays a DataFrame-API operation (`api.ddsketch` /
+`sketch_agg`): PySpark cannot register partial-aggregating UDAFs from
+Python, and the 2-stage pipeline IS that UDAF (SURVEY §3.2).
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import SparkSession, functions as F
-from pyspark.sql.types import BinaryType, DoubleType, LongType, StringType
+from pyspark.sql import SparkSession
 
-from ddsketch_spark.core.ddsketch import DDSketch, union as _union
+from ddsketch_spark.functions.rows import SQL_FUNCTIONS, vectorize
 
 
 def register_sql_functions(spark: SparkSession) -> None:
-    @F.pandas_udf(DoubleType())
-    def ddsketch_percentile(s: pd.Series, q: pd.Series) -> pd.Series:
-        return pd.Series([
-            float(DDSketch.from_bytes(bytes(b)).quantile(float(qq)))
-            if b is not None and qq is not None else None
-            for b, qq in zip(s, q)])
-
-    @F.pandas_udf(DoubleType())
-    def ddsketch_percentile_of(s: pd.Series, x: pd.Series) -> pd.Series:
-        return pd.Series([
-            float(DDSketch.from_bytes(bytes(b)).rank_of(float(xx)))
-            if b is not None and xx is not None else None
-            for b, xx in zip(s, x)])
-
-    @F.pandas_udf(LongType())
-    def ddsketch_count(s: pd.Series) -> pd.Series:
-        import struct
-        return s.map(lambda b: struct.unpack_from(">q", bytes(b), 4)[0]
-                     if b is not None else None)
-
-    @F.pandas_udf(DoubleType())
-    def ddsketch_sketch_sum(s: pd.Series, lo: pd.Series, hi: pd.Series) -> pd.Series:
-        return pd.Series([
-            DDSketch.from_bytes(bytes(b)).trimmed_sum(float(l), float(h))
-            if b is not None else None
-            for b, l, h in zip(s, lo, hi)])
-
-    @F.pandas_udf(DoubleType())
-    def ddsketch_sketch_avg(s: pd.Series, lo: pd.Series, hi: pd.Series) -> pd.Series:
-        return pd.Series([
-            DDSketch.from_bytes(bytes(b)).trimmed_avg(float(l), float(h))
-            if b is not None else None
-            for b, l, h in zip(s, lo, hi)])
-
-    @F.pandas_udf(BinaryType())
-    def ddsketch_union(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = []
-        for x, y in zip(a, b):
-            u = _union(DDSketch.from_bytes(bytes(x)) if x is not None else None,
-                       DDSketch.from_bytes(bytes(y)) if y is not None else None)
-            out.append(u.to_bytes() if u is not None else None)
-        return pd.Series(out, dtype=object)
-
-    @F.pandas_udf(BinaryType())
-    def ddsketch_add(s: pd.Series, v: pd.Series, alpha: pd.Series,
-                     nb: pd.Series) -> pd.Series:
-        out = []
-        for b, x, a, n in zip(s, v, alpha, nb):
-            sk = (DDSketch.from_bytes(bytes(b)) if b is not None
-                  else DDSketch(float(a), int(n)))
-            if x is not None and not (isinstance(x, float) and np.isnan(x)):
-                sk.add(float(x))
-            out.append(sk.to_bytes() if sk.count > 0 else None)
-        return pd.Series(out, dtype=object)
-
-    @F.pandas_udf(StringType())
-    def ddsketch_out(s: pd.Series) -> pd.Series:
-        return s.map(lambda b: DDSketch.from_bytes(bytes(b)).to_string()
-                     if b is not None else None)
-
-    @F.pandas_udf(BinaryType())
-    def ddsketch_in(t: pd.Series) -> pd.Series:
-        return t.map(lambda x: DDSketch.from_string(x).to_bytes()
-                     if x is not None else None)
-
-    from pyspark.sql.types import StructField, StructType
-
-    _bounds_t = StructType([StructField("lo", DoubleType(), True),
-                            StructField("est", DoubleType(), True),
-                            StructField("hi", DoubleType(), True)])
-
-    @F.pandas_udf(_bounds_t)
-    def ddsketch_percentile_bounds(s: pd.Series, q: pd.Series) -> pd.DataFrame:
-        los, ests, his = [], [], []
-        for b, qq in zip(s, q):
-            if b is None or qq is None:
-                los.append(None); ests.append(None); his.append(None)
-                continue
-            sk = DDSketch.from_bytes(bytes(b))
-            e = float(sk.quantile(float(qq)))
-            a = sk.alpha
-            if e != e:
-                # empty sketch (r5 ADVICE): no zero-width claim around NaN
-                los.append(None); ests.append(None); his.append(None)
-                continue
-            if e > 0:
-                lo, hi = e / (1.0 + a), e / (1.0 - a)
-            elif e < 0:
-                lo, hi = e / (1.0 - a), e / (1.0 + a)
-            else:
-                lo = hi = 0.0
-            los.append(lo); ests.append(e); his.append(hi)
-        return pd.DataFrame({"lo": los, "est": ests, "hi": his})
-
-    for name, fn in [
-        ("ddsketch_percentile", ddsketch_percentile),
-        ("ddsketch_percentile_bounds", ddsketch_percentile_bounds),
-        ("ddsketch_percentile_of", ddsketch_percentile_of),
-        ("ddsketch_count", ddsketch_count),
-        ("ddsketch_sketch_sum", ddsketch_sketch_sum),
-        ("ddsketch_sketch_avg", ddsketch_sketch_avg),
-        ("ddsketch_union", ddsketch_union),
-        ("ddsketch_add", ddsketch_add),
-        ("ddsketch_out", ddsketch_out),
-        ("ddsketch_in", ddsketch_in),
-    ]:
-        spark.udf.register(name, fn)
+    """Register every name in :data:`rows.SQL_FUNCTIONS`: the DDSketch
+    scalar surface and the sibling-sketch estimators."""
+    for name, entry in SQL_FUNCTIONS.items():
+        spark.udf.register(name, vectorize(*entry))
 
 
-def register_sibling_sql_functions(spark: SparkSession) -> None:
-    """SQL-callable scalar surface for the sibling sketches (north-rule
-    additions): NDV / frequency / membership / quantile extraction over
-    stored sketch BINARY columns, so `SELECT hll_ndv(sketch) FROM t`
-    works like the reference's SQL extraction functions do for DDSketch."""
-    from pyspark.sql.types import BooleanType, DoubleType, LongType
-
-    from ddsketch_spark.core import kll as kll_mod
-    from ddsketch_spark.core import tdigest as td_mod
-    from ddsketch_spark.core.bloom import Bloom
-    from ddsketch_spark.core.cms import CMS
-    from ddsketch_spark.core.hll import HLL
-
-    @F.pandas_udf(DoubleType())
-    def hll_ndv(s: pd.Series) -> pd.Series:
-        return s.map(lambda b: float(HLL.from_bytes(bytes(b)).estimate())
-                     if b is not None else None)
-
-    @F.pandas_udf(LongType())
-    def cms_freq(s: pd.Series, h: pd.Series) -> pd.Series:
-        return pd.Series([
-            int(CMS.from_bytes(bytes(b)).estimate([int(x)])[0])
-            if b is not None and x is not None else None
-            for b, x in zip(s, h)], dtype="object")
-
-    @F.pandas_udf(BooleanType())
-    def bloom_might_contain(s: pd.Series, h: pd.Series) -> pd.Series:
-        return pd.Series([
-            bool(Bloom.from_bytes(bytes(b)).contains([int(x)])[0])
-            if b is not None and x is not None else None
-            for b, x in zip(s, h)], dtype="object")
-
-    @F.pandas_udf(DoubleType())
-    def kll_quantile(s: pd.Series, q: pd.Series) -> pd.Series:
-        return pd.Series([
-            float(kll_mod.from_bytes(bytes(b)).quantile(float(x)))
-            if b is not None and x is not None else None
-            for b, x in zip(s, q)], dtype="object")
-
-    @F.pandas_udf(DoubleType())
-    def tdigest_quantile(s: pd.Series, q: pd.Series) -> pd.Series:
-        return pd.Series([
-            float(td_mod.from_bytes(bytes(b)).quantile(float(x)))
-            if b is not None and x is not None else None
-            for b, x in zip(s, q)], dtype="object")
-
-    from ddsketch_spark.core import kmv as kmv_mod
-    from ddsketch_spark.core import spacesaving as ss_mod
-
-    @F.pandas_udf(DoubleType())
-    def kmv_ndv(s: pd.Series) -> pd.Series:
-        return s.map(lambda b: float(kmv_mod.from_bytes(bytes(b)).estimate())
-                     if b is not None else None)
-
-    @F.pandas_udf(DoubleType())
-    def kmv_intersection(s1: pd.Series, s2: pd.Series) -> pd.Series:
-        return pd.Series([
-            float(kmv_mod.intersection_estimate(
-                kmv_mod.from_bytes(bytes(a)), kmv_mod.from_bytes(bytes(b))))
-            if a is not None and b is not None else None
-            for a, b in zip(s1, s2)], dtype="object")
-
-    @F.pandas_udf(LongType())
-    def spacesaving_count(s: pd.Series, item: pd.Series) -> pd.Series:
-        def go(b, x):
-            if b is None or x is None:
-                return None
-            e = ss_mod.from_bytes(bytes(b)).get(str(x))
-            return int(e[0]) if e is not None else 0
-        return pd.Series([go(b, x) for b, x in zip(s, item)],
-                         dtype="object")
-
-    for name, fn in [
-        ("hll_ndv", hll_ndv),
-        ("cms_freq", cms_freq),
-        ("bloom_might_contain", bloom_might_contain),
-        ("kll_quantile", kll_quantile),
-        ("tdigest_quantile", tdigest_quantile),
-        ("kmv_ndv", kmv_ndv),
-        ("kmv_intersection", kmv_intersection),
-        ("spacesaving_count", spacesaving_count),
-    ]:
-        spark.udf.register(name, fn)
+register_sibling_sql_functions = register_sql_functions

@@ -1,271 +1,97 @@
-"""Scalar pandas UDFs over BinaryType sketch columns — the FINALFUNC layer
-plus the reference's scalar function surface (SURVEY §2.2):
-
-ddsketch_count / ddsketch_add / ddsketch_union / ddsketch_info /
-ddsketch_buckets / text+binary conversions, all Arrow-vectorized
-(one Python call per batch of sketches, never per row).
+"""DDSketch scalars as Column expressions over BinaryType sketch columns —
+the FINALFUNC layer plus the reference's scalar surface (SURVEY §2.2),
+over the row functions in :mod:`ddsketch_spark.functions.rows`.
 """
 
 from __future__ import annotations
 
-from typing import Sequence
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, functions as F
 from pyspark.sql.types import (
-    ArrayType, BinaryType, DoubleType, IntegerType, LongType,
-    StringType, StructField, StructType,
+    ArrayType, BinaryType, DoubleType, LongType, StringType,
 )
 
-from ddsketch_spark.core.ddsketch import DDSketch, union as _union
+from ddsketch_spark.functions import rows
+from ddsketch_spark.functions.rows import (
+    BUCKET_SCHEMA, INFO_SCHEMA, per_value, vectorize,
+)
 
 
 def sketch_quantile(col, q) -> Column:
-    """Extract quantile(s) from serialized sketches.
-
-    ``q`` scalar -> DoubleType column; sequence -> ArrayType(DoubleType).
-    Mirrors ddsketch_percentile finalfuncs (ddsketch.c:2047-2067, 2124-2146).
-    """
-    if np.isscalar(q):
-        @F.pandas_udf(DoubleType())
-        def _q(s: pd.Series) -> pd.Series:
-            return s.map(lambda b: float(DDSketch.from_bytes(bytes(b)).quantile(q))
-                         if b is not None else None)
-        return _q(col)
-
-    qs = [float(x) for x in q]
-
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def _qa(s: pd.Series) -> pd.Series:
-        return s.map(lambda b: DDSketch.from_bytes(bytes(b)).quantile(qs).tolist()
-                     if b is not None else None)
-    return _qa(col)
+    """Quantile(s) — ddsketch_percentile finalfuncs. ``q`` scalar ->
+    DoubleType column; sequence -> ArrayType(DoubleType)."""
+    return per_value(rows.dd_quantile, col, q)
 
 
 def sketch_rank_of(col, x) -> Column:
-    """Inverse quantile — ddsketch_percentile_of finalfuncs
-    (ddsketch.c:2073-2093, 2152-2174)."""
-    if np.isscalar(x):
-        @F.pandas_udf(DoubleType())
-        def _r(s: pd.Series) -> pd.Series:
-            return s.map(lambda b: float(DDSketch.from_bytes(bytes(b)).rank_of(x))
-                         if b is not None else None)
-        return _r(col)
-
-    xs = [float(v) for v in x]
-
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def _ra(s: pd.Series) -> pd.Series:
-        return s.map(lambda b: DDSketch.from_bytes(bytes(b)).rank_of(xs).tolist()
-                     if b is not None else None)
-    return _ra(col)
+    """Inverse quantile — ddsketch_percentile_of finalfuncs."""
+    return per_value(rows.dd_rank, col, x)
 
 
 def sketch_trimmed(col, low: float, high: float, kind: str,
                    correct_negatives: bool = False) -> Column:
-    """Trimmed sum/avg — ddsketch.c:3764-3822 (positive-domain semantics by
-    default; ``correct_negatives=True`` opts into the sign-correct
-    zero-straddling walk, core/ddsketch.py _trimmed)."""
+    """Trimmed sum/avg — ddsketch.c:3764-3822; ``correct_negatives=True``
+    opts into the sign-correct zero-straddling walk (core/ddsketch.py)."""
     assert kind in ("sum", "avg")
-
-    @F.pandas_udf(DoubleType())
-    def _t(s: pd.Series) -> pd.Series:
-        def go(b):
-            if b is None:
-                return None
-            sk = DDSketch.from_bytes(bytes(b))
-            return (sk.trimmed_sum(low, high, correct_negatives)
-                    if kind == "sum"
-                    else sk.trimmed_avg(low, high, correct_negatives))
-        return s.map(go)
-    return _t(col)
+    return vectorize(rows.dd_trimmed(kind, bool(correct_negatives)),
+                     DoubleType())(col, F.lit(float(low)), F.lit(float(high)))
 
 
 def sketch_collapse(col, maxbuckets: int) -> Column:
-    """Re-compress stored sketches to a tighter bucket budget via
-    UDDSketch uniform collapse (core/ddsketch.py with_maxbuckets; the
-    overflow fix the reference README names at README.md:19-26) — the
-    storage-downgrade scalar: archived fine-alpha sketches shrink to a
-    coarser budget without touching raw data. Deterministic: ceil-halving
-    of integer bucket indexes, independent of build/merge order."""
-    @F.pandas_udf(BinaryType())
-    def _cl(s: pd.Series) -> pd.Series:
-        return s.map(lambda b: DDSketch.from_bytes(bytes(b))
-                     .with_maxbuckets(maxbuckets).to_bytes()
-                     if b is not None else None)
-    return _cl(col)
+    """Re-compress stored sketches to a tighter bucket budget by UDDSketch
+    uniform collapse: ceil-halving of bucket indexes, order-independent."""
+    return vectorize(rows.dd_collapse, BinaryType())(col, F.lit(int(maxbuckets)))
 
 
 def sketch_count(col) -> Column:
-    """Total item count — ddsketch_count (ddsketch.c:3032-3038). Reads the
-    count straight out of the canonical header, no full deserialization."""
-    @F.pandas_udf(LongType())
-    def _c(s: pd.Series) -> pd.Series:
-        import struct
-        return s.map(lambda b: struct.unpack_from(">q", bytes(b), 4)[0]
-                     if b is not None else None)
-    return _c(col)
-
-
-INFO_SCHEMA = StructType([
-    StructField("bytes", LongType()),
-    StructField("flags", IntegerType()),
-    StructField("alpha", DoubleType()),
-    StructField("count", LongType()),
-    StructField("zero_count", LongType()),
-    StructField("maxbuckets", IntegerType()),
-    StructField("negative_buckets", IntegerType()),
-    StructField("positive_buckets", IntegerType()),
-    StructField("min_indexable", DoubleType()),
-    StructField("max_indexable", DoubleType()),
-])
+    """Total item count — ddsketch_count."""
+    return vectorize(rows.dd_count, LongType())(col)
 
 
 def sketch_info(col) -> Column:
-    """Introspection struct — ddsketch_info (ddsketch.c:3186-3228)."""
-    @F.pandas_udf(INFO_SCHEMA)
-    def _i(s: pd.Series) -> pd.DataFrame:
-        rows = []
-        for b in s:
-            if b is None:
-                rows.append({f.name: None for f in INFO_SCHEMA.fields})
-                continue
-            d = DDSketch.from_bytes(bytes(b)).info()
-            rows.append(d)
-        return pd.DataFrame(rows)
-    return _i(col)
-
-
-BUCKET_SCHEMA = ArrayType(StructType([
-    StructField("index", IntegerType()),
-    StructField("bucket_index", IntegerType()),
-    StructField("lower", DoubleType()),
-    StructField("upper", DoubleType()),
-    StructField("length", DoubleType()),
-    StructField("count", LongType()),
-]))
+    """Introspection struct — ddsketch_info."""
+    return vectorize(rows.dd_info, INFO_SCHEMA)(col)
 
 
 def sketch_buckets(col) -> Column:
-    """Per-bucket rows (use with ``F.explode``) — the set-returning
-    ddsketch_buckets (ddsketch.c:3230-3298)."""
-    @F.pandas_udf(BUCKET_SCHEMA)
-    def _b(s: pd.Series) -> pd.Series:
-        return s.map(lambda b: DDSketch.from_bytes(bytes(b)).buckets()
-                     if b is not None else None)
-    return _b(col)
+    """Per-bucket rows (use with ``F.explode``) — ddsketch_buckets."""
+    return vectorize(rows.dd_buckets, BUCKET_SCHEMA)(col)
 
 
 def sketch_union(a, b) -> Column:
-    """NULL-tolerant two-sketch merge — ddsketch_union (ddsketch.c:2605-2648)."""
-    @F.pandas_udf(BinaryType())
-    def _u(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        out = []
-        for x, y in zip(sa, sb):
-            u = _union(
-                DDSketch.from_bytes(bytes(x)) if x is not None else None,
-                DDSketch.from_bytes(bytes(y)) if y is not None else None,
-            )
-            out.append(u.to_bytes() if u is not None else None)
-        return pd.Series(out, dtype=object)
-    return _u(a, b)
+    """NULL-tolerant two-sketch merge — ddsketch_union."""
+    return vectorize(rows.dd_union, BinaryType(), 2)(a, b)
 
 
 def sketch_add(col, value, count: int = 1,
                alpha: float = 0.01, nbuckets: int = 2048) -> Column:
-    """Incremental insert into stored sketches — ddsketch_add
-    (ddsketch.c:2402-2526). ``value`` may be a literal or a Column; a NULL
-    sketch is initialized fresh with (alpha, nbuckets), like the reference."""
+    """Incremental insert — ddsketch_add. ``value`` may be a literal or a
+    Column; a NULL sketch is initialized fresh with (alpha, nbuckets)."""
     value_col = value if isinstance(value, Column) else F.lit(float(value))
-
-    @F.pandas_udf(BinaryType())
-    def _a(s: pd.Series, v: pd.Series) -> pd.Series:
-        out = []
-        for b, x in zip(s, v):
-            sk = DDSketch.from_bytes(bytes(b)) if b is not None else DDSketch(alpha, nbuckets)
-            if x is not None and not (isinstance(x, float) and np.isnan(x)):
-                sk.add(float(x), count)
-            out.append(sk.to_bytes() if sk.count > 0 else None)
-        return pd.Series(out, dtype=object)
-    return _a(col, value_col)
+    return vectorize(rows.dd_add(count), BinaryType(), 4)(
+        col, value_col, F.lit(float(alpha)), F.lit(int(nbuckets)))
 
 
 def sketch_to_string(col) -> Column:
-    @F.pandas_udf(StringType())
-    def _s(s: pd.Series) -> pd.Series:
-        return s.map(lambda b: DDSketch.from_bytes(bytes(b)).to_string()
-                     if b is not None else None)
-    return _s(col)
+    return vectorize(rows.dd_out, StringType())(col)
 
 
 def sketch_from_string(col) -> Column:
-    @F.pandas_udf(BinaryType())
-    def _p(s: pd.Series) -> pd.Series:
-        return s.map(lambda t: DDSketch.from_string(t).to_bytes()
-                     if t is not None else None)
-    return _p(col)
+    return vectorize(rows.dd_in, BinaryType())(col)
 
 
 def sketch_add_array(col, values_col,
                      alpha: float = 0.01, nbuckets: int = 2048) -> Column:
-    """Bulk incremental insert — ddsketch_add(sketch, values float8[])
-    (ddsketch.c:2539-2595): amortizes the deserialize/reserialize over an
-    array of values. NULL sketch initializes fresh; NULLs in the array are
-    skipped."""
+    """Bulk incremental insert — ddsketch_add(sketch, values float8[]).
+    NULL sketch initializes fresh; NULLs in the array are skipped."""
     vcol = values_col if isinstance(values_col, Column) else F.col(values_col)
-
-    @F.pandas_udf(BinaryType())
-    def _aa(s: pd.Series, vs: pd.Series) -> pd.Series:
-        out = []
-        for b, arr in zip(s, vs):
-            sk = DDSketch.from_bytes(bytes(b)) if b is not None else DDSketch(alpha, nbuckets)
-            if arr is not None and len(arr):
-                sk.update(np.asarray(arr, dtype=np.float64))
-            out.append(sk.to_bytes() if sk.count > 0 else None)
-        return pd.Series(out, dtype=object)
-    return _aa(col, vcol)
+    return vectorize(rows.dd_add_array, BinaryType(), 4)(
+        col, vcol, F.lit(float(alpha)), F.lit(int(nbuckets)))
 
 
 def sketch_quantile_bounds(col, q) -> Column:
-    """Quantile estimate with its GUARANTEED error envelope: for each
-    requested q, a struct ``(lo, est, hi)`` where the true q-quantile v
-    satisfies ``lo <= v <= hi`` whenever v's bucket survived un-collapsed
-    — DDSketch's accuracy contract ``|est - v| <= alpha * |v|`` inverted
-    to ``v in [est/(1+alpha), est/(1-alpha)]`` (signs flipped for
-    negative estimates; exact zero has zero width). The alpha used is
-    the SKETCH'S OWN current alpha (after any UDDSketch collapses), so
-    the envelope stays honest for collapse-mode sketches."""
-    from pyspark.sql.types import StructType
-
-    qs = [float(q)] if np.isscalar(q) else [float(x) for x in q]
-    field = StructType([
-        StructField("lo", DoubleType(), True),
-        StructField("est", DoubleType(), True),
-        StructField("hi", DoubleType(), True),
-    ])
-
-    def bounds(b):
-        s = DDSketch.from_bytes(bytes(b))
-        a = s.alpha
-        out = []
-        for e in s.quantile(qs):
-            e = float(e)
-            if e != e:
-                # empty sketch: no estimate exists — an all-None struct,
-                # never a zero-width [0, 0] claim around NaN (r5 ADVICE)
-                out.append({"lo": None, "est": None, "hi": None})
-                continue
-            if e > 0:
-                lo, hi = e / (1.0 + a), e / (1.0 - a)
-            elif e < 0:
-                lo, hi = e / (1.0 - a), e / (1.0 + a)
-            else:
-                lo = hi = 0.0
-            out.append({"lo": lo, "est": e, "hi": hi})
-        return out
-
-    @F.pandas_udf(ArrayType(field))
-    def _qb(s: pd.Series) -> pd.Series:
-        return s.map(lambda b: bounds(b) if b is not None else None)
-    return _qb(col)
+    """Array of guaranteed ``(lo, est, hi)`` envelopes, one per requested q
+    (a scalar ``q`` gives a one-element array) — see :func:`rows.dd_bounds`."""
+    qs = [q] if np.isscalar(q) else q
+    return vectorize(rows.dd_bounds, ArrayType(rows.BOUNDS_SCHEMA))(
+        col, F.array(*[F.lit(float(x)) for x in qs]))

@@ -38,7 +38,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
-    BinaryType, LongType, StructField, StructType,
+    BinaryType, DoubleType, LongType, StructField, StructType,
 )
 
 from ddsketch_spark.core.ddsketch import DDSketch, from_bytes as dd_from_bytes
@@ -471,6 +471,15 @@ def merge_sketches_extract(
                                     out_schema)
     return partials.groupBy(F.lit(0).alias("__g")).applyInPandas(
         merge_extract_fn, schema=out_schema)
+
+
+def quantile_extract(qs: Sequence[float]):
+    """``(extract, out_fields)`` for :func:`merge_sketches_extract`: one
+    ``(q, est)`` row per requested quantile of the merged sketch."""
+    qs = [float(q) for q in qs]
+    return (lambda s: {"q": qs, "est": [float(e) for e in s.quantile(qs)]},
+            [StructField("q", DoubleType(), False),
+             StructField("est", DoubleType(), True)])
 
 
 def grouped_apply_sorted(df: DataFrame, keys: Sequence[str], fn,

@@ -27,12 +27,11 @@ import datetime as dt
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import DoubleType, StructField
 
 from ddsketch_spark.core.ddsketch import from_bytes as dd_from_bytes
 from ddsketch_spark.operators import api
 from ddsketch_spark.operators.aggregate import (
-    merge_sketches, merge_sketches_extract,
+    merge_sketches, merge_sketches_extract, quantile_extract,
 )
 
 
@@ -201,7 +200,6 @@ def range_percentile(sketch_table: DataFrame, t0, t1, qs: Sequence[float],
             f"rows of the straddled bucket, which the table no longer has")
     if e1 <= e0:
         raise ValueError("empty range: t1 must be > t0")
-    qs = [float(q) for q in qs]
     in_range = sketch_table.where(
         (F.col(bucket_col) >= e0) & (F.col(bucket_col) < e1))
     if (partition_granularity_seconds
@@ -214,10 +212,7 @@ def range_percentile(sketch_table: DataFrame, t0, t1, qs: Sequence[float],
             (F.col("pbucket") >= (e0 // g) * g) & (F.col("pbucket") < e1))
     return merge_sketches_extract(
         in_range, "sketch", list(keys),
-        lambda s: {"q": qs, "est": [float(e) for e in s.quantile(qs)]},
-        [StructField("q", DoubleType(), False),
-         StructField("est", DoubleType(), True)],
-        from_bytes=_deser(on_overflow))
+        *quantile_extract(qs), from_bytes=_deser(on_overflow))
 
 
 def compact_sketch_table(sketch_table: DataFrame, boundary,
@@ -290,13 +285,9 @@ def range_percentile_tiered(tiered: DataFrame, t0, t1, qs: Sequence[float],
                 f"{'coarse' if e < e_b else 'fine'} tier and must be "
                 f"aligned to its {g}s grain — an unaligned edge would "
                 f"drop the straddled bucket's data")
-    qs = [float(q) for q in qs]
     in_range = tiered.where(
         (F.col(bucket_col) >= e0)
         & ((F.col(bucket_col) + F.col("gran")) <= e1))
     return merge_sketches_extract(
         in_range, "sketch", list(keys),
-        lambda s: {"q": qs, "est": [float(e) for e in s.quantile(qs)]},
-        [StructField("q", DoubleType(), False),
-         StructField("est", DoubleType(), True)],
-        from_bytes=_deser(on_overflow))
+        *quantile_extract(qs), from_bytes=_deser(on_overflow))

@@ -31,7 +31,8 @@ from ddsketch_spark.functions.sketch_udfs import (
 )
 from ddsketch_spark.operators import api
 from ddsketch_spark.operators.aggregate import (
-    merge_sketches, merge_sketches_extract, sketch_agg, sketch_partials,
+    merge_sketches, merge_sketches_extract, quantile_extract, sketch_agg,
+    sketch_partials,
 )
 from ddsketch_spark.operators.native import (
     bloom_agg_native, bloom_member_native, cms_agg_native, cms_freq_native,
@@ -229,18 +230,11 @@ def dd_reagg_p90_by_flag(spark, sf_dir):
     Merge + quantile extraction run as ONE aggregate stage
     (merge_sketches_extract), mirroring the reference's
     ddsketch_percentile(sketch, q) FINALFUNC shape."""
-    from pyspark.sql.types import DoubleType, StructField
-
     df = _t(spark, sf_dir, "lineitem")
     fine = api.ddsketch(df, "l_extendedprice", 0.01, 2048,
                         keys=["l_returnflag", "l_linestatus"])
-    qs = [0.9]
-    return merge_sketches_extract(
-        fine, "sketch", ["l_returnflag"],
-        lambda s: {"q": [float(q) for q in qs],
-                   "est": [float(e) for e in s.quantile(qs)]},
-        [StructField("q", DoubleType(), False),
-         StructField("est", DoubleType(), True)])
+    return merge_sketches_extract(fine, "sketch", ["l_returnflag"],
+                                  *quantile_extract([0.9]))
 
 
 # derived from the package location, not a hardcoded checkout path, so
@@ -328,8 +322,6 @@ def dd_sketch_store_roundtrip(spark, sf_dir):
     import shutil
     import uuid as _uuid_mod
 
-    from pyspark.sql.types import DoubleType, StructField
-
     from ddsketch_spark.sources.tables import read_table, write_table
 
     df = _t(spark, sf_dir, "lineitem")
@@ -344,13 +336,8 @@ def dd_sketch_store_roundtrip(spark, sf_dir):
     write_table(fine, path)
     _mark_scratch_owner(path)
     stored = read_table(spark, path)
-    qs = [0.9]
-    return merge_sketches_extract(
-        stored, "sketch", ["l_returnflag"],
-        lambda s: {"q": [float(q) for q in qs],
-                   "est": [float(e) for e in s.quantile(qs)]},
-        [StructField("q", DoubleType(), False),
-         StructField("est", DoubleType(), True)])
+    return merge_sketches_extract(stored, "sketch", ["l_returnflag"],
+                                  *quantile_extract([0.9]))
 
 
 def dd_textlen_by_lang(spark, sf_dir):

@@ -5,12 +5,19 @@ reference's parallel==serial check, test/sql/ddsketch.sql:2674-2713)."""
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import Column, functions as F
 
+from ddsketch_spark.core import kmv as kmv_mod
+from ddsketch_spark.core import spacesaving as ss_mod
 from ddsketch_spark.core.ddsketch import DDSketch
+from ddsketch_spark.core.hashing import py_h64
+from ddsketch_spark.functions.estimators import (
+    bloom_contains, cms_estimate, hll_estimate, kll_quantile, tdigest_quantile,
+)
 from ddsketch_spark.functions.sketch_udfs import (
-    sketch_add, sketch_buckets, sketch_count, sketch_info, sketch_quantile,
-    sketch_to_string, sketch_union,
+    sketch_add, sketch_buckets, sketch_count, sketch_from_string, sketch_info,
+    sketch_quantile, sketch_quantile_bounds, sketch_rank_of, sketch_to_string,
+    sketch_trimmed, sketch_union,
 )
 from ddsketch_spark.operators import api
 from ddsketch_spark.operators.aggregate import sketch_agg
@@ -370,6 +377,176 @@ def test_sibling_sql_function_surface(spark, data):
     c0 = spark.sql("SELECT spacesaving_count(sketch, 't0') AS c FROM ss_t") \
         .collect()[0]["c"]
     assert c0 == int((pdf["k"] % 3 == 0).sum())
+
+
+def _sql_twin_view(spark, pdf):
+    """Temp view ``sql_twins``: one row of every sketch kind per key of the
+    ``data`` fixture, plus an all-NULL row; built once per session."""
+    if spark.catalog.tableExists("sql_twins"):
+        return
+    from ddsketch_spark.core import bloom, cms, hll, kll, tdigest
+
+    rows = []
+    for k, grp in pdf.groupby("k"):
+        v = grp["v"].to_numpy(dtype="float64")[:2000]
+        vals = v[~np.isnan(v)]
+        hs = np.array([py_h64(str(int(x))) for x in vals], dtype=np.int64)
+        toks = [f"t{int(x) % 5}" for x in vals]
+        dd = DDSketch(ALPHA, NB).update(vals)
+        sk = [dd, None if k == 1 else DDSketch(ALPHA, NB).update(vals + k),
+              hll.HLL(12).update(hs), cms.CMS(4, 256).update(hs),
+              bloom.Bloom(1 << 12, 3).update(hs), kll.KLL(200).update(vals),
+              tdigest.TDigest(100.0).update(vals), kmv_mod.KMV(64).update(hs),
+              ss_mod.SpaceSaving(16).update(toks)]
+        rows.append((int(k), *[bytearray(s.to_bytes()) if s else None
+                               for s in sk],
+                     dd.to_string(), [None, float("nan"), 5.0][k % 3]))
+    rows.append((99,) + (None,) * 11)
+    spark.createDataFrame(rows, (
+        "k int, dd binary, dd2 binary, hll binary, cms binary, bloom binary,"
+        " kll binary, td binary, kmv binary, ss binary, txt string, v double")
+    ).createOrReplaceTempView("sql_twins")
+
+
+def _kernel_twin(col, fn):
+    return lambda t: [None if r[col] is None else fn(bytes(r[col]))
+                      for r in t.orderBy("k").collect()]
+
+
+_H = py_h64("100")
+# SQL name -> (SQL call, Python-helper twin); the three names without a
+# Column helper are checked against the core kernel instead
+SQL_TWINS = {
+    "ddsketch_percentile": ("ddsketch_percentile(dd, 0.9)",
+                            lambda: sketch_quantile(F.col("dd"), 0.9)),
+    "ddsketch_percentile_bounds": (
+        "ddsketch_percentile_bounds(dd, 0.5)",
+        lambda: F.coalesce(
+            sketch_quantile_bounds(F.col("dd"), 0.5)[0],
+            F.struct(*[F.lit(None).cast("double").alias(n)
+                       for n in ("lo", "est", "hi")]))),
+    "ddsketch_percentile_of": ("ddsketch_percentile_of(dd, 100.0)",
+                               lambda: sketch_rank_of(F.col("dd"), 100.0)),
+    "ddsketch_count": ("ddsketch_count(dd)", lambda: sketch_count("dd")),
+    "ddsketch_sketch_sum": (
+        "ddsketch_sketch_sum(dd, 0.1, 0.9)",
+        lambda: sketch_trimmed(F.col("dd"), 0.1, 0.9, "sum")),
+    "ddsketch_sketch_avg": (
+        "ddsketch_sketch_avg(dd, 0.2, 0.8)",
+        lambda: sketch_trimmed(F.col("dd"), 0.2, 0.8, "avg")),
+    "ddsketch_union": ("ddsketch_union(dd2, dd)",
+                       lambda: sketch_union(F.col("dd2"), F.col("dd"))),
+    "ddsketch_add": ("ddsketch_add(dd2, v, 0.02, 1024)",
+                     lambda: sketch_add(F.col("dd2"), F.col("v"), 1, 0.02,
+                                        1024)),
+    "ddsketch_out": ("ddsketch_out(dd)", lambda: sketch_to_string("dd")),
+    "ddsketch_in": ("ddsketch_in(txt)",
+                    lambda: sketch_from_string(F.col("txt"))),
+    "hll_ndv": ("hll_ndv(hll)", lambda: hll_estimate(F.col("hll"))),
+    "cms_freq": (f"cms_freq(cms, {_H})",
+                 lambda: cms_estimate(F.col("cms"), [_H])[0]),
+    "bloom_might_contain": (f"bloom_might_contain(bloom, {_H})",
+                            lambda: bloom_contains(F.col("bloom"), [_H])[0]),
+    "kll_quantile": ("kll_quantile(kll, 0.5)",
+                     lambda: kll_quantile(F.col("kll"), 0.5)),
+    "tdigest_quantile": ("tdigest_quantile(td, 0.5)",
+                         lambda: tdigest_quantile(F.col("td"), 0.5)),
+    "kmv_ndv": ("kmv_ndv(kmv)", lambda: _kernel_twin(
+        "kmv", lambda b: kmv_mod.from_bytes(b).estimate())),
+    "kmv_intersection": ("kmv_intersection(kmv, kmv)", lambda: _kernel_twin(
+        "kmv", lambda b: kmv_mod.intersection_estimate(
+            kmv_mod.from_bytes(b), kmv_mod.from_bytes(b)))),
+    "spacesaving_count": ("spacesaving_count(ss, 't1')", lambda: _kernel_twin(
+        "ss", lambda b: (ss_mod.from_bytes(b).get("t1") or (0,))[0])),
+}
+
+
+@pytest.mark.parametrize("name", sorted(SQL_TWINS))
+def test_sql_function_matches_python_twin(spark, data, name):
+    """Every registered SQL name returns what its Python helper returns on
+    the same sketch table, NULL sketch rows included."""
+    from ddsketch_spark.functions.register import register_sql_functions
+
+    register_sql_functions(spark)
+    _sql_twin_view(spark, data[1])
+    t = spark.table("sql_twins")
+    call, twin = SQL_TWINS[name]
+    got = [r["r"] for r in spark.sql(
+        f"SELECT k, {call} AS r FROM sql_twins ORDER BY k").collect()]
+    twin = twin()
+    want = ([r["r"] for r in t.select("k", twin.alias("r")).orderBy("k")
+             .collect()] if isinstance(twin, Column) else twin(t))
+    assert len(got) == 6 and got[-1] in (None, (None, None, None))
+    assert got == want
+
+
+def test_sql_name_table_is_what_registers(spark, monkeypatch):
+    """register_sql_functions registers exactly the name table (no second,
+    forked registration path), and the parity test covers all of it."""
+    from pyspark.sql.udf import UDFRegistration
+
+    from ddsketch_spark.functions.register import (
+        register_sibling_sql_functions, register_sql_functions,
+    )
+    from ddsketch_spark.functions.rows import SQL_FUNCTIONS
+
+    seen = []
+    monkeypatch.setattr(UDFRegistration, "register",
+                        lambda self, name, f: seen.append(name))
+    register_sql_functions(spark)
+    assert sorted(seen) == sorted(SQL_FUNCTIONS) == sorted(SQL_TWINS)
+    seen.clear()
+    register_sibling_sql_functions(spark)
+    assert sorted(seen) == sorted(SQL_FUNCTIONS)
+
+
+def test_sql_null_arguments_give_null(spark):
+    """A NULL argument yields NULL (the reference's STRICT functions) rather
+    than crashing the Python worker."""
+    from ddsketch_spark.functions.register import register_sql_functions
+
+    register_sql_functions(spark)
+    one = DDSketch(ALPHA, NB).update([1.0, 2.0, 3.0])
+    spark.createDataFrame([(bytearray(one.to_bytes()),)], "s binary") \
+        .createOrReplaceTempView("one_sketch")
+    row = spark.sql("""
+        SELECT ddsketch_sketch_sum(s, NULL, 0.9) AS a,
+               ddsketch_sketch_avg(s, 0.1, CAST(NULL AS DOUBLE)) AS b,
+               ddsketch_add(NULL, 1.0, NULL, NULL) AS c,
+               ddsketch_percentile(s, NULL) AS d,
+               ddsketch_percentile_of(NULL, 1.0) AS e,
+               cms_freq(NULL, 5) AS f,
+               spacesaving_count(s, NULL) AS g
+        FROM one_sketch""").collect()[0]
+    assert row.asDict() == dict.fromkeys("abcdefg")
+    # the NULL-tolerant arguments keep the reference semantics
+    fresh = spark.sql("SELECT ddsketch_add(NULL, 1.0, 0.01, 2048) AS s "
+                      "FROM one_sketch").collect()[0]["s"]
+    assert bytes(fresh) == DDSketch(ALPHA, NB).add(1.0).to_bytes()
+    # alpha / nbuckets are read only for a NULL sketch (reference default
+    # nbuckets=NULL): a stored sketch still takes the value
+    grown = spark.sql("SELECT ddsketch_add(s, 1.0, 0.01, NULL) AS s "
+                      "FROM one_sketch").collect()[0]["s"]
+    assert bytes(grown) == one.add(1.0).to_bytes()
+
+
+@pytest.mark.parametrize("call", [
+    "ddsketch_add(s, 2.0, 10, 0.01, 1024)",
+    "ddsketch_add(CAST(NULL AS BINARY), 2.0, 0.01, 1024, NULL)",
+    "ddsketch_sketch_sum(s, 0.1, 0.9, true)",
+    "ddsketch_percentile(s)",
+])
+def test_sql_names_reject_other_arities(spark, call):
+    """Each SQL name takes exactly the reference's argument list: an extra
+    or missing argument is an error, never silently read as an option."""
+    from ddsketch_spark.functions.register import register_sql_functions
+
+    register_sql_functions(spark)
+    one = DDSketch(ALPHA, NB).update([1.0, 2.0, 3.0])
+    spark.createDataFrame([(bytearray(one.to_bytes()),)], "s binary") \
+        .createOrReplaceTempView("one_sketch")
+    with pytest.raises(Exception, match="arguments, got"):
+        spark.sql(f"SELECT {call} AS r FROM one_sketch").collect()
 
 
 def test_collapse_mode_distributed_agg_matches_serial(spark):
