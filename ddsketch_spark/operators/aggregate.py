@@ -13,11 +13,12 @@ aggregate protocol (SFUNC / COMBINEFUNC / SERIALFUNC / FINALFUNC,
       is what makes the plan survive a 100 TB scan: shuffle volume is
       O(partitions × groups × sketch_size), independent of row count.
 
-  stage 2 (COMBINEFUNC): ``groupBy(keys).applyInPandas`` merging the
-      partial sketches. Because stage 1 already collapsed each partition to
-      ≤1 row per key, the worst-case rows per reduce key equals the input
-      partition count — Zipf-skewed keys (web-data ``lang``) are already
-      bounded; for extreme partition counts a fan-out pre-merge round
+  stage 2 (COMBINEFUNC): :func:`grouped_apply_sorted` folds each key's
+      partial sketches with :func:`merge_serialized` over key-sorted runs.
+      Because stage 1 already collapsed each partition to ≤1 row per key,
+      the worst-case rows per reduce key equals the input partition count
+      — Zipf-skewed keys (web-data ``lang``) are already bounded; for
+      extreme partition counts a fan-out pre-merge round
       (``merge_fanout``) caps it further (two-round merge per SURVEY §3.2).
 
   final (FINALFUNC): scalar pandas UDF on the merged sketch column
@@ -57,7 +58,6 @@ def sketch_partials(
     keys: Sequence[str] = (),
     factory: Callable[[], object] = DDSketch,
     weight_col: str | None = None,
-    fanout: int | None = None,
     n_from_weight: bool = False,
 ) -> DataFrame:
     """Stage 1: per-partition, per-key partial sketches.
@@ -74,13 +74,6 @@ def sketch_partials(
     and n's meaning shifts from rows-seen to summed weight — callers
     feeding untrusted weights through precombine should validate them
     up front.
-
-    ``fanout=N`` round-robin-repartitions the (already-projected, narrow)
-    rows to N tasks first — explicit opt-in for inputs whose split count is
-    far below the cluster's cores AND whose per-row Python work justifies a
-    shuffle. Off by default: a 100 TB scan already has thousands of splits,
-    and for vectorized kernels (KLL/t-digest update is numpy-batch) the
-    shuffle costs more than it saves (measured 2x slower at sf0.1).
     """
     keys = list(keys)
     cols = keys + [value_col] + ([weight_col] if weight_col else [])
@@ -100,8 +93,6 @@ def sketch_partials(
         # them JVM-side keeps the Python batch dense (and for int64 avoids
         # the nullable->float64 corruption described below)
         projected = projected.where(F.col(value_col).isNotNull())
-    if fanout and fanout > 1:
-        projected = projected.repartition(fanout)
     projected = projected.withColumn("__pid", F.spark_partition_id())
 
     out_schema = StructType(
@@ -200,6 +191,48 @@ def auto_merge_fanout(n_partitions: int,
     return max(2, min(4096, int(np.ceil(np.sqrt(n_partitions)))))
 
 
+def gather_partials(
+    df: DataFrame,
+    value_col: str,
+    factory: Callable[[], object],
+    from_bytes: Callable[[bytes], object],
+    weight_col: str | None = None,
+) -> DataFrame:
+    """Keyless stage-1 partials ready for a driver-side gather (the
+    ``treeAggregate`` final gather): one partial per scan partition, or —
+    past ``AUTO_FANOUT_THRESHOLD`` map tasks — an executor pre-merge round
+    bounding the gather to ~sqrt(tasks) rows (:func:`auto_merge_fanout`).
+    Fold the collected rows with :func:`merge_serialized`."""
+    parts = sketch_partials(df, value_col, factory=factory,
+                            weight_col=weight_col)
+    fan = auto_merge_fanout(df.rdd.getNumPartitions())
+    return premerge_partials(parts, fan, from_bytes) if fan else parts
+
+
+def merge_serialized(blobs: Iterable, from_bytes: Callable[[bytes], object]):
+    """Fold serialized sketches into one (``from_bytes`` then ``merge``,
+    in order); None when there are none."""
+    acc = None
+    for b in blobs:
+        s = from_bytes(bytes(b))
+        acc = s if acc is None else acc.merge(s)
+    return acc
+
+
+def _fold_runs(keys: Sequence[str], sketch_col: str,
+               from_bytes: Callable[[bytes], object], finish):
+    """Per-run fn for :func:`grouped_apply_sorted`: fold the run's
+    sketches and emit ``keys..., **finish(acc, run)`` — ``finish``'s lists
+    may hold several rows (key columns repeat)."""
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        cols = finish(merge_serialized(pdf[sketch_col], from_bytes), pdf)
+        nrows = len(next(iter(cols.values())))
+        row = {k: [pdf[k].iloc[0]] * nrows for k in keys}
+        row.update(cols)
+        return pd.DataFrame(row)
+    return fn
+
+
 def premerge_partials(
     partials: DataFrame,
     fanout: int,
@@ -211,31 +244,14 @@ def premerge_partials(
     ``(keys, part_id % fanout)`` and merge each group to a single row,
     bounding whatever consumes the partials next (a driver gather or the
     final per-key merge) to ``fanout`` rows per key. Output keeps the
-    partial-row contract (``keys..., sketch, part_id, n``) with
+    partial-row contract (``keys..., sketch, n, part_id``) with
     ``part_id`` = the salt."""
-    keys = list(keys)
-    salt = F.pmod(F.col("part_id"), F.lit(fanout)).alias("__salt")
-    pre_keys = keys + ["__salt"]
-    pre_schema = StructType(
-        [f for f in partials.schema.fields if f.name in keys]
-        + [StructField("__salt", LongType(), False),
-           StructField(sketch_col, BinaryType(), False),
-           StructField("n", LongType(), False)]
-    )
-
-    def pre_merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for b in pdf[sketch_col]:
-            s = from_bytes(bytes(b))
-            acc = s if acc is None else acc.merge(s)
-        row = {k: [pdf[k].iloc[0]] for k in pre_keys}
-        row[sketch_col] = [acc.to_bytes()]
-        row["n"] = [int(pdf["n"].sum())]
-        return pd.DataFrame(row)
-
+    # coalesce only marks the salt non-NULL, like the part_id it replaces
+    salt = F.coalesce(F.pmod(F.col("part_id"), F.lit(fanout)), F.lit(0))
     return (
-        grouped_apply_sorted(partials.withColumn("__salt", salt),
-                             pre_keys, pre_merge_fn, pre_schema)
+        merge_partials(partials.withColumn("__salt", salt),
+                       list(keys) + ["__salt"], from_bytes,
+                       sketch_col=sketch_col)
         .withColumn("part_id", F.col("__salt")).drop("__salt")
     )
 
@@ -251,11 +267,12 @@ def merge_partials(
     """Stage 2: merge partial sketches per key.
 
     ``map_side_combine=True`` first merges same-key partials WITHIN each
-    input partition (a mapInPandas pass, no shuffle) — the sketch analogue
-    of Spark's partial aggregation. This is the lever that matters when
-    partial rows are large or plentiful: it divides both the shuffle bytes
-    and the hot reducer's serial merge chain by the partials-per-partition
-    factor (measured on a 99.9%-hot-key corpus: tools/skew_bench.py).
+    input partition (a sort + sorted-run fold, no shuffle) — the sketch
+    analogue of Spark's partial aggregation. This is the lever that
+    matters when partial rows are large or plentiful: it divides both the
+    shuffle bytes and the hot reducer's serial merge chain by the
+    partials-per-partition factor (measured on a 99.9%-hot-key corpus:
+    tools/skew_bench.py).
 
     ``merge_fanout=k`` additionally inserts a pre-merge round grouped by
     ``(keys, part_id % k)`` — the post-shuffle two-round pattern: with P
@@ -265,64 +282,29 @@ def merge_partials(
     at 100 TB.
     """
     keys = list(keys)
-    group_cols = keys if keys else [F.lit(0).alias("__g")]
+
+    def merged(acc, pdf):
+        return {sketch_col: [acc.to_bytes()], "n": [int(pdf["n"].sum())]}
 
     if map_side_combine:
-        in_schema = partials.schema
+        # the combined row keeps its run's first part_id (stable sort)
+        combine_fn = _fold_runs(keys, sketch_col, from_bytes, lambda acc, pdf: {
+            **merged(acc, pdf), "part_id": [int(pdf["part_id"].iloc[0])]})
+        local = partials.sortWithinPartitions(*keys) if keys else partials
+        partials = _apply_sorted_runs(local, keys, combine_fn,
+                                      partials.schema)
 
-        def combine_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            accs: dict[tuple, object] = {}
-            meta: dict[tuple, list] = {}   # part_id (first seen), n sum
-            for pdf in batches:
-                for row in pdf.itertuples(index=False):
-                    d = row._asdict()
-                    gkey = tuple(d[k] for k in keys)
-                    s = from_bytes(bytes(d[sketch_col]))
-                    if gkey in accs:
-                        accs[gkey].merge(s)
-                        meta[gkey][1] += int(d["n"])
-                    else:
-                        accs[gkey] = s
-                        meta[gkey] = [int(d["part_id"]), int(d["n"])]
-            if not accs:
-                return
-            out = {k: [] for k in keys}
-            out[sketch_col], out["part_id"], out["n"] = [], [], []
-            for gkey, acc in accs.items():
-                for k, kv in zip(keys, gkey):
-                    out[k].append(kv)
-                out[sketch_col].append(acc.to_bytes())
-                out["part_id"].append(meta[gkey][0])
-                out["n"].append(meta[gkey][1])
-            yield pd.DataFrame(out)
+    if merge_fanout and merge_fanout > 1:
+        partials = premerge_partials(partials, merge_fanout, from_bytes,
+                                     keys, sketch_col)
 
-        partials = partials.mapInPandas(combine_fn, schema=in_schema)
-
-    out_fields = (
+    out_schema = StructType(
         [f for f in partials.schema.fields if f.name in keys]
         + [StructField(sketch_col, BinaryType(), False),
-           StructField("n", LongType(), False)]
-    )
-    out_schema = StructType(out_fields)
-
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for b in pdf[sketch_col]:
-            s = from_bytes(bytes(b))
-            acc = s if acc is None else acc.merge(s)
-        row = {k: [pdf[k].iloc[0]] for k in keys}
-        row[sketch_col] = [acc.to_bytes()]
-        row["n"] = [int(pdf["n"].sum())]
-        return pd.DataFrame(row)
-
-    work = partials
-    if merge_fanout and merge_fanout > 1:
-        work = premerge_partials(partials, merge_fanout, from_bytes,
-                                 keys, sketch_col)
-
-    if keys:
-        return grouped_apply_sorted(work, keys, merge_fn, out_schema)
-    return work.groupBy(*group_cols).applyInPandas(merge_fn, schema=out_schema)
+           StructField("n", LongType(), False)])
+    return grouped_apply_sorted(
+        partials, keys, _fold_runs(keys, sketch_col, from_bytes, merged),
+        out_schema)
 
 
 def resolve_from_bytes(factory: Callable[[], object],
@@ -355,7 +337,6 @@ def sketch_agg(
     from_bytes: Callable[[bytes], object] = dd_from_bytes,
     weight_col: str | None = None,
     merge_fanout: int | None = None,
-    fanout: int | None = None,
     precombine: bool = False,
 ) -> DataFrame:
     """Full 2-stage aggregation: ``keys..., sketch binary, n long``.
@@ -387,7 +368,7 @@ def sketch_agg(
         df = df.groupBy(*list(keys), value_col).agg(w.alias("__w"))
         weight_col = "__w"
     partials = sketch_partials(df, value_col, keys, factory, weight_col,
-                               fanout=fanout, n_from_weight=precombine)
+                               n_from_weight=precombine)
     return merge_partials(partials, keys,
                           resolve_from_bytes(factory, from_bytes),
                           merge_fanout)
@@ -454,23 +435,10 @@ def merge_sketches_extract(
     partials = _stored_rows_as_partials(df, sketch_col, keys)
     out_schema = StructType(
         [f for f in df.schema.fields if f.name in keys] + list(out_fields))
-
-    def merge_extract_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for b in pdf["sketch"]:
-            s = from_bytes(bytes(b))
-            acc = s if acc is None else acc.merge(s)
-        cols = extract(acc)
-        nrows = len(next(iter(cols.values())))
-        row = {k: [pdf[k].iloc[0]] * nrows for k in keys}
-        row.update(cols)
-        return pd.DataFrame(row)
-
-    if keys:
-        return grouped_apply_sorted(partials, keys, merge_extract_fn,
-                                    out_schema)
-    return partials.groupBy(F.lit(0).alias("__g")).applyInPandas(
-        merge_extract_fn, schema=out_schema)
+    return grouped_apply_sorted(
+        partials, keys,
+        _fold_runs(keys, "sketch", from_bytes, lambda acc, pdf: extract(acc)),
+        out_schema)
 
 
 def quantile_extract(qs: Sequence[float]):
@@ -480,6 +448,16 @@ def quantile_extract(qs: Sequence[float]):
     return (lambda s: {"q": qs, "est": [float(e) for e in s.quantile(qs)]},
             [StructField("q", DoubleType(), False),
              StructField("est", DoubleType(), True)])
+
+
+def key_runs(kdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """``(run_id per row, first row of each run)`` for key-sorted rows:
+    a run is a maximal block of equal keys, NULL-safe (NULL keys form a
+    run, like Spark's groupBy). Zero key columns make one run."""
+    prev = kdf.shift()
+    same = ((kdf == prev) | (kdf.isna() & prev.isna())).all(axis=1).to_numpy()
+    same[0] = False
+    return np.cumsum(~same) - 1, np.flatnonzero(~same)
 
 
 def grouped_apply_sorted(df: DataFrame, keys: Sequence[str], fn,
@@ -498,7 +476,7 @@ def grouped_apply_sorted(df: DataFrame, keys: Sequence[str], fn,
 
     ``per_run=False`` hands ``fn`` the whole complete-runs SLICE of each
     batch instead of one call per key run — for fns that vectorize across
-    runs (see native._assemble_dd_batch; ~8x again over per-run calls at
+    runs (see native._make_dd_batch_assembler; ~8x again over per-run calls at
     1M keys).
 
     Runs on ``mapInArrow`` (not ``mapInPandas``): Spark's Arrow->pandas
@@ -516,7 +494,15 @@ def grouped_apply_sorted(df: DataFrame, keys: Sequence[str], fn,
         return df.groupBy().applyInPandas(fn, schema)
     rep = df.repartition(*[F.col(k) for k in keys]) \
             .sortWithinPartitions(*keys)
+    return _apply_sorted_runs(rep, keys, fn, schema, per_run)
 
+
+def _apply_sorted_runs(df: DataFrame, keys: Sequence[str], fn,
+                       schema: StructType, per_run: bool = True) -> DataFrame:
+    """The body of :func:`grouped_apply_sorted` over partitions that are
+    already sorted by ``keys``: no shuffle, so a key's runs in different
+    partitions stay separate (the map-side combine of
+    :func:`merge_partials`). Zero keys make each partition one run."""
     int_keys = [k for k in keys
                 if df.schema[k].dataType.typeName()
                 in ("long", "integer", "short", "byte")]
@@ -546,38 +532,22 @@ def grouped_apply_sorted(df: DataFrame, keys: Sequence[str], fn,
             if pending is not None:
                 pdf = pd.concat([pending, pdf], ignore_index=True)
                 pending = None
-            # boundary of the LAST (possibly incomplete) key run —
-            # NULL-safe equality (NaN keys form groups too, like Spark's
-            # groupBy); rows are key-sorted, so rows equal to the last key
-            # are exactly the contiguous block at the end
-            last = pdf[keys].iloc[-1]
-            eq = np.ones(len(pdf), dtype=bool)
-            for k in keys:
-                lv = last[k]
-                col = pdf[k]
-                eq &= (col.isna() if pd.isna(lv) else (col == lv)).to_numpy(
-                    dtype=bool, na_value=False)
-            n_tail = int(eq[::-1].cumprod().sum())
-            if n_tail == len(pdf):
+            # the LAST key run may continue in the next batch: hold it back
+            _, starts = key_runs(pdf[keys])
+            tail = int(starts[-1])
+            if tail == 0:
                 pending = pdf  # single run — may continue in next batch
                 continue
-            head = pdf.iloc[:-n_tail]
-            pending = pdf.iloc[-n_tail:].reset_index(drop=True)
+            head = pdf.iloc[:tail]
+            pending = pdf.iloc[tail:].reset_index(drop=True)
             if per_run:
                 # rows are key-sorted: slice contiguous runs directly
                 # (pandas groupby would also re-group, but its .groups
                 # breaks on None keys in object columns — and slicing
                 # skips the factorize pass entirely)
-                kdf = head[keys]
-                prev = kdf.shift()
-                same = ((kdf == prev) | (kdf.isna() & prev.isna())) \
-                    .all(axis=1).to_numpy()
-                same[0] = False
-                starts = np.flatnonzero(~same)
-                bounds = np.append(starts, len(head))
-                out = [fn(head.iloc[bounds[i]:bounds[i + 1]])
-                       for i in range(len(starts))]
-                res = pd.concat(out, ignore_index=True)
+                res = pd.concat([fn(head.iloc[a:b])
+                                 for a, b in zip(starts[:-1], starts[1:])],
+                                ignore_index=True)
             else:
                 res = fn(head)
             if len(res):
@@ -587,4 +557,4 @@ def grouped_apply_sorted(df: DataFrame, keys: Sequence[str], fn,
             if len(res):
                 yield emit(res)
 
-    return rep.mapInArrow(run, schema)
+    return df.mapInArrow(run, schema)

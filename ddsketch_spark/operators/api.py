@@ -2,7 +2,8 @@
 reference's 21 SQL aggregates (SURVEY §2.1, sql/ddsketch--1.0.0.sql:62-444).
 
 Every function returns a DataFrame: ``keys..., <result column>``. Raw-value
-variants build sketches with the 2-stage pipeline; sketch variants
+DDSketch variants build sketches with the JVM-native bucket aggregation
+(KLL / t-digest with the 2-stage Arrow pipeline); sketch variants
 re-aggregate a stored BinaryType sketch column (lifecycle B). Weighted
 variants take ``weight_col`` (counts must be > 0, NULL => 1).
 """
@@ -13,10 +14,7 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from ddsketch_spark.core.ddsketch import (
-    DDSketch, from_bytes as dd_from_bytes, validate_alpha, validate_nbuckets,
-    validate_quantiles, validate_trim,
-)
+from ddsketch_spark.core.ddsketch import validate_quantiles, validate_trim
 from ddsketch_spark.functions.sketch_udfs import (
     sketch_quantile, sketch_rank_of, sketch_trimmed,
 )
@@ -24,32 +22,19 @@ from ddsketch_spark.operators.aggregate import merge_sketches, sketch_agg
 from ddsketch_spark.operators.native import ddsketch_agg_native
 
 
-def _factory(alpha: float, nbuckets: int, on_overflow: str = "error"):
-    validate_alpha(alpha)
-    validate_nbuckets(nbuckets)
-    return lambda: DDSketch(alpha, nbuckets, on_overflow)
-
-
 def ddsketch(df: DataFrame, value_col: str, alpha: float, nbuckets: int,
              keys: Sequence[str] = (), weight_col: str | None = None,
-             on_overflow: str = "error",
-             merge_fanout: int | None = None,
-             impl: str = "native") -> DataFrame:
+             on_overflow: str = "error") -> DataFrame:
     """``ddsketch(value[, count], alpha, nbuckets)`` — build and return the
     sketch itself (aggregates #5/#11): ``keys..., sketch binary, n long``.
 
-    ``impl='native'`` (default) aggregates bucket counts JVM-side with
-    whole-stage codegen and only assembles sketch bytes in Python
-    (operators/native.py — the 100 TB plan); ``impl='python'`` runs the
-    generic Arrow 2-stage pipeline. Both produce bit-identical sketches
+    Bucket counts aggregate JVM-side with whole-stage codegen; Python only
+    assembles the sketch bytes (:func:`ddsketch_agg_native`, the 100 TB
+    plan). Bit-identical to the generic Arrow pipeline
+    ``sketch_agg(factory=lambda: DDSketch(alpha, nbuckets))``
     (tests/test_native_agg.py)."""
-    if impl == "native":
-        return ddsketch_agg_native(df, value_col, alpha, nbuckets, keys,
-                                   weight_col, on_overflow)
-    return sketch_agg(
-        df, value_col, keys, _factory(alpha, nbuckets, on_overflow),
-        dd_from_bytes, weight_col, merge_fanout,
-    )
+    return ddsketch_agg_native(df, value_col, alpha, nbuckets, keys,
+                               weight_col, on_overflow)
 
 
 def ddsketch_merge(df: DataFrame, sketch_col: str,

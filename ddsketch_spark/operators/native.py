@@ -8,9 +8,10 @@ so stage 1 does not need Python at all::
 
 runs entirely inside whole-stage codegen with *native map-side partial
 aggregation* — the shuffle carries at most (keys x nbuckets) partial bucket
-counts per map task instead of raw rows or Arrow batches. Python (an
-``applyInPandas`` over O(nbuckets) rows per key) only assembles the final
-binary sketch. Compared to the generic mapInPandas pipeline
+counts per map task instead of raw rows or Arrow batches. Python only
+assembles the final binary sketch: one vectorized pass per Arrow batch of
+key-sorted bucket cells (``grouped_apply_sorted``, O(nbuckets) rows per
+key). Compared to the generic mapInPandas pipeline
 (:mod:`ddsketch_spark.operators.aggregate`, kept as the fallback for
 kernels without a closed-form bucket expression — KLL, t-digest), this is
 the plan that survives 100 TB: no JVM->Python crossing on the hot path,
@@ -30,17 +31,21 @@ reference's parallel==serial caveat, README.md:795-798).
 from __future__ import annotations
 
 import math
-from typing import Iterator, Sequence
+import struct
+from typing import Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
-import struct
-
+from ddsketch_spark.core.bloom import Bloom
+from ddsketch_spark.core.cms import CMS
 from ddsketch_spark.core.ddsketch import (
     _BUCKET_DT, DDSketch, mapping_params, validate_alpha, validate_nbuckets,
 )
+from ddsketch_spark.core.hashing import H1_BITS, H64_BITS
+from ddsketch_spark.operators.aggregate import grouped_apply_sorted, key_runs
 
 _LOG2 = math.log(2.0)
 
@@ -110,80 +115,42 @@ def ddsketch_agg_native(
         .groupBy(*keys, "__part", "__bidx")
         .agg(F.sum("__w").alias("__c"), F.count(F.lit(1)).alias("__rows"))
     )
-
-    out_schema = StructType(
-        [f for f in df.schema.fields if f.name in keys]
-        + [StructField("sketch", BinaryType(), False),
-           StructField("n", LongType(), False)]
-    )
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        s = DDSketch(alpha, nbuckets, on_overflow)
-        live = pdf[pdf["__part"] >= 0]
-        s.count = int(live["__c"].sum())
-        if s.count == 0:
-            return pd.DataFrame({f.name: [] for f in out_schema.fields})
-        zero = live[live["__part"] == 1]
-        s.zero_count = int(zero["__c"].sum())
-        neg = live[live["__part"] == 0]
-        pos = live[live["__part"] == 2]
-        s.neg = dict(zip(neg["__bidx"].astype(int), neg["__c"].astype(int)))
-        s.pos = dict(zip(pos["__bidx"].astype(int), pos["__c"].astype(int)))
-        s._enforce_maxbuckets()
-        row = {k: [pdf[k].iloc[0]] for k in keys}
-        row["sketch"] = [s.to_bytes()]
-        row["n"] = [int(pdf["__rows"].sum())]
-        return pd.DataFrame(row)
-
-    from ddsketch_spark.operators.aggregate import grouped_apply_sorted
-    if keys:
-        batch_fn = _make_dd_batch_assembler(keys, alpha, nbuckets,
-                                            on_overflow, out_schema,
-                                            assemble)
-        return grouped_apply_sorted(buckets, keys, batch_fn, out_schema,
-                                    per_run=False)
-    return buckets.groupBy(F.lit(0).alias("__g")).applyInPandas(
-        assemble, schema=out_schema)
+    out_schema = _assemble_schema(df, keys)
+    return grouped_apply_sorted(
+        buckets, keys,
+        _make_dd_batch_assembler(keys, alpha, nbuckets, on_overflow),
+        out_schema, per_run=False)
 
 
-def _make_dd_batch_assembler(keys, alpha, nbuckets, on_overflow,
-                             out_schema, slow_assemble):
-    """Vectorized sketch assembly across ALL key runs of a sorted batch:
-    one numpy pass builds every run's wire bytes (same layout as
+def _make_dd_batch_assembler(keys, alpha, nbuckets, on_overflow):
+    """Sorted-run assembler of bucket cells (``keys..., __part, __bidx,
+    __c, __rows``) into ``keys..., sketch, n`` — the one DDSketch
+    cells->bytes step, for batch and streaming callers, keyed or not.
+
+    One numpy pass builds every run's wire bytes (same layout as
     DDSketch.to_bytes — big-endian header + neg-DESC/pos-ASC bucket
-    pairs), with only a ~2 microsecond header pack per run. Runs whose
-    bucket count exceeds maxbuckets fall back to the kernel path (error or
-    UDDSketch collapse). Bit-identical to the per-run assemble (pinned by
+    pairs), with only a ~2 microsecond header pack per run. ``n`` sums
+    ``__rows``; runs with no live count emit no row. Runs whose bucket
+    count exceeds nbuckets go through the kernel (``on_overflow``: error
+    or UDDSketch collapse). Bit-identical to a kernel build (pinned by
     the native==kernel identity tests)."""
-    import numpy as np
 
     def assemble_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        kdf = pdf[keys]
-        prev = kdf.shift()
-        same = ((kdf == prev) | (kdf.isna() & prev.isna())).all(axis=1).to_numpy()
-        same[0] = False
-        run_id = np.cumsum(~same) - 1
-        nruns = int(run_id[-1]) + 1
-        run_starts = np.flatnonzero(~same)
+        run_id, run_starts = key_runs(pdf[keys])
+        run_ends = np.append(run_starts[1:], len(pdf))
 
         part = pdf["__part"].to_numpy(np.int64)
         bidx = pdf["__bidx"].to_numpy(np.int64)
         c = pdf["__c"].to_numpy(np.int64)
-        rows = pdf["__rows"].to_numpy(np.int64)
 
-        def seg_sum(vals, mask):
-            out = np.zeros(nruns, dtype=np.int64)
-            np.add.at(out, run_id[mask], vals[mask])
-            return out
+        def seg_sum(vals):  # runs are contiguous row blocks
+            return np.add.reduceat(vals, run_starts)
 
-        live = part >= 0
-        count = seg_sum(c, live)
-        zero = seg_sum(c, live & (part == 1))
-        nrows = seg_sum(rows, np.ones(n, dtype=bool))
-        ones = np.ones(n, dtype=np.int64)
-        nneg = seg_sum(ones, part == 0)
-        npos = seg_sum(ones, part == 2)
+        count = seg_sum(np.where(part >= 0, c, 0))
+        zero = seg_sum(np.where(part == 1, c, 0))
+        nrows = seg_sum(pdf["__rows"].to_numpy(np.int64))
+        nneg = seg_sum((part == 0).astype(np.int64))
+        npos = seg_sum((part == 2).astype(np.int64))
         nbk = nneg + npos
 
         # wire order within a run: negative part index-DESC, then positive
@@ -199,31 +166,27 @@ def _make_dd_batch_assembler(keys, alpha, nbuckets, on_overflow,
         ends = np.cumsum(nbk)
         starts = ends - nbk
 
-        out = {k: [] for k in keys}
-        out["sketch"], out["n"] = [], []
-        key_rows = kdf.iloc[run_starts]
-        hfmt = ">iqqdiii"  # _HEADER format (Struct objects don't pickle)
-        pack = struct.Struct(hfmt).pack
-        for r in range(nruns):
-            if count[r] == 0:
-                continue  # all-NULL group: no output row
+        pack = struct.Struct(">iqqdiii").pack  # _HEADER (Structs don't pickle)
+        runs = np.flatnonzero(count > 0)  # all-NULL groups: no output row
+        out = {k: list(pdf[k].iloc[run_starts[runs]]) for k in keys}
+        out["sketch"], out["n"] = [], nrows[runs]
+        for r in runs:
             if nbk[r] > nbuckets:
-                # rare overflow: kernel path handles error/collapse exactly
-                res = slow_assemble(pdf.iloc[run_starts[r]:
-                                             run_starts[r + 1] if r + 1 < nruns else n])
-                for k in keys:
-                    out[k].append(res[k].iloc[0])
-                out["sketch"].append(res["sketch"].iloc[0])
-                out["n"].append(int(res["n"].iloc[0]))
+                # rare overflow: the kernel handles error/collapse exactly
+                lo, hi = run_starts[r], run_ends[r]
+                s = DDSketch(alpha, nbuckets, on_overflow)
+                s.count, s.zero_count = int(count[r]), int(zero[r])
+                for store, code in ((s.neg, 0), (s.pos, 2)):
+                    m = part[lo:hi] == code
+                    store.update(zip(bidx[lo:hi][m].tolist(),
+                                     c[lo:hi][m].tolist()))
+                s._enforce_maxbuckets()
+                out["sketch"].append(s.to_bytes())
                 continue
             hdr = pack(0, int(count[r]), int(zero[r]), alpha, nbuckets,
                        int(nbk[r]), int(nneg[r]))
             out["sketch"].append(hdr + bbytes[starts[r] * 12: ends[r] * 12])
-            out["n"].append(int(nrows[r]))
-            for k in keys:
-                out[k].append(key_rows[k].iloc[r])
-        return pd.DataFrame(out) if out["sketch"] else pd.DataFrame(
-            {f.name: [] for f in out_schema.fields})
+        return pd.DataFrame(out)
 
     return assemble_batch
 
@@ -235,14 +198,6 @@ def _make_dd_batch_assembler(keys, alpha, nbuckets, on_overflow,
 # DDSketch path: bucket rows cross the wire, never raw rows.
 # ---------------------------------------------------------------------------
 
-import numpy as np
-
-from ddsketch_spark.core.bloom import Bloom
-from ddsketch_spark.core.cms import CMS
-from ddsketch_spark.core.hashing import H1_BITS, H64_BITS
-from ddsketch_spark.core.hll import HLL
-
-
 def _assemble_schema(df: DataFrame, keys: Sequence[str]) -> StructType:
     return StructType(
         [f for f in df.schema.fields if f.name in keys]
@@ -251,14 +206,11 @@ def _assemble_schema(df: DataFrame, keys: Sequence[str]) -> StructType:
     )
 
 
-def _grouped(buckets: DataFrame, keys: Sequence[str], assemble, schema):
-    from ddsketch_spark.operators.aggregate import grouped_apply_sorted
-    if keys:
-        # sorted-run mapInPandas: O(Arrow batch) python overhead instead of
-        # one Arrow batch PER KEY (12x at 100k keys — see grouped_apply_sorted)
-        return grouped_apply_sorted(buckets, list(keys), assemble, schema)
-    return buckets.groupBy(F.lit(0).alias("__g")).applyInPandas(
-        assemble, schema=schema)
+def sql_ident(name: str) -> str:
+    """``name`` as one backquoted Spark SQL identifier, whatever it holds
+    (``h-1``, ``my hash``, a backquote) — for every column name pasted
+    into a SQL string or ``F.col``."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _hll_register_rows(df: DataFrame, hash_col: str, keys: list,
@@ -272,15 +224,38 @@ def _hll_register_rows(df: DataFrame, hash_col: str, keys: list,
     hot path (identical integers, measured ~9% on hll_ndv_orderkeys at
     sf1.0; stages keep the expression linear so codegen never sees an
     exponential tree)."""
-    h = F.col(hash_col)
+    h = F.col(sql_ident(hash_col))
     out = (df.where(h.isNotNull())
            .select(*keys, (h % m).alias("__j"),
-                   F.expr(f"{hash_col} div {m}").alias("__w")))
+                   F.expr(f"{sql_ident(hash_col)} div {m}").alias("__w")))
     for s in (1, 2, 4, 8, 16, 32):
         out = out.withColumn("__w", F.expr(f"__w | (__w >> {s})"))
     rho = (F.when(F.col("__w") == 0, F.lit(Q))
            .otherwise(F.lit(Q) - F.expr("bit_count(__w)")))
     return out.select(*keys, "__j", rho.cast("int").alias("__rho"))
+
+
+def _make_hll_batch_assembler(keys, p):
+    """Sorted-run assembler of register cells (``keys..., __j, __r,
+    __rows``) into ``keys..., sketch, n``: one (runs x m) register
+    scatter per Arrow batch + a 13-byte header pack per run (same wire
+    bytes as HLL.to_bytes; the header count is ``sum(__rows)``)."""
+    m = 1 << p
+
+    def assemble_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+        run_id, run_starts = key_runs(pdf[keys])
+        regs = np.zeros((len(run_starts), m), dtype=np.uint8)
+        regs[run_id, pdf["__j"].to_numpy(np.int64)] = \
+            pdf["__r"].to_numpy(np.int64)
+        cnt = np.add.reduceat(pdf["__rows"].to_numpy(np.int64), run_starts)
+        hpack = struct.Struct(">4sBq").pack
+        out = {k: list(pdf[k].iloc[run_starts]) for k in keys}
+        out["sketch"] = [hpack(b"HLL1", p, int(cnt[r])) + regs[r].tobytes()
+                         for r in range(len(run_starts))]
+        out["n"] = cnt
+        return pd.DataFrame(out)
+
+    return assemble_batch
 
 
 def hll_ndv_native(df: DataFrame, hash_col: str, p: int = 12,
@@ -339,53 +314,9 @@ def hll_agg_native(df: DataFrame, hash_col: str, p: int = 12,
         .groupBy(*keys, "__j")
         .agg(F.max("__rho").alias("__r"), F.count(F.lit(1)).alias("__rows"))
     )
-    out_schema = _assemble_schema(df, keys)
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        s = HLL(p)
-        regs = np.zeros(m, dtype=np.uint8)
-        regs[pdf["__j"].to_numpy(dtype=np.int64)] = pdf["__r"].to_numpy(dtype=np.int64)
-        s.registers = regs
-        s.count = int(pdf["__rows"].sum())
-        row = {k: [pdf[k].iloc[0]] for k in keys}
-        row["sketch"] = [s.to_bytes()]
-        row["n"] = [s.count]
-        return pd.DataFrame(row)
-
-    if keys:
-        # vectorized across key runs: one (runs x m) register scatter per
-        # Arrow batch + a 13-byte header pack per run (same wire bytes as
-        # HLL.to_bytes; see the DDSketch batch assembler for the pattern)
-        from ddsketch_spark.operators.aggregate import grouped_apply_sorted
-
-        def assemble_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-            nrows_total = len(pdf)
-            kdf = pdf[keys]
-            prev = kdf.shift()
-            same = ((kdf == prev) | (kdf.isna() & prev.isna()))                 .all(axis=1).to_numpy()
-            same[0] = False
-            run_id = np.cumsum(~same) - 1
-            nruns = int(run_id[-1]) + 1
-            run_starts = np.flatnonzero(~same)
-            regs = np.zeros((nruns, m), dtype=np.uint8)
-            regs[run_id, pdf["__j"].to_numpy(np.int64)] =                 pdf["__r"].to_numpy(np.int64)
-            cnt = np.zeros(nruns, dtype=np.int64)
-            np.add.at(cnt, run_id, pdf["__rows"].to_numpy(np.int64))
-            hpack = struct.Struct(">4sBq").pack
-            out = {k: [] for k in keys}
-            out["sketch"], out["n"] = [], []
-            key_rows = kdf.iloc[run_starts]
-            for r in range(nruns):
-                out["sketch"].append(
-                    hpack(b"HLL1", p, int(cnt[r])) + regs[r].tobytes())
-                out["n"].append(int(cnt[r]))
-                for k in keys:
-                    out[k].append(key_rows[k].iloc[r])
-            return pd.DataFrame(out)
-
-        return grouped_apply_sorted(buckets, keys, assemble_batch,
-                                    out_schema, per_run=False)
-    return _grouped(buckets, keys, assemble, out_schema)
+    return grouped_apply_sorted(buckets, keys,
+                                _make_hll_batch_assembler(keys, p),
+                                _assemble_schema(df, keys), per_run=False)
 
 
 def _py_probe_positions(h: int, k: int, width: int) -> list[int]:
@@ -394,6 +325,14 @@ def _py_probe_positions(h: int, k: int, width: int) -> list[int]:
     h1 = h % (1 << H1_BITS)
     h2 = 2 * ((h >> H1_BITS) % (1 << (H1_BITS - 1))) + 1
     return [(h1 + i * h2) % width for i in range(k)]
+
+
+def _double_hash_sql(hash_col: str) -> tuple[str, str]:
+    """``(h1, h2)`` SQL of the double-hash walk over ``hash_col`` —
+    position i is ``(h1 + i * h2) % width`` (core.hashing.positions)."""
+    h = sql_ident(hash_col)
+    return (f"({h} % {1 << H1_BITS})",
+            f"(2 * (({h} div {1 << H1_BITS}) % {1 << (H1_BITS - 1)}) + 1)")
 
 
 def cms_freq_native(df: DataFrame, hash_col: str, probe_hashes,
@@ -412,10 +351,9 @@ def cms_freq_native(df: DataFrame, hash_col: str, probe_hashes,
     # form (sum/when/coalesce/lit per probe x depth) cost ~2,500 py4j
     # round-trips of plan-construction latency per query (~250 ms, measured
     # r6) for an identical analyzed plan
-    w_sql = (f"coalesce(CAST({weight_col} AS BIGINT), 1)" if weight_col
-             else "CAST(1 AS BIGINT)")
-    h1s = f"({hash_col} % {1 << H1_BITS})"
-    h2s = f"(2 * (({hash_col} div {1 << H1_BITS}) % {1 << (H1_BITS - 1)}) + 1)"
+    w_sql = (f"coalesce(CAST({sql_ident(weight_col)} AS BIGINT), 1)"
+             if weight_col else "CAST(1 AS BIGINT)")
+    h1s, h2s = _double_hash_sql(hash_col)
     aggs = []
     for j, ph in enumerate(probe_hashes):
         ppos = _py_probe_positions(int(ph), depth, width)
@@ -428,7 +366,7 @@ def cms_freq_native(df: DataFrame, hash_col: str, probe_hashes,
     wide = df.agg(*aggs)
     return wide.selectExpr(*[
         "least(" + ", ".join(f"__c{j}_{i}" for i in range(depth))
-        + f") AS {prefix}{j}"
+        + f") AS {sql_ident(f'{prefix}{j}')}"
         for j in range(len(probe_hashes))])
 
 
@@ -446,8 +384,7 @@ def bloom_member_native(df: DataFrame, hash_col: str, probe_hashes,
     OR over all k stride positions of the scanned row (a per-stride-only
     check would miss cross-stride collisions and report false negatives
     on saturated filters; caught by the sf0.1 oracle run)."""
-    h1s = f"({hash_col} % {1 << H1_BITS})"
-    h2s = f"(2 * (({hash_col} div {1 << H1_BITS}) % {1 << (H1_BITS - 1)}) + 1)"
+    h1s, h2s = _double_hash_sql(hash_col)
     row_pos = [f"(({h1s} + {i} * {h2s}) % {nbits})" for i in range(k)]
     # one SQL string per aggregate (see cms_freq_native: the Column form
     # costs thousands of py4j round-trips for the identical plan)
@@ -462,19 +399,27 @@ def bloom_member_native(df: DataFrame, hash_col: str, probe_hashes,
     wide = df.agg(*aggs)
     return wide.selectExpr(*[
         "CAST(least(" + ", ".join(f"__b{j}_{i}" for i in range(k))
-        + f") AS BOOLEAN) AS {prefix}{j}"
+        + f") AS BOOLEAN) AS {sql_ident(f'{prefix}{j}')}"
         for j in range(len(probe_hashes))])
 
 
-def _positions_exprs(hash_col: str, k: int, width: int):
-    """(i, pos) explode for double hashing — JVM mirror of
-    core.hashing.positions."""
-    h1 = f"({hash_col} % {1 << H1_BITS})"
-    h2 = f"(2 * (({hash_col} div {1 << H1_BITS}) % {1 << (H1_BITS - 1)}) + 1)"
-    return F.expr(
-        f"explode(transform(sequence(0, {k - 1}),"
-        f" i -> struct(i AS i, ({h1} + i * {h2}) % {width} AS pos)))"
-    ).alias("ip")
+def _position_cells(df: DataFrame, hash_col: str, k: int, width: int,
+                    keys: Sequence[str],
+                    weight_col: str | None = None) -> DataFrame:
+    """``keys..., __i, __pos, __w`` — one (stride i, position) cell per
+    stride of every non-null hash (JVM mirror of core.hashing.positions),
+    weighted by ``weight_col`` (NULL => 1) or 1. The one cell projection
+    of the batch and windowed CMS and Bloom builds."""
+    keys = list(keys)
+    h1, h2 = _double_hash_sql(hash_col)
+    ip = F.expr(f"explode(transform(sequence(0, {k - 1}),"
+                f" i -> struct(i AS i, ({h1} + i * {h2}) % {width} AS pos)))")
+    w = (F.coalesce(F.col(sql_ident(weight_col)).cast("long"), F.lit(1))
+         if weight_col else F.lit(1).cast("long"))
+    return (df.where(F.col(sql_ident(hash_col)).isNotNull())
+            .select(*keys, ip.alias("ip"), w.alias("__w"))
+            .select(*keys, F.col("ip.i").alias("__i"),
+                    F.col("ip.pos").alias("__pos"), "__w"))
 
 
 def cms_agg_native(df: DataFrame, hash_col: str, depth: int = 5,
@@ -482,18 +427,11 @@ def cms_agg_native(df: DataFrame, hash_col: str, depth: int = 5,
                    weight_col: str | None = None) -> DataFrame:
     """Count-min with JVM-side position explode + native partial-sum."""
     keys = list(keys)
-    w = (F.coalesce(F.col(weight_col).cast("long"), F.lit(1)) if weight_col
-         else F.lit(1).cast("long"))
-    base = (df.where(F.col(hash_col).isNotNull())
-            .select(*keys, _positions_exprs(hash_col, depth, width),
-                    w.alias("__w")))
     buckets = (
-        base.select(*keys, F.col("ip.i").alias("__i"),
-                    F.col("ip.pos").alias("__pos"), "__w")
+        _position_cells(df, hash_col, depth, width, keys, weight_col)
         .groupBy(*keys, "__i", "__pos")
         .agg(F.sum("__w").alias("__c"), F.count(F.lit(1)).alias("__rows"))
     )
-    out_schema = _assemble_schema(df, keys)
 
     def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
         s = CMS(depth, width)
@@ -507,21 +445,19 @@ def cms_agg_native(df: DataFrame, hash_col: str, depth: int = 5,
         row["n"] = [int(pdf["__rows"].sum()) // depth]
         return pd.DataFrame(row)
 
-    return _grouped(buckets, keys, assemble, out_schema)
+    return grouped_apply_sorted(buckets, keys, assemble,
+                                _assemble_schema(df, keys))
 
 
 def bloom_agg_native(df: DataFrame, hash_col: str, nbits: int = 1 << 16,
                      k: int = 5, keys: Sequence[str] = ()) -> DataFrame:
     """Bloom with JVM-side position explode + native distinct."""
     keys = list(keys)
-    base = (df.where(F.col(hash_col).isNotNull())
-            .select(*keys, _positions_exprs(hash_col, k, nbits)))
-    rows_per_key = (df.where(F.col(hash_col).isNotNull())
-                    .groupBy(*(keys if keys else [F.lit(0).alias("__g0")]))
+    positions = (_position_cells(df, hash_col, k, nbits, keys)
+                 .select(*keys, "__pos").distinct())
+    rows_per_key = (df.where(F.col(sql_ident(hash_col)).isNotNull())
+                    .groupBy(*keys)
                     .agg(F.count(F.lit(1)).alias("__nrows")))
-    positions = (base.select(*keys, F.col("ip.pos").alias("__pos"))
-                 .distinct())
-    out_schema = _assemble_schema(df, keys)
 
     def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
         s = Bloom(nbits, k)
@@ -533,5 +469,6 @@ def bloom_agg_native(df: DataFrame, hash_col: str, nbits: int = 1 << 16,
         return pd.DataFrame(row)
 
     joined = (positions.join(rows_per_key, on=keys) if keys
-              else positions.crossJoin(F.broadcast(rows_per_key.drop("__g0"))))
-    return _grouped(joined, keys, assemble, out_schema)
+              else positions.crossJoin(F.broadcast(rows_per_key)))
+    return grouped_apply_sorted(joined, keys, assemble,
+                                _assemble_schema(df, keys))

@@ -31,8 +31,8 @@ from ddsketch_spark.functions.sketch_udfs import (
 )
 from ddsketch_spark.operators import api
 from ddsketch_spark.operators.aggregate import (
-    merge_sketches, merge_sketches_extract, quantile_extract, sketch_agg,
-    sketch_partials,
+    gather_partials, merge_serialized, merge_sketches, merge_sketches_extract,
+    quantile_extract, sketch_agg,
 )
 from ddsketch_spark.operators.native import (
     bloom_agg_native, bloom_member_native, cms_agg_native, cms_freq_native,
@@ -992,26 +992,13 @@ def _gather_estimates(df, factory, from_bytes, weight_col=None):
     """Stage-1 partials + driver-side gather-merge + kernel quantile
     extraction: the global-aggregate analogue of ``treeAggregate``'s final
     gather (and of the reference's PG Gather node). Collected rows are one
-    kilobyte-scale partial per scan partition; for scans with more map
-    tasks than ``AUTO_FANOUT_THRESHOLD`` (10k-task scans at 100 TB) an
-    executor pre-merge round is inserted AUTOMATICALLY
-    (``auto_merge_fanout``), bounding the gather to ~sqrt(tasks) rows.
+    kilobyte-scale partial per scan partition, or ~sqrt(tasks) rows past
+    ``AUTO_FANOUT_THRESHOLD`` map tasks (``gather_partials``).
     vs merging on an executor (groupBy().applyInPandas): one fewer
     shuffle+Python stage and no 1-row extraction job — measured
     1.23s -> 0.85s interleaved at sf0.1."""
-    from ddsketch_spark.operators.aggregate import (
-        auto_merge_fanout, premerge_partials)
-
-    parts_df = sketch_partials(df, "v", factory=factory,
-                               weight_col=weight_col)
-    fan = auto_merge_fanout(df.rdd.getNumPartitions())
-    if fan:
-        parts_df = premerge_partials(parts_df, fan, from_bytes)
-    parts = parts_df.collect()
-    acc = None
-    for r in parts:
-        s = from_bytes(bytes(r["sketch"]))
-        acc = s if acc is None else acc.merge(s)
+    parts = gather_partials(df, "v", factory, from_bytes, weight_col).collect()
+    acc = merge_serialized((r["sketch"] for r in parts), from_bytes)
     return acc.quantile(BOUND_QS)
 
 
@@ -1481,16 +1468,12 @@ def tokens_topk_sketched(spark, sf_dir):
     rank rows, oracles.bound_rows_sql)."""
     from ddsketch_spark.core.spacesaving import SpaceSaving
     from ddsketch_spark.core.spacesaving import from_bytes as ss_from_bytes
-    from ddsketch_spark.operators.aggregate import (
-        auto_merge_fanout, premerge_partials)
 
     d = _spread(spark, _t(spark, sf_dir, "documents"))
     toks = d.select(F.explode(F.split(F.col("text"), " ")).alias("token"))
-    parts_df = sketch_partials(
-        toks, "token", factory=lambda: SpaceSaving(TOPK_SS_CAPACITY))
-    fan = auto_merge_fanout(toks.rdd.getNumPartitions())
-    if fan:
-        parts_df = premerge_partials(parts_df, fan, ss_from_bytes)
+    parts_df = gather_partials(toks, "token",
+                               lambda: SpaceSaving(TOPK_SS_CAPACITY),
+                               ss_from_bytes)
     truth_df = (toks.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
                 .orderBy(F.col("cnt").desc(), F.col("token").asc())
                 .limit(TOPK_TOKENS))
@@ -1499,10 +1482,7 @@ def tokens_topk_sketched(spark, sf_dir):
     # of one with the other's tasks (guide §2.6; measured 2.15 -> 1.76 s
     # at sf1.0). Each job's own result is unchanged.
     parts, truth = _collect_concurrently(parts_df, truth_df)
-    acc = None
-    for r in parts:
-        s = ss_from_bytes(bytes(r["sketch"]))
-        acc = s if acc is None else acc.merge(s)
+    acc = merge_serialized((r["sketch"] for r in parts), ss_from_bytes)
     rows = []
     for rk, r in enumerate(truth, 1):
         e = acc.get(r["token"]) if acc is not None else None

@@ -63,8 +63,14 @@ from pyspark.sql.types import (
 )
 
 from ddsketch_spark.core.ddsketch import DDSketch
-from ddsketch_spark.operators.aggregate import merge_partials
-from ddsketch_spark.operators.native import dd_bucket_exprs, ddsketch_agg_native
+from ddsketch_spark.core.hashing import H64_BITS
+from ddsketch_spark.operators.aggregate import (
+    grouped_apply_sorted, merge_partials,
+)
+from ddsketch_spark.operators.native import (
+    _hll_register_rows, _make_dd_batch_assembler, _make_hll_batch_assembler,
+    _position_cells, dd_bucket_exprs, ddsketch_agg_native,
+)
 
 
 def _read_manifest(state_dir: str) -> dict | None:
@@ -325,40 +331,24 @@ def assemble_window_sketches(
     """Batch post-processing of :func:`windowed_bucket_counts` output (read
     back from the sink): ``keys..., window_start, window_end, sketch
     binary, n`` — one binary DDSketch per (keys, finalized window), built
-    from O(buckets) cell rows per group (same assembly contract as the
-    native batch path)."""
-    keys = list(keys)
+    from O(buckets) cell rows per group by the native batch path's
+    assembler (same bytes, same "bucket overflow" error)."""
+    run_keys = list(keys) + ["window_start", "window_end"]
     out_schema = StructType(
         [f for f in bucket_rows.schema.fields if f.name in keys]
         + [StructField("window_start", TimestampType(), False),
            StructField("window_end", TimestampType(), False),
            StructField("sketch", BinaryType(), False),
            StructField("n", LongType(), False)])
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        s = DDSketch(alpha, nbuckets)
-        live = pdf[pdf["__part"] >= 0]
-        s.count = int(live["cnt"].sum())
-        if s.count == 0:
-            return pd.DataFrame({f.name: [] for f in out_schema.fields})
-        zero = live[live["__part"] == 1]
-        s.zero_count = int(zero["cnt"].sum())
-        neg = live[live["__part"] == 0]
-        pos = live[live["__part"] == 2]
-        s.neg = dict(zip(neg["__bidx"].astype(int), neg["cnt"].astype(int)))
-        s.pos = dict(zip(pos["__bidx"].astype(int), pos["cnt"].astype(int)))
-        s._enforce_maxbuckets()
-        row = {k: [pdf[k].iloc[0]] for k in keys}
-        row.update({
-            "window_start": [pdf["window_start"].iloc[0]],
-            "window_end": [pdf["window_end"].iloc[0]],
-            "sketch": [s.to_bytes()],
-            "n": [s.count],
-        })
-        return pd.DataFrame(row)
-
-    return (bucket_rows.groupBy(*keys, "window_start", "window_end")
-            .applyInPandas(assemble, schema=out_schema))
+    # n is the sketch's live count: NULL-value cells (part -1) add nothing
+    live = F.when(F.col("__part") >= 0, F.col("cnt")).otherwise(F.lit(0))
+    cells = bucket_rows.select(*run_keys, "__part", "__bidx",
+                               F.col("cnt").alias("__c"),
+                               live.alias("__rows"))
+    return grouped_apply_sorted(
+        cells, run_keys,
+        _make_dd_batch_assembler(run_keys, alpha, nbuckets, "error"),
+        out_schema, per_run=False)
 
 
 def stateful_quantiles(
@@ -474,21 +464,13 @@ def windowed_hll_cells(
     windows only) ``window_start, window_end, j, rho`` rows; feed them to
     :func:`assemble_window_hll` for binary sketches / NDV estimates.
     ``hash_col`` is the shared 60-bit hash (core.hashing.spark_h64)."""
-    from ddsketch_spark.core.hashing import H64_BITS
-
     m = 1 << p
-    Q = H64_BITS - p + 1
-    h = F.col(hash_col)
-    wrem = F.expr(f"{hash_col} div {m}")
-    rho = (F.when(wrem == 0, F.lit(Q))
-           .otherwise(F.lit(Q) - F.length(F.bin(wrem)))).cast("int")
+    cells = _hll_register_rows(stream_df.withWatermark(ts_col, watermark_delay),
+                               hash_col, [ts_col], m, H64_BITS - p + 1)
     return (
-        stream_df
-        .withWatermark(ts_col, watermark_delay)
-        .where(h.isNotNull())
-        .select(F.col(ts_col), (h % m).alias("j"), rho.alias("rho"))
-        .groupBy(F.window(ts_col, window_duration), "j")
-        .agg(F.max("rho").alias("rho"))
+        cells.groupBy(F.window(ts_col, window_duration),
+                      F.col("__j").alias("j"))
+        .agg(F.max("__rho").alias("rho"))
         .select(F.col("window.start").alias("window_start"),
                 F.col("window.end").alias("window_end"), "j", "rho")
     )
@@ -496,32 +478,30 @@ def windowed_hll_cells(
 
 def assemble_window_hll(cell_rows: DataFrame, p: int = 12) -> DataFrame:
     """Batch post-processing of :func:`windowed_hll_cells` output:
-    ``window_start, window_end, sketch binary, ndv`` per finalized window."""
-    import numpy as np
+    ``window_start, window_end, sketch binary, ndv`` per finalized window.
+    The sketch header count is 0: register maxes cannot know how many
+    rows fed them."""
+    from ddsketch_spark.core.hll import from_bytes as hll_from_bytes
 
-    from ddsketch_spark.core.hll import HLL
-
+    run_keys = ["window_start", "window_end"]
     out_schema = StructType([
         StructField("window_start", TimestampType(), False),
         StructField("window_end", TimestampType(), False),
         StructField("sketch", BinaryType(), False),
         StructField("ndv", LongType(), False),
     ])
+    build = _make_hll_batch_assembler(run_keys, p)
 
     def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        s = HLL(p)
-        regs = np.zeros(1 << p, dtype=np.uint8)
-        regs[pdf["j"].to_numpy(dtype=np.int64)] = pdf["rho"].to_numpy(dtype=np.int64)
-        s.registers = regs
-        return pd.DataFrame({
-            "window_start": [pdf["window_start"].iloc[0]],
-            "window_end": [pdf["window_end"].iloc[0]],
-            "sketch": [s.to_bytes()],
-            "ndv": [int(s.estimate())],
-        })
+        out = build(pdf)
+        out["ndv"] = [int(hll_from_bytes(b).estimate()) for b in out["sketch"]]
+        return out.drop(columns="n")
 
-    return (cell_rows.groupBy("window_start", "window_end")
-            .applyInPandas(assemble, schema=out_schema))
+    cells = cell_rows.select(*run_keys, F.col("j").alias("__j"),
+                             F.col("rho").alias("__r"),
+                             F.lit(0).alias("__rows"))
+    return grouped_apply_sorted(cells, run_keys, assemble, out_schema,
+                                per_run=False)
 
 
 def assemble_session_sketches(
@@ -607,19 +587,11 @@ def windowed_cms_cells(
     finalized windows only) ``window_start, window_end, i, pos, c``
     rows; feed them to :func:`windowed_cms_estimates` for per-window
     frequency estimates. ``hash_col`` is the shared 60-bit hash."""
-    from ddsketch_spark.operators.native import _positions_exprs
-
-    w = (F.coalesce(F.col(weight_col).cast("long"), F.lit(1))
-         if weight_col else F.lit(1).cast("long"))
     return (
-        stream_df
-        .withWatermark(ts_col, watermark_delay)
-        .where(F.col(hash_col).isNotNull())
-        .select(F.col(ts_col), _positions_exprs(hash_col, depth, width),
-                w.alias("__w"))
-        .select(F.col(ts_col), F.col("ip.i").alias("i"),
-                F.col("ip.pos").alias("pos"), "__w")
-        .groupBy(F.window(ts_col, window_duration), "i", "pos")
+        _position_cells(stream_df.withWatermark(ts_col, watermark_delay),
+                        hash_col, depth, width, [ts_col], weight_col)
+        .groupBy(F.window(ts_col, window_duration),
+                 F.col("__i").alias("i"), F.col("__pos").alias("pos"))
         .agg(F.sum("__w").alias("c"))
         .select(F.col("window.start").alias("window_start"),
                 F.col("window.end").alias("window_end"), "i", "pos", "c")
@@ -683,15 +655,11 @@ def windowed_bloom_cells(
     built-in watermarked streaming aggregation. Emits (append mode,
     finalized windows only) ``window_start, window_end, pos`` rows; feed
     them to :func:`windowed_bloom_members`."""
-    from ddsketch_spark.operators.native import _positions_exprs
-
     return (
-        stream_df
-        .withWatermark(ts_col, watermark_delay)
-        .where(F.col(hash_col).isNotNull())
-        .select(F.col(ts_col), _positions_exprs(hash_col, k, nbits))
-        .select(F.col(ts_col), F.col("ip.pos").alias("pos"))
-        .groupBy(F.window(ts_col, window_duration), "pos")
+        _position_cells(stream_df.withWatermark(ts_col, watermark_delay),
+                        hash_col, k, nbits, [ts_col])
+        .groupBy(F.window(ts_col, window_duration),
+                 F.col("__pos").alias("pos"))
         .agg(F.count(F.lit(1)).alias("__c"))      # presence; count unused
         .select(F.col("window.start").alias("window_start"),
                 F.col("window.end").alias("window_end"), "pos")

@@ -127,11 +127,14 @@ def test_native_rejects_nonpositive_weight(spark):
 
 
 def test_api_default_is_native_and_matches_python(data):
+    """api.ddsketch (the native build) is bit-identical to the generic
+    Arrow pipeline, sketch bytes and lineage n alike."""
     df, _ = data
     a = dd_api(df, "v", ALPHA, NB, keys=["k"]).collect()
-    b = dd_api(df, "v", ALPHA, NB, keys=["k"], impl="python").collect()
-    am = {r["k"]: bytes(r["sketch"]) for r in a}
-    bm = {r["k"]: bytes(r["sketch"]) for r in b}
+    b = sketch_agg(df, "v", keys=["k"],
+                   factory=lambda: DDSketch(ALPHA, NB)).collect()
+    am = {r["k"]: (bytes(r["sketch"]), r["n"]) for r in a}
+    bm = {r["k"]: (bytes(r["sketch"]), r["n"]) for r in b}
     assert am == bm
 
 
@@ -312,3 +315,136 @@ def test_int64_keys_beyond_2_53_with_nulls_stay_distinct(spark):
                 assert DDSketch.from_bytes(got[k]) == want, k
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
+# ------------------------------------- one assembler, keyed or keyless
+
+def _native_build(kind, df, keys):
+    from ddsketch_spark.operators.native import (
+        bloom_agg_native, cms_agg_native, hll_agg_native)
+
+    return {
+        "dd": lambda: ddsketch_agg_native(df, "v", ALPHA, NB, keys),
+        "hll": lambda: hll_agg_native(df, "h", p=10, keys=keys),
+        "cms": lambda: cms_agg_native(df, "h", depth=4, width=256, keys=keys),
+        "bloom": lambda: bloom_agg_native(df, "h", nbits=1 << 12, k=4,
+                                          keys=keys),
+    }[kind]()
+
+
+def _kernel_build(kind, sub):
+    from ddsketch_spark.core.bloom import Bloom
+    from ddsketch_spark.core.cms import CMS
+    from ddsketch_spark.core.hashing import py_h64
+    from ddsketch_spark.core.hll import HLL
+
+    if kind == "dd":
+        return DDSketch(ALPHA, NB).update(sub["v"].to_numpy("float64")), len(sub)
+    items = sub["s"].dropna()
+    h = np.array([py_h64(x) for x in items], dtype=np.int64)
+    s = {"hll": lambda: HLL(10), "cms": lambda: CMS(4, 256),
+         "bloom": lambda: Bloom(1 << 12, 4)}[kind]()
+    return s.update(h), len(items)
+
+
+def _from_bytes(kind, b):
+    from ddsketch_spark.core import bloom, cms, hll
+
+    return {"dd": DDSketch.from_bytes, "hll": hll.from_bytes,
+            "cms": cms.from_bytes, "bloom": bloom.from_bytes}[kind](b)
+
+
+@pytest.fixture(scope="module")
+def sibling_data(spark):
+    from ddsketch_spark.core.hashing import spark_h64
+
+    rng = np.random.default_rng(23)
+    n = 2500
+    pdf = pd.DataFrame({
+        "k": rng.integers(0, 3, n),
+        "v": np.exp(rng.standard_normal(n)) * 10 - 3,
+        "s": [f"item-{i}" for i in rng.integers(0, 400, n)],
+    })
+    pdf.loc[::17, "v"] = None
+    pdf.loc[::19, "s"] = None
+    df = (spark.createDataFrame(pdf).repartition(5)
+          .select("k", "v", "s", spark_h64("s").alias("h")))
+    return df, pdf
+
+
+@pytest.mark.parametrize("keys", [(), ("k",)], ids=["keyless", "keyed"])
+@pytest.mark.parametrize("kind", ["dd", "hll", "cms", "bloom"])
+def test_native_equals_kernel_keyed_and_keyless(sibling_data, kind, keys):
+    """Every native build — one sorted-run assembler path whether keyed
+    or not — equals the single-process kernel per group, with lineage n
+    (rows for DDSketch, non-NULL items for the hash sketches)."""
+    df, pdf = sibling_data
+    rows = _native_build(kind, df, list(keys)).collect()
+    groups = (dict(list(pdf.groupby("k"))) if keys else {None: pdf})
+    assert len(rows) == len(groups)
+    for r in rows:
+        want, n = _kernel_build(kind, groups[r["k"] if keys else None])
+        got = _from_bytes(kind, bytes(r["sketch"]))
+        assert got == want and got.count == want.count, (kind, keys)
+        assert r["n"] == n
+
+
+@pytest.mark.parametrize("source", ["empty", "all_null"])
+@pytest.mark.parametrize("keys", [(), ("k",)], ids=["keyless", "keyed"])
+@pytest.mark.parametrize("kind", ["dd", "hll", "cms", "bloom"])
+def test_native_empty_and_all_null_give_no_rows(sibling_data, kind, keys,
+                                                source):
+    df, _ = sibling_data
+    if source == "empty":
+        df = df.where(F.lit(False))
+    else:
+        df = (df.withColumn("v", F.lit(None).cast("double"))
+              .withColumn("h", F.lit(None).cast("long")))
+    out = _native_build(kind, df, list(keys))
+    assert out.columns == list(keys) + ["sketch", "n"]
+    assert out.collect() == []
+
+
+@pytest.mark.parametrize("name", ["h-1", "a`b", "my hash"])
+def test_hostile_hash_column_names(spark, sibling_data, name):
+    """Hash, weight and output-prefix names reach SQL strings backquoted:
+    a hash column named ``h-1`` must not parse as ``h - 1 div m`` (which
+    silently read the decoy column ``h`` here), and ``a`b`` / ``my hash``
+    must not fail to parse. Same sketches and estimates as under ``h``."""
+    import datetime as dt
+
+    from ddsketch_spark.core.hashing import py_h64
+    from ddsketch_spark.operators.native import (
+        bloom_agg_native, bloom_member_native, cms_agg_native,
+        cms_freq_native, hll_agg_native, hll_ndv_native)
+    from ddsketch_spark.streaming.sketch_stream import (
+        windowed_bloom_cells, windowed_cms_cells, windowed_hll_cells)
+
+    df, _ = sibling_data
+    ts = F.lit(dt.datetime(2024, 1, 1, 10, 30))
+    plain = df.select("k", "h", F.lit(2).alias("w"), ts.alias("ts"))
+    hostile = df.select("k", F.col("h").alias(name),
+                        (F.col("h") + 12345).alias("h"),  # decoy
+                        F.lit(2).alias(f"{name} w"), ts.alias("ts"))
+    probes = [py_h64(f"item-{i}") for i in (1, 2, 999)]
+
+    def builds(d, col, wcol, prefix):
+        return [
+            hll_agg_native(d, col, p=10, keys=["k"]),
+            hll_ndv_native(d, col, p=10, keys=["k"]),
+            cms_agg_native(d, col, 4, 256, keys=["k"], weight_col=wcol),
+            bloom_agg_native(d, col, 1 << 12, 4, keys=["k"]),
+            cms_freq_native(d, col, probes, 4, 256, weight_col=wcol,
+                            prefix=prefix),
+            bloom_member_native(d, col, probes, 1 << 12, 4, prefix=prefix),
+            windowed_hll_cells(d, "ts", col, "1 hour", "1 minute", p=10),
+            windowed_cms_cells(d, "ts", col, "1 hour", "1 minute", 4, 256,
+                               weight_col=wcol),
+            windowed_bloom_cells(d, "ts", col, "1 hour", "1 minute",
+                                 1 << 12, 4),
+        ]
+
+    for want, got in zip(builds(plain, "h", "w", "p_"),
+                         builds(hostile, name, f"{name} w", f"{name} ")):
+        assert sorted(map(tuple, got.collect())) == \
+            sorted(map(tuple, want.collect()))

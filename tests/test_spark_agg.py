@@ -324,6 +324,33 @@ def test_map_side_combine_identical_result(spark, data):
             assert got[k][1] == base[k][1]
 
 
+@pytest.mark.parametrize("key", ["__bucket", "lang code"])
+def test_map_side_combine_any_key_name(spark, key):
+    """map_side_combine must work for key columns whose names are not
+    plain Python identifiers: a leading underscore (the maintainer's
+    ``__bucket``) or a space. Several same-key partials share each input
+    partition, so the combine really merges."""
+    from ddsketch_spark.operators.aggregate import merge_partials
+
+    rng = np.random.default_rng(31)
+    rows, vals = [], {"a": [], "b": []}
+    for i in range(24):
+        k = "ab"[i % 2]
+        v = np.exp(rng.standard_normal(50))
+        vals[k].append(v)
+        rows.append((k, DDSketch(ALPHA, NB).update(v).to_bytes(), i % 3, 50))
+    partials = spark.createDataFrame(
+        pd.DataFrame(rows, columns=[key, "sketch", "part_id", "n"])
+    ).coalesce(2)
+    got = {r[key]: (bytes(r["sketch"]), r["n"]) for r in merge_partials(
+        partials, keys=[key], map_side_combine=True).collect()}
+    assert got.keys() == {"a", "b"}
+    for k, vs in vals.items():
+        want = DDSketch(ALPHA, NB).update(np.concatenate(vs))
+        assert DDSketch.from_bytes(got[k][0]) == want, k
+        assert got[k][1] == 50 * len(vs)
+
+
 def test_sibling_sql_function_surface(spark, data):
     """SQL users can extract NDV/freq/membership/quantiles from stored
     sibling-sketch tables, like the reference's SQL surface for DDSketch."""

@@ -201,6 +201,49 @@ def test_windowed_watermark_native_agg(spark, tmp_path):
     assert by_start[key11]["n"] == 4
 
 
+def test_assemble_window_sketches_bucket_overflow(spark):
+    """A window needing more than nbuckets buckets raises the batch
+    path's "bucket overflow" error (the assembler's shared kernel
+    fallback); the same cells assemble fine with room to spare."""
+    from ddsketch_spark.streaming.sketch_stream import (
+        assemble_window_sketches, windowed_bucket_counts,
+    )
+
+    ts = pd.Timestamp("2025-06-01 10:05:00")
+    pdf = pd.DataFrame({"ts": [ts] * 200,
+                        "v": np.exp(np.linspace(0, 40, 200))})
+    cells = windowed_bucket_counts(spark.createDataFrame(pdf), "ts", "v",
+                                   "1 hour", "1 minute", alpha=0.01)
+    with pytest.raises(Exception, match="bucket overflow"):
+        assemble_window_sketches(cells, 0.01, 16).collect()
+    (row,) = assemble_window_sketches(cells, 0.01, 2048).collect()
+    want = DDSketch(0.01, 2048).update(pdf["v"].to_numpy())
+    assert DDSketch.from_bytes(bytes(row["sketch"])) == want
+    assert row["n"] == 200
+
+
+def test_assemble_window_sketches_all_null_window_emits_no_row(spark):
+    """A window whose values are all NULL has no live count: like an
+    all-NULL batch group it emits no sketch row, and the other windows
+    still assemble."""
+    from ddsketch_spark.streaming.sketch_stream import (
+        assemble_window_sketches, windowed_bucket_counts,
+    )
+
+    base = pd.Timestamp("2025-06-01 10:00:00")
+    pdf = pd.DataFrame({
+        "ts": [base + pd.Timedelta(minutes=m) for m in (5, 10, 70, 80)],
+        "v": [None, None, 3.0, 4.0]})
+    cells = windowed_bucket_counts(
+        spark.createDataFrame(pdf, "ts timestamp, v double"), "ts", "v",
+        "1 hour", "1 minute", alpha=0.01)
+    (row,) = assemble_window_sketches(cells, 0.01, 2048).collect()
+    assert row["window_start"] == base + pd.Timedelta(hours=1)
+    assert DDSketch.from_bytes(bytes(row["sketch"])) == \
+        DDSketch(0.01, 2048).update(np.array([3.0, 4.0]))
+    assert row["n"] == 2
+
+
 def test_windowed_hll_cells_equals_batch(spark, tmp_path):
     """Streaming windowed HLL (register-max as a built-in watermarked agg)
     assembles to the same registers/NDV as a batch HLL over the same
