@@ -144,6 +144,16 @@ def test_query_matches_oracle_sf0001(spark, name):
             assert x == y or (pd.isna(x) and pd.isna(y)), (c, x, y)
 
 
+def test_catalog_pairs_every_row_with_its_oracle():
+    """QUERIES and ORACLES derive from one CATALOG: same names in the same
+    order, each row keyed by its own function name, 73 rows."""
+    from ddsketch_spark.queries import ORACLES, QUERIES
+
+    assert list(QUERIES) == list(ORACLES)
+    assert all(fn.__name__ == name for name, fn in QUERIES.items())
+    assert len(QUERIES) == 73
+
+
 def test_hash_sketch_with_nulls_not_degraded(spark):
     """Regression: a NULLable int64 hash column crosses Arrow->pandas as
     float64, which rounds 60-bit hashes to 256-hash granularity and

@@ -815,3 +815,46 @@ def test_windowed_bloom_cells_equals_batch(spark, tmp_path):
                                     dtype=np.int64))
         for p, wm in zip(probes, want):
             assert got[(wkey, p)] == bool(wm), (wkey, p)
+
+
+def test_streaming_rows_leave_no_scratch_dirs(spark):
+    """stream_sessionized_p90_clicks and stream_heavy_hitters_events
+    materialize their results before returning, so each call removes its
+    own scratch dir on exit; the returned frames still collect."""
+    from ddsketch_spark import queries as q
+
+    os.makedirs(q.SKETCH_STORE_ROOT, exist_ok=True)
+    q._sweep_stale_scratch()     # a sweep inside the rows changes nothing now
+    before = set(os.listdir(q.SKETCH_STORE_ROOT))
+    outs = [q.QUERIES[name](spark, "/root/testdata/sf0.001")
+            for name in ("stream_sessionized_p90_clicks",
+                         "stream_heavy_hitters_events")]
+    assert set(os.listdir(q.SKETCH_STORE_ROOT)) == before
+    for out in outs:
+        assert out.collect()
+
+
+def test_replay_failure_drops_memory_sink(spark, tmp_path):
+    """A failing finish step must not leave the memory sink's temp view
+    (which holds the whole complete-mode result in driver memory) or a
+    running query behind; the error propagates."""
+    from ddsketch_spark.queries import _replay
+
+    src = str(tmp_path / "src")
+    _write_chunk(spark, src, seed=5, n=100)
+    cells = spark.readStream.schema(SCHEMA).parquet(src).groupBy("k").count()
+
+    def stream_views():
+        return {t.name for t in spark.catalog.listTables()
+                if t.isTemporary and t.name.startswith("stream_")}
+
+    before = stream_views()
+
+    def finish(table):
+        assert table.count() == 3     # the sink holds the result
+        raise RuntimeError("finish failed")
+
+    with pytest.raises(RuntimeError, match="finish failed"):
+        _replay(spark, cells, finish)
+    assert stream_views() == before
+    assert spark.streams.active == []
