@@ -76,14 +76,6 @@ def py_positions(value: str, k: int, width: int) -> list[int]:
     return [(h1 + i * h2) % width for i in range(k)]
 
 
-def duckdb_positions_cte(h_expr: str, k: int, width: int) -> str:
-    """DuckDB expression fragment: position for stride index ``i`` given a
-    column ``i`` from a lateral range; mirror of :func:`positions`."""
-    h1 = f"({h_expr} % {1 << H1_BITS})"
-    h2 = f"(2 * (({h_expr} >> {H1_BITS}) % {1 << (H1_BITS - 1)}) + 1)"
-    return f"(({h1} + i * {h2}) % {width})"
-
-
 def bit_length_u48(w: np.ndarray) -> np.ndarray:
     """Exact bit length of non-negative int64s, vectorized. ``frexp`` on the
     float64 image gives e == bit_length(w) exactly for w < 2^53; above that

@@ -5,7 +5,7 @@ aggregate protocol (SFUNC / COMBINEFUNC / SERIALFUNC / FINALFUNC,
 /root/reference/sql/ddsketch--1.0.0.sql:62-70 and ddsketch.c:2176-2361):
 
   stage 1 (SFUNC, map-side partial aggregation):
-      ``mapInPandas`` over ONLY the projected key+value columns — one
+      a pandas map over ONLY the projected key+value columns — one
       accumulator per key per input partition, updated per Arrow batch with
       vectorized numpy. Emits one row per (partition, key): the serialized
       partial sketch plus lineage fields (partition id, row count). The
@@ -77,7 +77,7 @@ def sketch_partials(
     """
     keys = list(keys)
     cols = keys + [value_col] + ([weight_col] if weight_col else [])
-    # explicit projection: mapInPandas is a pruning barrier, so never let
+    # explicit projection: the Python map is a pruning barrier, so never let
     # wide columns (e.g. html binary) cross into Python (SURVEY §4.1)
     projected = df.select(*cols)
     # int64 inputs (pre-hashed columns for HLL/CMS/Bloom) MUST drop NULLs
@@ -134,13 +134,13 @@ def sketch_partials(
         rows: dict[tuple, int] = {}
         pid = 0
         for pdf in batches:
-            if pdf.empty:
-                continue
             pid = int(pdf["__pid"].iloc[0])
             if keys:
                 grouped = pdf.groupby(keys, dropna=False, sort=False)
-                for gkey, gdf in grouped:
-                    gkey = gkey if isinstance(gkey, tuple) else (gkey,)
+                for _, gdf in grouped:
+                    # the key as stored: groupby reports exact object ints
+                    # (keys >= 2^53, see _map_in_pandas_exact) as floats
+                    gkey = tuple(gdf[k].iloc[0] for k in keys)
                     vals, wts = _extract(gdf)
                     acc = accs.get(gkey)
                     if acc is None:
@@ -168,9 +168,11 @@ def sketch_partials(
             out["part_id"].append(pid)
             out["n"].append(rows[gkey])
         if out["sketch"]:
-            yield pd.DataFrame(out)
+            # object keys: pandas would turn [int, None] into float64
+            yield pd.DataFrame({c: pd.Series(v, dtype=object) if c in keys
+                                else v for c, v in out.items()})
 
-    return projected.mapInPandas(update_fn, schema=out_schema)
+    return _map_in_pandas_exact(projected, keys, update_fn, out_schema)
 
 
 AUTO_FANOUT_THRESHOLD = 512
@@ -476,18 +478,11 @@ def grouped_apply_sorted(df: DataFrame, keys: Sequence[str], fn,
 
     ``per_run=False`` hands ``fn`` the whole complete-runs SLICE of each
     batch instead of one call per key run — for fns that vectorize across
-    runs (see native._make_dd_batch_assembler; ~8x again over per-run calls at
+    runs (see native.dd_sketches; ~8x again over per-run calls at
     1M keys).
 
-    Runs on ``mapInArrow`` (not ``mapInPandas``): Spark's Arrow->pandas
-    conversion turns a nullable int64 KEY column whose batch contains a
-    NULL into float64, which (a) silently merges distinct keys >= 2^53
-    (e.g. 60-bit h64 ids) into one run and (b) corrupts the key value the
-    fn emits. Here each integral key column whose Arrow batch actually
-    holds a null is converted with ``integer_object_nulls=True`` (exact
-    Python ints + None); null-free batches keep the fast numpy int64
-    path. Same float64-coercion class as the stage-1 value-column fix in
-    :func:`sketch_partials`, applied to keys.
+    Batches are read by :func:`_map_in_pandas_exact`, so integral keys
+    stay exact even when a batch holds a NULL key.
     """
     keys = list(keys)
     if not keys:
@@ -503,6 +498,45 @@ def _apply_sorted_runs(df: DataFrame, keys: Sequence[str], fn,
     already sorted by ``keys``: no shuffle, so a key's runs in different
     partitions stay separate (the map-side combine of
     :func:`merge_partials`). Zero keys make each partition one run."""
+    def run(pdfs):
+        pending = None
+        for pdf in pdfs:
+            if pending is not None:
+                pdf = pd.concat([pending, pdf], ignore_index=True)
+                pending = None
+            # the LAST key run may continue in the next batch: hold it back
+            _, starts = key_runs(pdf[keys])
+            tail = int(starts[-1])
+            if tail == 0:
+                pending = pdf  # single run — may continue in next batch
+                continue
+            head = pdf.iloc[:tail]
+            pending = pdf.iloc[tail:].reset_index(drop=True)
+            if per_run:
+                # rows are key-sorted: slice contiguous runs directly
+                # (pandas groupby would also re-group, but its .groups
+                # breaks on None keys in object columns — and slicing
+                # skips the factorize pass entirely)
+                yield pd.concat([fn(head.iloc[a:b])
+                                 for a, b in zip(starts[:-1], starts[1:])],
+                                ignore_index=True)
+            else:
+                yield fn(head)
+        if pending is not None and len(pending):
+            yield fn(pending)
+
+    return _map_in_pandas_exact(df, keys, run, schema)
+
+
+def _map_in_pandas_exact(df: DataFrame, keys: Sequence[str], fn,
+                         schema: StructType) -> DataFrame:
+    """``df.mapInPandas(fn, schema)`` with exact integral ``keys`` — the
+    batch reader of both Python stages. Spark's Arrow->pandas conversion
+    turns a nullable int64 column whose batch holds a NULL into float64,
+    merging distinct keys >= 2^53 (60-bit h64 ids) and corrupting the
+    keys ``fn`` emits; here such a key column is converted with
+    ``integer_object_nulls=True`` (exact ints + None), null-free batches
+    keep numpy int64. Empty batches and results are skipped."""
     int_keys = [k for k in keys
                 if df.schema[k].dataType.typeName()
                 in ("long", "integer", "short", "byte")]
@@ -520,41 +554,9 @@ def _apply_sorted_runs(df: DataFrame, keys: Sequence[str], fn,
                     pdf[k] = col.to_pandas(integer_object_nulls=True)
             return pdf
 
-        def emit(res: pd.DataFrame) -> "pa.RecordBatch":
-            return pa.RecordBatch.from_pandas(res, schema=arrow_out,
-                                              preserve_index=False)
-
-        pending = None
-        for ab in batches:
-            if ab.num_rows == 0:
-                continue
-            pdf = to_pdf(ab)
-            if pending is not None:
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            # the LAST key run may continue in the next batch: hold it back
-            _, starts = key_runs(pdf[keys])
-            tail = int(starts[-1])
-            if tail == 0:
-                pending = pdf  # single run — may continue in next batch
-                continue
-            head = pdf.iloc[:tail]
-            pending = pdf.iloc[tail:].reset_index(drop=True)
-            if per_run:
-                # rows are key-sorted: slice contiguous runs directly
-                # (pandas groupby would also re-group, but its .groups
-                # breaks on None keys in object columns — and slicing
-                # skips the factorize pass entirely)
-                res = pd.concat([fn(head.iloc[a:b])
-                                 for a, b in zip(starts[:-1], starts[1:])],
-                                ignore_index=True)
-            else:
-                res = fn(head)
+        for res in fn(to_pdf(ab) for ab in batches if ab.num_rows):
             if len(res):
-                yield emit(res)
-        if pending is not None and len(pending):
-            res = fn(pending)
-            if len(res):
-                yield emit(res)
+                yield pa.RecordBatch.from_pandas(res, schema=arrow_out,
+                                                 preserve_index=False)
 
     return df.mapInArrow(run, schema)

@@ -48,48 +48,11 @@ MEDIA_SCHEMA = StructType([
 
 # ------------------------------------------------------------- synthesis
 
-def encode_fake_image(width: int, height: int, seed: int) -> bytes:
-    rng = np.random.default_rng(seed)
-    px = rng.integers(0, 256, width * height, dtype=np.uint8).tobytes()
-    return IMG_MAGIC + struct.pack(">HH", width, height) + px
-
-
-def encode_fake_audio(rate: int, n_samples: int, seed: int) -> bytes:
-    rng = np.random.default_rng(seed)
-    samples = (rng.normal(0, 4000, n_samples)).astype(np.int16).tobytes()
-    return AUD_MAGIC + struct.pack(">HI", rate, n_samples) + samples
-
-
-def encode_fake_video(width: int, height: int, n_frames: int, seed: int) -> bytes:
-    rng = np.random.default_rng(seed)
-    px = rng.integers(0, 256, width * height * n_frames, dtype=np.uint8).tobytes()
-    return VID_MAGIC + struct.pack(">HHH", width, height, n_frames) + px
-
-
-def synthesize_media(spark, n_rows: int, seed: int = 42) -> DataFrame:
-    """Deterministic media table (one kind per residue class of media_id)."""
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["id"].to_numpy()
-            rows = []
-            for i in ids:
-                i = int(i)
-                s = seed * 1_000_003 + i
-                if i % 3 == 0:
-                    w, h = 16 + i % 32, 16 + (i // 2) % 32
-                    rows.append((i, "image", encode_fake_image(w, h, s),
-                                 w, h, None))
-                elif i % 3 == 1:
-                    n = 1000 + (i % 500)
-                    rows.append((i, "audio", encode_fake_audio(16000, n, s),
-                                 None, None, 16000))
-                else:
-                    w, h, nf = 8 + i % 8, 8 + i % 8, 4 + i % 8
-                    rows.append((i, "video",
-                                 encode_fake_video(w, h, nf, s), w, h, 24))
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
-
-    return spark.range(0, n_rows, 1).mapInPandas(gen, schema=MEDIA_SCHEMA)
+def fake_encode_image(img: np.ndarray) -> bytes:
+    """An (h, w) uint8 array as a FAKEIMG1 payload (inverse of
+    :func:`fake_decode_image`)."""
+    h, w = img.shape
+    return IMG_MAGIC + struct.pack(">HH", w, h) + img.astype(np.uint8).tobytes()
 
 
 # An arithmetic (RNG-free) synthesizer whose payload bytes are a pure
@@ -125,9 +88,8 @@ def synthesize_media_arith(spark, n_rows: int, seed: int = 7) -> DataFrame:
                 s = seed * 1_000_003 + i
                 if i % 3 == 0:
                     w, h = 8 * (2 + i % 4), 3 + i % 5
-                    px = arith_pixels(w * h, s).tobytes()
-                    rows.append((i, "image",
-                                 IMG_MAGIC + struct.pack(">HH", w, h) + px,
+                    img = arith_pixels(w * h, s).reshape(h, w)
+                    rows.append((i, "image", fake_encode_image(img),
                                  w, h, None))
                 elif i % 3 == 1:
                     n = 1000 + 8 * (i % 50)
@@ -355,9 +317,8 @@ def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
                 h, w = img.shape
                 yi = (np.arange(out_h) * h // out_h)
                 xi = (np.arange(out_w) * w // out_w)
-                small = img[yi][:, xi]
-                enc = IMG_MAGIC + struct.pack(">HH", out_w, out_h) + small.tobytes()
-                out.append((int(mid), enc, out_w, out_h))
+                out.append((int(mid), fake_encode_image(img[yi][:, xi]),
+                            out_w, out_h))
             yield pd.DataFrame(out, columns=[f.name for f in RESIZE_SCHEMA.fields])
 
     return (media.where(F.col("kind") == "image")
@@ -380,9 +341,7 @@ def sample_frames(media: DataFrame, every: int = 2) -> DataFrame:
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 vid = fake_decode_video(bytes(payload))
                 for idx in range(0, vid.shape[0], every):
-                    h, w = vid[idx].shape
-                    enc = IMG_MAGIC + struct.pack(">HH", w, h) + vid[idx].tobytes()
-                    out.append((int(mid), idx, enc))
+                    out.append((int(mid), idx, fake_encode_image(vid[idx])))
             yield pd.DataFrame(out, columns=[f.name for f in FRAME_SCHEMA.fields])
 
     return (media.where(F.col("kind") == "video")

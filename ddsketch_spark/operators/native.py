@@ -1,4 +1,4 @@
-"""JVM-native DDSketch aggregation — the scale path.
+"""JVM-native sketch aggregation — the scale path.
 
 DDSketch's per-row work is a closed-form scalar expression
 (``index = ceil(log(v)/log(2) * multiplier)``, reference ddsketch.c:3164-3168),
@@ -11,11 +11,18 @@ aggregation* — the shuffle carries at most (keys x nbuckets) partial bucket
 counts per map task instead of raw rows or Arrow batches. Python only
 assembles the final binary sketch: one vectorized pass per Arrow batch of
 key-sorted bucket cells (``grouped_apply_sorted``, O(nbuckets) rows per
-key). Compared to the generic mapInPandas pipeline
+key). Compared to the generic Arrow pipeline
 (:mod:`ddsketch_spark.operators.aggregate`, kept as the fallback for
 kernels without a closed-form bucket expression — KLL, t-digest), this is
 the plan that survives 100 TB: no JVM->Python crossing on the hot path,
 Tungsten hash aggregation, AQE-managed shuffle.
+
+Each layout — DDSketch buckets, HLL registers, CMS counters, Bloom bits —
+is two steps, defined only here: ``*_cells(df, ..., keys)`` -> ``keys...,
+<cell columns>, __rows`` (JVM expressions + one native aggregation) and
+``*_sketches(cells, keys, ...)`` -> ``keys..., sketch, n`` (the
+assembler). ``*_agg_native`` is the two composed; the streaming layer
+runs the same two with the event-time window as one more key.
 
 Float parity: the JVM's ``Math.log`` and numpy's ``np.log`` agreed on every
 value in the test corpus (850k values x 3 alphas, see
@@ -74,20 +81,18 @@ def dd_bucket_exprs(value_col: str, alpha: float) -> tuple[Column, Column]:
     return part.alias("__part"), bidx.alias("__bidx")
 
 
-def ddsketch_agg_native(
+def dd_cells(
     df: DataFrame,
     value_col: str,
     alpha: float,
-    nbuckets: int,
     keys: Sequence[str] = (),
     weight_col: str | None = None,
-    on_overflow: str = "error",
 ) -> DataFrame:
-    """``keys..., sketch binary, n long`` — same contract and bit-identical
-    output as ``sketch_agg(df, value_col, keys, lambda: DDSketch(...))``,
-    with the aggregation done by Catalyst/Tungsten."""
-    validate_alpha(alpha)
-    validate_nbuckets(nbuckets)
+    """``keys..., __part, __bidx, __c, __rows`` — the DDSketch bucket
+    cells of ``df`` per key: ``__c`` sums the weights of the cell's live
+    values (NULL/NaN values land in part -1 with weight 0), ``__rows``
+    counts its input rows. The one rows->cells step of the batch build
+    and of every windowed (streaming) build."""
     keys = list(keys)
     part, bidx = dd_bucket_exprs(value_col, alpha)
     if weight_col:
@@ -108,32 +113,63 @@ def ddsketch_agg_native(
         w = F.lit(1).cast("long")
     vd = F.col(value_col).cast("double")
     w = F.when(F.col(value_col).isNull() | F.isnan(vd), F.lit(0)).otherwise(w)
-
-    buckets = (
-        df.select(*keys, F.col(value_col), *( [F.col(weight_col)] if weight_col else [] ))
-        .select(*keys, part, bidx, w.alias("__w"))
-        .groupBy(*keys, "__part", "__bidx")
-        .agg(F.sum("__w").alias("__c"), F.count(F.lit(1)).alias("__rows"))
-    )
-    out_schema = _assemble_schema(df, keys)
-    return grouped_apply_sorted(
-        buckets, keys,
-        _make_dd_batch_assembler(keys, alpha, nbuckets, on_overflow),
-        out_schema, per_run=False)
+    rows = (df.select(*keys, F.col(value_col),
+                      *([F.col(weight_col)] if weight_col else []))
+            .select(*keys, part, bidx, w.alias("__w")))
+    return _sum_cells(rows, keys, ["__part", "__bidx"])
 
 
-def _make_dd_batch_assembler(keys, alpha, nbuckets, on_overflow):
-    """Sorted-run assembler of bucket cells (``keys..., __part, __bidx,
-    __c, __rows``) into ``keys..., sketch, n`` — the one DDSketch
-    cells->bytes step, for batch and streaming callers, keyed or not.
+def _sum_cells(rows: DataFrame, keys: Sequence[str],
+               cell: Sequence[str]) -> DataFrame:
+    """``keys..., <cell>, __c, __rows``: per-row weighted cells (``__w``)
+    summed per (keys, cell) — the additive cell aggregation of DDSketch
+    buckets and CMS counters."""
+    return (rows.groupBy(*keys, *cell)
+            .agg(F.sum("__w").alias("__c"), F.count(F.lit(1)).alias("__rows")))
 
-    One numpy pass builds every run's wire bytes (same layout as
-    DDSketch.to_bytes — big-endian header + neg-DESC/pos-ASC bucket
-    pairs), with only a ~2 microsecond header pack per run. ``n`` sums
-    ``__rows``; runs with no live count emit no row. Runs whose bucket
-    count exceeds nbuckets go through the kernel (``on_overflow``: error
-    or UDDSketch collapse). Bit-identical to a kernel build (pinned by
-    the native==kernel identity tests)."""
+
+def _sketches(cells: DataFrame, keys: Sequence[str], assemble,
+              per_run: bool = False) -> DataFrame:
+    """``keys..., sketch binary, n long``: ``assemble`` over the
+    key-sorted runs of ``cells`` (:func:`grouped_apply_sorted`)."""
+    schema = StructType([f for f in cells.schema.fields if f.name in keys]
+                        + [StructField("sketch", BinaryType(), False),
+                           StructField("n", LongType(), False)])
+    return grouped_apply_sorted(cells, keys, assemble, schema,
+                                per_run=per_run)
+
+
+def ddsketch_agg_native(
+    df: DataFrame,
+    value_col: str,
+    alpha: float,
+    nbuckets: int,
+    keys: Sequence[str] = (),
+    weight_col: str | None = None,
+    on_overflow: str = "error",
+) -> DataFrame:
+    """``keys..., sketch binary, n long`` — same contract and bit-identical
+    output as ``sketch_agg(df, value_col, keys, lambda: DDSketch(...))``,
+    with the aggregation done by Catalyst/Tungsten."""
+    validate_alpha(alpha)
+    validate_nbuckets(nbuckets)
+    return dd_sketches(dd_cells(df, value_col, alpha, keys, weight_col),
+                       keys, alpha, nbuckets, on_overflow)
+
+
+def dd_sketches(cells: DataFrame, keys: Sequence[str], alpha: float,
+                nbuckets: int, on_overflow: str = "error") -> DataFrame:
+    """``keys..., sketch, n`` — one binary DDSketch per key run of
+    :func:`dd_cells` rows (``keys`` may include a window).
+
+    One numpy pass per Arrow batch builds every run's wire bytes (same
+    layout as DDSketch.to_bytes — big-endian header + neg-DESC/pos-ASC
+    bucket pairs), with only a ~2 microsecond header pack per run. ``n``
+    sums ``__rows``; runs with no live count emit no row. Runs whose
+    bucket count exceeds nbuckets go through the kernel (``on_overflow``:
+    error or UDDSketch collapse). Bit-identical to a kernel build (pinned
+    by the native==kernel identity tests)."""
+    keys = list(keys)
 
     def assemble_batch(pdf: pd.DataFrame) -> pd.DataFrame:
         run_id, run_starts = key_runs(pdf[keys])
@@ -188,23 +224,13 @@ def _make_dd_batch_assembler(keys, alpha, nbuckets, on_overflow):
             out["sketch"].append(hdr + bbytes[starts[r] * 12: ends[r] * 12])
         return pd.DataFrame(out)
 
-    return assemble_batch
+    return _sketches(cells, keys, assemble_batch)
 
 
 # ---------------------------------------------------------------------------
-# native stage-1 for the hash-based siblings: register/counter computation
-# as JVM expressions + native partial aggregation; Python assembles the
-# final sketch from O(registers) rows per key. Same shuffle story as the
-# DDSketch path: bucket rows cross the wire, never raw rows.
+# the hash-based siblings: register/counter cells as JVM expressions +
+# native partial aggregation, assembled from O(registers) rows per key.
 # ---------------------------------------------------------------------------
-
-def _assemble_schema(df: DataFrame, keys: Sequence[str]) -> StructType:
-    return StructType(
-        [f for f in df.schema.fields if f.name in keys]
-        + [StructField("sketch", BinaryType(), False),
-           StructField("n", LongType(), False)]
-    )
-
 
 def sql_ident(name: str) -> str:
     """``name`` as one backquoted Spark SQL identifier, whatever it holds
@@ -213,17 +239,21 @@ def sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _hll_register_rows(df: DataFrame, hash_col: str, keys: list,
-                       m: int, Q: int) -> DataFrame:
-    """``keys..., __j, __rho`` — one register observation per non-null
-    hash: ``j = h % m``, ``rho = Q - bit_length(h div m)`` (h div m == 0
-    -> Q). bit_length is computed as popcount of the bit-SMEARED value
-    (x |= x>>1 ... x>>32 sets every bit below the MSB, so bit_count ==
-    bit_length) in six staged integer columns — the previous
-    ``length(bin(x))`` allocated a base-2 String per row on the scan's
-    hot path (identical integers, measured ~9% on hll_ndv_orderkeys at
-    sf1.0; stages keep the expression linear so codegen never sees an
-    exponential tree)."""
+def hll_cells(df: DataFrame, hash_col: str, p: int = 12,
+              keys: Sequence[str] = ()) -> DataFrame:
+    """``keys..., __j, __r, __rows`` — the HLL register cells of ``df``
+    per key: ``__r`` is the max rho of register ``j``, ``__rows`` counts
+    the non-null hashes behind it. Per hash ``j = h % m``, ``rho = Q -
+    bit_length(h div m)`` (h div m == 0 -> Q). bit_length is computed as
+    popcount of the bit-SMEARED value (x |= x>>1 ... x>>32 sets every bit
+    below the MSB, so bit_count == bit_length) in six staged integer
+    columns — the previous ``length(bin(x))`` allocated a base-2 String
+    per row on the scan's hot path (identical integers, measured ~9% on
+    hll_ndv_orderkeys at sf1.0; stages keep the expression linear so
+    codegen never sees an exponential tree)."""
+    keys = list(keys)
+    m = 1 << p
+    Q = H64_BITS - p + 1
     h = F.col(sql_ident(hash_col))
     out = (df.where(h.isNotNull())
            .select(*keys, (h % m).alias("__j"),
@@ -232,14 +262,20 @@ def _hll_register_rows(df: DataFrame, hash_col: str, keys: list,
         out = out.withColumn("__w", F.expr(f"__w | (__w >> {s})"))
     rho = (F.when(F.col("__w") == 0, F.lit(Q))
            .otherwise(F.lit(Q) - F.expr("bit_count(__w)")))
-    return out.select(*keys, "__j", rho.cast("int").alias("__rho"))
+    return (out.select(*keys, "__j", rho.cast("int").alias("__rho"))
+            .groupBy(*keys, "__j")
+            .agg(F.max("__rho").alias("__r"),
+                 F.count(F.lit(1)).alias("__rows")))
 
 
-def _make_hll_batch_assembler(keys, p):
-    """Sorted-run assembler of register cells (``keys..., __j, __r,
-    __rows``) into ``keys..., sketch, n``: one (runs x m) register
-    scatter per Arrow batch + a 13-byte header pack per run (same wire
-    bytes as HLL.to_bytes; the header count is ``sum(__rows)``)."""
+def hll_sketches(cells: DataFrame, keys: Sequence[str],
+                 p: int = 12) -> DataFrame:
+    """``keys..., sketch, n`` — one binary HLL per key run of
+    :func:`hll_cells` rows (``keys`` may include a window): one (runs x
+    m) register scatter per Arrow batch + a 13-byte header pack per run
+    (same wire bytes as HLL.to_bytes; the header count is ``n =
+    sum(__rows)``)."""
+    keys = list(keys)
     m = 1 << p
 
     def assemble_batch(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -255,7 +291,7 @@ def _make_hll_batch_assembler(keys, p):
         out["n"] = cnt
         return pd.DataFrame(out)
 
-    return assemble_batch
+    return _sketches(cells, keys, assemble_batch)
 
 
 def hll_ndv_native(df: DataFrame, hash_col: str, p: int = 12,
@@ -277,12 +313,7 @@ def hll_ndv_native(df: DataFrame, hash_col: str, p: int = 12,
     Q = H64_BITS - p + 1
     # same evaluation order as HLL.estimate() and oracles.hll_ndv_sql
     C = _alpha(m) * m * m * float(1 << Q)
-    regs = (
-        _hll_register_rows(df, hash_col, keys, m, Q)
-        .groupBy(*keys, "__j")
-        .agg(F.max("__rho").alias("__r"))
-    )
-    agg = regs.groupBy(*keys).agg(
+    agg = hll_cells(df, hash_col, p, keys).groupBy(*keys).agg(
         F.count(F.lit(1)).alias("__np"),
         # coalesce: a global aggregate over an EMPTY input still emits one
         # row (count 0, sum NULL) — 0 keeps the math on the kernel's path
@@ -303,20 +334,9 @@ def hll_agg_native(df: DataFrame, hash_col: str, p: int = 12,
                    keys: Sequence[str] = ()) -> DataFrame:
     """``keys..., sketch binary, n long`` — HLL over a pre-hashed int64
     column (see core.hashing.spark_h64), registers computed as JVM
-    expressions: ``j = h % m``, ``rho = Q - bit_length(h div m)``
-    (h div m == 0 -> Q, see _hll_register_rows), aggregated with a
-    native partial-max."""
-    keys = list(keys)
-    m = 1 << p
-    Q = H64_BITS - p + 1
-    buckets = (
-        _hll_register_rows(df, hash_col, keys, m, Q)
-        .groupBy(*keys, "__j")
-        .agg(F.max("__rho").alias("__r"), F.count(F.lit(1)).alias("__rows"))
-    )
-    return grouped_apply_sorted(buckets, keys,
-                                _make_hll_batch_assembler(keys, p),
-                                _assemble_schema(df, keys), per_run=False)
+    expressions and aggregated with a native partial-max
+    (:func:`hll_cells`)."""
+    return hll_sketches(hll_cells(df, hash_col, p, keys), keys, p)
 
 
 def _py_probe_positions(h: int, k: int, width: int) -> list[int]:
@@ -422,16 +442,24 @@ def _position_cells(df: DataFrame, hash_col: str, k: int, width: int,
                     F.col("ip.pos").alias("__pos"), "__w"))
 
 
-def cms_agg_native(df: DataFrame, hash_col: str, depth: int = 5,
-                   width: int = 2048, keys: Sequence[str] = (),
-                   weight_col: str | None = None) -> DataFrame:
-    """Count-min with JVM-side position explode + native partial-sum."""
+def cms_cells(df: DataFrame, hash_col: str, depth: int = 5,
+              width: int = 2048, keys: Sequence[str] = (),
+              weight_col: str | None = None) -> DataFrame:
+    """``keys..., __i, __pos, __c, __rows`` — the count-min counter
+    cells of ``df`` per key: ``__c`` sums the weights at (stride i,
+    position), ``__rows`` counts the hashes behind it (each non-null hash
+    feeds ``depth`` cells, one per stride)."""
     keys = list(keys)
-    buckets = (
-        _position_cells(df, hash_col, depth, width, keys, weight_col)
-        .groupBy(*keys, "__i", "__pos")
-        .agg(F.sum("__w").alias("__c"), F.count(F.lit(1)).alias("__rows"))
-    )
+    return _sum_cells(
+        _position_cells(df, hash_col, depth, width, keys, weight_col),
+        keys, ["__i", "__pos"])
+
+
+def cms_sketches(cells: DataFrame, keys: Sequence[str], depth: int = 5,
+                 width: int = 2048) -> DataFrame:
+    """``keys..., sketch, n`` — one binary count-min per key run of
+    :func:`cms_cells` rows (``keys`` may include a window)."""
+    keys = list(keys)
 
     def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
         s = CMS(depth, width)
@@ -445,30 +473,49 @@ def cms_agg_native(df: DataFrame, hash_col: str, depth: int = 5,
         row["n"] = [int(pdf["__rows"].sum()) // depth]
         return pd.DataFrame(row)
 
-    return grouped_apply_sorted(buckets, keys, assemble,
-                                _assemble_schema(df, keys))
+    return _sketches(cells, keys, assemble, per_run=True)
 
 
-def bloom_agg_native(df: DataFrame, hash_col: str, nbits: int = 1 << 16,
-                     k: int = 5, keys: Sequence[str] = ()) -> DataFrame:
-    """Bloom with JVM-side position explode + native distinct."""
+def cms_agg_native(df: DataFrame, hash_col: str, depth: int = 5,
+                   width: int = 2048, keys: Sequence[str] = (),
+                   weight_col: str | None = None) -> DataFrame:
+    """Count-min with JVM-side position explode + native partial-sum."""
+    return cms_sketches(
+        cms_cells(df, hash_col, depth, width, keys, weight_col),
+        keys, depth, width)
+
+
+def bloom_cells(df: DataFrame, hash_col: str, nbits: int = 1 << 16,
+                k: int = 5, keys: Sequence[str] = ()) -> DataFrame:
+    """``keys..., __pos, __rows`` — the set bits of a Bloom filter over
+    ``df`` per key, ``__rows`` counting the (hash, stride) probes that
+    set the bit (each non-null hash makes ``k``)."""
     keys = list(keys)
-    positions = (_position_cells(df, hash_col, k, nbits, keys)
-                 .select(*keys, "__pos").distinct())
-    rows_per_key = (df.where(F.col(sql_ident(hash_col)).isNotNull())
-                    .groupBy(*keys)
-                    .agg(F.count(F.lit(1)).alias("__nrows")))
+    return (_position_cells(df, hash_col, k, nbits, keys)
+            .groupBy(*keys, "__pos")
+            .agg(F.count(F.lit(1)).alias("__rows")))
+
+
+def bloom_sketches(cells: DataFrame, keys: Sequence[str],
+                   nbits: int = 1 << 16, k: int = 5) -> DataFrame:
+    """``keys..., sketch, n`` — one binary Bloom filter per key run of
+    :func:`bloom_cells` rows (``keys`` may include a window)."""
+    keys = list(keys)
 
     def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
         s = Bloom(nbits, k)
         s.bits[pdf["__pos"].to_numpy(dtype=np.int64)] = True
-        s.count = int(pdf["__nrows"].iloc[0])
+        s.count = int(pdf["__rows"].sum()) // k
         row = {kk: [pdf[kk].iloc[0]] for kk in keys}
         row["sketch"] = [s.to_bytes()]
         row["n"] = [s.count]
         return pd.DataFrame(row)
 
-    joined = (positions.join(rows_per_key, on=keys) if keys
-              else positions.crossJoin(F.broadcast(rows_per_key)))
-    return grouped_apply_sorted(joined, keys, assemble,
-                                _assemble_schema(df, keys))
+    return _sketches(cells, keys, assemble, per_run=True)
+
+
+def bloom_agg_native(df: DataFrame, hash_col: str, nbits: int = 1 << 16,
+                     k: int = 5, keys: Sequence[str] = ()) -> DataFrame:
+    """Bloom with JVM-side position explode + native distinct."""
+    return bloom_sketches(bloom_cells(df, hash_col, nbits, k, keys), keys,
+                          nbits, k)

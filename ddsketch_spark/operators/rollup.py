@@ -102,8 +102,8 @@ def windowed_sketches_as_table(assembled: DataFrame,
     sketch, n`` with ``bucket`` = epoch seconds of the window start.
 
     Tumbling windows are granularity-aligned, so a streaming-maintained
-    hourly table is BIT-IDENTICAL to a batch ``build_sketch_table`` over
-    the same rows (tests/test_rollup.py) — continuous ingestion keeps the
+    hourly table has the same sketch bytes and ``n`` as a batch
+    ``build_sketch_table`` over the same rows — continuous ingestion keeps the
     table fresh, and every ``rollup`` / ``range_percentile`` question
     works unchanged on top."""
     return assembled.select(

@@ -41,14 +41,6 @@ from ddsketch_spark.textconf import (
 
 # ------------------------------------------------------------------ shingles
 
-def shingles_col(text_col: str, k: int = SHINGLE_K) -> Column:
-    """Array of character k-shingles (whole text if shorter than k)."""
-    return F.expr(
-        f"transform(sequence(1, greatest(length({text_col}) - {k} + 1, 1)),"
-        f" i -> substring({text_col}, i, {k}))"
-    )
-
-
 def shingle_rows(df: DataFrame, id_col: str, text_col: str,
                  k: int = SHINGLE_K) -> DataFrame:
     """``id, sh`` — one row per character k-shingle. Explodes the position

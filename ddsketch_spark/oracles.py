@@ -895,11 +895,6 @@ FROM cand WHERE bit_count(xor(sha, shb)) <= {max_hamming}
 """
 
 
-def duckdb_h64_pub(expr: str) -> str:
-    """Public alias of the shared hash mirror (for inline query oracles)."""
-    return duckdb_h64(expr)
-
-
 # ---------------------------------------------------------------------------
 # multimodal: recompute decoded-feature statistics from the arithmetic
 # payload definition (operators/multimodal.py synthesize_media_arith) —

@@ -28,7 +28,7 @@ from ddsketch_spark.core import hll as hll_mod
 from ddsketch_spark.core import kll as kll_mod
 from ddsketch_spark.core import kmv as kmv_mod
 from ddsketch_spark.core import tdigest as tdigest_mod
-from ddsketch_spark.core.hashing import py_h64, spark_h64
+from ddsketch_spark.core.hashing import duckdb_h64, py_h64, spark_h64
 from ddsketch_spark.core.kll import KLL
 from ddsketch_spark.core.kmv import KMV, intersection_estimate, union_estimate
 from ddsketch_spark.core.spacesaving import SpaceSaving
@@ -1842,14 +1842,14 @@ CATALOG: list[tuple[Callable, str]] = [
         f"doc_id % {DECON_TOKEN_MOD} = 0", DECON_THRESHOLD,
         unit="token", k=DECON_TOKEN_K)),
     (sample_docs_deterministic, (
-        "SELECT doc_id, " + oracles.duckdb_h64_pub("text") + " AS fp "
-        "FROM documents WHERE " + oracles.duckdb_h64_pub("text")
+        "SELECT doc_id, " + duckdb_h64("text") + " AS fp "
+        "FROM documents WHERE " + duckdb_h64("text")
         + f" < {int(0.25 * (1 << 60))}")),
     (sample_docs_stratified, (
         "SELECT doc_id, lang, source FROM ("
         "  SELECT doc_id, lang, source, row_number() OVER ("
         "    PARTITION BY lang, source ORDER BY "
-        + oracles.duckdb_h64_pub("doc_id") + " ASC, doc_id ASC) AS rk"
+        + duckdb_h64("doc_id") + " ASC, doc_id ASC) AS rk"
         "  FROM documents) t WHERE rk <= 5")),
     # per-lang exact top-5 identity + TRUE bound flags (keyed SpaceSaving)
     (tokens_topk_sketched_by_lang, _token_topk_ok_sql(

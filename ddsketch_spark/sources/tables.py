@@ -1,5 +1,4 @@
-"""Parquet table loaders for the driver-generated testdata
-(/root/testdata/sf*/ — see TESTDATA.md) and generic table IO.
+"""Generic table IO for stored sketch tables.
 
 Iceberg note (SURVEY §7.2): the sandbox has no Iceberg runtime jar, so the
 table layer is parquet with the same layout Iceberg would use (partition
@@ -14,10 +13,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TPCH_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
 
 def table_format() -> str:
     """Resolved at CALL time so tests/deployments can flip the format
@@ -26,17 +21,6 @@ def table_format() -> str:
     without one, Spark raises a clear DATA_SOURCE_NOT_FOUND — never a
     silent parquet fallback (pinned in tests/test_spark_agg.py)."""
     return os.environ.get("DDSKETCH_SPARK_TABLE_FORMAT", "parquet")
-
-
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def register_all(spark: SparkSession, sf_dir: str) -> None:
-    for name in TPCH_TABLES:
-        path = f"{sf_dir}/{name}.parquet"
-        if os.path.exists(path):
-            load(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def write_table(df: DataFrame, path: str, partition_by: list[str] | None = None,

@@ -14,44 +14,37 @@ ddsketch.c:2402-2648). The shapes:
    per micro-batch instead of per row, and it scales to 100 M keys: per
    batch, work is O(touched partitions), not O(state).
 
-2. :func:`windowed_bucket_counts` — watermarked event-time windowed
-   DDSketch maintenance as a NATIVE streaming aggregation. A DDSketch is a
-   bag of additive (part, bucket_index) -> count cells, so
-   ``groupBy(window(ts), part, bidx).sum(weight)`` is a built-in streaming
-   agg: state lives in Spark's state store, the watermark admits late rows
-   into their window and evicts closed windows, and append mode emits each
-   window's bucket rows exactly once after it finalizes. No Python in the
-   hot path at all. :func:`assemble_window_sketches` turns the emitted
-   bucket rows into binary sketches per window.
+2. Event-time windows. A sketch is a bag of additive cells, so a
+   windowed sketch IS the batch aggregation keyed by its window, and
+   this module holds no cell math: :func:`_window_cells` watermarks the
+   stream, adds ``window(ts)`` as one more key and runs the cell function
+   of :mod:`ddsketch_spark.operators.native` — DDSketch buckets
+   (:func:`windowed_bucket_counts`, tumbling or sliding), HLL registers,
+   CMS counters, Bloom bits. The result is a built-in streaming
+   aggregation (state store, late rows merged within the watermark,
+   append mode emits each finalized window once; no Python). The window
+   assemblers are the batch assemblers keyed by the window, so a
+   window's sketch bytes and ``n`` equal the batch build over its rows.
+   Session windows (:func:`sessionized_bucket_counts`) carry their cells
+   inside the aggregation, since sessions merge per grouping key.
 
-3. :func:`windowed_hll_cells` / :func:`windowed_cms_cells` /
-   :func:`windowed_bloom_cells` / :func:`sessionized_bucket_counts` —
-   the same built-in-aggregation trick for the whole additive-cell
-   family: windowed distinct counts (HLL register max), frequency
-   counters (CMS sums), membership bits (Bloom presence), and per-key
-   session windows (cells carried inside the aggregation, since
-   sessions merge per grouping key).
+3. :func:`stateful_quantiles` / :func:`stateful_heavy_hitters` — one
+   ``applyInPandasWithState`` body keeping a serialized DDSketch /
+   SpaceSaving per key in Spark's state store, emitting running
+   quantiles or bounded top-k each batch (exactly-once with the
+   checkpoint).
 
-4. :func:`stateful_quantiles` / :func:`stateful_heavy_hitters` —
-   ``applyInPandasWithState`` keeping one serialized sketch (DDSketch /
-   SpaceSaving) per key in Spark's state store, emitting running
-   quantiles or bounded top-k each batch: the custom-stateful-operator
-   shape for when state must live inside the streaming engine
-   (exactly-once with the checkpoint).
-
-Tumbling windows are the default; :func:`windowed_bucket_counts` also
-takes ``slide_duration`` for sliding (overlapping) windows — still the
-built-in aggregation, state scaled by the overlap factor.
-
-Tests drive all three with a file source + ``trigger(availableNow)`` so
-runs are deterministic and incremental (new files -> only new rows
-processed; the trailing no-data micro-batch advances the watermark and
-flushes finalized windows).
+Tests drive them with a file source + ``trigger(availableNow)`` so runs
+are deterministic and incremental (new files -> only new rows processed;
+the trailing no-data micro-batch advances the watermark and flushes
+finalized windows).
 """
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 from typing import Iterator, Sequence
 
 import pandas as pd
@@ -59,17 +52,14 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType, BinaryType, DoubleType, LongType, StringType, StructField,
-    StructType, TimestampType,
+    StructType,
 )
 
 from ddsketch_spark.core.ddsketch import DDSketch
-from ddsketch_spark.core.hashing import H64_BITS
-from ddsketch_spark.operators.aggregate import (
-    grouped_apply_sorted, merge_partials,
-)
+from ddsketch_spark.operators.aggregate import merge_partials
 from ddsketch_spark.operators.native import (
-    _hll_register_rows, _make_dd_batch_assembler, _make_hll_batch_assembler,
-    _position_cells, dd_bucket_exprs, ddsketch_agg_native,
+    _sum_cells, bloom_cells, cms_cells, dd_bucket_exprs, dd_cells,
+    dd_sketches, ddsketch_agg_native, hll_cells, hll_sketches,
 )
 
 
@@ -78,8 +68,6 @@ def _read_manifest(state_dir: str) -> dict | None:
     ``{"batch_id": int, "buckets": {"<bucket>": <version>}}`` — a bucket's
     version is the batch_id whose ``v=<version>`` directory holds its
     current sketch rows."""
-    import json
-
     path = os.path.join(state_dir, "_manifest.json")
     if not os.path.isfile(path):
         return None
@@ -205,9 +193,6 @@ def make_maintainer_process(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        import json
-        import shutil
-
         man = _read_manifest(state_dir)
         if man is None:
             _check_no_orphan_state(state_dir)
@@ -275,6 +260,22 @@ def make_maintainer_process(
 # watermarked event-time windows, fully JVM-native
 # ---------------------------------------------------------------------------
 
+def _window_cells(stream_df: DataFrame, ts_col: str, window_duration: str,
+                  watermark_delay: str, cells, keys: Sequence[str] = (),
+                  slide_duration: str | None = None) -> DataFrame:
+    """``keys..., window_start, window_end, <cell columns>`` — the batch
+    cell function ``cells(df, keys)`` (operators.native) over the
+    watermarked stream, with its event-time window as one more key."""
+    keys = list(keys)
+    win = F.window(ts_col, window_duration, slide_duration)
+    out = cells(stream_df.withWatermark(ts_col, watermark_delay)
+                .withColumn("__window", win), keys + ["__window"])
+    return out.select(
+        *keys, F.col("__window.start").alias("window_start"),
+        F.col("__window.end").alias("window_end"),
+        *[c for c in out.columns if c not in keys and c != "__window"])
+
+
 def windowed_bucket_counts(
     stream_df: DataFrame,
     ts_col: str,
@@ -285,41 +286,20 @@ def windowed_bucket_counts(
     keys: Sequence[str] = (),
     slide_duration: str | None = None,
 ) -> DataFrame:
-    """Streaming DataFrame of finalized-window sketch cells:
-    ``keys..., window_start, window_end, __part, __bidx, cnt`` — pass
-    ``keys=["lang"]`` for the north-rule per-language hourly rollup.
+    """Streaming DataFrame of the DDSketch cells (``native.dd_cells``)
+    of each window: ``keys..., window_start, window_end, __part, __bidx,
+    __c, __rows`` — ``keys=["lang"]`` gives the per-language hourly
+    rollup; feed them to :func:`assemble_window_sketches`.
 
-    Attach ``.writeStream.outputMode("append")`` — append emits a window's
-    rows exactly once, after the watermark passes its end. Late rows
-    within ``watermark_delay`` are merged into their (still-open) window
-    by the state store; rows later than that are dropped by the engine —
-    the standard watermark contract, with sketch-cell additivity making
-    the whole operator a built-in windowed sum (zero Python, state size
-    O(open windows x occupied buckets)).
-
-    ``slide_duration`` makes the windows SLIDING (e.g. a 1h window every
-    15min): each row's cells feed every window covering its timestamp —
-    still entirely the built-in windowed aggregation, with state scaled
-    by the overlap factor (duration/slide open windows per instant)."""
-    keys = list(keys)
-    part, bidx = dd_bucket_exprs(value_col, alpha)
-    v = F.col(value_col)
-    w = (F.when(v.isNull() | F.isnan(v.cast("double")), F.lit(0))
-         .otherwise(F.lit(1))).cast("long")
-    win = (F.window(ts_col, window_duration, slide_duration)
-           if slide_duration else F.window(ts_col, window_duration))
-    return (
-        stream_df
-        .withWatermark(ts_col, watermark_delay)
-        .select(F.col(ts_col), *keys, part, bidx, w.alias("__w"))
-        .groupBy(win, *keys,
-                 "__part", "__bidx")
-        .agg(F.sum("__w").alias("cnt"))
-        .select(*keys,
-                F.col("window.start").alias("window_start"),
-                F.col("window.end").alias("window_end"),
-                "__part", "__bidx", "cnt")
-    )
+    Attach ``.writeStream.outputMode("append")``: a window's rows are
+    emitted once, after the watermark passes its end; rows later than
+    ``watermark_delay`` are dropped by the engine. State is O(open
+    windows x occupied buckets). ``slide_duration`` makes the windows
+    SLIDING (e.g. 1h every 15min): each row's cells feed every window
+    covering it, state scaled by duration/slide."""
+    return _window_cells(stream_df, ts_col, window_duration, watermark_delay,
+                         lambda df, k: dd_cells(df, value_col, alpha, k),
+                         keys, slide_duration)
 
 
 def assemble_window_sketches(
@@ -328,27 +308,35 @@ def assemble_window_sketches(
     nbuckets: int = 2048,
     keys: Sequence[str] = (),
 ) -> DataFrame:
-    """Batch post-processing of :func:`windowed_bucket_counts` output (read
-    back from the sink): ``keys..., window_start, window_end, sketch
-    binary, n`` — one binary DDSketch per (keys, finalized window), built
-    from O(buckets) cell rows per group by the native batch path's
-    assembler (same bytes, same "bucket overflow" error)."""
-    run_keys = list(keys) + ["window_start", "window_end"]
-    out_schema = StructType(
-        [f for f in bucket_rows.schema.fields if f.name in keys]
-        + [StructField("window_start", TimestampType(), False),
-           StructField("window_end", TimestampType(), False),
-           StructField("sketch", BinaryType(), False),
-           StructField("n", LongType(), False)])
-    # n is the sketch's live count: NULL-value cells (part -1) add nothing
-    live = F.when(F.col("__part") >= 0, F.col("cnt")).otherwise(F.lit(0))
-    cells = bucket_rows.select(*run_keys, "__part", "__bidx",
-                               F.col("cnt").alias("__c"),
-                               live.alias("__rows"))
-    return grouped_apply_sorted(
-        cells, run_keys,
-        _make_dd_batch_assembler(run_keys, alpha, nbuckets, "error"),
-        out_schema, per_run=False)
+    """:func:`windowed_bucket_counts` output (read back from the sink) as
+    ``keys..., window_start, window_end, sketch binary, n``: the batch
+    assembler keyed by the window (same bytes, ``n`` and "bucket
+    overflow" error as ``ddsketch_agg_native`` over the window's rows)."""
+    return dd_sketches(bucket_rows, [*keys, "window_start", "window_end"],
+                       alpha, nbuckets)
+
+
+def _stateful_sketch(stream_df: DataFrame, key: str, out_schema: StructType,
+                     load, fold, emit,
+                     dump=lambda s: s.to_bytes()) -> DataFrame:
+    """One serialized sketch per key in Spark's state store: each
+    micro-batch ``load``s it from its stored bytes (``None`` at first),
+    ``fold``s each pandas batch of the key's rows into it, stores
+    ``dump(sketch)`` and emits ``emit(key value, sketch)`` (one row)."""
+    state_schema = StructType([StructField("sketch", BinaryType(), True)])
+
+    def fn(k: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+           ) -> Iterator[pd.DataFrame]:
+        s = load(bytes(state.get[0])
+                 if state.exists and state.get[0] is not None else None)
+        for pdf in pdfs:
+            fold(s, pdf)
+        state.update((dump(s),))
+        yield pd.DataFrame(emit(k[0], s))
+
+    return (stream_df.groupBy(key).applyInPandasWithState(
+        fn, out_schema, state_schema, "update",
+        GroupStateTimeout.NoTimeout))
 
 
 def stateful_quantiles(
@@ -364,33 +352,27 @@ def stateful_quantiles(
     ``key, count, q_...`` rows. Returns the output DataFrame (attach your
     own writeStream)."""
     qs = [float(q) for q in qs]
+    names = [f"q{str(q).replace('.', '_')}" for q in qs]
     out_schema = StructType(
         [StructField(key, StringType(), False),
          StructField("count", LongType(), False)]
-        + [StructField(f"q{str(q).replace('.', '_')}", DoubleType(), True)
-           for q in qs]
-    )
-    state_schema = StructType([StructField("sketch", BinaryType(), True)])
+        + [StructField(n, DoubleType(), True) for n in names])
 
-    def fn(k: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-           ) -> Iterator[pd.DataFrame]:
-        if state.exists and state.get[0] is not None:
-            s = DDSketch.from_bytes(bytes(state.get[0]))
-        else:
-            s = DDSketch(alpha, nbuckets)
-        for pdf in pdfs:
-            vals = pdf[value_col].to_numpy(dtype="float64", na_value=float("nan"))
-            s.update(vals)
-        state.update((s.to_bytes() if s.count > 0 else None,))
-        row = {key: [k[0]], "count": [s.count]}
+    def fold(s, pdf):
+        s.update(pdf[value_col].to_numpy(dtype="float64",
+                                         na_value=float("nan")))
+
+    def emit(k, s):
         est = s.quantile(qs) if s.count > 0 else [None] * len(qs)
-        for q, e in zip(qs, est):
-            row[f"q{str(q).replace('.', '_')}"] = [float(e) if e is not None else None]
-        yield pd.DataFrame(row)
+        return {key: [k], "count": [s.count],
+                **{n: [float(e) if e is not None else None]
+                   for n, e in zip(names, est)}}
 
-    return (stream_df.groupBy(key).applyInPandasWithState(
-        fn, out_schema, state_schema, "update",
-        GroupStateTimeout.NoTimeout))
+    return _stateful_sketch(
+        stream_df, key, out_schema,
+        lambda b: DDSketch.from_bytes(b) if b else DDSketch(alpha, nbuckets),
+        fold, emit,
+        dump=lambda s: s.to_bytes() if s.count > 0 else None)  # empty: None
 
 
 def stateful_heavy_hitters(
@@ -402,16 +384,12 @@ def stateful_heavy_hitters(
     weight_col: str | None = None,
 ):
     """``applyInPandasWithState`` running heavy-hitters: state = one
-    serialized SpaceSaving summary per key (O(capacity) — the streaming
-    analogue of `tokens_topk_sketched`'s batch build, vs the unbounded
-    per-token state an exact streaming ``groupBy(token).count`` would
-    accumulate over a web-scale stream). Each micro-batch folds its items
-    in and emits ``key, total, topk_items, topk_counts, topk_errs`` — the
-    err column carries the sketch's own per-item bound so a consumer can
-    decide which hitters are separated. ``weight_col`` folds positive
-    per-row weights (e.g. token counts pre-aggregated upstream) instead
-    of unit counts. Returns the output DataFrame (attach your own
-    writeStream, update mode)."""
+    serialized SpaceSaving summary per key (O(capacity), vs the unbounded
+    per-token state of an exact streaming ``groupBy(token).count``). Each
+    micro-batch folds its items in and emits ``key, total, topk_items,
+    topk_counts, topk_errs`` — the err column is the sketch's own
+    per-item bound. ``weight_col`` folds positive per-row weights instead
+    of unit counts. Attach your own writeStream (update mode)."""
     from ddsketch_spark.core.spacesaving import SpaceSaving
 
     out_schema = StructType([
@@ -421,32 +399,25 @@ def stateful_heavy_hitters(
         StructField("topk_counts", ArrayType(LongType()), False),
         StructField("topk_errs", ArrayType(LongType()), False),
     ])
-    state_schema = StructType([StructField("sketch", BinaryType(), True)])
 
-    def fn(kk: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-           ) -> Iterator[pd.DataFrame]:
-        if state.exists and state.get[0] is not None:
-            s = SpaceSaving.from_bytes(bytes(state.get[0]))
-        else:
-            s = SpaceSaving(capacity)
-        for pdf in pdfs:
-            sub = pdf.dropna(subset=[item_col])
-            vals = sub[item_col].to_numpy(dtype=object)
-            if vals.size:
-                s.update(vals, sub[weight_col].to_numpy(dtype="int64")
-                         if weight_col else None)
-        state.update((s.to_bytes(),))
+    def fold(s, pdf):
+        sub = pdf.dropna(subset=[item_col])
+        vals = sub[item_col].to_numpy(dtype=object)
+        if vals.size:
+            s.update(vals, sub[weight_col].to_numpy(dtype="int64")
+                     if weight_col else None)
+
+    def emit(kk, s):
         top = s.topk(k)
-        yield pd.DataFrame({
-            key: [kk[0]], "total": [s.total],
-            "topk_items": [[t for t, _, _ in top]],
-            "topk_counts": [[c for _, c, _ in top]],
-            "topk_errs": [[e for _, _, e in top]],
-        })
+        return {key: [kk], "total": [s.total],
+                "topk_items": [[t for t, _, _ in top]],
+                "topk_counts": [[c for _, c, _ in top]],
+                "topk_errs": [[e for _, _, e in top]]}
 
-    return (stream_df.groupBy(key).applyInPandasWithState(
-        fn, out_schema, state_schema, "update",
-        GroupStateTimeout.NoTimeout))
+    return _stateful_sketch(
+        stream_df, key, out_schema,
+        lambda b: SpaceSaving.from_bytes(b) if b else SpaceSaving(capacity),
+        fold, emit)
 
 
 def windowed_hll_cells(
@@ -457,51 +428,21 @@ def windowed_hll_cells(
     watermark_delay: str,
     p: int = 12,
 ) -> DataFrame:
-    """Streaming distinct-count per event-time window, fully JVM-native:
-    HLL registers are a MAX over per-row (register, rho) cells, so — like
-    the DDSketch bucket cells — the whole operator is a built-in
-    watermarked streaming aggregation. Emits (append mode, finalized
-    windows only) ``window_start, window_end, j, rho`` rows; feed them to
-    :func:`assemble_window_hll` for binary sketches / NDV estimates.
-    ``hash_col`` is the shared 60-bit hash (core.hashing.spark_h64)."""
-    m = 1 << p
-    cells = _hll_register_rows(stream_df.withWatermark(ts_col, watermark_delay),
-                               hash_col, [ts_col], m, H64_BITS - p + 1)
-    return (
-        cells.groupBy(F.window(ts_col, window_duration),
-                      F.col("__j").alias("j"))
-        .agg(F.max("__rho").alias("rho"))
-        .select(F.col("window.start").alias("window_start"),
-                F.col("window.end").alias("window_end"), "j", "rho")
-    )
+    """Streaming distinct count: the HLL register cells
+    (``native.hll_cells``, register max) of each window, ``window_start,
+    window_end, __j, __r, __rows``; feed them to
+    :func:`assemble_window_hll`. ``hash_col`` is the shared 60-bit hash
+    (core.hashing.spark_h64)."""
+    return _window_cells(stream_df, ts_col, window_duration, watermark_delay,
+                         lambda df, k: hll_cells(df, hash_col, p, k))
 
 
 def assemble_window_hll(cell_rows: DataFrame, p: int = 12) -> DataFrame:
     """Batch post-processing of :func:`windowed_hll_cells` output:
-    ``window_start, window_end, sketch binary, ndv`` per finalized window.
-    The sketch header count is 0: register maxes cannot know how many
-    rows fed them."""
-    from ddsketch_spark.core.hll import from_bytes as hll_from_bytes
-
-    run_keys = ["window_start", "window_end"]
-    out_schema = StructType([
-        StructField("window_start", TimestampType(), False),
-        StructField("window_end", TimestampType(), False),
-        StructField("sketch", BinaryType(), False),
-        StructField("ndv", LongType(), False),
-    ])
-    build = _make_hll_batch_assembler(run_keys, p)
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = build(pdf)
-        out["ndv"] = [int(hll_from_bytes(b).estimate()) for b in out["sketch"]]
-        return out.drop(columns="n")
-
-    cells = cell_rows.select(*run_keys, F.col("j").alias("__j"),
-                             F.col("rho").alias("__r"),
-                             F.lit(0).alias("__rows"))
-    return grouped_apply_sorted(cells, run_keys, assemble, out_schema,
-                                per_run=False)
+    ``window_start, window_end, sketch binary, n`` per finalized window —
+    the batch HLL assembler keyed by the window (same bytes and ``n`` as
+    ``hll_agg_native`` over the window's rows)."""
+    return hll_sketches(cell_rows, ["window_start", "window_end"], p)
 
 
 def assemble_session_sketches(
@@ -511,22 +452,16 @@ def assemble_session_sketches(
 ) -> DataFrame:
     """Batch post-processing of :func:`sessionized_bucket_counts` output
     (read back from the sink): ``key, session_start, session_end, sketch
-    binary, n`` — explode each finalized session's carried cells into
-    (part, bidx) counts and assemble one binary DDSketch per session
-    (the session-window sibling of :func:`assemble_window_sketches`,
-    whose grouped assembly it reuses)."""
-    counts = (session_rows
-              .select("key",
-                      F.col("session_start").alias("window_start"),
-                      F.col("session_end").alias("window_end"),
-                      F.explode("cells").alias("c"))
-              .groupBy("key", "window_start", "window_end",
-                       F.col("c.part").alias("__part"),
-                       F.col("c.bidx").alias("__bidx"))
-              .agg(F.count(F.lit(1)).cast("long").alias("cnt")))
-    out = assemble_window_sketches(counts, alpha, nbuckets, keys=["key"])
-    return (out.withColumnRenamed("window_start", "session_start")
-            .withColumnRenamed("window_end", "session_end"))
+    binary, n`` — each finalized session's carried cells summed into
+    bucket counts and assembled by the batch DDSketch assembler keyed by
+    the session."""
+    run_keys = ["key", "session_start", "session_end"]
+    rows = (session_rows.select(*run_keys, F.explode("cells").alias("c"))
+            .select(*run_keys, F.col("c.part").alias("__part"),
+                    F.col("c.bidx").alias("__bidx"),
+                    F.lit(1).cast("long").alias("__w")))
+    return dd_sketches(_sum_cells(rows, run_keys, ["__part", "__bidx"]),
+                       run_keys, alpha, nbuckets)
 
 
 def sessionized_bucket_counts(
@@ -539,17 +474,14 @@ def sessionized_bucket_counts(
     alpha: float = 0.01,
 ) -> DataFrame:
     """Per-key SESSION-window sketch cells (append mode):
-    ``key, session_start, session_end, __part, __bidx, cnt``.
+    ``key, session_start, session_end, cells, cnt``.
 
-    Session windows merge only within an identical grouping key, so —
-    unlike the fixed-window shape — the sketch cells must ride INSIDE the
-    aggregation: grouping by (session, key, cell) would split one user
-    session into one session per occupied bucket. Each finalized session
-    therefore carries ``cells`` = one (part, bidx) struct per event
-    (session event counts are bounded by the gap, so the list stays
-    small); :func:`assemble_window_sketches`-style post-processing sums
-    them into bucket counts. Still a built-in streaming aggregation; no
-    Python in the hot path."""
+    Session windows merge only within an identical grouping key, so the
+    sketch cells must ride INSIDE the aggregation: grouping by (session,
+    key, cell) would split one user session into one session per
+    occupied bucket. Each finalized session carries ``cells`` = one
+    (part, bidx) struct per live event (bounded by the gap);
+    :func:`assemble_session_sketches` sums them into bucket counts."""
     part, bidx = dd_bucket_exprs(value_col, alpha)
     v = F.col(value_col)
     keep = ~(v.isNull() | F.isnan(v.cast("double")))
@@ -580,22 +512,35 @@ def windowed_cms_cells(
     width: int = 2048,
     weight_col: str | None = None,
 ) -> DataFrame:
-    """Streaming count-min per event-time window, fully JVM-native: CMS
-    counters are SUMS over per-row (stride, position) cells — like the
-    DDSketch bucket cells and HLL register maxes, the whole operator is a
-    built-in watermarked streaming aggregation. Emits (append mode,
-    finalized windows only) ``window_start, window_end, i, pos, c``
-    rows; feed them to :func:`windowed_cms_estimates` for per-window
-    frequency estimates. ``hash_col`` is the shared 60-bit hash."""
-    return (
-        _position_cells(stream_df.withWatermark(ts_col, watermark_delay),
-                        hash_col, depth, width, [ts_col], weight_col)
-        .groupBy(F.window(ts_col, window_duration),
-                 F.col("__i").alias("i"), F.col("__pos").alias("pos"))
-        .agg(F.sum("__w").alias("c"))
-        .select(F.col("window.start").alias("window_start"),
-                F.col("window.end").alias("window_end"), "i", "pos", "c")
-    )
+    """Streaming count-min: the counter cells (``native.cms_cells``,
+    sums) of each window, ``window_start, window_end, __i, __pos, __c,
+    __rows``; feed them to :func:`windowed_cms_estimates`. ``hash_col``
+    is the shared 60-bit hash."""
+    return _window_cells(
+        stream_df, ts_col, window_duration, watermark_delay,
+        lambda df, k: cms_cells(df, hash_col, depth, width, k, weight_col))
+
+
+def _probe_windows(cell_rows: DataFrame, probes: list, on: Sequence[str],
+                   agg) -> DataFrame:
+    """``window_start, item, <agg>`` — every window x every literal probe
+    row (``item, *on``), left-joined to the window's cells on ``on`` and
+    reduced per (window, item) by ``agg``, which reads joined cells as
+    ``cell<column>`` (NULL if absent). Pure JVM, no sketch built."""
+    spark = cell_rows.sparkSession
+    # pandas -> Arrow -> LocalTableScan: the literal probe table stays a
+    # JVM-local relation (a plain list would materialize via a Python RDD)
+    probe_df = spark.createDataFrame(
+        pd.DataFrame(probes, columns=["item", *on]))
+    # window list and cells share lineage (a self-join): renaming every
+    # cell column mints fresh attribute ids, so the join is unambiguous
+    windows = cell_rows.select(F.col("window_start").alias("__ws")).distinct()
+    cells = cell_rows.toDF(*("cell" + c for c in cell_rows.columns))
+    cond = ([F.col("__ws") == F.col("cellwindow_start")]
+            + [F.col(c) == F.col("cell" + c) for c in on])
+    return (windows.crossJoin(F.broadcast(probe_df))
+            .join(cells, on=cond, how="left")
+            .groupBy(F.col("__ws").alias("window_start"), "item").agg(agg))
 
 
 def windowed_cms_estimates(
@@ -607,36 +552,15 @@ def windowed_cms_estimates(
     """Batch post-processing of :func:`windowed_cms_cells` output:
     ``window_start, item, freq`` — count-min estimate (min over strides,
     absent counter = 0) for each literal probe item in each finalized
-    window. Pure JVM: probe positions are precomputed literals, windows
-    come from the cells themselves, and the estimate is a broadcast left
-    join + min aggregation — no sketch materialization, no Python."""
+    window (:func:`_probe_windows`)."""
     from ddsketch_spark.core.hashing import py_positions
 
-    spark = cell_rows.sparkSession
-    probe_rows = [(str(item), int(i), int(p))
-                  for item in probe_items
-                  for i, p in enumerate(py_positions(str(item), depth, width))]
-    # pandas -> Arrow -> LocalTableScan: the literal probe table stays a
-    # JVM-local relation (a plain list would materialize via a Python RDD)
-    probes = spark.createDataFrame(
-        pd.DataFrame(probe_rows, columns=["item", "i", "pos"]))
-    # window list and counter cells share lineage (a self-join): alias
-    # every column on both sides so each projection mints fresh
-    # attribute ids and the join condition is name-unambiguous
-    w = (cell_rows.select(F.col("window_start").alias("__ws"))
-         .distinct())
-    cells = cell_rows.select(
-        F.col("window_start").alias("__cw"), F.col("i").alias("__ci"),
-        F.col("pos").alias("__cp"), F.col("c").alias("__cc"))
-    grid = w.crossJoin(F.broadcast(probes))
-    joined = grid.join(
-        cells, on=[F.col("__ws") == F.col("__cw"),
-                   F.col("i") == F.col("__ci"),
-                   F.col("pos") == F.col("__cp")], how="left")
-    return (joined
-            .groupBy(F.col("__ws").alias("window_start"), F.col("item"))
-            .agg(F.min(F.coalesce(F.col("__cc"), F.lit(0).cast("long")))
-                 .alias("freq")))
+    probes = [(str(item), i, p) for item in probe_items
+              for i, p in enumerate(py_positions(str(item), depth, width))]
+    return _probe_windows(
+        cell_rows, probes, ["__i", "__pos"],
+        F.min(F.coalesce(F.col("cell__c"), F.lit(0).cast("long")))
+        .alias("freq"))
 
 
 def windowed_bloom_cells(
@@ -648,22 +572,11 @@ def windowed_bloom_cells(
     nbits: int = 1 << 16,
     k: int = 5,
 ) -> DataFrame:
-    """Streaming Bloom filter per event-time window, fully JVM-native:
-    set bits are a DISTINCT over per-row (position) cells — the last of
-    the additive-cell family (DDSketch counts, HLL maxes, CMS sums,
-    Bloom bit-or == distinct presence), so the whole operator is a
-    built-in watermarked streaming aggregation. Emits (append mode,
-    finalized windows only) ``window_start, window_end, pos`` rows; feed
-    them to :func:`windowed_bloom_members`."""
-    return (
-        _position_cells(stream_df.withWatermark(ts_col, watermark_delay),
-                        hash_col, k, nbits, [ts_col])
-        .groupBy(F.window(ts_col, window_duration),
-                 F.col("__pos").alias("pos"))
-        .agg(F.count(F.lit(1)).alias("__c"))      # presence; count unused
-        .select(F.col("window.start").alias("window_start"),
-                F.col("window.end").alias("window_end"), "pos")
-    )
+    """Streaming Bloom filter: the set-bit cells (``native.bloom_cells``,
+    distinct positions) of each window, ``window_start, window_end,
+    __pos, __rows``; feed them to :func:`windowed_bloom_members`."""
+    return _window_cells(stream_df, ts_col, window_duration, watermark_delay,
+                         lambda df, kk: bloom_cells(df, hash_col, nbits, k, kk))
 
 
 def windowed_bloom_members(
@@ -675,22 +588,11 @@ def windowed_bloom_members(
     """Batch post-processing of :func:`windowed_bloom_cells` output:
     ``window_start, item, member`` — Bloom membership (ALL k probe
     positions set; false positives match the kernel exactly) for each
-    literal probe in each finalized window. Pure JVM broadcast probe
-    join + bool_and aggregation."""
+    literal probe in each finalized window (:func:`_probe_windows`)."""
     from ddsketch_spark.core.hashing import py_positions
 
-    spark = cell_rows.sparkSession
-    probe_rows = [(str(item), int(p)) for item in probe_items
-                  for p in py_positions(str(item), k, nbits)]
-    probes = spark.createDataFrame(
-        pd.DataFrame(probe_rows, columns=["item", "pos"]))
-    w = cell_rows.select(F.col("window_start").alias("__ws")).distinct()
-    cells = cell_rows.select(F.col("window_start").alias("__cw"),
-                             F.col("pos").alias("__cp"))
-    grid = w.crossJoin(F.broadcast(probes))
-    joined = grid.join(
-        cells, on=[F.col("__ws") == F.col("__cw"),
-                   F.col("pos") == F.col("__cp")], how="left")
-    return (joined
-            .groupBy(F.col("__ws").alias("window_start"), F.col("item"))
-            .agg(F.bool_and(F.col("__cp").isNotNull()).alias("member")))
+    probes = [(str(item), p) for item in probe_items
+              for p in py_positions(str(item), k, nbits)]
+    return _probe_windows(
+        cell_rows, probes, ["__pos"],
+        F.bool_and(F.col("cell__pos").isNotNull()).alias("member"))

@@ -7,17 +7,22 @@ import pytest
 from pyspark.sql import functions as F
 
 from ddsketch_spark.operators.multimodal import (
-    decode_image, encode_fake_image, encode_fake_video, extract_features,
-    fake_decode_image, fake_decode_video, resize_images, sample_frames,
-    synthesize_media,
+    arith_pixels, decode_image, extract_features, fake_decode_image,
+    fake_decode_video, fake_encode_image, resize_images, sample_frames,
+    synthesize_media_arith,
 )
+
+
+def _fake_image(width, height, seed):
+    return fake_encode_image(arith_pixels(width * height, seed)
+                             .reshape(height, width))
 
 
 def test_decode_image_dispatch_and_codec_gate():
     """decode_image dispatches by magic: FAKEIMG1 decodes via the
     synthetic parser; a container needing a real codec library (PNG, no
     Pillow in this sandbox) raises at the documented integration point."""
-    payload = encode_fake_image(4, 4, 1)
+    payload = _fake_image(4, 4, 1)
     assert np.array_equal(decode_image(payload), fake_decode_image(payload))
     with pytest.raises(NotImplementedError, match="codec"):
         decode_image(b"\x89PNG\r\n\x1a\n" + b"\x00" * 32)
@@ -121,21 +126,21 @@ def test_extract_features_on_real_containers(spark):
 
 
 def test_fake_image_roundtrip():
-    img = fake_decode_image(encode_fake_image(10, 6, 7))
+    img = fake_decode_image(_fake_image(10, 6, 7))
     assert img.shape == (6, 10) and img.dtype == np.uint8
-    assert np.array_equal(img, fake_decode_image(encode_fake_image(10, 6, 7)))
+    assert np.array_equal(img, fake_decode_image(_fake_image(10, 6, 7)))
 
 
 def test_synthesize_media_deterministic(spark):
-    a = synthesize_media(spark, 30).orderBy("media_id").toPandas()
-    b = synthesize_media(spark, 30).orderBy("media_id").toPandas()
+    a = synthesize_media_arith(spark, 30).orderBy("media_id").toPandas()
+    b = synthesize_media_arith(spark, 30).orderBy("media_id").toPandas()
     assert list(a["kind"]) == list(b["kind"])
     assert all(bytes(x) == bytes(y) for x, y in zip(a["payload"], b["payload"]))
     assert set(a["kind"]) == {"image", "audio", "video"}
 
 
 def test_extract_features_all_modalities(spark):
-    media = synthesize_media(spark, 30)
+    media = synthesize_media_arith(spark, 30)
     feats = extract_features(media).toPandas()
     assert len(feats) == 30
     assert all(len(f) == 8 for f in feats["feature"])
@@ -145,7 +150,7 @@ def test_extract_features_all_modalities(spark):
 
 
 def test_resize_images(spark):
-    media = synthesize_media(spark, 30)
+    media = synthesize_media_arith(spark, 30)
     small = resize_images(media, 8, 8).toPandas()
     assert (small["meta_width"] == 8).all() and (small["meta_height"] == 8).all()
     for _, row in small.iterrows():
@@ -154,7 +159,7 @@ def test_resize_images(spark):
 
 
 def test_sample_frames(spark):
-    media = synthesize_media(spark, 30)
+    media = synthesize_media_arith(spark, 30)
     frames = sample_frames(media, every=2).toPandas()
     vids = media.where(F.col("kind") == "video").toPandas()
     want = sum((fake_decode_video(bytes(p)).shape[0] + 1) // 2

@@ -389,6 +389,19 @@ def test_native_equals_kernel_keyed_and_keyless(sibling_data, kind, keys):
         assert r["n"] == n
 
 
+@pytest.mark.parametrize("kind", ["dd", "hll", "cms", "bloom"])
+def test_native_null_key_is_a_group(sibling_data, kind):
+    """A NULL key is one more group, as in ``groupBy``: every native
+    build emits its row, equal to the kernel over the NULL-key rows."""
+    df, pdf = sibling_data
+    nk = F.when(F.col("k") == 0, F.lit(None)).otherwise(F.col("k"))
+    rows = _native_build(kind, df.withColumn("k", nk), ["k"]).collect()
+    (got,) = [r for r in rows if r["k"] is None]
+    want, n = _kernel_build(kind, pdf[pdf["k"] == 0])
+    assert _from_bytes(kind, bytes(got["sketch"])) == want
+    assert got["n"] == n and len(rows) == 3
+
+
 @pytest.mark.parametrize("source", ["empty", "all_null"])
 @pytest.mark.parametrize("keys", [(), ("k",)], ids=["keyless", "keyed"])
 @pytest.mark.parametrize("kind", ["dd", "hll", "cms", "bloom"])

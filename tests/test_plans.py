@@ -372,7 +372,7 @@ def test_windowed_estimate_readers_are_pure_jvm(spark):
     cms_cells = spark.createDataFrame(
         pd.DataFrame({"window_start": [pd.Timestamp("2025-01-01")],
                       "window_end": [pd.Timestamp("2025-01-01 01:00")],
-                      "i": [0], "pos": [5], "c": [3]}))
+                      "__i": [0], "__pos": [5], "__c": [3]}))
     plan = _plan(windowed_cms_estimates(cms_cells, ["a", "b"], 5, 512))
     assert "Python" not in plan and "MapInArrow" not in plan, plan[:1500]
     assert "BroadcastExchange" in plan or "BroadcastHashJoin" in plan
@@ -380,6 +380,6 @@ def test_windowed_estimate_readers_are_pure_jvm(spark):
     bloom_cells = spark.createDataFrame(
         pd.DataFrame({"window_start": [pd.Timestamp("2025-01-01")],
                       "window_end": [pd.Timestamp("2025-01-01 01:00")],
-                      "pos": [5]}))
+                      "__pos": [5]}))
     bplan = _plan(windowed_bloom_members(bloom_cells, ["a", "b"], 128, 5))
     assert "Python" not in bplan and "MapInArrow" not in bplan, bplan[:1500]

@@ -37,7 +37,7 @@ def events(spark):
 
 
 def by_key(df, keycols):
-    return {tuple(r[k] for k in keycols): bytes(r["sketch"])
+    return {tuple(r[k] for k in keycols): (bytes(r["sketch"]), r["n"])
             for r in df.collect()}
 
 

@@ -783,3 +783,22 @@ def test_sketch_quantile_bounds_null_and_zero_cases(spark):
     got = {tuple(b.asDict().values()) for b in rows[0]["b"]}
     assert got == {(0.0, 0.0, 0.0)}
     assert rows[1]["b"] is None
+
+
+def test_stage1_keeps_distinct_int64_keys_with_null(spark):
+    """Stage 1 reads its Arrow batches with exact integer keys: a
+    nullable int64 key column holding a NULL must not arrive as float64,
+    which would merge the keys 2^60+1 and 2^60+2 into one. Three keys
+    come back, each with n=1."""
+    from ddsketch_spark.core.kll import KLL
+    from ddsketch_spark.core.kll import from_bytes as kll_from_bytes
+    from ddsketch_spark.operators.aggregate import sketch_agg
+
+    big = 1 << 60
+    df = spark.createDataFrame([(big + 1, 1.0), (big + 2, 2.0), (None, 3.0)],
+                               "k long, v double").coalesce(1)
+    rows = sketch_agg(df, "v", keys=["k"], factory=lambda: KLL(200),
+                      from_bytes=kll_from_bytes).collect()
+    assert sorted((r["k"] is None, r["k"] or 0) for r in rows) == \
+        [(False, big + 1), (False, big + 2), (True, 0)]
+    assert all(r["n"] == 1 for r in rows)

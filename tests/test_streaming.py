@@ -297,7 +297,8 @@ def test_windowed_hll_cells_equals_batch(spark, tmp_path):
     want10 = batch_hll(w10_users)
     assert HLL.from_bytes(bytes(got[base]["sketch"])).registers.tolist() \
         == want10.registers.tolist()
-    assert got[base]["ndv"] == int(want10.estimate())
+    assert HLL.from_bytes(bytes(got[base]["sketch"])).estimate() == \
+        want10.estimate()
     want11 = batch_hll(w11_users + ["adv"])
     key11 = base + pd.Timedelta(hours=1)
     assert HLL.from_bytes(bytes(got[key11]["sketch"])).registers.tolist() \
@@ -858,3 +859,65 @@ def test_replay_failure_drops_memory_sink(spark, tmp_path):
         _replay(spark, cells, finish)
     assert stream_views() == before
     assert spark.streams.active == []
+
+
+@pytest.mark.parametrize("layout", ["dd", "dd_keyed", "hll", "cms", "bloom"])
+def test_windowed_builders_equal_batch_twin(spark, layout):
+    """Streamed == batch for every cell layout: the same rows (one
+    window, NULL values and NULL hashes included) through a windowed
+    builder and the batch assembler keyed by the window give the batch
+    twin's sketch bytes AND ``n`` — DDSketch ``n`` counts rows (NULL
+    values too) and the HLL header count is the hash count, as in the
+    batch build."""
+    from ddsketch_spark.core.hashing import spark_h64
+    from ddsketch_spark.operators import native
+    from ddsketch_spark.streaming import sketch_stream as ss
+
+    base = pd.Timestamp("2025-06-01 10:00:00")
+    rng = np.random.default_rng(11)
+    n = 300
+    pdf = pd.DataFrame({
+        "ts": [base + pd.Timedelta(minutes=int(m))
+               for m in rng.integers(0, 60, n)],
+        "k": rng.choice(["a", "b", None], n),
+        "v": np.exp(rng.standard_normal(n)) * 10 - 2,
+        "s": [f"u{i}" for i in rng.integers(0, 90, n)]})
+    pdf.loc[::7, "v"] = None
+    pdf.loc[::11, "s"] = None
+    df = spark.createDataFrame(
+        pdf, "ts timestamp, k string, v double, s string").withColumn(
+        "h", spark_h64("s"))
+    win = ("1 hour", "1 minute")
+    wkeys = ["window_start", "window_end"]
+    if layout in ("dd", "dd_keyed"):
+        keys = ["k"] if layout == "dd_keyed" else []
+        got = ss.assemble_window_sketches(
+            ss.windowed_bucket_counts(df, "ts", "v", *win, alpha=0.02,
+                                      keys=keys), 0.02, 512, keys=keys)
+        want = native.ddsketch_agg_native(df, "v", 0.02, 512, keys=keys)
+    elif layout == "hll":
+        keys = []
+        got = ss.assemble_window_hll(
+            ss.windowed_hll_cells(df, "ts", "h", *win, p=10), 10)
+        want = native.hll_agg_native(df, "h", 10)
+    elif layout == "cms":
+        keys = []
+        got = native.cms_sketches(
+            ss.windowed_cms_cells(df, "ts", "h", *win, 4, 256), wkeys, 4, 256)
+        want = native.cms_agg_native(df, "h", 4, 256)
+    else:
+        keys = []
+        got = native.bloom_sketches(
+            ss.windowed_bloom_cells(df, "ts", "h", *win, 1 << 10, 4),
+            wkeys, 1 << 10, 4)
+        want = native.bloom_agg_native(df, "h", 1 << 10, 4)
+
+    def by_key(out):
+        return {tuple(r[k] for k in keys): (bytes(r["sketch"]), r["n"])
+                for r in out.collect()}
+
+    got_rows = got.collect()
+    assert {r["window_start"] for r in got_rows} == {base}
+    assert by_key(got) == by_key(want)
+    if layout == "dd":
+        assert got_rows[0]["n"] == n       # NULL-value rows count, as batch
