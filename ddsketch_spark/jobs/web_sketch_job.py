@@ -13,36 +13,55 @@ Architecture (SURVEY §3.2 + §7.1 step 5):
    *batch provider* — an id-range slice for synthesized corpora, a
    file-group for parquet/Iceberg inputs (:func:`file_batches`). Each batch
    job reads ONLY its slice (partition pruning / separate file lists), so
-   total scan volume is one pass regardless of batch count — the property
-   that matters at 100 TB.
-2. One Spark job per *unfinished* batch computes per-lang partial sketches
-   via the JVM-native bucket aggregation (operators/native.py) and writes
-   them — plus lineage (batch id, row count, value min/max, wall seconds)
-   — to ``checkpoint_dir/batch=K`` (atomic: parquet dir + _SUCCESS).
-   Within a batch the map-side partial aggregation bounds every shuffle to
-   O(langs x nbuckets) rows; Zipf-skewed langs cannot create a hot reduce
-   key because bucket rows, not raw rows, are shuffled. The batch loop is
-   the two-round merge: batch-local partials first, tiny global merge last.
-3. Finalize reads all batch partials and merges per lang
-   (operators/aggregate.merge_sketches), then extracts quantiles. Merge
-   input is n_batches x langs sketch rows — kilobytes.
+   no batch reads another batch's input. Within a batch the input is read
+   twice: the batch plan has two ``FileScan``s, one for the sketch cells
+   and one for the ``v_min``/``v_max`` lineage stats, so total scan volume
+   is two passes regardless of batch count.
+2. One Spark job per *unfinished* batch computes per-key partial sketches
+   via the JVM-native bucket aggregation (operators/native.py) and the
+   stats, and collects them to the driver (one row per key). The driver
+   writes those rows — plus lineage (batch id, row count, value min/max,
+   wall seconds) — with pyarrow as one file,
+   ``checkpoint_dir/batch=K/part-00000.parquet``, then creates ``_SUCCESS``
+   last; a ``batch=K`` left without ``_SUCCESS`` by a killed run is removed
+   and replayed. Within a batch the map-side partial aggregation bounds
+   every shuffle to O(keys x nbuckets) rows; Zipf-skewed keys cannot
+   create a hot reduce key because bucket rows, not raw rows, are
+   shuffled. The batch loop is the two-round merge: batch-local partials
+   first, tiny global merge last.
+3. Finalize runs on the driver and submits no Spark job: it reads the
+   checkpoint files, folds each key's sketches
+   (operators/aggregate.merge_serialized — exact, DDSketch is fully
+   mergeable), extracts quantiles with the row function the quantile UDF
+   runs (functions/rows.dd_quantile), so estimates are bit-identical, and
+   returns them as a local DataFrame. The driver
+   holds ``n_batches x keys`` sketch rows, so the key must be a
+   low-cardinality dimension — the same bound each batch's ``collect()``
+   already requires. ``checkpoint_dir`` is a POSIX path.
 
 Killing the job between batches loses nothing; killing mid-batch loses only
-that batch's work (no partial dir is visible without _SUCCESS).
+that batch's work (no batch dir counts without _SUCCESS).
 """
 
 from __future__ import annotations
 
 import argparse
+import glob
 import json
 import os
+import shutil
 import time
 from typing import Callable
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import DoubleType, LongType, StringType, StructType
 
-from ddsketch_spark.functions.sketch_udfs import sketch_quantile
-from ddsketch_spark.operators.aggregate import merge_partials
+from ddsketch_spark.core.ddsketch import from_bytes
+from ddsketch_spark.functions.rows import dd_quantile
+from ddsketch_spark.operators.aggregate import merge_serialized
 from ddsketch_spark.operators.native import ddsketch_agg_native
 
 DEFAULT_QS = [0.5, 0.9, 0.99]
@@ -66,8 +85,6 @@ def file_batches(spark: SparkSession, path: str,
                  n_batches: int) -> Callable[[int], DataFrame]:
     """Batch provider over a parquet directory: deterministic file groups
     (sorted round-robin), each batch reads only its own files."""
-    import glob
-
     files = sorted(glob.glob(os.path.join(path, "*.parquet")))
     if not files:
         raise ValueError(f"no parquet files under {path}")
@@ -81,8 +98,60 @@ def file_batches(spark: SparkSession, path: str,
     return provider
 
 
+def _batch_dir(checkpoint_dir: str, b: int) -> str:
+    return os.path.join(checkpoint_dir, f"batch={b}")
+
+
 def _batch_done(checkpoint_dir: str, b: int) -> bool:
-    return os.path.exists(os.path.join(checkpoint_dir, f"batch={b}", "_SUCCESS"))
+    return os.path.exists(os.path.join(_batch_dir(checkpoint_dir, b), "_SUCCESS"))
+
+
+def _write_batch(checkpoint_dir: str, b: int, rows: list[dict],
+                 key: str) -> None:
+    """One parquet file, then ``_SUCCESS``; a stale dir is replaced, never
+    merged. No dictionary and no statistics on the sketch blobs: their
+    page-header min/max would add about half again to the file."""
+    pdir = _batch_dir(checkpoint_dir, b)
+    shutil.rmtree(pdir, ignore_errors=True)
+    os.makedirs(pdir)
+    schema = pa.schema([(key, pa.string()), ("sketch", pa.binary()),
+                        ("n", pa.int64()), ("v_min", pa.float64()),
+                        ("v_max", pa.float64()), ("batch", pa.int32()),
+                        ("wall_s", pa.float64())])
+    pq.write_table(pa.Table.from_pylist(rows, schema=schema),
+                   os.path.join(pdir, "part-00000.parquet"),
+                   use_dictionary=False,
+                   write_statistics=[c for c in schema.names if c != "sketch"])
+    open(os.path.join(pdir, "_SUCCESS"), "w").close()
+
+
+def _finalize(spark: SparkSession, checkpoint_dir: str, n_batches: int,
+              key: str, qs) -> tuple[DataFrame, dict]:
+    """Merge the checkpointed partials per key (NULL is a key of its own)
+    on the driver; no Spark job runs."""
+    parts = [r for b in range(n_batches)
+             for f in sorted(glob.glob(os.path.join(
+                 _batch_dir(checkpoint_dir, b), "*.parquet")))
+             for r in pq.ParquetFile(f).read().to_pylist()]
+    by_key: dict = {}
+    for r in parts:
+        by_key.setdefault(r[key], []).append(r)
+    qs = [float(q) for q in qs]
+    out = []
+    for k in sorted(by_key, key=lambda k: (k is not None, k)):
+        blob = merge_serialized([r["sketch"] for r in by_key[k]],
+                                from_bytes).to_bytes()
+        n = sum(r["n"] for r in by_key[k])
+        out += [(k, n, q, e) for q, e in zip(qs, dd_quantile(blob, np.array(qs)))]
+    schema = (StructType().add(key, StringType()).add("n", LongType())
+              .add("q", DoubleType()).add("est", DoubleType()))
+    lineage = {
+        "rows": sum(r["n"] for r in parts),
+        "v_min": min((r["v_min"] for r in parts if r["v_min"] is not None),
+                     default=None),
+        "v_max": max((r["v_max"] for r in parts if r["v_max"] is not None),
+                     default=None)}
+    return spark.createDataFrame(out, schema), lineage
 
 
 def run_job(
@@ -97,7 +166,8 @@ def run_job(
     qs=DEFAULT_QS,
     max_batches: int | None = None,
 ) -> dict:
-    """Returns {"result": DataFrame(key, n, q, est) or None, "metrics": {...}}.
+    """Returns {"result": DataFrame(key, n, q, est) or None, "metrics": {...}};
+    the result is local data built on the driver (module docstring, 3).
 
     ``max_batches`` processes at most that many unfinished batches then
     stops (the kill-and-replay test uses it to simulate a mid-job failure —
@@ -117,9 +187,11 @@ def run_job(
         batch_df = batch_provider(b).select(
             F.col(key), F.expr(value_expr).cast("double").alias("v"))
         partial = ddsketch_agg_native(batch_df, "v", alpha, nbuckets, keys=[key])
-        stats = batch_df.groupBy(key).agg(
+        stats = batch_df.groupBy(F.col(key).alias("__key")).agg(
             F.min("v").alias("v_min"), F.max("v").alias("v_max"))
-        out = partial.join(stats, on=key).collect()  # tiny: one row per lang
+        # null-safe: the NULL key is a group of its own
+        out = partial.join(stats, partial[key].eqNullSafe(stats["__key"])
+                           ).collect()  # tiny: one row per key
         wall = round(time.perf_counter() - t0, 3)
         rows = [
             {key: r[key], "sketch": bytes(r["sketch"]), "n": r["n"],
@@ -127,11 +199,7 @@ def run_job(
              "wall_s": wall}
             for r in out
         ]
-        pdir = os.path.join(checkpoint_dir, f"batch={b}")
-        schema = (f"{key} string, sketch binary, n long, v_min double, "
-                  f"v_max double, batch int, wall_s double")
-        (spark.createDataFrame(rows, schema=schema)
-         .coalesce(1).write.mode("overwrite").parquet(pdir))
+        _write_batch(checkpoint_dir, b, rows, key)
         ran.append(b)
 
     done = [b for b in range(n_batches) if _batch_done(checkpoint_dir, b)]
@@ -145,22 +213,8 @@ def run_job(
     if not metrics["complete"]:
         return {"result": None, "metrics": metrics}
 
-    partials = spark.read.parquet(
-        *[os.path.join(checkpoint_dir, f"batch={b}") for b in range(n_batches)])
-    merged = merge_partials(
-        partials.select(key, "sketch",
-                        F.col("batch").cast("long").alias("part_id"), "n"),
-        keys=[key])
-    qarr = F.array(*[F.lit(float(q)) for q in qs]).alias("q")
-    earr = sketch_quantile(F.col("sketch"), list(qs)).alias("est")
-    result = (
-        merged.select(key, "n", F.explode(F.arrays_zip(qarr, earr)).alias("z"))
-        .select(key, "n", F.col("z.q").alias("q"), F.col("z.est").alias("est"))
-    )
-    lin = partials.groupBy().agg(
-        F.sum("n").alias("rows"), F.min("v_min").alias("v_min"),
-        F.max("v_max").alias("v_max")).collect()[0]
-    metrics.update(rows=lin["rows"], v_min=lin["v_min"], v_max=lin["v_max"])
+    result, lineage = _finalize(spark, checkpoint_dir, n_batches, key, qs)
+    metrics.update(lineage)
     return {"result": result, "metrics": metrics}
 
 

@@ -36,6 +36,7 @@ import contextlib
 import gc
 from itertools import repeat
 
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql.classic.dataframe import DataFrame as _ClassicDataFrame
 from pyspark.sql.types import (
     ArrayType, BooleanType, ByteType, DataType, DoubleType, FloatType,
@@ -118,6 +119,8 @@ class FastCollectDataFrame(_ClassicDataFrame):
                 return super().collect()
         try:
             tbl = self.toArrow()
+        except CapturedException:
+            raise   # the query itself failed: running it again fails again
         except Exception:
             # Arrow transfer hiccup: the stock path is the contract
             with _gc_paused():

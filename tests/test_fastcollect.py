@@ -125,3 +125,35 @@ def test_failing_stock_collect_runs_once(spark, monkeypatch):
     finally:
         monkeypatch.setattr(ClassicDF, "collect", orig)
     assert calls["n"] == 1
+
+
+def test_failing_fast_query_runs_once(spark, jobs_in_group):
+    """A fast-schema query that fails in Spark surfaces its error after
+    one execution; it is not re-run through the stock path."""
+    from pyspark.errors.exceptions.captured import CapturedException
+
+    df = fast_collect(spark.range(10).select(
+        F.when(F.col("id") == 7, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id")).alias("id")))
+    assert _fast_schema_ok(df.schema)
+    group = "fastcollect-failing-query"
+    spark.sparkContext.setJobGroup(group, group)
+    try:
+        with pytest.raises(CapturedException, match="boom"):
+            df.collect()
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs_in_group(group) == 1
+
+
+def test_arrow_transfer_error_falls_back(spark, monkeypatch):
+    """An Arrow-side failure that is not a Spark execution error still
+    falls back to the stock rows."""
+    df = fast_collect(spark.range(5).select((F.col("id") * 2).alias("x")))
+    ref = ClassicDF(df._jdf, df.sparkSession).collect()
+
+    def broken_to_arrow(self):
+        raise RuntimeError("arrow hiccup")
+
+    monkeypatch.setattr(FastCollectDataFrame, "toArrow", broken_to_arrow)
+    _assert_identical(df.collect(), ref)

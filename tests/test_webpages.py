@@ -6,12 +6,18 @@
 - kill-and-replay: a job stopped mid-way resumes from checkpoint, replays
   only unfinished batches, and produces the identical result
 - quantile estimates within the alpha relative-error bound vs exact
+- driver-side checkpoints and finalize: the checkpoint layout readers rely
+  on, no Spark job after the last batch, and a finalize identical to the
+  Spark merge of the same checkpoint
 """
 
+import glob
 import hashlib
 import os
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -152,3 +158,121 @@ def test_job_html_bytes_metric(spark, tmp_path):
         est = float(res[(res["lang"] == lang) & (res["q"] == 0.5)]["est"].iloc[0])
         ex = float(np.quantile(v, 0.5, method="lower"))
         assert abs(est - ex) / ex <= 0.05 * 1.01, lang
+
+
+CHECKPOINT_SCHEMA = pa.schema([
+    ("lang", pa.string()), ("sketch", pa.binary()), ("n", pa.int64()),
+    ("v_min", pa.float64()), ("v_max", pa.float64()), ("batch", pa.int32()),
+    ("wall_s", pa.float64())])
+
+
+def test_job_keeps_null_key_group(spark, tmp_path):
+    """Rows whose key is NULL form a group of their own: they are counted
+    in the lineage and get a result row."""
+    def provider(b):
+        return spark.createDataFrame(
+            [("en", "ab"), (None, "abc"), (None, "abcd"), ("en", "a")],
+            "lang string, text string")
+
+    out = run_job(spark, provider, str(tmp_path / "ckpt"), n_batches=2,
+                  qs=[0.5])
+    assert out["metrics"]["rows"] == 8
+    res = out["result"].collect()
+    null = [r for r in res if r.lang is None]
+    assert len(null) == 1 and null[0].n == 4
+    assert {r.lang: r.n for r in res} == {None: 4, "en": 4}
+
+
+def test_checkpoint_layout_contract(spark, tmp_path):
+    """Each ``batch=K`` holds ``_SUCCESS`` and exactly one parquet file
+    with the checkpoint schema, readable by pyarrow's directory reader
+    (without partition discovery) and by Spark; the sketch column carries
+    no statistics, which would bloat the file."""
+    ckpt = str(tmp_path / "ckpt")
+    run_job(spark, range_batches(spark, 3_000, 2, seed=42), ckpt, n_batches=2)
+    for b in range(2):
+        d = os.path.join(ckpt, f"batch={b}")
+        assert os.path.exists(os.path.join(d, "_SUCCESS"))
+        files = glob.glob(os.path.join(d, "*.parquet"))
+        assert len(files) == 1
+        assert pq.read_schema(files[0]).remove_metadata() == CHECKPOINT_SCHEMA
+        md = pq.ParquetFile(files[0]).metadata
+        sketch = CHECKPOINT_SCHEMA.get_field_index("sketch")
+        assert not any(md.row_group(g).column(sketch).is_stats_set
+                       for g in range(md.num_row_groups))
+        wall = pq.read_table(d, columns=["wall_s"], partitioning=None)
+        assert wall.num_rows > 0 and wall.column("wall_s")[0].as_py() > 0
+    sdf = spark.read.parquet(*[os.path.join(ckpt, f"batch={b}")
+                               for b in range(2)])
+    assert sdf.schema.simpleString() == (
+        "struct<lang:string,sketch:binary,n:bigint,v_min:double,"
+        "v_max:double,batch:int,wall_s:double>")
+    assert sdf.agg(F.sum("n")).first()[0] == 3_000
+
+
+def test_finalize_submits_no_spark_job(spark, tmp_path, jobs_in_group):
+    """Over a fully checkpointed dir, ``run_job`` (finalize included)
+    submits no Spark job and returns the same result."""
+    ckpt = str(tmp_path / "ckpt")
+    provider = range_batches(spark, 4_000, 2, seed=42)
+    first = run_job(spark, provider, ckpt, n_batches=2)
+    group = "web-sketch-job-finalize"
+    spark.sparkContext.setJobGroup(group, group)
+    try:
+        again = run_job(spark, provider, ckpt, n_batches=2)
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs_in_group(group) == 0
+    assert again["metrics"]["batches_ran"] == []
+    assert again["result"].collect() == first["result"].collect()
+
+
+def test_driver_finalize_matches_spark_merge(spark, tmp_path):
+    """The driver finalize equals the Spark finalize it replaced
+    (``merge_partials`` + ``sketch_quantile`` over the same checkpoint)
+    row for row: same ``n``, bit-identical ``est``."""
+    from ddsketch_spark.functions.sketch_udfs import sketch_quantile
+    from ddsketch_spark.operators.aggregate import merge_partials
+
+    qs = [0.1, 0.5, 0.9, 0.99]
+    ckpt = str(tmp_path / "ckpt")
+    out = run_job(spark, range_batches(spark, 6_000, 3, seed=42), ckpt,
+                  n_batches=3, qs=qs)
+    partials = spark.read.parquet(
+        *[os.path.join(ckpt, f"batch={b}") for b in range(3)])
+    merged = merge_partials(
+        partials.select("lang", "sketch",
+                        F.col("batch").cast("long").alias("part_id"), "n"),
+        keys=["lang"])
+    qarr = F.array(*[F.lit(float(q)) for q in qs]).alias("q")
+    earr = sketch_quantile(F.col("sketch"), qs).alias("est")
+    spark_result = (
+        merged.select("lang", "n", F.explode(F.arrays_zip(qarr, earr)).alias("z"))
+        .select("lang", "n", F.col("z.q").alias("q"), F.col("z.est").alias("est")))
+    got = out["result"].orderBy("lang", "q").collect()
+    want = spark_result.orderBy("lang", "q").collect()
+    assert len(got) == len(want) == 4 * len({r.lang for r in want})
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+
+
+def test_stale_batch_dir_is_replaced(spark, tmp_path):
+    """A ``batch=K`` without ``_SUCCESS`` (a run killed mid-write) is
+    replayed and replaced: its junk file is neither kept nor merged."""
+    ckpt = str(tmp_path / "ckpt")
+    provider = range_batches(spark, 4_000, 2, seed=42)
+    run_job(spark, provider, ckpt, n_batches=2, max_batches=1)
+    stale = os.path.join(ckpt, "batch=1")
+    os.makedirs(stale)
+    junk = pa.table({"lang": ["junk"], "sketch": [b"x"], "n": [999],
+                     "v_min": [0.0], "v_max": [1e9], "batch": [1],
+                     "wall_s": [1.0]}, schema=CHECKPOINT_SCHEMA)
+    pq.write_table(junk, os.path.join(stale, "part-00007-junk.parquet"))
+
+    resumed = run_job(spark, provider, ckpt, n_batches=2)
+    assert resumed["metrics"]["batches_ran"] == [1]
+    assert os.path.exists(os.path.join(stale, "_SUCCESS"))
+    assert [os.path.basename(f) for f in glob.glob(
+        os.path.join(stale, "*.parquet"))] == ["part-00000.parquet"]
+    assert resumed["metrics"]["rows"] == 4_000
+    clean = run_job(spark, provider, str(tmp_path / "clean"), n_batches=2)
+    assert resumed["result"].collect() == clean["result"].collect()
