@@ -571,20 +571,15 @@ class DDSketch:
         return bytes(out)
 
     @classmethod
-    def from_bytes(cls, data: bytes, on_overflow: str = "error") -> "DDSketch":
-        """Parse + validate, mirroring ``ddsketch_recv`` (ddsketch.c:2870-3002)."""
-        if len(data) < _HEADER.size:
-            raise ValueError("invalid ddsketch: truncated header")
-        flags, count, zero_count, alpha, maxbuckets, nbuckets, nneg = _HEADER.unpack_from(data)
+    def _validated(cls, flags, count, zero_count, alpha, maxbuckets, nbuckets,
+                   nneg, check_alpha, read_buckets, on_overflow) -> "DDSketch":
+        """The checks both wire formats share, in the reference's order:
+        header (``check_alpha`` is the format's alpha range), then
+        ``read_buckets(nbuckets) -> (index, count)`` arrays (the format's
+        own size / parse-count check), then the buckets themselves."""
         if flags != 0:
             raise ValueError(f"invalid sketch flags {flags}")
-        # binary decode accepts alpha beyond the reference's input range
-        # [0.0001, 0.1]: UDDSketch collapse (our extension, SURVEY §7.0)
-        # doubles alpha per collapse, and collapsed sketches must round-trip.
-        # Text format (from_string) keeps the strict reference validation.
-        if not (0.0 < alpha < 1.0):
-            raise ValueError(
-                f"alpha for ddsketch ({alpha:f}) must be in (0, 1)")
+        check_alpha(alpha)
         validate_nbuckets(maxbuckets)
         if nneg < 0:
             raise ValueError(
@@ -606,12 +601,7 @@ class DDSketch:
         if zero_count > count:
             raise ValueError(
                 "zero_count value for the ddsketch must not exceed count")
-        expected = _HEADER.size + nbuckets * _BUCKET.size
-        if len(data) != expected:
-            raise ValueError(f"invalid ddsketch size {len(data)}, expected {expected}")
-        arr = np.frombuffer(data, dtype=_BUCKET_DT, count=nbuckets, offset=_HEADER.size)
-        idx = arr["index"].astype(np.int64)
-        cnt = arr["count"].astype(np.int64)
+        idx, cnt = read_buckets(nbuckets)
         if np.any(cnt <= 0):
             raise ValueError(
                 "count value for all indexes in a ddsketch must be positive")
@@ -621,20 +611,50 @@ class DDSketch:
         if nbuckets - nneg > 1 and np.any(np.diff(idx[nneg:]) <= 0):
             raise ValueError(
                 "invalid sketch - descending indexes in the positive part")
-        if int(cnt.sum()) + zero_count != count:
+        total = int(cnt.sum()) + zero_count
+        if total != count:
             raise ValueError(
                 f"total count {count} does not match buckets + zero_count "
-                f"{int(cnt.sum()) + zero_count}"
-            )
+                f"{total}")
         s = cls(min(max(alpha, MIN_SKETCH_ALPHA), MAX_SKETCH_ALPHA),
                 maxbuckets, on_overflow)
-        s.alpha = float(alpha)  # may exceed 0.1 after collapse (see above)
+        s.alpha = float(alpha)  # may exceed 0.1 after collapse (from_bytes)
         s._set_params()
         s.count = int(count)
         s.zero_count = int(zero_count)
         s.neg = {int(i): int(n) for i, n in zip(idx[:nneg], cnt[:nneg])}
         s.pos = {int(i): int(n) for i, n in zip(idx[nneg:], cnt[nneg:])}
         return s
+
+    @classmethod
+    def from_bytes(cls, data: bytes, on_overflow: str = "error") -> "DDSketch":
+        """Parse + validate, mirroring ``ddsketch_recv`` (ddsketch.c:2870-3002)."""
+        if len(data) < _HEADER.size:
+            raise ValueError("invalid ddsketch: truncated header")
+
+        # binary decode accepts alpha beyond the reference's input range
+        # [0.0001, 0.1]: UDDSketch collapse (our extension, SURVEY §7.0)
+        # doubles alpha per collapse, and collapsed sketches must round-trip.
+        # Text format (from_string) keeps the strict reference validation.
+        def check_alpha(alpha):
+            if not (0.0 < alpha < 1.0):
+                raise ValueError(
+                    f"alpha for ddsketch ({alpha:f}) must be in (0, 1)")
+
+        def read_buckets(nbuckets):
+            expected = _HEADER.size + nbuckets * _BUCKET.size
+            if len(data) != expected:
+                raise ValueError(
+                    f"invalid ddsketch size {len(data)}, expected {expected}")
+            arr = np.frombuffer(data, dtype=_BUCKET_DT, count=nbuckets,
+                                offset=_HEADER.size)
+            return arr["index"].astype(np.int64), arr["count"].astype(np.int64)
+
+        flags, count, zero_count, alpha, maxbuckets, nbuckets, nneg = \
+            _HEADER.unpack_from(data)
+        return cls._validated(flags, count, zero_count, alpha, maxbuckets,
+                              nbuckets, nneg, check_alpha, read_buckets,
+                              on_overflow)
 
     def to_string(self) -> str:
         """Reference text format (``ddsketch_out``, ddsketch.c:2849-2868)."""
@@ -663,67 +683,25 @@ class DDSketch:
         if not m:
             # message text == reference (ddsketch.c:2677)
             raise ValueError(f"failed to parse ddsketch value: {text[:60]!r}")
+
+        def read_buckets(nbuckets):
+            pairs = cls._BUCKET_RE.findall(text, m.end())
+            if len(pairs) > nbuckets:
+                # message text == reference (ddsketch.c:2762)
+                raise ValueError("too many buckets parsed")
+            if len(pairs) != nbuckets:
+                raise ValueError(
+                    f"expected {nbuckets} buckets, found {len(pairs)}")
+            # object arrays: text integers are unbounded, as in the header
+            return (np.array([int(a) for a, _ in pairs], dtype=object),
+                    np.array([int(b) for _, b in pairs], dtype=object))
+
+        g = m.groups()
         flags, count, zero_count, maxbuckets, nbuckets, nneg = (
-            int(m.group(1)), int(m.group(2)), int(m.group(4)),
-            int(m.group(5)), int(m.group(6)), int(m.group(7)),
-        )
-        alpha = float(m.group(3))
-        if flags != 0:
-            raise ValueError(f"invalid sketch flags {flags}")
-        validate_alpha(alpha)
-        validate_nbuckets(maxbuckets)
-        if nneg < 0:
-            raise ValueError(
-                f"number of negative buckets ({nneg}) for ddsketch "
-                "must not be negative")
-        if nneg > nbuckets:
-            raise ValueError(
-                f"number of negative buckets ({nneg}) for ddsketch "
-                f"must not exceed nbuckets ({nbuckets})")
-        if nbuckets > maxbuckets:
-            raise ValueError(
-                f"number of buckets ({nbuckets}) for ddsketch "
-                f"must not exceed maxbuckets ({maxbuckets})")
-        if count <= 0:
-            raise ValueError("count value for the ddsketch must be positive")
-        if zero_count < 0:
-            raise ValueError(
-                "zero_count value for the ddsketch must be positive")
-        if zero_count > count:
-            raise ValueError(
-                "zero_count value for the ddsketch must not exceed count")
-        pairs = cls._BUCKET_RE.findall(text, m.end())
-        if len(pairs) > nbuckets:
-            # message text == reference (ddsketch.c:2762)
-            raise ValueError("too many buckets parsed")
-        if len(pairs) != nbuckets:
-            raise ValueError(
-                f"expected {nbuckets} buckets, found {len(pairs)}"
-            )
-        idx = [int(a) for a, _ in pairs]
-        cnt = [int(b) for _, b in pairs]
-        if any(n <= 0 for n in cnt):
-            raise ValueError(
-                "count value for all indexes in a ddsketch must be positive")
-        for k in range(1, nneg):
-            if idx[k] >= idx[k - 1]:
-                raise ValueError(
-                    "invalid sketch - ascending indexes in the negative part")
-        for k in range(nneg + 1, nbuckets):
-            if idx[k] <= idx[k - 1]:
-                raise ValueError(
-                    "invalid sketch - descending indexes in the positive part")
-        if sum(cnt) + zero_count != count:
-            raise ValueError(
-                f"total count {count} does not match buckets + zero_count "
-                f"{sum(cnt) + zero_count}"
-            )
-        s = cls(alpha, maxbuckets, on_overflow)
-        s.count = count
-        s.zero_count = zero_count
-        s.neg = dict(zip(idx[:nneg], cnt[:nneg]))
-        s.pos = dict(zip(idx[nneg:], cnt[nneg:]))
-        return s
+            int(g[i]) for i in (0, 1, 3, 4, 5, 6))
+        return cls._validated(flags, count, zero_count, float(g[2]),
+                              maxbuckets, nbuckets, nneg, validate_alpha,
+                              read_buckets, on_overflow)
 
     # ------------------------------------------------------------------ misc
 

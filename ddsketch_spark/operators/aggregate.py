@@ -80,18 +80,13 @@ def sketch_partials(
     # explicit projection: the Python map is a pruning barrier, so never let
     # wide columns (e.g. html binary) cross into Python (SURVEY §4.1)
     projected = df.select(*cols)
-    # int64 inputs (pre-hashed columns for HLL/CMS/Bloom) MUST drop NULLs
-    # JVM-side: a nullable int64 Arrow batch lands in pandas as float64,
-    # which silently destroys the low bits of 60-bit hash values
-    # (2^60 has 256-ulp granularity in float64) — the kernel would sketch
-    # corrupted hashes. NULLs contribute nothing to a hash sketch, so the
-    # filter is semantics-preserving; the float path keeps NULL rows (they
-    # arrive as NaN and the kernels skip them, with n still counting them).
+    # NULL items contribute nothing to hash/item sketches: drop them
+    # JVM-side so the Python batch stays dense (an int64 hash column stays
+    # numpy int64 instead of exact-int objects). The float path keeps NULL
+    # rows: they reach the kernels as NaN, which they skip, and n still
+    # counts them.
     input_dtype = getattr(factory(), "input_dtype", "float64")
     if input_dtype in ("int64", "object"):
-        # NULL items contribute nothing to hash/item sketches; dropping
-        # them JVM-side keeps the Python batch dense (and for int64 avoids
-        # the nullable->float64 corruption described below)
         projected = projected.where(F.col(value_col).isNotNull())
     projected = projected.withColumn("__pid", F.spark_partition_id())
 
@@ -139,7 +134,7 @@ def sketch_partials(
                 grouped = pdf.groupby(keys, dropna=False, sort=False)
                 for _, gdf in grouped:
                     # the key as stored: groupby reports exact object ints
-                    # (keys >= 2^53, see _map_in_pandas_exact) as floats
+                    # (keys >= 2^53, see map_batches) as floats
                     gkey = tuple(gdf[k].iloc[0] for k in keys)
                     vals, wts = _extract(gdf)
                     acc = accs.get(gkey)
@@ -172,7 +167,7 @@ def sketch_partials(
             yield pd.DataFrame({c: pd.Series(v, dtype=object) if c in keys
                                 else v for c, v in out.items()})
 
-    return _map_in_pandas_exact(projected, keys, update_fn, out_schema)
+    return map_batches(projected, update_fn, out_schema)
 
 
 AUTO_FANOUT_THRESHOLD = 512
@@ -481,8 +476,8 @@ def grouped_apply_sorted(df: DataFrame, keys: Sequence[str], fn,
     runs (see native.dd_sketches; ~8x again over per-run calls at
     1M keys).
 
-    Batches are read by :func:`_map_in_pandas_exact`, so integral keys
-    stay exact even when a batch holds a NULL key.
+    Batches are read by :func:`map_batches`, so integral keys stay exact
+    even when a batch holds a NULL key.
     """
     keys = list(keys)
     if not keys:
@@ -525,21 +520,22 @@ def _apply_sorted_runs(df: DataFrame, keys: Sequence[str], fn,
         if pending is not None and len(pending):
             yield fn(pending)
 
-    return _map_in_pandas_exact(df, keys, run, schema)
+    return map_batches(df, run, schema)
 
 
-def _map_in_pandas_exact(df: DataFrame, keys: Sequence[str], fn,
-                         schema: StructType) -> DataFrame:
-    """``df.mapInPandas(fn, schema)`` with exact integral ``keys`` — the
-    batch reader of both Python stages. Spark's Arrow->pandas conversion
-    turns a nullable int64 column whose batch holds a NULL into float64,
-    merging distinct keys >= 2^53 (60-bit h64 ids) and corrupting the
-    keys ``fn`` emits; here such a key column is converted with
-    ``integer_object_nulls=True`` (exact ints + None), null-free batches
-    keep numpy int64. Empty batches and results are skipped."""
-    int_keys = [k for k in keys
-                if df.schema[k].dataType.typeName()
-                in ("long", "integer", "short", "byte")]
+def map_batches(df: DataFrame, fn, schema: StructType) -> DataFrame:
+    """``fn(pandas batches) -> pandas batches`` over ``df`` — the one
+    place a Python batch stage reads Spark's Arrow data. Every integral
+    column stays exact: Spark's own pandas conversion turns a nullable
+    int64 column whose batch holds a NULL into float64, merging distinct
+    values >= 2^53 (60-bit h64 ids); here such a column arrives as exact
+    ints + None (``integer_object_nulls``), a null-free batch as numpy
+    int64. Timestamps cross as instants whatever the session timezone:
+    they arrive tz-aware, and naive values ``fn`` returns are read as UTC
+    (``mapInPandas`` reads them as session-local). Empty batches and
+    results are skipped."""
+    int_cols = [f.name for f in df.schema.fields
+                if f.dataType.typeName() in ("long", "integer", "short", "byte")]
 
     def run(batches):
         import pyarrow as pa
@@ -548,10 +544,10 @@ def _map_in_pandas_exact(df: DataFrame, keys: Sequence[str], fn,
 
         def to_pdf(ab: "pa.RecordBatch") -> pd.DataFrame:
             pdf = ab.to_pandas()
-            for k in int_keys:
-                col = ab.column(ab.schema.get_field_index(k))
+            for c in int_cols:
+                col = ab.column(ab.schema.get_field_index(c))
                 if col.null_count:
-                    pdf[k] = col.to_pandas(integer_object_nulls=True)
+                    pdf[c] = col.to_pandas(integer_object_nulls=True)
             return pdf
 
         for res in fn(to_pdf(ab) for ab in batches if ab.num_rows):
@@ -559,4 +555,5 @@ def _map_in_pandas_exact(df: DataFrame, keys: Sequence[str], fn,
                 yield pa.RecordBatch.from_pandas(res, schema=arrow_out,
                                                  preserve_index=False)
 
+    run.__name__ = fn.__name__      # the stage's name in EXPLAIN
     return df.mapInArrow(run, schema)

@@ -1,6 +1,6 @@
 """Multimodal column handling: image/audio/video as opaque ``binary``
-columns with typed metadata, processed through Arrow-batched ``mapInPandas``
-pipelines.
+columns with typed metadata, processed through Arrow-batched
+``aggregate.map_batches`` pipelines.
 
 Decode coverage is layered by what the environment can support:
 
@@ -8,7 +8,7 @@ Decode coverage is layered by what the environment can support:
   BITMAPINFOHEADER, 8-bit paletted + 24-bit BGR) and **WAV** (RIFF PCM
   via the ``wave`` module) decode natively in :func:`decode_image` /
   :func:`decode_audio` — genuine containers exercise the same
-  ``mapInPandas`` pipelines as everything else.
+  ``map_batches`` pipelines as everything else.
 - Synthetic containers (``FAKEIMG1``/``FAKEAUD1``/``FAKEVID1``) remain
   the oracle-checkable payloads: their content is SQL-rederivable, so the
   driver value-checks the decode math end-to-end.
@@ -33,6 +33,8 @@ from pyspark.sql.types import (
     ArrayType, BinaryType, DoubleType, IntegerType, LongType, StringType,
     StructField, StructType,
 )
+
+from ddsketch_spark.operators.aggregate import map_batches
 
 IMG_MAGIC, AUD_MAGIC, VID_MAGIC = b"FAKEIMG1", b"FAKEAUD1", b"FAKEVID1"
 
@@ -106,7 +108,7 @@ def synthesize_media_arith(spark, n_rows: int, seed: int = 7) -> DataFrame:
                                  w, h, 24))
             yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
 
-    return spark.range(0, n_rows, 1).mapInPandas(gen, schema=MEDIA_SCHEMA)
+    return map_batches(spark.range(0, n_rows, 1), gen, MEDIA_SCHEMA)
 
 
 # ------------------------------------------------------------- decoders
@@ -114,7 +116,7 @@ def synthesize_media_arith(spark, n_rows: int, seed: int = 7) -> DataFrame:
 # Real container formats decodable with the stdlib alone (r4 verdict item
 # 3): BMP (BITMAPINFOHEADER, uncompressed BI_RGB — struct) and WAV (RIFF
 # PCM — the `wave` module). The decode dispatch is by magic bytes, so
-# genuine BMP/WAV payloads flow through the SAME mapInPandas pipelines as
+# genuine BMP/WAV payloads flow through the SAME map_batches pipelines as
 # the synthetic oracle containers; formats needing external codecs
 # (JPEG/PNG/MP3/...) fall through to an import-gated Pillow hook and an
 # explicit NotImplementedError otherwise.
@@ -270,7 +272,7 @@ FEATURE_SCHEMA = StructType([
 
 
 def extract_features(media: DataFrame, batch_feature_dim: int = 8) -> DataFrame:
-    """Decode + feature-extract via ``mapInPandas``: mean-pooled payload
+    """Decode + feature-extract via ``map_batches``: mean-pooled payload
     statistics per modality (the deterministic stand-in for an encoder).
     Projection keeps only (media_id, kind, payload) across the
     JVM->Python boundary."""
@@ -295,8 +297,8 @@ def extract_features(media: DataFrame, batch_feature_dim: int = 8) -> DataFrame:
                             [float(c.mean()) if len(c) else 0.0 for c in chunks]))
             yield pd.DataFrame(out, columns=[f.name for f in FEATURE_SCHEMA.fields])
 
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        feats, schema=FEATURE_SCHEMA)
+    return map_batches(media.select("media_id", "kind", "payload"), feats,
+                       FEATURE_SCHEMA)
 
 
 RESIZE_SCHEMA = StructType([
@@ -321,8 +323,8 @@ def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
                             out_w, out_h))
             yield pd.DataFrame(out, columns=[f.name for f in RESIZE_SCHEMA.fields])
 
-    return (media.where(F.col("kind") == "image")
-            .select("media_id", "payload").mapInPandas(rs, schema=RESIZE_SCHEMA))
+    return map_batches(media.where(F.col("kind") == "image")
+                       .select("media_id", "payload"), rs, RESIZE_SCHEMA)
 
 
 FRAME_SCHEMA = StructType([
@@ -334,7 +336,7 @@ FRAME_SCHEMA = StructType([
 
 def sample_frames(media: DataFrame, every: int = 2) -> DataFrame:
     """Frame sampling for FAKEVID1 payloads: one output row per kept frame
-    (UDTF-shaped mapInPandas)."""
+    (UDTF-shaped ``map_batches``)."""
     def fs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
@@ -344,5 +346,5 @@ def sample_frames(media: DataFrame, every: int = 2) -> DataFrame:
                     out.append((int(mid), idx, fake_encode_image(vid[idx])))
             yield pd.DataFrame(out, columns=[f.name for f in FRAME_SCHEMA.fields])
 
-    return (media.where(F.col("kind") == "video")
-            .select("media_id", "payload").mapInPandas(fs, schema=FRAME_SCHEMA))
+    return map_batches(media.where(F.col("kind") == "video")
+                       .select("media_id", "payload"), fs, FRAME_SCHEMA)

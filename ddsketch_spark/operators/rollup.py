@@ -76,7 +76,6 @@ def build_sketch_table(df: DataFrame, ts_col: str, value_col: str,
                        granularity_seconds: int,
                        keys: Sequence[str] = (),
                        weight_col: str | None = None,
-                       bucket_col: str = "bucket",
                        on_overflow: str = "error") -> DataFrame:
     """Fine-grained sketch table: ``bucket, keys..., sketch, n`` — one
     row per (time bucket, key). One partial-aggregated pass over the raw
@@ -86,11 +85,11 @@ def build_sketch_table(df: DataFrame, ts_col: str, value_col: str,
     table — the policy is not serialized in the sketch bytes."""
     keys = list(keys)
     base = df.select(
-        time_bucket(ts_col, granularity_seconds).alias(bucket_col),
+        time_bucket(ts_col, granularity_seconds).alias("bucket"),
         *keys, value_col,
         *( [weight_col] if weight_col else [] ))
     return api.ddsketch(base, value_col, alpha, nbuckets,
-                        keys=[bucket_col] + keys, weight_col=weight_col,
+                        keys=["bucket"] + keys, weight_col=weight_col,
                         on_overflow=on_overflow)
 
 
@@ -112,8 +111,7 @@ def windowed_sketches_as_table(assembled: DataFrame,
 
 
 def store_sketch_table(df: DataFrame, path: str,
-                       partition_granularity_seconds: int = 86400,
-                       bucket_col: str = "bucket") -> None:
+                       partition_granularity_seconds: int = 86400) -> None:
     """Persist a sketch table partitioned by a COARSER time directory
     (default daily): hourly rows land in day directories, so an aligned
     range query prunes whole partitions before reading a single row
@@ -124,7 +122,7 @@ def store_sketch_table(df: DataFrame, path: str,
 
     g = int(partition_granularity_seconds)
     out = df.withColumn(
-        "pbucket", F.col(bucket_col) - F.pmod(F.col(bucket_col), F.lit(g)))
+        "pbucket", F.col("bucket") - F.pmod(F.col("bucket"), F.lit(g)))
     write_table(out, path, partition_by=["pbucket"])
 
 
@@ -148,7 +146,6 @@ def _check_multiple(coarse: int, fine: int) -> None:
 
 def rollup(sketch_table: DataFrame, coarse_granularity_seconds: int,
            fine_granularity_seconds: int, keys: Sequence[str] = (),
-           bucket_col: str = "bucket",
            on_overflow: str = "error",
            from_bytes=None) -> DataFrame:
     """Coarsen a sketch table: merge fine buckets into
@@ -160,10 +157,10 @@ def rollup(sketch_table: DataFrame, coarse_granularity_seconds: int,
     _check_multiple(g, int(fine_granularity_seconds))
     keys = list(keys)
     coarse = sketch_table.withColumn(
-        bucket_col, F.col(bucket_col) - F.pmod(F.col(bucket_col), F.lit(g)))
+        "bucket", F.col("bucket") - F.pmod(F.col("bucket"), F.lit(g)))
     # n_col: a rollup row's n = sum of its children's contributing
     # rows, not the number of merged sketch rows
-    return merge_sketches(coarse, "sketch", keys=[bucket_col] + keys,
+    return merge_sketches(coarse, "sketch", keys=["bucket"] + keys,
                           from_bytes=_deser(on_overflow, from_bytes),
                           n_col="n" if "n" in sketch_table.columns else None)
 
@@ -179,7 +176,6 @@ def _epoch(t: "int | dt.datetime") -> int:
 def range_percentile(sketch_table: DataFrame, t0, t1, qs: Sequence[float],
                      fine_granularity_seconds: int,
                      keys: Sequence[str] = (),
-                     bucket_col: str = "bucket",
                      partition_granularity_seconds: int | None = None,
                      on_overflow: str = "error") -> DataFrame:
     """Quantiles over an aligned time range from stored partials:
@@ -201,7 +197,7 @@ def range_percentile(sketch_table: DataFrame, t0, t1, qs: Sequence[float],
     if e1 <= e0:
         raise ValueError("empty range: t1 must be > t0")
     in_range = sketch_table.where(
-        (F.col(bucket_col) >= e0) & (F.col(bucket_col) < e1))
+        (F.col("bucket") >= e0) & (F.col("bucket") < e1))
     if (partition_granularity_seconds
             and "pbucket" in sketch_table.columns):
         # tables written by store_sketch_table: an equivalent predicate
@@ -219,7 +215,6 @@ def compact_sketch_table(sketch_table: DataFrame, boundary,
                          fine_granularity_seconds: int,
                          coarse_granularity_seconds: int,
                          keys: Sequence[str] = (),
-                         bucket_col: str = "bucket",
                          on_overflow: str = "error") -> DataFrame:
     """Tiered retention (the continuous-aggregate compaction policy):
     buckets OLDER than ``boundary`` are rolled up to the coarse grain,
@@ -244,11 +239,11 @@ def compact_sketch_table(sketch_table: DataFrame, boundary,
     keys = list(keys)
     # n (lineage row count) is optional, mirroring rollup()'s contract —
     # a sketch table built without lineage compacts fine (r5 ADVICE)
-    cols = ([bucket_col] + keys + ["sketch"]
+    cols = (["bucket"] + keys + ["sketch"]
             + (["n"] if "n" in sketch_table.columns else []))
-    old = sketch_table.where(F.col(bucket_col) < e_b).select(*cols)
-    recent = sketch_table.where(F.col(bucket_col) >= e_b).select(*cols)
-    compacted = rollup(old, coarse, fine, keys, bucket_col,
+    old = sketch_table.where(F.col("bucket") < e_b).select(*cols)
+    recent = sketch_table.where(F.col("bucket") >= e_b).select(*cols)
+    compacted = rollup(old, coarse, fine, keys,
                        on_overflow=on_overflow).select(*cols)
     return (compacted.withColumn("gran", F.lit(coarse).cast("long"))
             .unionByName(recent.withColumn("gran",
@@ -260,7 +255,6 @@ def range_percentile_tiered(tiered: DataFrame, t0, t1, qs: Sequence[float],
                             fine_granularity_seconds: int,
                             coarse_granularity_seconds: int,
                             keys: Sequence[str] = (),
-                            bucket_col: str = "bucket",
                             on_overflow: str = "error") -> DataFrame:
     """Range quantiles over a :func:`compact_sketch_table` table:
     ``keys..., q, est`` for raw timestamps in ``[t0, t1)``, merging fine
@@ -286,8 +280,8 @@ def range_percentile_tiered(tiered: DataFrame, t0, t1, qs: Sequence[float],
                 f"aligned to its {g}s grain — an unaligned edge would "
                 f"drop the straddled bucket's data")
     in_range = tiered.where(
-        (F.col(bucket_col) >= e0)
-        & ((F.col(bucket_col) + F.col("gran")) <= e1))
+        (F.col("bucket") >= e0)
+        & ((F.col("bucket") + F.col("gran")) <= e1))
     return merge_sketches_extract(
         in_range, "sketch", list(keys),
         *quantile_extract(qs), from_bytes=_deser(on_overflow))

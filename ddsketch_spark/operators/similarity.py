@@ -20,8 +20,10 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+from pyspark.sql.window import Window
 
+from ddsketch_spark.operators.aggregate import map_batches
 from ddsketch_spark.textconf import ANN_PLANES, EMB_SCALE, ann_plane_weights
 
 
@@ -56,6 +58,17 @@ def cosine_expr() -> Column:
                * F.sqrt(F.col("nb").cast("double"))))
 
 
+def _rank_topk(cand: DataFrame, k: int) -> DataFrame:
+    """``query_id, rank, neighbor_id``: each query's first ``k``
+    candidates under ``(cos desc, neighbor_id asc)``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos").desc(), F.col("neighbor_id").asc())
+    return (cand.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k)
+            .select("query_id", F.col("rank").cast("long").alias("rank"),
+                    "neighbor_id"))
+
+
 def cosine_topk(df: DataFrame, queries: DataFrame, k: int,
                 id_col: str = "vec_id", emb_col: str = "embedding") -> DataFrame:
     """``query_id, rank, neighbor_id`` — exact brute-force cosine top-k.
@@ -65,7 +78,7 @@ def cosine_topk(df: DataFrame, queries: DataFrame, k: int,
     NOTE this function is EAGER in ``queries``: the query vectors are
     collected to the driver at call time (a small Spark job runs before
     the returned frame is acted on) and ride to executors inside the
-    scoring UDF — sized for the documented small-query-set contract
+    scoring stage — sized for the documented small-query-set contract
     (tens-to-thousands of rows; kBs-to-MBs of matrix). Callers needing a
     fully lazy plan or a large query side should use
     :func:`cosine_topk_expr` (the JVM-expression reference shape) or the
@@ -85,15 +98,11 @@ def cosine_topk(df: DataFrame, queries: DataFrame, k: int,
     numpy-computed cosines bit-identical to the JVM expression
     (:func:`cosine_topk_expr`, kept as the parity reference; equality is
     pinned by tests)."""
-    from pyspark.sql.types import (
-        DoubleType, LongType as _Long, StructField, StructType)
-    from pyspark.sql.window import Window
-
     qrows = with_quantized(queries, emb_col).select(
         F.col(id_col).alias("qid"), "qv", "n2").collect()
     cand_schema = StructType([
-        StructField("query_id", _Long(), False),
-        StructField("neighbor_id", _Long(), False),
+        StructField("query_id", LongType(), False),
+        StructField("neighbor_id", LongType(), False),
         StructField("cos", DoubleType(), True),
     ])
     if not qrows:
@@ -138,14 +147,9 @@ def cosine_topk(df: DataFrame, queries: DataFrame, k: int,
                             "neighbor_id": pd.Series(out_n, dtype="int64"),
                             "cos": pd.Series(out_c, dtype="float64")})
 
-    cand = df.select(F.col(id_col), emb_col).mapInPandas(
-        part_topk, schema=cand_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", F.col("rank").cast("long").alias("rank"),
-                    "neighbor_id"))
+    return _rank_topk(
+        map_batches(df.select(F.col(id_col), emb_col), part_topk, cand_schema),
+        k)
 
 
 def cosine_topk_expr(df: DataFrame, queries: DataFrame, k: int,
@@ -154,23 +158,15 @@ def cosine_topk_expr(df: DataFrame, queries: DataFrame, k: int,
     """The pure-JVM-expression brute-force top-k (broadcast crossJoin +
     HOF cosine + full window) — kept as the parity reference for
     :func:`cosine_topk`."""
-    from pyspark.sql.window import Window
-
     corpus = with_quantized(df, emb_col).select(
         F.col(id_col).alias("neighbor_id"),
         F.col("qv").alias("qb"), F.col("n2").alias("nb"))
     qs = with_quantized(queries, emb_col).select(
         F.col(id_col).alias("query_id"),
         F.col("qv").alias("qa"), F.col("n2").alias("na"))
-    joined = (corpus.crossJoin(F.broadcast(qs))
-              .where(F.col("neighbor_id") != F.col("query_id"))
-              .withColumn("cos", cosine_expr()))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (joined.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", F.col("rank").cast("long").alias("rank"),
-                    "neighbor_id"))
+    return _rank_topk(corpus.crossJoin(F.broadcast(qs))
+                      .where(F.col("neighbor_id") != F.col("query_id"))
+                      .withColumn("cos", cosine_expr()), k)
 
 
 def cosine_dup_pairs(df: DataFrame, threshold: float,
@@ -230,27 +226,23 @@ def ann_buckets(df: DataFrame, id_col: str = "vec_id",
     (textconf.ann_plane_weights)."""
     planes = ann_plane_weights()  # (P, D) int64
 
-    @F.pandas_udf(LongType())
-    def bucket_udf(qv: pd.Series) -> pd.Series:
-        if len(qv) == 0:
-            return pd.Series([], dtype="int64")
-        m = np.stack([np.asarray(v, dtype=np.int64) for v in qv])
-        dots = m @ planes.T                     # exact int64 (fits: 2^45)
-        bits = (dots > 0).astype(np.int64)
-        vals = (bits << np.arange(ANN_PLANES, dtype=np.int64)).sum(axis=1)
-        return pd.Series(vals)
+    def buckets(batches):
+        for pdf in batches:
+            m = np.stack([np.asarray(v, dtype=np.int64) for v in pdf["qv"]])
+            dots = m @ planes.T                 # exact int64 (fits: 2^45)
+            bits = (dots > 0).astype(np.int64)
+            yield pd.DataFrame({"id": pdf["id"], "bucket": (
+                bits << np.arange(ANN_PLANES, dtype=np.int64)).sum(axis=1)})
 
-    q = with_quantized(df, emb_col)
-    return q.select(F.col(id_col).alias("id"),
-                    bucket_udf(F.col("qv")).alias("bucket"))
+    q = with_quantized(df, emb_col).select(F.col(id_col).alias("id"), "qv")
+    return map_batches(q, buckets, StructType(
+        [q.schema["id"], StructField("bucket", LongType())]))
 
 
 def ann_lsh_topk(df: DataFrame, queries: DataFrame, k: int,
                  id_col: str = "vec_id", emb_col: str = "embedding") -> DataFrame:
     """``query_id, rank, neighbor_id`` — top-k among same-bucket candidates
     only (sublinear at scale; recall measured in tests vs brute force)."""
-    from pyspark.sql.window import Window
-
     buckets = ann_buckets(df, id_col, emb_col)
     q = with_quantized(queries, emb_col).select(
         F.col(id_col).alias("query_id"), F.col("qv").alias("qa"),
@@ -266,12 +258,7 @@ def ann_lsh_topk(df: DataFrame, queries: DataFrame, k: int,
         .where(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cos", cosine_expr())
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", F.col("rank").cast("long").alias("rank"),
-                    "neighbor_id"))
+    return _rank_topk(cand, k)
 
 
 # ------------------------------------------------------------------ IVF
@@ -285,8 +272,8 @@ def ivf_codebook(df: DataFrame, n_cells: int = 8, id_col: str = "vec_id",
     sampled init). Returns ``[(cell, quantized_centroid, norm2), ...]`` —
     a kilobyte-scale driver gather (the ``_gather_estimates`` pattern:
     seed selection is a distributed TakeOrdered job; the codebook then
-    rides into the main plan as literals so assignment is pure
-    whole-stage-codegen with NO corpus shuffle and no second pass).
+    rides into the assignment stage's closure, so assignment needs NO
+    corpus shuffle and no second pass).
 
     ``refine_iters > 0`` runs that many Lloyd iterations of spherical
     k-means on a deterministic training sample (the ``sample_n`` vectors
@@ -409,20 +396,21 @@ def ivf_assign(df: DataFrame, codebook, id_col: str = "vec_id",
     seed_n2 = np.sqrt(np.array([ns for _, _, ns in codebook],
                                dtype=np.float64))
 
-    @F.pandas_udf(LongType())
-    def assign_udf(qv: pd.Series, n2: pd.Series) -> pd.Series:
-        if len(qv) == 0:
-            return pd.Series([], dtype="int64")
-        m = np.stack([np.asarray(v, dtype=np.int64) for v in qv])
-        dots = (m @ seeds.T).astype(np.float64)
-        denom = np.sqrt(n2.to_numpy(dtype=np.float64))[:, None] * seed_n2
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = dots / denom
-        return pd.Series(np.argmax(cos, axis=1).astype(np.int64))
+    def assign(batches):
+        for pdf in batches:
+            m = np.stack([np.asarray(v, dtype=np.int64) for v in pdf["qv"]])
+            dots = (m @ seeds.T).astype(np.float64)
+            denom = (np.sqrt(pdf["n2"].to_numpy(dtype=np.float64))[:, None]
+                     * seed_n2)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = dots / denom
+            yield pdf.assign(cell=np.argmax(cos, axis=1).astype(np.int64))
 
     q = with_quantized(df, emb_col).select(F.col(id_col).alias("id"),
                                            "qv", "n2")
-    return q.select("id", assign_udf("qv", "n2").alias("cell"), "qv", "n2")
+    return map_batches(q, assign, StructType(
+        [q.schema["id"], StructField("cell", LongType()), q.schema["qv"],
+         q.schema["n2"]]))
 
 
 def ivf_assign_expr(df: DataFrame, codebook, id_col: str = "vec_id",
@@ -463,12 +451,10 @@ def ann_ivf_topk(df: DataFrame, queries: DataFrame, k: int,
     (n_cells, nprobe) instead of fixed by plane count.
 
     Plan shape at 100 TB: seed selection is one TakeOrdered scan; the main
-    job is ONE corpus scan with per-row codegen assignment, broadcast-join
+    job is ONE corpus scan with per-batch matmul assignment, broadcast-join
     against the (queries x nprobe) probe rows on cell, then a per-query
     window over candidates — the corpus is never shuffled, mirroring
     ann_lsh_topk's bucket equi-join but with a data-adaptive codebook."""
-    from pyspark.sql.window import Window
-
     codebook = ivf_codebook(df, n_cells, id_col, emb_col,
                             refine_iters=refine_iters, balance=balance)
     corpus = ivf_assign(df, codebook, id_col, emb_col).select(
@@ -478,9 +464,4 @@ def ann_ivf_topk(df: DataFrame, queries: DataFrame, k: int,
     cand = (corpus.join(F.broadcast(probes), on="cell")
             .where(F.col("neighbor_id") != F.col("query_id"))
             .withColumn("cos", cosine_expr()))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", F.col("rank").cast("long").alias("rank"),
-                    "neighbor_id"))
+    return _rank_topk(cand, k)

@@ -3,17 +3,17 @@ training-data-pipeline layer (exact dedup, MinHash+LSH, SimHash, n-gram
 Jaccard, language-ID, quality scoring, token counts, fingerprints).
 
 Everything here is built from JVM-side ``pyspark.sql.functions`` — with
-ONE exception, the vectorized rolling-fingerprint batch ``_rfp_np``
-(an Arrow pandas UDF: the SQL fold is a higher-order function Catalyst
-interprets per character; the numpy dot computes the identical integers
-batch-at-a-time, see :func:`rolling_fingerprint_col`) — so the hot path
-stays in whole-stage codegen and every aggregation gets native map-side
-partial aggregation. All outputs are deterministic integers/strings (or
+ONE exception, the rolling fingerprint :func:`rfp` (a row function run
+per Arrow batch by ``rows.vectorize``: the SQL fold is a higher-order
+function Catalyst interprets per character; one numpy dot per document
+computes the identical integers, see :func:`rolling_fingerprint_col`) —
+so the hot path stays in whole-stage codegen and every aggregation gets
+native map-side partial aggregation. All outputs are deterministic integers/strings (or
 doubles produced by a fixed float expression), mirrored exactly by the
 DuckDB oracle generators in :mod:`ddsketch_spark.oracles` via the
 shared constants in :mod:`ddsketch_spark.textconf` (the fingerprint
 diverges from its SQL mirror ONLY where the mirror overflows BIGINT —
-documented on ``_rfp_np``).
+documented on :func:`rfp`).
 
 Scale notes (100 TB):
 - shingle/token explodes multiply rows but feed straight into partial-agg
@@ -27,11 +27,12 @@ from __future__ import annotations
 
 from typing import Sequence
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import LongType
 
 from ddsketch_spark.core.hashing import spark_h64
+from ddsketch_spark.functions.rows import vectorize
 from ddsketch_spark.textconf import (
     LANGID_LANGS, LANGID_STOPWORDS, LSH_BANDS, LSH_ROWS, MINHASH_AB,
     MINHASH_H, QUALITY_STOPWORDS, QUALITY_WEIGHTS, SHINGLE_K, SIMHASH_BITS,
@@ -366,65 +367,56 @@ def bpe_token_count_col(text_col: str) -> Column:
         F.col(text_col), F.lit(BPE_ISH_PATTERN)).cast("long")
 
 
-def _rfp_weights(n: int, cache: dict):
-    import numpy as np
+_RFP_W = np.ones(0, dtype=np.int64)
 
-    w = cache.get(n)
-    if w is None:
-        idx = np.arange(1, n + 1, dtype=np.int64)
+
+def _rfp_weights(n: int) -> np.ndarray:
+    """The first ``n`` position weights ``(i*2654435761 mod 2^31) | 1``.
+    One cached vector, sliced per row and grown by doubling, so it never
+    holds more than twice the longest document's codepoints."""
+    global _RFP_W
+    if len(_RFP_W) < n:
+        idx = np.arange(1, max(n, 2 * len(_RFP_W)) + 1, dtype=np.int64)
         w = ((idx * 2654435761) % (1 << 31)) | 1
-        cache[n] = w
-    return w
+        w.flags.writeable = False     # shared: callers get read-only views
+        _RFP_W = w
+    return _RFP_W[:n]
 
 
-@F.pandas_udf(LongType())
-def _rfp_np(texts: "pd.Series") -> "pd.Series":
-    """Vectorized rolling fingerprint: codepoints via utf-32 decode into
-    int64, one dot product against the cached position-weight vector per
-    distinct length. Exact integer math: each term is < 2^52 (codepoint
-    < 2^21, weight < 2^31), and when ``len * max_codepoint`` bounds the
-    whole dot under 2^63 it is ONE int64 matmul; longer/higher-codepoint
-    documents (~4k+ astral-plane chars — where the int64 dot would wrap
-    SILENTLY) accumulate exact Python ints over 2048-element chunks
-    (each chunk dot < 2^63, so never wraps). Identical to the
-    SQL-mirrorable definition below for every input the SQL form can
-    evaluate; on inputs where the SQL fold's un-modded accumulator would
-    overflow BIGINT (ANSI error on both engines), this returns the exact
-    mathematical value instead — strictly more tolerant, pinned by
+def rfp(s: str) -> int:
+    """Rolling fingerprint of one document: codepoints via utf-32 decode
+    into int64, one dot product against the position weights. Exact
+    integer math: each term is < 2^52 (codepoint < 2^21, weight < 2^31),
+    and when ``len * max_codepoint`` bounds the whole dot under 2^63 it
+    is ONE int64 dot; longer/higher-codepoint documents (~4k+
+    astral-plane chars — where the int64 dot would wrap SILENTLY)
+    accumulate exact Python ints over 2048-element chunks (each chunk dot
+    < 2^63, so never wraps). Identical to the SQL-mirrorable definition
+    below for every input the SQL form can evaluate; on inputs where the
+    SQL fold's un-modded accumulator would overflow BIGINT (ANSI error on
+    both engines), this returns the exact mathematical value instead —
+    strictly more tolerant, pinned by
     tests/test_textops.py::test_rfp_numpy_exact_on_overflow_risk."""
-    import numpy as np
-    import pandas as pd
-
-    P61 = (1 << 61) - 1
-    cache: dict = {}
-    out = []
-    for s in texts:
-        if s is None:
-            out.append(None)
-        elif not s:
-            out.append(0)
-        else:
-            cp = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32)
-            cpi = cp.astype(np.int64)
-            w = _rfp_weights(len(cpi), cache)
-            # short-circuit on the theoretical max codepoint (0x10FFFF)
-            # so documents under ~3.9k chars skip the max() pass entirely
-            n = len(cpi)
-            if n * 0x110000 < (1 << 32) or n * int(cpi.max()) < (1 << 32):
-                acc = int(cpi @ w)
-            else:
-                acc = 0
-                for i in range(0, len(cpi), 2048):
-                    acc += int(cpi[i:i + 2048] @ w[i:i + 2048])
-            out.append(acc % P61)
-    return pd.Series(out, dtype="object" if None in out else "int64")
+    if not s:
+        return 0
+    cpi = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
+    n = len(cpi)
+    w = _rfp_weights(n)
+    # short-circuit on the theoretical max codepoint (0x10FFFF)
+    # so documents under ~3.9k chars skip the max() pass entirely
+    if n * 0x110000 < (1 << 32) or n * int(cpi.max()) < (1 << 32):
+        acc = int(cpi @ w)
+    else:
+        acc = sum(int(cpi[i:i + 2048] @ w[i:i + 2048])
+                  for i in range(0, n, 2048))
+    return acc % _P61
 
 
 def rfp_col(text_col: str) -> Column:
-    """Column form of the rolling fingerprint (the vectorized ``_rfp_np``
-    batch) — composes into a single projection with the other profile
-    columns, so no join is needed to attach it."""
-    return _rfp_np(F.col(text_col))
+    """Column form of the rolling fingerprint (:func:`rfp` per row, one
+    Python call per Arrow batch) — composes into a single projection with
+    the other profile columns, so no join is needed to attach it."""
+    return vectorize(rfp, LongType())(F.col(text_col))
 
 
 def rolling_fingerprint_col(df: DataFrame, id_col: str = "doc_id",
@@ -435,7 +427,7 @@ def rolling_fingerprint_col(df: DataFrame, id_col: str = "doc_id",
     weights). Order-sensitive like a rolling hash, exact integer math, and
     SQL-mirrorable per character.
 
-    Computed as a vectorized Arrow batch (``_rfp_np``): the earlier
+    Computed per Arrow batch by :func:`rfp_col`: the earlier
     ``aggregate(sequence(1, length))`` fold is a HIGHER-ORDER function —
     Catalyst interprets the lambda per character, so 50k docs paid ~15M
     boxed lambda evaluations (1.2-2.0 s at local[32]); the numpy dot per
@@ -443,7 +435,7 @@ def rolling_fingerprint_col(df: DataFrame, id_col: str = "doc_id",
     hop (guide §4.2: batch native beats interpreted per-element JVM).
     The pure-SQL definition is what the DuckDB oracle replays; equality
     is pinned per-row in tests/test_textops.py."""
-    return df.select(F.col(id_col), _rfp_np(F.col(text_col)).alias("rfp"))
+    return df.select(F.col(id_col), rfp_col(text_col).alias("rfp"))
 
 
 def rolling_fingerprint_sql_col(text_col: str) -> Column:

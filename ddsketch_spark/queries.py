@@ -1347,7 +1347,7 @@ MEDIA_SEED = 7
 def multimodal_feature_stats(spark, sf_dir):
     """kind, q, est, n_media, f0_micro, f7_micro — decode + feature-extract
     a deterministic multimodal table (image/audio/video binary payloads
-    through the real mapInPandas plumbing), then DDSketch the payload-size
+    through the real map_batches plumbing), then DDSketch the payload-size
     distribution per modality and integer-sum two decoded feature chunks.
     The oracle re-derives every decoded element arithmetically — it checks
     the decode math end-to-end, not just row counts."""
@@ -1374,7 +1374,7 @@ RESIZE_W, RESIZE_H, FRAME_EVERY = 16, 4, 2
 
 def multimodal_resize_frame_stats(spark, sf_dir):
     """grp, n_rows, f0_micro — nearest-neighbor image resize and video
-    frame sampling through the real mapInPandas plumbing, reduced to
+    frame sampling through the real map_batches plumbing, reduced to
     integer feature sums; the oracle re-derives the resize index math and
     frame striding from the arithmetic payload definition, so both
     transforms are value-checked end-to-end."""

@@ -5,8 +5,8 @@ text string, lang string``.
 Everything is a pure function of (seed, doc id) via a splitmix64-style
 counter hash, so:
 
-- generation is embarrassingly parallel (``spark.range`` + ``mapInPandas``,
-  no shuffle) and scales to any doc count;
+- generation is embarrassingly parallel (``spark.range`` +
+  ``aggregate.map_batches``, no shuffle) and scales to any doc count;
 - the per-row invariant holds: the extracted ``text`` for a given ``url``
   is byte-identical across runs, partitionings, and cluster sizes
   (tests/test_webpages.py pins golden hashes);
@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     BinaryType, StringType, StructField, StructType, TimestampType,
 )
+
+from ddsketch_spark.operators.aggregate import map_batches
 
 SCHEMA = StructType([
     StructField("url", StringType(), False),
@@ -160,10 +162,9 @@ def synthesize_range(spark: SparkSession, lo: int, hi: int, seed: int = 42,
 
     def gen(batches):
         for pdf in batches:
-            if len(pdf):
-                yield generate_batch(pdf["id"].to_numpy(), seed)
+            yield generate_batch(pdf["id"].to_numpy(), seed)
 
-    return spark.range(lo, hi, 1, parts).mapInPandas(gen, schema=SCHEMA)
+    return map_batches(spark.range(lo, hi, 1, parts), gen, SCHEMA)
 
 
 def synthesize(spark: SparkSession, n_docs: int, seed: int = 42,

@@ -317,6 +317,28 @@ def test_int64_keys_beyond_2_53_with_nulls_stay_distinct(spark):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
+def test_map_batches_reads_nullable_non_key_int64_exactly(spark):
+    """map_batches reads EVERY integral column exactly, not only keys: a
+    nullable int64 value column holding 2^60 + 1 beside a NULL arrives as
+    exact ints + None (Spark's pandas conversion would make it float64,
+    turning 2^60 + 1 into 2^60) and is written back unchanged."""
+    from ddsketch_spark.operators.aggregate import map_batches
+
+    big = (1 << 60) + 1
+    df = spark.createDataFrame([(1, big), (2, None), (3, 7)],
+                               schema="k long, v long").coalesce(1)
+    same = map_batches(df, lambda batches: batches, df.schema)
+    assert {r["k"]: r["v"] for r in same.collect()} == {1: big, 2: None, 3: 7}
+
+    def is_big(batches):       # the stage itself sees the exact int
+        for pdf in batches:
+            yield pdf.assign(v=[-1 if x is None else int(x == big)
+                                for x in pdf["v"]])
+
+    flags = map_batches(df, is_big, df.schema)
+    assert {r["k"]: r["v"] for r in flags.collect()} == {1: 1, 2: -1, 3: 0}
+
+
 # ------------------------------------- one assembler, keyed or keyless
 
 def _native_build(kind, df, keys):

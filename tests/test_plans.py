@@ -20,6 +20,37 @@ from ddsketch_spark.operators.native import ddsketch_agg_native
 from ddsketch_spark.operators.similarity import cosine_topk
 
 
+def test_python_stages_enter_through_two_wrappers():
+    """Python receives Arrow data in exactly two places: scalars through
+    ``rows.vectorize``, batch stages through ``aggregate.map_batches``.
+    A raw ``pandas_udf(`` / ``mapInPandas(`` / ``mapInArrow(`` anywhere
+    else in the library is a stage that bypasses the exact-integer
+    batch reader."""
+    import ast
+    import pathlib
+
+    import ddsketch_spark
+
+    allowed = {("functions/rows.py", "vectorize"),
+               ("operators/aggregate.py", "map_batches")}
+    raw = re.compile(r"pandas_udf\(|mapInPandas\(|mapInArrow\(")
+    root = pathlib.Path(ddsketch_spark.__file__).parent
+    stray = []
+    for path in sorted(root.rglob("*.py")):
+        src = path.read_text()
+        spans = [(f.lineno, f.end_lineno, f.name)
+                 for f in ast.parse(src).body
+                 if isinstance(f, (ast.FunctionDef, ast.AsyncFunctionDef))]
+        rel = path.relative_to(root).as_posix()
+        for n, line in enumerate(src.splitlines(), 1):
+            if raw.search(line):
+                owner = next((name for a, b, name in spans if a <= n <= b),
+                             None)
+                if (rel, owner) not in allowed:
+                    stray.append(f"{rel}:{n}: {line.strip()}")
+    assert not stray, "\n".join(stray)
+
+
 def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted")
@@ -75,7 +106,7 @@ def test_filter_pushdown_reaches_scan(spark, pages_path):
 
 
 def test_ann_corpus_never_joined_or_shuffled(spark):
-    """Brute-force top-k scores the corpus in ONE MapInPandas pass (the
+    """Brute-force top-k scores the corpus in ONE MapInArrow pass (the
     query matrix rides in the task closure — r6: replaced the broadcast
     crossJoin + full-corpus window); the corpus is neither joined nor
     exchanged, and the only shuffle input is the per-partition candidate
@@ -90,12 +121,12 @@ def test_ann_corpus_never_joined_or_shuffled(spark):
     out = cosine_topk(df, df.where(F.col("vec_id") < 3), 5)
     plan = _plan(out)
     tree = plan.split("\n\n(")[0]          # tree section, before details
-    assert tree.count("MapInPandas") == 1, tree
+    assert tree.count("MapInArrow") == 1, tree
     for node in ("BroadcastNestedLoopJoin", "CartesianProduct",
                  "SortMergeJoin", "ShuffledHashJoin"):
         assert node not in plan, plan
     # exactly the window's exchange remains above the scorer
-    assert plan.split("MapInPandas")[0].count("Exchange") <= 1, plan
+    assert plan.split("MapInArrow")[0].count("Exchange") <= 1, plan
 
 
 def test_cosine_dup_default_path_not_quadratic(spark):

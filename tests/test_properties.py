@@ -6,7 +6,7 @@ relative-error bound, and weighted==expanded equivalence."""
 import math
 
 import numpy as np
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from ddsketch_spark.core.ddsketch import DDSketch, union
 
@@ -243,6 +243,7 @@ from ddsketch_spark.core.kmv import KMV
 
 
 @given(st.integers(0, 100_000), st.integers(2, 32), st.integers(2, 6))
+@example(35349, 5, 3)                              # draws n=0: empty input
 @settings(max_examples=30, deadline=None)
 def test_kmv_any_partitioning_any_merge_order_equals_direct(salt, k, nparts):
     """Bottom-k of a set union is a pure function of the input SET:
@@ -253,7 +254,7 @@ def test_kmv_any_partitioning_any_merge_order_equals_direct(salt, k, nparts):
     h = rng.integers(0, 1 << 60, n, dtype=np.int64)
     h = np.concatenate([h, h[: n // 2]])          # cross-partition dups
     direct = KMV(k).update(h)
-    cuts = np.sort(rng.integers(0, len(h), nparts - 1))
+    cuts = np.sort(rng.integers(0, len(h) + 1, nparts - 1))
     parts = [KMV(k).update(c) for c in np.split(h, cuts)]
     order = rng.permutation(len(parts))
     acc = parts[order[0]].copy()

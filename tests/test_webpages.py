@@ -37,6 +37,29 @@ def test_generate_batch_deterministic():
     assert not a["text"].equals(c["text"])
 
 
+def test_synthesize_warc_ts_independent_of_session_timezone(spark):
+    """``synthesize`` is a pure function of (seed, id) under any session
+    timezone: the same ids give the same ``warc_ts`` instants under UTC
+    and under America/Los_Angeles (a naive timestamp read as
+    session-local would shift every row by the zone's UTC offset)."""
+    def epochs():
+        return {r["url"]: r["e"] for r in synthesize(spark, 40, partitions=2)
+                .select("url", F.unix_micros("warc_ts").alias("e")).collect()}
+
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        utc = epochs()
+        spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+        la = epochs()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+    assert len(utc) == 40 and utc == la
+    want = generate_batch(np.arange(40))
+    assert sorted(utc.values()) == sorted(
+        want["warc_ts"].astype("datetime64[us]").astype(np.int64))
+
+
 def test_generate_batch_slicing_invariant():
     """Row for id i is identical whether generated alone or in a batch."""
     whole = generate_batch(np.arange(100), seed=7)
