@@ -19,6 +19,14 @@ path, operators/native.py); every question afterwards touches only the
 tiny table: a rollup is one shuffle of kB rows, and a range query's
 bucket predicate pushes down to the stored table's parquet scan so only
 in-range partials are read at all.
+
+Stored tables describe themselves: :func:`store_sketch_table` commits a
+manifest (``_sketch_log/<version>.json``: format, schema, data files)
+after each write, and :func:`read_sketch_table` loads the files it
+names with the schema it holds. Opening a stored table therefore costs
+no Spark job — no directory-listing job, no schema-inference job —
+however many day partitions it has, so a question over stored partials
+costs about what its merge costs.
 """
 
 from __future__ import annotations
@@ -33,6 +41,7 @@ from ddsketch_spark.operators import api
 from ddsketch_spark.operators.aggregate import (
     merge_sketches, merge_sketches_extract, quantile_extract,
 )
+from ddsketch_spark.sources import tables
 
 
 def _deser(on_overflow: str, from_bytes=None):
@@ -79,10 +88,10 @@ def build_sketch_table(df: DataFrame, ts_col: str, value_col: str,
                        on_overflow: str = "error") -> DataFrame:
     """Fine-grained sketch table: ``bucket, keys..., sketch, n`` — one
     row per (time bucket, key). One partial-aggregated pass over the raw
-    data (JVM-native bucket cells); persist with sources.tables.write_table
-    partitioned however the bucket cardinality suggests. Pass the SAME
-    ``on_overflow`` here and to every later rollup/range call over the
-    table — the policy is not serialized in the sketch bytes."""
+    data (JVM-native bucket cells); persist it with
+    :func:`store_sketch_table`. Pass the SAME ``on_overflow`` here and to
+    every later rollup/range call over the table — the policy is not
+    serialized in the sketch bytes."""
     keys = list(keys)
     base = df.select(
         time_bucket(ts_col, granularity_seconds).alias("bucket"),
@@ -113,26 +122,45 @@ def windowed_sketches_as_table(assembled: DataFrame,
 def store_sketch_table(df: DataFrame, path: str,
                        partition_granularity_seconds: int = 86400) -> None:
     """Persist a sketch table partitioned by a COARSER time directory
-    (default daily): hourly rows land in day directories, so an aligned
-    range query prunes whole partitions before reading a single row
-    (PartitionFilters, pinned in tests/test_plans.py). ~365 directories
-    per year keeps the file count sane at any data scale — the row count
-    inside is O(buckets x keys) regardless of raw data size."""
-    from ddsketch_spark.sources.tables import write_table
+    (default daily), then commit its manifest. Hourly rows land in day
+    directories, so an aligned range query prunes whole partitions
+    before reading a single row (PartitionFilters, pinned in
+    tests/test_rollup.py). ~365 directories per year keeps the file
+    count sane at any data scale — the row count inside is O(buckets x
+    keys) regardless of raw data size.
 
+    The data write is ``sources.tables.write_table``'s (mode overwrite;
+    with ``spark.sql.sources.partitionOverwriteMode=dynamic`` only the
+    day partitions ``df`` touches are replaced). After it succeeds,
+    ``sources.tables.commit_snapshot`` commits
+    ``_sketch_log/<version>.json``: a full snapshot naming the format,
+    the written schema (``pbucket`` a long, as computed here) and every
+    data file, relative to ``path`` so the table can be copied or moved.
+    :func:`read_sketch_table` reads only that entry.
+
+    Not in the log: the overflow policy and the granularities — pass the
+    same ``on_overflow`` and grains to every later call. Not isolated: a
+    dynamic overwrite replaces an existing day's files in place before
+    the commit, so a reader during the write may fail on a replaced
+    file; a write that fails before its commit leaves new days invisible
+    but replaced days already replaced."""
     g = int(partition_granularity_seconds)
     out = df.withColumn(
         "pbucket", F.col("bucket") - F.pmod(F.col("bucket"), F.lit(g)))
-    write_table(out, path, partition_by=["pbucket"])
+    tables.write_table(out, path, partition_by=["pbucket"])
+    tables.commit_snapshot(df.sparkSession, path, out.schema)
 
 
 def read_sketch_table(spark, path: str) -> DataFrame:
-    """Read a :func:`store_sketch_table` table. The ``pbucket`` partition
-    column is kept so :func:`range_percentile` (given the same
-    ``partition_granularity_seconds``) can prune partitions."""
-    from ddsketch_spark.sources.tables import read_table
-
-    return read_table(spark, path)
+    """Read a :func:`store_sketch_table` table from its newest manifest
+    entry: the logged files with the logged schema, so Spark neither
+    lists the day directories nor infers the schema and the read submits
+    no Spark job. ``pbucket`` stays a partition column (a long at any
+    date), so :func:`range_percentile` given the same
+    ``partition_granularity_seconds`` prunes partitions. A table whose
+    snapshot has no files reads as zero rows; a directory without a
+    manifest raises ``FileNotFoundError``."""
+    return tables.read_snapshot(spark, path)
 
 
 def _check_multiple(coarse: int, fine: int) -> None:

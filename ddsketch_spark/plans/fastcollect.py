@@ -11,12 +11,14 @@ time — applies to result collection exactly as it does to UDFs.
 :class:`FastCollectDataFrame` overrides only ``collect()``: when every
 output column is a simple type whose pickle-path and Arrow-path Python
 values are bit-identical (integers, floats, strings, booleans, and
-arrays thereof), rows are fetched with ``toArrow()`` (parallel,
+arrays thereof) or binary (``bytes``, or ``bytearray`` where
+``spark.sql.execution.pyspark.binaryAsBytes`` is false, as the pickle
+path yields them), rows are fetched with ``toArrow()`` (parallel,
 columnar, zero-copy into pyarrow) and materialized into ``Row`` objects
-with a bulk constructor. Any other schema — timestamps, dates, binary
-(pickle yields ``bytearray``, Arrow ``bytes``), decimals, structs, maps
-— falls back to the stock pickle path, so the returned rows are always
-indistinguishable from ``DataFrame.collect()``'s: same class behaviour
+with a bulk constructor. Any other schema — timestamps, dates,
+decimals, structs, maps — falls back to the stock pickle path, so the
+returned rows are always indistinguishable from
+``DataFrame.collect()``'s: same class behaviour
 (``Row`` subclass: tuple equality, ``row.field``, ``asDict``, ``repr``),
 same values, same order (Arrow batches are assembled in partition order,
 the same order the pickle path streams).
@@ -39,16 +41,20 @@ from itertools import repeat
 from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql.classic.dataframe import DataFrame as _ClassicDataFrame
 from pyspark.sql.types import (
-    ArrayType, BooleanType, ByteType, DataType, DoubleType, FloatType,
-    IntegerType, LongType, Row, ShortType, StringType, StructType,
+    ArrayType, BinaryType, BooleanType, ByteType, DataType, DoubleType,
+    FloatType, IntegerType, LongType, Row, ShortType, StringType,
+    StructType,
 )
 
 # Types whose Arrow ``to_pylist()`` value equals the pickle-path value
 # for every possible cell (including NULL -> None and NaN -> nan).
+# Binary cells are ``bytes`` on both paths unless _BINARY_AS_BYTES is
+# false; the pickle path then yields ``bytearray``, and so does collect.
 _FAST_ATOMS = (
     LongType, IntegerType, ShortType, ByteType,
-    DoubleType, FloatType, StringType, BooleanType,
+    DoubleType, FloatType, StringType, BooleanType, BinaryType,
 )
+_BINARY_AS_BYTES = "spark.sql.execution.pyspark.binaryAsBytes"
 
 
 def _fast_type_ok(dt: DataType) -> bool:
@@ -64,6 +70,24 @@ def _fast_schema_ok(schema: StructType) -> bool:
     if len(set(names)) != len(names):     # Row fields must be unambiguous
         return False
     return bool(names) and all(_fast_type_ok(f.dataType) for f in schema.fields)
+
+
+def _has_binary(dt: DataType) -> bool:
+    while isinstance(dt, ArrayType):
+        dt = dt.elementType
+    return isinstance(dt, BinaryType)
+
+
+def _as_bytearray(values: list, dt: DataType) -> list:
+    """``values`` of Spark type ``dt`` with every ``bytes`` at a binary
+    position (the column itself, or array elements at any depth) made a
+    ``bytearray``; None stays None, other types pass through."""
+    if isinstance(dt, BinaryType):
+        return [None if v is None else bytearray(v) for v in values]
+    if not _has_binary(dt):
+        return values
+    return [None if v is None else _as_bytearray(v, dt.elementType)
+            for v in values]
 
 
 def _column_values(c) -> list:
@@ -111,7 +135,8 @@ class FastCollectDataFrame(_ClassicDataFrame):
         # super().collect() (maxResultSize, task failure) must propagate,
         # not trigger a second full execution of the failing query
         try:
-            fast = _fast_schema_ok(self.schema)
+            schema = self.schema
+            fast = _fast_schema_ok(schema)
         except Exception:
             fast = False   # let the stock path surface the analysis error
         if not fast:
@@ -131,6 +156,11 @@ class FastCollectDataFrame(_ClassicDataFrame):
         })
         with _gc_paused():
             cols = [_column_values(c) for c in tbl.columns]
+            if any(_has_binary(f.dataType) for f in schema.fields) and (
+                    self.sparkSession.conf.get(_BINARY_AS_BYTES, "true")
+                    .lower() == "false"):
+                cols = [_as_bytearray(v, f.dataType)
+                        for v, f in zip(cols, schema.fields)]
             # map(tuple.__new__, repeat(cls), ...) skips type.__call__'s
             # __new__/__init__ dispatch per row (measured ~25% faster than
             # map(row_cls, ...) at 7.7M rows)

@@ -1,17 +1,39 @@
-"""Generic table IO for stored sketch tables.
+"""Generic table IO for stored sketch tables, and the commit log that
+makes a stored table self-describing.
 
 Iceberg note (SURVEY §7.2): the sandbox has no Iceberg runtime jar, so the
 table layer is parquet with the same layout Iceberg would use (partition
 columns, binary sketch columns). `write_table`/`read_table` isolate that
 choice so an Iceberg catalog can be dropped in by changing the format
 string only.
+
+Commit log (Delta Lake's idea, VLDB 2020, at its smallest):
+:func:`commit_snapshot` records a written table in
+``<table>/_sketch_log/<version>.json`` — its format, Spark schema and
+data files relative to the table root — and :func:`read_snapshot` loads
+exactly those files with that schema. Spark then neither lists the
+table's directories (a parallel-listing job past 32 paths) nor infers
+its schema (a second job): reading a snapshot submits no Spark job. All
+log IO runs on the driver through the Hadoop ``FileSystem`` API of the
+JVM, so it works on any Hadoop store.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import re
+import threading
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+_LOG_DIR = "_sketch_log"
+_ENTRY = re.compile(r"(\d{20})\.json")
+_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+# the threshold is a session conf: raise it for one load at a time
+_THRESHOLD_LOCK = threading.Lock()
 
 
 def table_format() -> str:
@@ -33,3 +55,126 @@ def write_table(df: DataFrame, path: str, partition_by: list[str] | None = None,
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.format(table_format()).load(path)
+
+
+def _fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path class, qualified Path)`` of ``path``. Callers
+    keep the class: each ``jvm.a.b.C`` lookup is a py4j round trip."""
+    path_cls = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    p = path_cls(path)
+    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs, path_cls, fs.makeQualified(p)
+
+
+def _hidden(name: str) -> bool:
+    """Spark's rule for names a file source skips
+    (``HadoopFSUtils.shouldFilterOutPathName``): ``_`` metadata such as
+    ``_SUCCESS`` and this log, ``.`` staging and checksum files, and
+    half-copied ``._COPYING_`` files. A ``_col=v`` directory is data."""
+    return ((name.startswith("_") and "=" not in name)
+            or name.startswith(".") or name.endswith("._COPYING_"))
+
+
+def _data_files(fs, root) -> list[str]:
+    """The data files under ``root``, relative to it and sorted, listed
+    serially on the driver. ``listStatus``, not ``listFiles``: on the
+    local file system a ``LocatedFileStatus`` forks a process per file to
+    read its permissions."""
+    out, todo = [], [(root, "")]
+    while todo:
+        d, rel = todo.pop()
+        for st in fs.listStatus(d):
+            p = st.getPath()
+            name = p.getName()
+            if _hidden(name):
+                continue
+            if st.isDirectory():
+                todo.append((p, f"{rel}{name}/"))
+            else:
+                out.append(rel + name)
+    return sorted(out)
+
+
+def _versions(fs, log) -> list[int]:
+    """Committed log versions, newest first."""
+    if not fs.exists(log):
+        return []
+    names = (st.getPath().getName() for st in fs.listStatus(log))
+    return sorted((int(m.group(1)) for m in map(_ENTRY.fullmatch, names)
+                  if m), reverse=True)
+
+
+def commit_snapshot(spark: SparkSession, path: str,
+                    schema: StructType) -> int:
+    """Commit the table at ``path`` as it now is on storage: its data
+    files, ``schema`` and :func:`table_format` become log version
+    ``latest + 1``, which is returned. The entry is written to a hidden
+    temp file and renamed into place, so no reader sees a partial entry;
+    a rename that finds the version taken (a concurrent commit) raises.
+    Entries older than the previous one are deleted, so the log a reader
+    lists stays two entries long however often the table is written."""
+    fs, path_cls, root = _fs(spark, path)
+    log = path_cls(root, _LOG_DIR)
+    versions = _versions(fs, log)
+    version = versions[0] + 1 if versions else 0
+    body = json.dumps({"format": table_format(),
+                       "schema": schema.jsonValue(),
+                       "files": _data_files(fs, root)},
+                      separators=(",", ":")).encode()
+    tmp = path_cls(log, f".{version:020d}.{uuid.uuid4().hex}.tmp")
+    out = fs.create(tmp, False)
+    try:
+        out.write(body)
+    finally:
+        out.close()
+    dst = path_cls(log, f"{version:020d}.json")
+    if fs.exists(dst) or not fs.rename(tmp, dst):
+        fs.delete(tmp, False)
+        raise RuntimeError(
+            f"{path}: log version {version} was committed by another "
+            f"writer; this write is on storage but not in the log")
+    for old in versions[1:]:
+        fs.delete(path_cls(log, f"{old:020d}.json"), False)
+    return version
+
+
+def read_snapshot(spark: SparkSession, path: str) -> DataFrame:
+    """The newest committed snapshot of the table at ``path``: its logged
+    files loaded with its logged schema, partition columns (found from
+    the ``col=v`` directories under ``basePath``) typed as written. An
+    empty snapshot is zero rows with that schema. Raises
+    ``FileNotFoundError`` when ``path`` has no log."""
+    fs, path_cls, root = _fs(spark, path)
+    log = path_cls(root, _LOG_DIR)
+    versions = _versions(fs, log)
+    if not versions:
+        raise FileNotFoundError(
+            f"{path} has no {_LOG_DIR}/ commit log: not a table written "
+            f"by store_sketch_table, or written before the log existed")
+    stream = fs.open(path_cls(log, f"{versions[0]:020d}.json"))
+    try:
+        # a py4j reply longer than 8 kB leaves the JVM in two writes and
+        # waits ~40 ms for a delayed ACK (measured on Linux loopback):
+        # read the entry in 4 KiB chunks
+        entry = json.loads(b"".join(
+            iter(lambda: stream.readNBytes(4096), b"")))
+    finally:
+        stream.close()
+    schema = StructType.fromJson(entry["schema"])
+    if not entry["files"]:
+        return spark.createDataFrame([], schema)
+    base = root.toString()
+    reader = (spark.read.format(entry["format"]).schema(schema)
+              .option("basePath", base))
+    # Spark lists more than `threshold` paths with a Spark job; the
+    # logged files need one serial stat each on the driver instead
+    with _THRESHOLD_LOCK:
+        prev = spark.conf.get(_THRESHOLD, None)
+        spark.conf.set(_THRESHOLD, str(len(entry["files"])))
+        try:
+            return reader.load([f"{base}/{f}" for f in entry["files"]])
+        finally:
+            if prev is None:
+                spark.conf.unset(_THRESHOLD)
+            else:
+                spark.conf.set(_THRESHOLD, prev)

@@ -66,7 +66,6 @@ def test_int_and_float_widths(spark):
 @pytest.mark.parametrize("schema_sql,value", [
     ("ts timestamp", datetime.datetime(2031, 1, 2, 3, 4, 5)),
     ("d date", datetime.date(2031, 1, 2)),
-    ("b binary", bytearray(b"abc")),
     ("dec decimal(10,2)", None),
 ])
 def test_unsafe_schemas_fall_back(spark, schema_sql, value):
@@ -74,6 +73,34 @@ def test_unsafe_schemas_fall_back(spark, schema_sql, value):
     assert not _fast_schema_ok(df.schema)
     rows_fast, rows_ref = _both(df)
     _assert_identical(rows_fast, rows_ref)
+
+
+@pytest.mark.parametrize("as_bytes", ["true", "false"])
+def test_binary_columns_identical(spark, as_bytes):
+    """Binary columns and arrays of them collect fast, and every value is
+    the pickle path's: ``bytes``, or ``bytearray`` when
+    ``spark.sql.execution.pyspark.binaryAsBytes`` is false; None for
+    NULL, and empty bytes stay empty."""
+    df = spark.createDataFrame(
+        [(1, bytearray(b"ab"), bytearray(b""), [bytearray(b"x"), None]),
+         (2, bytearray(b"\x00\xff"), None, []),
+         (3, bytearray(b""), bytearray(b"z"), None)],
+        "k bigint, b binary not null, nb binary, ab array<binary>")
+    assert _fast_schema_ok(df.schema)
+    key = "spark.sql.execution.pyspark.binaryAsBytes"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, as_bytes)
+    try:
+        rows_fast, rows_ref = _both(df)
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    _assert_identical(rows_fast, rows_ref)
+    want = bytes if as_bytes == "true" else bytearray
+    assert [type(x) for x in rows_fast[0].ab] == [want, type(None)]
+    assert type(rows_fast[2].b) is want and rows_fast[2].b == b""
 
 
 def test_struct_falls_back(spark):
@@ -113,9 +140,9 @@ def test_failing_stock_collect_runs_once(spark, monkeypatch):
         calls["n"] += 1
         raise RuntimeError("boom")
 
-    # binary column -> non-fast schema -> stock path
+    # decimal column -> non-fast schema -> stock path
     df = fast_collect(spark.range(1).select(
-        F.col("id").cast("string").cast("binary").alias("b")))
+        F.col("id").cast("decimal(10,2)").alias("d")))
     assert not _fast_schema_ok(df.schema)
     monkeypatch.setattr(ClassicDF, "collect", counting_collect)
     try:

@@ -5,6 +5,8 @@ grain — merge associativity driven through the real time dimension.
 """
 
 import datetime as dt
+import os
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -13,7 +15,8 @@ from pyspark.sql import functions as F
 
 from ddsketch_spark.operators.api import ddsketch as dd_api
 from ddsketch_spark.operators.rollup import (
-    build_sketch_table, range_percentile, rollup, time_bucket,
+    build_sketch_table, range_percentile, read_sketch_table, rollup,
+    store_sketch_table, time_bucket,
 )
 
 ALPHA, NB = 0.05, 1024
@@ -333,3 +336,151 @@ def test_rollup_generic_sketch_type_hll(spark, events):
     want = by_key(direct, ["bucket", "etype"])
     assert got.keys() == want.keys() and len(got) >= 20
     assert all(got[k] == want[k] for k in want)
+
+
+# ---------------------------------------------------------------- manifest
+
+def _stored_rows(df):
+    return sorted((r["bucket"], r["etype"], bytes(r["sketch"]), r["n"],
+                   r["pbucket"]) for r in df.collect())
+
+
+def _days_table(spark, days, start=T0, seed=0):
+    """An hourly x etype sketch table over ``days`` days from ``start``."""
+    rng = np.random.default_rng(seed)
+    n = 40 * days
+    pdf = pd.DataFrame({
+        "ts": pd.Timestamp(start).tz_localize(None)
+              + pd.to_timedelta(rng.integers(0, days * DAY, n), unit="s"),
+        "etype": rng.choice(["a", "b"], n),
+        "v": rng.lognormal(2.0, 1.0, n),
+    })
+    return build_sketch_table(spark.createDataFrame(pdf), "ts", "v",
+                              ALPHA, NB, HOUR, keys=["etype"])
+
+
+@pytest.fixture
+def dynamic_overwrite(spark):
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "dynamic")
+    yield
+    spark.conf.set(key, prev)
+
+
+def test_manifest_read_submits_no_job(spark, tmp_path, jobs_in_group):
+    """40 day partitions (past Spark's 32-path parallel-listing
+    threshold) read from the manifest with no Spark job, and hold the
+    rows Spark's own directory read finds."""
+    path = str(tmp_path / "stored")
+    store_sketch_table(_days_table(spark, 40), path)
+    threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    before = spark.conf.get(threshold, None)
+    group = "rollup-manifest-read"
+    spark.sparkContext.setJobGroup(group, group)
+    try:
+        stored = read_sketch_table(spark, path)
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs_in_group(group) == 0
+    assert spark.conf.get(threshold, None) == before   # raised for load only
+    listed = spark.read.parquet(path)
+    assert listed.select("pbucket").distinct().count() == 40
+    assert _stored_rows(stored) == _stored_rows(listed)
+    assert ([(f.name, f.dataType) for f in stored.schema.fields
+             if f.name != "pbucket"]
+            == [(f.name, f.dataType) for f in listed.schema.fields
+                if f.name != "pbucket"])
+
+
+def test_pbucket_is_long_at_any_date(spark, tmp_path):
+    """Spark's partition inference types ``pbucket`` by its values (int
+    before 2038-01-19, long after); the manifest keeps the written long."""
+    from pyspark.sql.types import LongType
+
+    for start in (T0, dt.datetime(2040, 3, 1, tzinfo=dt.timezone.utc)):
+        path = str(tmp_path / f"t{start.year}")
+        store_sketch_table(_days_table(spark, 2, start), path)
+        stored = read_sketch_table(spark, path)
+        assert stored.schema["pbucket"].dataType == LongType()
+        assert stored.count() > 0
+
+
+def test_copied_table_reads_the_same(spark, tmp_path):
+    """The manifest names files relative to the table root, so a copied
+    table reads the same after its original is deleted."""
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    store_sketch_table(_days_table(spark, 3), src)
+    want = _stored_rows(read_sketch_table(spark, src))
+    shutil.copytree(src, dst)
+    shutil.rmtree(src)
+    assert _stored_rows(read_sketch_table(spark, dst)) == want
+
+
+def test_ingest_replaces_a_day_and_adds_a_day(spark, tmp_path,
+                                              dynamic_overwrite):
+    """Under dynamic partition overwrite, an ingest of an existing day
+    replaces that day's rows (no duplicates) and keeps the others; an
+    ingest of a new day adds its rows."""
+    path = str(tmp_path / "stored")
+    base = _days_table(spark, 4)
+    store_sketch_table(base, path)
+    before = _stored_rows(read_sketch_table(spark, path))
+    day1 = int(T0.timestamp()) + DAY
+
+    redo = _days_table(spark, 1, T0 + dt.timedelta(days=1), seed=1)
+    store_sketch_table(redo, path)
+    after = _stored_rows(read_sketch_table(spark, path))
+    assert [r for r in after if r[4] != day1] == \
+        [r for r in before if r[4] != day1]
+    assert [r[:4] for r in after if r[4] == day1] == \
+        sorted((r["bucket"], r["etype"], bytes(r["sketch"]), r["n"])
+               for r in redo.collect())
+    assert len({r[:2] for r in after}) == len(after)
+
+    new = _days_table(spark, 1, T0 + dt.timedelta(days=9), seed=2)
+    store_sketch_table(new, path)
+    added = _stored_rows(read_sketch_table(spark, path))
+    assert len(added) == len(after) + new.count()
+    assert set(after) < set(added)
+    # three commits; a reader lists only the newest two entries
+    assert sorted(f for f in os.listdir(os.path.join(path, "_sketch_log"))
+                  if f.endswith(".json")) == [f"{v:020d}.json" for v in (1, 2)]
+
+
+def test_failed_commit_keeps_previous_snapshot(spark, tmp_path,
+                                               dynamic_overwrite,
+                                               monkeypatch):
+    """An ingest of a new day whose commit fails leaves its files on
+    storage but out of the manifest: readers see the previous rows."""
+    from ddsketch_spark.sources import tables
+
+    path = str(tmp_path / "stored")
+    store_sketch_table(_days_table(spark, 3), path)
+    before = _stored_rows(read_sketch_table(spark, path))
+
+    def failing_commit(*args):
+        raise RuntimeError("commit failed")
+
+    monkeypatch.setattr(tables, "commit_snapshot", failing_commit)
+    with pytest.raises(RuntimeError, match="commit failed"):
+        store_sketch_table(
+            _days_table(spark, 1, T0 + dt.timedelta(days=5)), path)
+    assert spark.read.parquet(path).count() > len(before)
+    assert _stored_rows(read_sketch_table(spark, path)) == before
+
+
+def test_empty_table_reads_zero_rows(spark, tmp_path):
+    path = str(tmp_path / "empty")
+    table = _days_table(spark, 1).where(F.lit(False))
+    store_sketch_table(table, path)
+    stored = read_sketch_table(spark, path)
+    assert stored.columns == table.columns + ["pbucket"]
+    assert stored.collect() == []
+
+
+def test_directory_without_manifest_raises(spark, tmp_path):
+    path = str(tmp_path / "plain")
+    _days_table(spark, 1).write.parquet(path)
+    with pytest.raises(FileNotFoundError, match="plain"):
+        read_sketch_table(spark, path)
