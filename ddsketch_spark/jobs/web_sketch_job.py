@@ -13,20 +13,26 @@ Architecture (SURVEY §3.2 + §7.1 step 5):
    *batch provider* — an id-range slice for synthesized corpora, a
    file-group for parquet/Iceberg inputs (:func:`file_batches`). Each batch
    job reads ONLY its slice (partition pruning / separate file lists), so
-   no batch reads another batch's input. Within a batch the input is read
-   twice: the batch plan has two ``FileScan``s, one for the sketch cells
-   and one for the ``v_min``/``v_max`` lineage stats, so total scan volume
-   is two passes regardless of batch count.
-2. One Spark job per *unfinished* batch computes per-key partial sketches
-   via the JVM-native bucket aggregation (operators/native.py) and the
-   stats, and collects them to the driver (one row per key). The driver
-   writes those rows — plus lineage (batch id, row count, value min/max,
-   wall seconds) — with pyarrow as one file,
+   no batch reads another batch's input, and reads it once: the batch
+   plan has one ``FileScan``, so total scan volume is one pass regardless
+   of batch count.
+2. One Spark aggregation per *unfinished* batch computes the batch's
+   DDSketch bucket cells per key in the JVM (operators/native.dd_cells:
+   bucket index, summed count, row count and the value's ``min``/``max``
+   per (key, bucket) cell) and fetches them with ``toArrow()``; the
+   plan has no Python stage. The driver assembles each key's sketch from
+   its cells with the assembler the executor-side build runs
+   (operators/native.dd_assemble), reduces ``v_min``/``v_max`` per key
+   from the cells, and writes those rows — plus lineage (batch id, row
+   count, wall seconds) — with pyarrow as one file,
    ``checkpoint_dir/batch=K/part-00000.parquet``, then creates ``_SUCCESS``
    last; a ``batch=K`` left without ``_SUCCESS`` by a killed run is removed
-   and replayed. Within a batch the map-side partial aggregation bounds
-   every shuffle to O(keys x nbuckets) rows; Zipf-skewed keys cannot
-   create a hot reduce key because bucket rows, not raw rows, are
+   and replayed. The driver holds one batch's cells, at most keys x
+   distinct bucket indexes rows (a few thousand for a low-cardinality
+   key), and a key whose buckets exceed ``nbuckets`` raises the kernel's
+   "bucket overflow" error there. Map-side partial aggregation bounds
+   the shuffle to O(keys x nbuckets) rows per map task; Zipf-skewed keys
+   cannot create a hot reduce key because bucket rows, not raw rows, are
    shuffled. The batch loop is the two-round merge: batch-local partials
    first, tiny global merge last.
 3. Finalize runs on the driver and submits no Spark job: it reads the
@@ -36,8 +42,8 @@ Architecture (SURVEY §3.2 + §7.1 step 5):
    runs (functions/rows.dd_quantile), so estimates are bit-identical, and
    returns them as a local DataFrame. The driver
    holds ``n_batches x keys`` sketch rows, so the key must be a
-   low-cardinality dimension — the same bound each batch's ``collect()``
-   already requires. ``checkpoint_dir`` is a POSIX path.
+   low-cardinality dimension — the same bound each batch's cells
+   already require. ``checkpoint_dir`` is a POSIX path.
 
 Killing the job between batches loses nothing; killing mid-batch loses only
 that batch's work (no batch dir counts without _SUCCESS).
@@ -59,10 +65,12 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import DoubleType, LongType, StringType, StructType
 
-from ddsketch_spark.core.ddsketch import from_bytes
+from ddsketch_spark.core.ddsketch import (
+    from_bytes, validate_alpha, validate_nbuckets,
+)
 from ddsketch_spark.functions.rows import dd_quantile
 from ddsketch_spark.operators.aggregate import merge_serialized
-from ddsketch_spark.operators.native import ddsketch_agg_native
+from ddsketch_spark.operators.native import dd_assemble, dd_cells
 
 DEFAULT_QS = [0.5, 0.9, 0.99]
 
@@ -84,16 +92,27 @@ def range_batches(spark: SparkSession, n_docs: int, n_batches: int,
 def file_batches(spark: SparkSession, path: str,
                  n_batches: int) -> Callable[[int], DataFrame]:
     """Batch provider over a parquet directory: deterministic file groups
-    (sorted round-robin), each batch reads only its own files."""
+    (sorted round-robin), each batch reads only its own files.
+
+    Every group is read with the schema Spark infers from the first group
+    (group 0), as a directory read with ``mergeSchema`` off would read
+    every file: the first ``provider(b)`` call runs the one inference
+    job, and every later read, an empty group's included, submits no job
+    until it executes."""
     files = sorted(glob.glob(os.path.join(path, "*.parquet")))
     if not files:
         raise ValueError(f"no parquet files under {path}")
     groups = [files[b::n_batches] for b in range(n_batches)]
+    schema = None
 
     def provider(b: int) -> DataFrame:
+        nonlocal schema
+        if schema is None:
+            schema = spark.read.parquet(*groups[0]).schema
+        reader = spark.read.schema(schema)
         if not groups[b]:
-            return spark.read.parquet(*files).limit(0)
-        return spark.read.parquet(*groups[b])
+            return reader.parquet(*files).limit(0)
+        return reader.parquet(*groups[b])
 
     return provider
 
@@ -173,6 +192,8 @@ def run_job(
     stops (the kill-and-replay test uses it to simulate a mid-job failure —
     result is None until every batch is checkpointed).
     """
+    validate_alpha(alpha)
+    validate_nbuckets(nbuckets)
     t_start = time.perf_counter()
     ran, skipped = [], []
     for b in range(n_batches):
@@ -186,19 +207,14 @@ def run_job(
         # shuffle or enter Python (SURVEY §4.1)
         batch_df = batch_provider(b).select(
             F.col(key), F.expr(value_expr).cast("double").alias("v"))
-        partial = ddsketch_agg_native(batch_df, "v", alpha, nbuckets, keys=[key])
-        stats = batch_df.groupBy(F.col(key).alias("__key")).agg(
-            F.min("v").alias("v_min"), F.max("v").alias("v_max"))
-        # null-safe: the NULL key is a group of its own
-        out = partial.join(stats, partial[key].eqNullSafe(stats["__key"])
-                           ).collect()  # tiny: one row per key
+        cells = (dd_cells(batch_df, "v", alpha, [key], _extrema=True)
+                 .toArrow().to_pandas()
+                 # the NULL key is a run of its own
+                 .sort_values(key, na_position="first", ignore_index=True))
+        out = dd_assemble(cells, [key], alpha, nbuckets)
         wall = round(time.perf_counter() - t0, 3)
-        rows = [
-            {key: r[key], "sketch": bytes(r["sketch"]), "n": r["n"],
-             "v_min": r["v_min"], "v_max": r["v_max"], "batch": b,
-             "wall_s": wall}
-            for r in out
-        ]
+        rows = [dict(r, batch=b, wall_s=wall)
+                for r in out.to_dict("records")]
         _write_batch(checkpoint_dir, b, rows, key)
         ran.append(b)
 

@@ -11,11 +11,12 @@ aggregation* — the shuffle carries at most (keys x nbuckets) partial bucket
 counts per map task instead of raw rows or Arrow batches. Python only
 assembles the final binary sketch: one vectorized pass per Arrow batch of
 key-sorted bucket cells (``grouped_apply_sorted``, O(nbuckets) rows per
-key). Compared to the generic Arrow pipeline
-(:mod:`ddsketch_spark.operators.aggregate`, kept as the fallback for
-kernels without a closed-form bucket expression — KLL, t-digest), this is
-the plan that survives 100 TB: no JVM->Python crossing on the hot path,
-Tungsten hash aggregation, AQE-managed shuffle.
+key) — or, where the cells are few enough to fetch (a checkpointed job's
+batch), the same pass on the driver (:func:`dd_assemble`). Compared to
+the generic Arrow pipeline (:mod:`ddsketch_spark.operators.aggregate`,
+kept as the fallback for kernels without a closed-form bucket expression
+— KLL, t-digest), this is the plan that survives 100 TB: no JVM->Python
+crossing on the hot path, Tungsten hash aggregation, AQE-managed shuffle.
 
 Each layout — DDSketch buckets, HLL registers, CMS counters, Bloom bits —
 is two steps, defined only here: ``*_cells(df, ..., keys)`` -> ``keys...,
@@ -87,12 +88,17 @@ def dd_cells(
     alpha: float,
     keys: Sequence[str] = (),
     weight_col: str | None = None,
+    _extrema: bool = False,
 ) -> DataFrame:
     """``keys..., __part, __bidx, __c, __rows`` — the DDSketch bucket
     cells of ``df`` per key: ``__c`` sums the weights of the cell's live
     values (NULL/NaN values land in part -1 with weight 0), ``__rows``
     counts its input rows. The one rows->cells step of the batch build
-    and of every windowed (streaming) build."""
+    and of every windowed (streaming) build.
+
+    ``_extrema`` adds ``__vmin``/``__vmax``, the cell's ``min``/``max``
+    of the value as a double, for :func:`dd_assemble` to reduce per key;
+    an all-NULL cell's ``__vmax`` is -inf, the identity of ``max``."""
     keys = list(keys)
     part, bidx = dd_bucket_exprs(value_col, alpha)
     if weight_col:
@@ -115,17 +121,23 @@ def dd_cells(
     w = F.when(F.col(value_col).isNull() | F.isnan(vd), F.lit(0)).otherwise(w)
     rows = (df.select(*keys, F.col(value_col),
                       *([F.col(weight_col)] if weight_col else []))
-            .select(*keys, part, bidx, w.alias("__w")))
-    return _sum_cells(rows, keys, ["__part", "__bidx"])
+            .select(*keys, part, bidx, w.alias("__w"),
+                    *([vd.alias("__v")] if _extrema else [])))
+    extrema = [F.min("__v").alias("__vmin"),
+               F.coalesce(F.max("__v"), F.lit(float("-inf")))
+               .alias("__vmax")] if _extrema else []
+    return _sum_cells(rows, keys, ["__part", "__bidx"], extrema)
 
 
 def _sum_cells(rows: DataFrame, keys: Sequence[str],
-               cell: Sequence[str]) -> DataFrame:
-    """``keys..., <cell>, __c, __rows``: per-row weighted cells (``__w``)
-    summed per (keys, cell) — the additive cell aggregation of DDSketch
-    buckets and CMS counters."""
+               cell: Sequence[str], extra: Sequence[Column] = ()
+               ) -> DataFrame:
+    """``keys..., <cell>, __c, __rows, <extra>``: per-row weighted cells
+    (``__w``) summed per (keys, cell) — the additive cell aggregation of
+    DDSketch buckets and CMS counters."""
     return (rows.groupBy(*keys, *cell)
-            .agg(F.sum("__w").alias("__c"), F.count(F.lit(1)).alias("__rows")))
+            .agg(F.sum("__w").alias("__c"), F.count(F.lit(1)).alias("__rows"),
+                 *extra))
 
 
 def _sketches(cells: DataFrame, keys: Sequence[str], assemble,
@@ -160,71 +172,99 @@ def ddsketch_agg_native(
 def dd_sketches(cells: DataFrame, keys: Sequence[str], alpha: float,
                 nbuckets: int, on_overflow: str = "error") -> DataFrame:
     """``keys..., sketch, n`` — one binary DDSketch per key run of
-    :func:`dd_cells` rows (``keys`` may include a window).
-
-    One numpy pass per Arrow batch builds every run's wire bytes (same
-    layout as DDSketch.to_bytes — big-endian header + neg-DESC/pos-ASC
-    bucket pairs), with only a ~2 microsecond header pack per run. ``n``
-    sums ``__rows``; runs with no live count emit no row. Runs whose
-    bucket count exceeds nbuckets go through the kernel (``on_overflow``:
-    error or UDDSketch collapse). Bit-identical to a kernel build (pinned
-    by the native==kernel identity tests)."""
+    :func:`dd_cells` rows (``keys`` may include a window): the Spark
+    stage that runs :func:`dd_assemble` on each Arrow batch of key-sorted
+    cells."""
     keys = list(keys)
 
     def assemble_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        run_id, run_starts = key_runs(pdf[keys])
-        run_ends = np.append(run_starts[1:], len(pdf))
-
-        part = pdf["__part"].to_numpy(np.int64)
-        bidx = pdf["__bidx"].to_numpy(np.int64)
-        c = pdf["__c"].to_numpy(np.int64)
-
-        def seg_sum(vals):  # runs are contiguous row blocks
-            return np.add.reduceat(vals, run_starts)
-
-        count = seg_sum(np.where(part >= 0, c, 0))
-        zero = seg_sum(np.where(part == 1, c, 0))
-        nrows = seg_sum(pdf["__rows"].to_numpy(np.int64))
-        nneg = seg_sum((part == 0).astype(np.int64))
-        npos = seg_sum((part == 2).astype(np.int64))
-        nbk = nneg + npos
-
-        # wire order within a run: negative part index-DESC, then positive
-        # index-ASC (core.ddsketch.to_bytes / ddsketch.c:53-59)
-        sel = (part == 0) | (part == 2)
-        ordkey = np.where(part == 0, -bidx, bidx)
-        sidx = np.flatnonzero(sel)
-        order = sidx[np.lexsort((ordkey[sidx], part[sidx], run_id[sidx]))]
-        barr = np.empty(order.size, dtype=_BUCKET_DT)
-        barr["index"] = bidx[order]
-        barr["count"] = c[order]
-        bbytes = barr.tobytes()
-        ends = np.cumsum(nbk)
-        starts = ends - nbk
-
-        pack = struct.Struct(">iqqdiii").pack  # _HEADER (Structs don't pickle)
-        runs = np.flatnonzero(count > 0)  # all-NULL groups: no output row
-        out = {k: list(pdf[k].iloc[run_starts[runs]]) for k in keys}
-        out["sketch"], out["n"] = [], nrows[runs]
-        for r in runs:
-            if nbk[r] > nbuckets:
-                # rare overflow: the kernel handles error/collapse exactly
-                lo, hi = run_starts[r], run_ends[r]
-                s = DDSketch(alpha, nbuckets, on_overflow)
-                s.count, s.zero_count = int(count[r]), int(zero[r])
-                for store, code in ((s.neg, 0), (s.pos, 2)):
-                    m = part[lo:hi] == code
-                    store.update(zip(bidx[lo:hi][m].tolist(),
-                                     c[lo:hi][m].tolist()))
-                s._enforce_maxbuckets()
-                out["sketch"].append(s.to_bytes())
-                continue
-            hdr = pack(0, int(count[r]), int(zero[r]), alpha, nbuckets,
-                       int(nbk[r]), int(nneg[r]))
-            out["sketch"].append(hdr + bbytes[starts[r] * 12: ends[r] * 12])
-        return pd.DataFrame(out)
+        return dd_assemble(pdf, keys, alpha, nbuckets, on_overflow)
 
     return _sketches(cells, keys, assemble_batch)
+
+
+def dd_assemble(pdf: pd.DataFrame, keys: Sequence[str], alpha: float,
+                nbuckets: int, on_overflow: str = "error") -> pd.DataFrame:
+    """``keys..., sketch, n`` from :func:`dd_cells` rows sorted by
+    ``keys`` (NULL keys form a run of their own) — the DDSketch assembler
+    of :func:`dd_sketches` on executors and of the checkpointed job on
+    the driver.
+
+    One numpy pass builds every run's wire bytes (same layout as
+    DDSketch.to_bytes — big-endian header + neg-DESC/pos-ASC bucket
+    pairs), with only a ~2 microsecond header pack per run. ``n`` sums
+    ``__rows``; runs with no live count emit no row. Runs whose bucket
+    count exceeds nbuckets go through the kernel (``on_overflow``: error
+    or UDDSketch collapse). Bit-identical to a kernel build (pinned by
+    the native==kernel identity tests).
+
+    Cells carrying ``__vmin``/``__vmax`` (``dd_cells(..., _extrema=True)``)
+    also give each run's ``v_min``/``v_max`` in Spark's order, where NaN
+    sorts above +inf: ``min`` skips NaN unless every value is NaN, ``max``
+    is NaN if any value is."""
+    keys = list(keys)
+    extrema = "__vmin" in pdf.columns
+    if not len(pdf):  # key_runs needs a row
+        return pdf[keys].assign(sketch=[], n=[], **(
+            {"v_min": [], "v_max": []} if extrema else {}))
+    run_id, run_starts = key_runs(pdf[keys])
+    run_ends = np.append(run_starts[1:], len(pdf))
+
+    part = pdf["__part"].to_numpy(np.int64)
+    bidx = pdf["__bidx"].to_numpy(np.int64)
+    c = pdf["__c"].to_numpy(np.int64)
+
+    def seg_sum(vals):  # runs are contiguous row blocks
+        return np.add.reduceat(vals, run_starts)
+
+    count = seg_sum(np.where(part >= 0, c, 0))
+    zero = seg_sum(np.where(part == 1, c, 0))
+    nrows = seg_sum(pdf["__rows"].to_numpy(np.int64))
+    nneg = seg_sum((part == 0).astype(np.int64))
+    npos = seg_sum((part == 2).astype(np.int64))
+    nbk = nneg + npos
+
+    # wire order within a run: negative part index-DESC, then positive
+    # index-ASC (core.ddsketch.to_bytes / ddsketch.c:53-59)
+    sel = (part == 0) | (part == 2)
+    ordkey = np.where(part == 0, -bidx, bidx)
+    sidx = np.flatnonzero(sel)
+    order = sidx[np.lexsort((ordkey[sidx], part[sidx], run_id[sidx]))]
+    barr = np.empty(order.size, dtype=_BUCKET_DT)
+    barr["index"] = bidx[order]
+    barr["count"] = c[order]
+    bbytes = barr.tobytes()
+    ends = np.cumsum(nbk)
+    starts = ends - nbk
+
+    pack = struct.Struct(">iqqdiii").pack  # _HEADER (Structs don't pickle)
+    runs = np.flatnonzero(count > 0)  # all-NULL groups: no output row
+    out = {k: list(pdf[k].iloc[run_starts[runs]]) for k in keys}
+    out["sketch"], out["n"] = [], nrows[runs]
+    for r in runs:
+        if nbk[r] > nbuckets:
+            # rare overflow: the kernel handles error/collapse exactly
+            lo, hi = run_starts[r], run_ends[r]
+            s = DDSketch(alpha, nbuckets, on_overflow)
+            s.count, s.zero_count = int(count[r]), int(zero[r])
+            for store, code in ((s.neg, 0), (s.pos, 2)):
+                m = part[lo:hi] == code
+                store.update(zip(bidx[lo:hi][m].tolist(),
+                                 c[lo:hi][m].tolist()))
+            s._enforce_maxbuckets()
+            out["sketch"].append(s.to_bytes())
+            continue
+        hdr = pack(0, int(count[r]), int(zero[r]), alpha, nbuckets,
+                   int(nbk[r]), int(nneg[r]))
+        out["sketch"].append(hdr + bbytes[starts[r] * 12: ends[r] * 12])
+    if extrema:
+        # a cell's NULLs are the identities here: NaN (pandas' NULL) for
+        # fmin, the -inf that dd_cells writes for an all-NULL cell's max
+        out["v_min"] = np.fmin.reduceat(
+            pdf["__vmin"].to_numpy(np.float64), run_starts)[runs]
+        out["v_max"] = np.maximum.reduceat(
+            pdf["__vmax"].to_numpy(np.float64), run_starts)[runs]
+    return pd.DataFrame(out)
 
 
 # ---------------------------------------------------------------------------

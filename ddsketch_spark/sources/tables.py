@@ -11,9 +11,10 @@ Commit log (Delta Lake's idea, VLDB 2020, at its smallest):
 :func:`commit_snapshot` records a written table in
 ``<table>/_sketch_log/<version>.json`` — its format, Spark schema and
 data files relative to the table root — and :func:`read_snapshot` loads
-exactly those files with that schema. Spark then neither lists the
-table's directories (a parallel-listing job past 32 paths) nor infers
-its schema (a second job): reading a snapshot submits no Spark job. All
+exactly those files with that schema (:func:`load_paths`, which the
+streaming state reads share). Spark then neither lists the table's
+directories (a parallel-listing job past 32 paths) nor infers its schema
+(a second job): reading a snapshot submits no Spark job. All
 log IO runs on the driver through the Hadoop ``FileSystem`` API of the
 JVM, so it works on any Hadoop store.
 """
@@ -164,15 +165,29 @@ def read_snapshot(spark: SparkSession, path: str) -> DataFrame:
     if not entry["files"]:
         return spark.createDataFrame([], schema)
     base = root.toString()
-    reader = (spark.read.format(entry["format"]).schema(schema)
-              .option("basePath", base))
-    # Spark lists more than `threshold` paths with a Spark job; the
-    # logged files need one serial stat each on the driver instead
+    return load_paths(spark, [f"{base}/{f}" for f in entry["files"]],
+                      base, schema, entry["format"])
+
+
+def load_paths(spark: SparkSession, paths: list[str], base: str,
+               schema: StructType | None = None,
+               fmt: str = "parquet") -> DataFrame:
+    """``paths`` (files or directories under ``base``, partition columns
+    found from the ``col=v`` directories between them) loaded as one
+    DataFrame of format ``fmt``. With ``schema`` Spark runs no
+    schema-inference job; without it, one. Either way it lists the paths
+    serially on the driver, not with the parallel-listing job it runs for
+    more than ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+    (32) paths: the threshold is raised to ``len(paths)`` for this one
+    load and restored after."""
+    reader = spark.read.format(fmt).option("basePath", base)
+    if schema is not None:
+        reader = reader.schema(schema)
     with _THRESHOLD_LOCK:
         prev = spark.conf.get(_THRESHOLD, None)
-        spark.conf.set(_THRESHOLD, str(len(entry["files"])))
+        spark.conf.set(_THRESHOLD, str(len(paths)))
         try:
-            return reader.load([f"{base}/{f}" for f in entry["files"]])
+            return reader.load(paths)
         finally:
             if prev is None:
                 spark.conf.unset(_THRESHOLD)

@@ -61,13 +61,16 @@ from ddsketch_spark.operators.native import (
     _sum_cells, bloom_cells, cms_cells, dd_bucket_exprs, dd_cells,
     dd_sketches, ddsketch_agg_native, hll_cells, hll_sketches,
 )
+from ddsketch_spark.sources.tables import load_paths
 
 
 def _read_manifest(state_dir: str) -> dict | None:
     """Latest committed state manifest, or None before the first commit.
-    ``{"batch_id": int, "buckets": {"<bucket>": <version>}}`` — a bucket's
-    version is the batch_id whose ``v=<version>`` directory holds its
-    current sketch rows."""
+    ``{"batch_id": int, "buckets": {"<bucket>": <version>}, "schema":
+    <Spark schema JSON>}`` — a bucket's version is the batch_id whose
+    ``v=<version>`` directory holds its current sketch rows; ``schema``
+    (``keys..., sketch, n``) is absent from manifests written before it
+    was logged."""
     path = os.path.join(state_dir, "_manifest.json")
     if not os.path.isfile(path):
         return None
@@ -95,11 +98,21 @@ def _check_no_orphan_state(state_dir: str) -> None:
             f"treat it as empty state; migrate or remove the directory")
 
 
+def _load_buckets(spark, state_dir: str, version: int,
+                  buckets: Sequence, schema: StructType | None) -> DataFrame:
+    """``keys..., sketch, n, __bucket`` of ``buckets`` in the state's
+    ``v=<version>`` directory."""
+    base = os.path.join(state_dir, f"v={version}")
+    return load_paths(spark, [os.path.join(base, f"__bucket={b}")
+                              for b in buckets], base, schema)
+
+
 def read_state(spark, state_dir: str) -> DataFrame | None:
     """Read the committed sketch-state table (``keys..., sketch, n``)
     assembled from each bucket's latest committed version. Returns None
     before the first commit. Partially-written (uncommitted) version
-    directories are invisible: only buckets named by the manifest load."""
+    directories are invisible: only buckets named by the manifest load.
+    With the manifest's schema, the read submits no Spark job."""
     man = _read_manifest(state_dir)
     if man is None:
         _check_no_orphan_state(state_dir)
@@ -111,13 +124,9 @@ def read_state(spark, state_dir: str) -> DataFrame | None:
     by_ver: dict[int, list[str]] = {}
     for b, v in man["buckets"].items():
         by_ver.setdefault(int(v), []).append(b)
-    parts = []
-    for v, bs in sorted(by_ver.items()):
-        base = os.path.join(state_dir, f"v={v}")
-        paths = [os.path.join(base, f"__bucket={b}") for b in sorted(bs)]
-        parts.append(
-            spark.read.option("basePath", base).parquet(*paths)
-            .drop("__bucket"))
+    schema = StructType.fromJson(man["schema"]) if "schema" in man else None
+    parts = [_load_buckets(spark, state_dir, v, sorted(bs), schema)
+             .drop("__bucket") for v, bs in sorted(by_ver.items())]
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -214,12 +223,11 @@ def make_maintainer_process(
             if v is not None:
                 by_ver.setdefault(int(v), []).append(b)
         both = partial.select(*keys, "sketch", "n")
+        schema = both.schema  # the state's, logged in the manifest
         for v, bs in sorted(by_ver.items()):
-            base = os.path.join(state_dir, f"v={v}")
-            paths = [os.path.join(base, f"__bucket={b}") for b in bs]
-            prev_df = (spark.read.option("basePath", base).parquet(*paths)
-                       .select(*keys, "sketch", "n"))
-            both = both.unionByName(prev_df)
+            both = both.unionByName(
+                _load_buckets(spark, state_dir, v, bs, schema)
+                .select(*keys, "sketch", "n"))
 
         merged = (merge_partials(
             both.withColumn("part_id", F.monotonically_increasing_id())
@@ -237,7 +245,8 @@ def make_maintainer_process(
         os.makedirs(state_dir, exist_ok=True)
         tmp = os.path.join(state_dir, f"_manifest.{batch_id}.tmp")
         with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, "buckets": new_buckets}, f)
+            json.dump({"batch_id": batch_id, "buckets": new_buckets,
+                       "schema": schema.jsonValue()}, f)
         os.replace(tmp, os.path.join(state_dir, "_manifest.json"))  # commit
 
         # vacuum versions no bucket references anymore (best-effort:

@@ -3,7 +3,9 @@ the streamed state after N batches must equal a batch build over the same
 rows (the identity the reference tests for its incremental API,
 test/sql/ddsketch.sql:2434-2505)."""
 
+import json
 import os
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
@@ -12,7 +14,8 @@ from pyspark.sql import functions as F
 
 from ddsketch_spark.core.ddsketch import DDSketch
 from ddsketch_spark.streaming.sketch_stream import (
-    foreach_batch_maintainer, read_state, stateful_quantiles,
+    foreach_batch_maintainer, make_maintainer_process, read_state,
+    stateful_quantiles,
 )
 
 SCHEMA = "k string, v double"
@@ -568,6 +571,75 @@ def test_foreach_batch_replay_is_idempotent(spark, tmp_path):
     live = {f"v={v}" for v in man["buckets"].values()}
     on_disk = {e for e in os.listdir(state) if e.startswith("v=")}
     assert on_disk == live
+
+
+def test_state_read_runs_no_listing_or_inference_job(
+        spark, tmp_path, jobs_in_group, monkeypatch):
+    """A micro-batch whose keys touch more than 32 state buckets reads
+    the touched buckets with the state schema it logs in the manifest:
+    it runs no parallel-listing job and no schema-inference job, and
+    ``read_state`` runs no job at all. The state it writes is
+    byte-identical to the state written when the previous buckets are
+    read with an inferred schema."""
+    from ddsketch_spark.streaming import sketch_stream as mod
+
+    def batch(seed):
+        rng = np.random.default_rng(seed)
+        return spark.createDataFrame(pd.DataFrame({
+            "k": [f"k{i}" for i in rng.integers(0, 500, 4000)],
+            "v": rng.exponential(100.0, 4000)}))
+
+    sc = spark.sparkContext
+    new, old = str(tmp_path / "new"), str(tmp_path / "inferred")
+    process = make_maintainer_process(new, "v", ["k"], state_buckets=64)
+    process(batch(1), 0)
+    group = "state-read-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        process(batch(2), 1)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    store = sc._jsc.sc().statusStore()
+    jobs = [(j.name(), j.description().get() if j.description().isDefined()
+             else "") for j in map(store.job, ids)]
+    assert len(mod._read_manifest(new)["buckets"]) > 32 and jobs
+    # the listing job says so; the inference job is named after the read
+    # call (``parquet(...)`` or ``load(...)``)
+    assert not [j for j in jobs if j[0].startswith(("parquet at", "load at"))
+                or j[1].startswith("Listing leaf files")], jobs
+
+    group = "read-state-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        state = read_state(spark, new)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs_in_group(group) == 0
+    assert state.schema.simpleString() == \
+        "struct<k:string,sketch:binary,n:bigint>"
+    # a manifest written before the schema was logged reads the same rows
+    man = mod._read_manifest(new)
+    with open(os.path.join(new, "_manifest.json"), "w") as f:
+        json.dump({k: v for k, v in man.items() if k != "schema"}, f)
+    assert sorted(read_state(spark, new).collect()) == sorted(state.collect())
+
+    def inferred(spark, paths, base, schema=None, fmt="parquet"):
+        return spark.read.option("basePath", base).parquet(*paths)
+
+    monkeypatch.setattr(mod, "load_paths", inferred)
+    process = make_maintainer_process(old, "v", ["k"], state_buckets=64)
+    process(batch(1), 0)
+    process(batch(2), 1)
+
+    def files(root):
+        return {os.path.relpath(d, root): sorted(
+                    Path(d, f).read_bytes()
+                    for f in names if f.endswith(".parquet"))
+                for d, _, names in os.walk(os.path.join(root, "v=1"))}
+
+    assert files(new) == files(old) and len(files(new)) > 32
 
 
 def test_stateful_heavy_hitters_running_state(spark, tmp_path):

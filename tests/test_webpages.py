@@ -9,6 +9,9 @@
 - driver-side checkpoints and finalize: the checkpoint layout readers rely
   on, no Spark job after the last batch, and a finalize identical to the
   Spark merge of the same checkpoint
+- one JVM aggregation per batch: one scan and no Python stage, sketches
+  assembled on the driver equal to the executor-side build (empty
+  batches, NULL keys, NULL and NaN values, bucket overflow)
 """
 
 import glob
@@ -22,8 +25,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from ddsketch_spark.jobs.web_sketch_job import (
-    range_batches, run_job,
+    file_batches, range_batches, run_job,
 )
+from ddsketch_spark.operators.native import ddsketch_agg_native
 from ddsketch_spark.sources.webpages import (
     LANGS, extract_text, generate_batch, synthesize, synthesize_range,
 )
@@ -299,3 +303,131 @@ def test_stale_batch_dir_is_replaced(spark, tmp_path):
     assert resumed["metrics"]["rows"] == 4_000
     clean = run_job(spark, provider, str(tmp_path / "clean"), n_batches=2)
     assert resumed["result"].collect() == clean["result"].collect()
+
+
+def _executor_rows(df, key="lang", value_expr="length(text)", alpha=0.01,
+                   nbuckets=2048):
+    """A batch's checkpoint rows as the executor-side build makes them:
+    per-key sketches from ``ddsketch_agg_native`` joined null-safely with
+    per-key Spark ``min``/``max`` of the value."""
+    v = df.select(F.col(key), F.expr(value_expr).cast("double").alias("v"))
+    partial = ddsketch_agg_native(v, "v", alpha, nbuckets, keys=[key])
+    stats = v.groupBy(F.col(key).alias("__key")).agg(
+        F.min("v").alias("v_min"), F.max("v").alias("v_max"))
+    out = partial.join(stats, partial[key].eqNullSafe(stats["__key"]))
+    return _canon(r.asDict() for r in out.collect())
+
+
+def _checkpoint_rows(ckpt, b):
+    return _canon(pq.read_table(os.path.join(ckpt, f"batch={b}",
+                                             "part-00000.parquet")).to_pylist())
+
+
+def _canon(rows):
+    """Rows as comparable tuples, NaN spelled out, sorted NULL key first."""
+    return sorted(((r["lang"], bytes(r["sketch"]), r["n"], repr(r["v_min"]),
+                    repr(r["v_max"])) for r in rows),
+                  key=lambda t: (t[0] is not None, t[0] or ""))
+
+
+def _write_corpus(tmp_path, n_files, docs=600):
+    path = tmp_path / "corpus"
+    path.mkdir()
+    pdf = generate_batch(np.arange(docs), seed=42)
+    for i in range(n_files):
+        pq.write_table(pa.Table.from_pandas(pdf.iloc[i::n_files],
+                                            preserve_index=False),
+                       str(path / f"part-{i:03d}.parquet"),
+                       coerce_timestamps="us")
+    return str(path)
+
+
+def test_driver_batch_matches_executor_path_on_null_and_nan(spark, tmp_path):
+    """NULL values are skipped and NaN sorts above +inf, as Spark's
+    ``min``/``max`` order them: ``v_max`` is NaN when a NaN is present,
+    ``v_min`` skips NaN. The NULL key is a group of its own, and a key
+    with no live value (all NULL, all NaN, or both) has no row."""
+    nan = float("nan")
+    data = [("a", 1.0), ("a", None), ("a", 3.0),
+            ("b", nan), ("b", 2.0), ("b", None),
+            ("c", nan), ("c", nan), ("c", 5.0), ("c", -4.0),
+            ("d", None), ("d", None), ("e", nan), ("e", nan),
+            ("f", None), ("f", nan), ("z", 0.0),
+            (None, 7.0), (None, None), (None, nan), (None, 0.0)]
+    df = spark.createDataFrame(data, "lang string, v double")
+    ckpt = str(tmp_path / "ckpt")
+    run_job(spark, lambda b: df, ckpt, value_expr="v", n_batches=1)
+    got = _checkpoint_rows(ckpt, 0)
+    assert got == _executor_rows(df, value_expr="v")
+    by_key = {r[0]: r[2:] for r in got}
+    assert sorted(by_key, key=str) == [None, "a", "b", "c", "z"]
+    assert by_key["a"] == (3, "1.0", "3.0")
+    assert by_key["b"] == (3, "2.0", "nan")
+    assert by_key["c"] == (4, "-4.0", "nan")
+    assert by_key[None] == (4, "0.0", "nan")
+
+
+def test_empty_file_group_writes_empty_checkpoint(spark, tmp_path):
+    """More batches than files: the empty group's batch writes a
+    checkpoint with no rows, and every batch equals the executor-side
+    build of its group."""
+    corpus = _write_corpus(tmp_path, 2)
+    ckpt = str(tmp_path / "ckpt")
+    provider = file_batches(spark, corpus, 3)
+    out = run_job(spark, provider, ckpt, n_batches=3)
+    assert out["metrics"]["complete"] and out["metrics"]["rows"] == 600
+    for b in range(3):
+        assert _checkpoint_rows(ckpt, b) == _executor_rows(provider(b))
+    assert os.path.exists(os.path.join(ckpt, "batch=2", "_SUCCESS"))
+    assert _checkpoint_rows(ckpt, 2) == []
+
+
+def test_bucket_overflow_raises_on_driver(spark, tmp_path):
+    """A key with more buckets than ``nbuckets`` raises the kernel's
+    overflow error, as the executor-side build does, and leaves no
+    checkpoint."""
+    df = spark.createDataFrame(
+        [("en", float(v)) for v in np.geomspace(1, 1e6, 400)],
+        "lang string, v double")
+    with pytest.raises(Exception, match="bucket overflow"):
+        _executor_rows(df, value_expr="v", nbuckets=16)
+    ckpt = str(tmp_path / "ckpt")
+    with pytest.raises(ValueError, match="bucket overflow"):
+        run_job(spark, lambda b: df, ckpt, value_expr="v", nbuckets=16,
+                n_batches=1)
+    assert not os.path.exists(os.path.join(ckpt, "batch=0", "_SUCCESS"))
+
+
+PYTHON_NODES = ("MapInArrow", "ArrowEvalPython", "BatchEvalPython",
+                "FlatMapGroupsInPandas")
+
+
+def test_batch_is_one_scan_without_python(spark, tmp_path, jobs_in_group):
+    """A batch over a ``file_batches`` provider runs one SQL execution
+    whose executed plan scans once, shuffles once and has no Python
+    node; the provider infers the schema once, so reading its second
+    batch submits no Spark job."""
+    corpus = _write_corpus(tmp_path, 4)
+    provider = file_batches(spark, corpus, 2)
+    provider(0)
+    group = "file-batches-second-read"
+    spark.sparkContext.setJobGroup(group, group)
+    try:
+        provider(1)
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs_in_group(group) == 0
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    first = store.executionsCount()
+    run_job(spark, provider, str(tmp_path / "ckpt"), n_batches=2,
+            max_batches=1)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = store.executionsList(first, 100)
+    assert execs.size() == 1
+    plan = execs.apply(0).physicalPlanDescription()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("Scan parquet") == 1, plan
+    assert final.count("Exchange") == 1, plan
+    assert not [n for n in PYTHON_NODES if n in plan], plan
