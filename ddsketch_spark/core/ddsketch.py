@@ -54,6 +54,10 @@ MAX_SKETCH_BUCKETS = 32768
 _DBL_MIN = sys.float_info.min
 _DBL_MAX = sys.float_info.max
 _LOG2 = math.log(2.0)
+# an infinity has no bucket: its index would overflow the wire format's
+# 32-bit index. Raised by the kernel and, as the same text, by the JVM
+# bucket expression (operators/native.py)
+INFINITE_VALUE = "invalid value: +inf and -inf cannot be added to a sketch"
 
 _HEADER = struct.Struct(">iqqdiii")   # flags, count, zero_count, alpha, maxbuckets, nbuckets, nbuckets_negative
 _BUCKET = struct.Struct(">iq")        # index, count
@@ -210,7 +214,8 @@ class DDSketch:
 
     def update(self, values, counts=None) -> "DDSketch":
         """Add a batch of values (optionally weighted). NaNs are skipped
-        (the reference skips SQL NULLs, ddsketch.c:1029-1039); weights must
+        (the reference skips SQL NULLs, ddsketch.c:1029-1039); +inf and
+        -inf raise ``ValueError`` (:data:`INFINITE_VALUE`); weights must
         be > 0 (ddsketch.c:1153-1155 — enforced uniformly, including the
         array-percentile variant where the reference forgets it,
         ddsketch.c:1733-1738)."""
@@ -235,6 +240,8 @@ class DDSketch:
             c = c.astype(np.int64)
         if v.size == 0:
             return self
+        if np.isinf(v).any():
+            raise ValueError(INFINITE_VALUE)
 
         pos_mask = v > self.min_indexable
         neg_mask = v < -self.min_indexable

@@ -15,7 +15,9 @@ Architecture (SURVEY §3.2 + §7.1 step 5):
    job reads ONLY its slice (partition pruning / separate file lists), so
    no batch reads another batch's input, and reads it once: the batch
    plan has one ``FileScan``, so total scan volume is one pass regardless
-   of batch count.
+   of batch count. A file provider takes the input schema from the first
+   file's footer on the driver, so building a batch runs no inference
+   job.
 2. One Spark aggregation per *unfinished* batch computes the batch's
    DDSketch bucket cells per key in the JVM (operators/native.dd_cells:
    bucket index, summed count, row count and the value's ``min``/``max``
@@ -40,9 +42,10 @@ Architecture (SURVEY §3.2 + §7.1 step 5):
    (operators/aggregate.merge_serialized — exact, DDSketch is fully
    mergeable), extracts quantiles with the row function the quantile UDF
    runs (functions/rows.dd_quantile), so estimates are bit-identical, and
-   returns them as a local DataFrame. The driver
-   holds ``n_batches x keys`` sketch rows, so the key must be a
-   low-cardinality dimension — the same bound each batch's cells
+   returns them as an Arrow local relation (plans/local.local_frame): a
+   ``LocalTableScan``, so collecting the result starts no Python worker.
+   The driver holds ``n_batches x keys`` sketch rows, so the key must be
+   a low-cardinality dimension — the same bound each batch's cells
    already require. ``checkpoint_dir`` is a POSIX path.
 
 Killing the job between batches loses nothing; killing mid-batch loses only
@@ -62,7 +65,7 @@ from typing import Callable
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DoubleType, LongType, StringType, StructType
 
 from ddsketch_spark.core.ddsketch import (
@@ -70,7 +73,9 @@ from ddsketch_spark.core.ddsketch import (
 )
 from ddsketch_spark.functions.rows import dd_quantile
 from ddsketch_spark.operators.aggregate import merge_serialized
-from ddsketch_spark.operators.native import dd_assemble, dd_cells
+from ddsketch_spark.operators.native import dd_assemble, dd_cells, sql_ident
+from ddsketch_spark.plans.local import local_frame
+from ddsketch_spark.sources.tables import parquet_schema
 
 DEFAULT_QS = [0.5, 0.9, 0.99]
 
@@ -94,11 +99,12 @@ def file_batches(spark: SparkSession, path: str,
     """Batch provider over a parquet directory: deterministic file groups
     (sorted round-robin), each batch reads only its own files.
 
-    Every group is read with the schema Spark infers from the first group
-    (group 0), as a directory read with ``mergeSchema`` off would read
-    every file: the first ``provider(b)`` call runs the one inference
-    job, and every later read, an empty group's included, submits no job
-    until it executes."""
+    Every group is read with the schema of the first file, as a
+    directory read with ``mergeSchema`` off would read every file. The
+    schema is taken from that file's footer on the driver
+    (``sources.tables.parquet_schema``, Spark's own type rules), so no
+    ``provider(b)`` call, the first one included, submits a Spark job
+    until its DataFrame executes."""
     files = sorted(glob.glob(os.path.join(path, "*.parquet")))
     if not files:
         raise ValueError(f"no parquet files under {path}")
@@ -108,7 +114,7 @@ def file_batches(spark: SparkSession, path: str,
     def provider(b: int) -> DataFrame:
         nonlocal schema
         if schema is None:
-            schema = spark.read.parquet(*groups[0]).schema
+            schema = parquet_schema(spark, files[0])
         reader = spark.read.schema(schema)
         if not groups[b]:
             return reader.parquet(*files).limit(0)
@@ -170,7 +176,7 @@ def _finalize(spark: SparkSession, checkpoint_dir: str, n_batches: int,
                      default=None),
         "v_max": max((r["v_max"] for r in parts if r["v_max"] is not None),
                      default=None)}
-    return spark.createDataFrame(out, schema), lineage
+    return local_frame(spark, out, schema), lineage
 
 
 def run_job(
@@ -186,7 +192,8 @@ def run_job(
     max_batches: int | None = None,
 ) -> dict:
     """Returns {"result": DataFrame(key, n, q, est) or None, "metrics": {...}};
-    the result is local data built on the driver (module docstring, 3).
+    the result is an Arrow local relation built on the driver (module
+    docstring, 3): collecting it runs no Python worker.
 
     ``max_batches`` processes at most that many unfinished batches then
     stops (the kill-and-replay test uses it to simulate a mid-job failure —
@@ -205,8 +212,8 @@ def run_job(
         t0 = time.perf_counter()
         # project before anything else: html binary must never cross a
         # shuffle or enter Python (SURVEY §4.1)
-        batch_df = batch_provider(b).select(
-            F.col(key), F.expr(value_expr).cast("double").alias("v"))
+        batch_df = batch_provider(b).selectExpr(
+            sql_ident(key), f"CAST(({value_expr}) AS DOUBLE) AS v")
         cells = (dd_cells(batch_df, "v", alpha, [key], _extrema=True)
                  .toArrow().to_pandas()
                  # the NULL key is a run of its own

@@ -25,6 +25,11 @@ is two steps, defined only here: ``*_cells(df, ..., keys)`` -> ``keys...,
 assembler). ``*_agg_native`` is the two composed; the streaming layer
 runs the same two with the event-time window as one more key.
 
+The DDSketch cells are built from SQL strings: one ``CASE`` per bucket
+column, one ``selectExpr`` and one aggregation. The Column-composed form
+of the same plan took about 700 py4j round trips to build, the strings
+take about 50 (the CMS/Bloom probes are built the same way).
+
 Float parity: the JVM's ``Math.log`` and numpy's ``np.log`` agreed on every
 value in the test corpus (850k values x 3 alphas, see
 tests/test_native_agg.py); both are unverified-correctly-rounded libms, so
@@ -50,7 +55,8 @@ from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 from ddsketch_spark.core.bloom import Bloom
 from ddsketch_spark.core.cms import CMS
 from ddsketch_spark.core.ddsketch import (
-    _BUCKET_DT, DDSketch, mapping_params, validate_alpha, validate_nbuckets,
+    _BUCKET_DT, INFINITE_VALUE, DDSketch, mapping_params, validate_alpha,
+    validate_nbuckets,
 )
 from ddsketch_spark.core.hashing import H1_BITS, H64_BITS
 from ddsketch_spark.operators.aggregate import grouped_apply_sorted, key_runs
@@ -58,28 +64,42 @@ from ddsketch_spark.operators.aggregate import grouped_apply_sorted, key_runs
 _LOG2 = math.log(2.0)
 
 
-def dd_bucket_exprs(value_col: str, alpha: float) -> tuple[Column, Column]:
-    """(part, bucket_index) columns: part 2=positive store, 1=zero bucket,
+def _dd_bucket_sql(value_col: str, alpha: float) -> tuple[str, str]:
+    """``(part, bucket index)`` as one SQL ``CASE`` string each over
+    column ``value_col``: part 2=positive store, 1=zero bucket,
     0=negative store, -1=NULL/NaN row (lineage only). Mirrors
     core.ddsketch.map_index / the three-way routing of ddsketch_add
-    (ddsketch.c:796-821) as JVM expressions. NaN is routed to part=-1 like
-    NULL (DDSketch.update skips NaN, matching the reference's NULL-skip,
+    (ddsketch.c:796-821). NaN is routed to part=-1 like NULL
+    (DDSketch.update skips NaN, matching the reference's NULL-skip,
     ddsketch.c:1029-1039) — without the guard Spark's NaN-greater-than-all
-    ordering would drop NaN rows into the positive store."""
+    ordering would drop NaN rows into the positive store. +inf and -inf
+    raise the kernel's error (an infinite index would overflow the wire
+    format's 32-bit index).
+
+    Float literals are ``repr`` + ``D``: a bare ``0.693...`` parses as a
+    DECIMAL, which changes the plan and the rounding."""
     _, mult, minidx, _ = mapping_params(alpha)
-    v = F.col(value_col)
-    skip = v.isNull() | F.isnan(v.cast("double"))
-    logmult = F.log(v) / _LOG2 * mult
-    logmult_neg = F.log(-v) / _LOG2 * mult
-    part = (F.when(skip, F.lit(-1))
-            .when(v > minidx, F.lit(2))
-            .when(v < -minidx, F.lit(0))
-            .otherwise(F.lit(1)))
-    bidx = (F.when(skip, F.lit(0))
-            .when(v > minidx, F.ceil(logmult))
-            .when(v < -minidx, F.ceil(logmult_neg))
-            .otherwise(F.lit(0))).cast("long")
-    return part.alias("__part"), bidx.alias("__bidx")
+    v = sql_ident(value_col)
+    vd = f"CAST({v} AS DOUBLE)"
+    skip = f"{v} IS NULL OR isnan({vd})"
+    pos, neg = f"{v} > {minidx!r}D", f"{v} < {-minidx!r}D"
+    part = (f"CASE WHEN {skip} THEN -1"
+            f" WHEN abs({vd}) = CAST('Infinity' AS DOUBLE)"
+            f" THEN raise_error('{INFINITE_VALUE}')"
+            f" WHEN {pos} THEN 2 WHEN {neg} THEN 0 ELSE 1 END")
+    scale = f"/ {_LOG2!r}D * {mult!r}D"
+    bidx = (f"CAST(CASE WHEN {skip} THEN 0"
+            f" WHEN {pos} THEN ceil(ln({v}) {scale})"
+            f" WHEN {neg} THEN ceil(ln(-{v}) {scale})"
+            f" ELSE 0 END AS BIGINT)")
+    return part, bidx
+
+
+def dd_bucket_exprs(value_col: str, alpha: float) -> tuple[Column, Column]:
+    """``(__part, __bidx)`` columns of :func:`_dd_bucket_sql`, the one
+    bucket rule of every DDSketch cell build."""
+    part, bidx = _dd_bucket_sql(value_col, alpha)
+    return F.expr(f"{part} AS __part"), F.expr(f"{bidx} AS __bidx")
 
 
 def dd_cells(
@@ -94,50 +114,51 @@ def dd_cells(
     cells of ``df`` per key: ``__c`` sums the weights of the cell's live
     values (NULL/NaN values land in part -1 with weight 0), ``__rows``
     counts its input rows. The one rows->cells step of the batch build
-    and of every windowed (streaming) build.
+    and of every windowed (streaming) build: one ``selectExpr`` and one
+    aggregation of SQL strings, a few dozen py4j calls to build.
 
     ``_extrema`` adds ``__vmin``/``__vmax``, the cell's ``min``/``max``
     of the value as a double, for :func:`dd_assemble` to reduce per key;
     an all-NULL cell's ``__vmax`` is -inf, the identity of ``max``."""
     keys = list(keys)
-    part, bidx = dd_bucket_exprs(value_col, alpha)
+    part, bidx = _dd_bucket_sql(value_col, alpha)
     if weight_col:
         # NULL or NaN count => 1 (ddsketch.c:1148-1151; DDSketch.update maps
         # NaN counts to 1) — guard BEFORE the long cast, which turns NaN
         # into 0 and would mistrip the >0 check.
-        wd = F.col(weight_col).cast("double")
-        wraw = (F.when(wd.isNull() | F.isnan(wd), F.lit(1).cast("long"))
-                .otherwise(F.col(weight_col).cast("long")))
+        wc = sql_ident(weight_col)
+        wd = f"CAST({wc} AS DOUBLE)"
+        wraw = (f"CASE WHEN {wd} IS NULL OR isnan({wd}) THEN CAST(1 AS BIGINT)"
+                f" ELSE CAST({wc} AS BIGINT) END")
         # weights must be > 0 (ddsketch.c:1153-1155) — enforced in-plan,
         # with the reference's message text
-        w = F.when(wraw > 0, wraw).otherwise(
-            F.raise_error(F.concat(
-                F.lit("invalid count value "), wraw.cast("string"),
-                F.lit(", must be a positive value")))
-            .cast("long"))
+        w = (f"CASE WHEN {wraw} > 0 THEN {wraw} ELSE CAST(raise_error(concat("
+             f"'invalid count value ', CAST({wraw} AS STRING),"
+             f" ', must be a positive value')) AS BIGINT) END")
     else:
-        w = F.lit(1).cast("long")
-    vd = F.col(value_col).cast("double")
-    w = F.when(F.col(value_col).isNull() | F.isnan(vd), F.lit(0)).otherwise(w)
-    rows = (df.select(*keys, F.col(value_col),
-                      *([F.col(weight_col)] if weight_col else []))
-            .select(*keys, part, bidx, w.alias("__w"),
-                    *([vd.alias("__v")] if _extrema else [])))
-    extrema = [F.min("__v").alias("__vmin"),
-               F.coalesce(F.max("__v"), F.lit(float("-inf")))
-               .alias("__vmax")] if _extrema else []
+        w = "CAST(1 AS BIGINT)"
+    v = sql_ident(value_col)
+    vd = f"CAST({v} AS DOUBLE)"
+    rows = df.selectExpr(
+        *map(sql_ident, keys), f"{part} AS __part", f"{bidx} AS __bidx",
+        f"CASE WHEN {v} IS NULL OR isnan({vd}) THEN 0 ELSE {w} END AS __w",
+        *([f"{vd} AS __v"] if _extrema else []))
+    extrema = ["min(__v) AS __vmin",
+               "coalesce(max(__v), CAST('-Infinity' AS DOUBLE)) AS __vmax"
+               ] if _extrema else []
     return _sum_cells(rows, keys, ["__part", "__bidx"], extrema)
 
 
 def _sum_cells(rows: DataFrame, keys: Sequence[str],
-               cell: Sequence[str], extra: Sequence[Column] = ()
+               cell: Sequence[str], extra: Sequence[str] = ()
                ) -> DataFrame:
     """``keys..., <cell>, __c, __rows, <extra>``: per-row weighted cells
     (``__w``) summed per (keys, cell) — the additive cell aggregation of
-    DDSketch buckets and CMS counters."""
-    return (rows.groupBy(*keys, *cell)
-            .agg(F.sum("__w").alias("__c"), F.count(F.lit(1)).alias("__rows"),
-                 *extra))
+    DDSketch buckets and CMS counters. ``extra`` are more aggregate SQL
+    strings."""
+    aggs = ["sum(__w) AS __c", "count(1) AS __rows", *extra]
+    return (rows.groupBy(*map(sql_ident, keys), *cell)
+            .agg(*map(F.expr, aggs)))
 
 
 def _sketches(cells: DataFrame, keys: Sequence[str], assemble,

@@ -24,6 +24,7 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from ddsketch_spark.operators.aggregate import map_batches
+from ddsketch_spark.plans.local import local_frame
 from ddsketch_spark.textconf import ANN_PLANES, EMB_SCALE, ann_plane_weights
 
 
@@ -106,7 +107,7 @@ def cosine_topk(df: DataFrame, queries: DataFrame, k: int,
         StructField("cos", DoubleType(), True),
     ])
     if not qrows:
-        return df.sparkSession.createDataFrame([], cand_schema).select(
+        return local_frame(df.sparkSession, [], cand_schema).select(
             "query_id", F.lit(1).cast("long").alias("rank"), "neighbor_id")
     Q = np.array([r["qv"] for r in qrows], dtype=np.int64)        # (q, D)
     qids = np.array([int(r["qid"]) for r in qrows], dtype=np.int64)

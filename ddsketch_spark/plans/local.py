@@ -1,0 +1,37 @@
+"""Driver-built DataFrames as Arrow local relations.
+
+``spark.createDataFrame`` over a list of rows plans as a ``Scan
+ExistingRDD`` of a Python RDD, so every action on it starts a Python
+worker to unpickle the rows. :func:`local_frame` sends the rows to the
+JVM once, as a ``pyarrow.Table`` with the exact Spark types; under
+``spark.sql.execution.arrow.localRelationThreshold`` it plans as a
+``LocalTableScan``, and actions on it run no Python.
+"""
+
+from __future__ import annotations
+
+from typing import Sequence
+
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import DataType, StructType, TimestampType
+
+
+def local_frame(spark: SparkSession, rows: Sequence[Sequence],
+                schema: StructType | str) -> DataFrame:
+    """``rows`` (tuples in the field order of ``schema``, a ``StructType``
+    or a DDL string) as a DataFrame of exactly ``schema``. Values are what
+    ``createDataFrame(rows, schema)`` takes; a naive ``datetime`` in a
+    ``timestamp`` column is local time, as it is there."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    arrays = []
+    for f, col in zip(schema.fields, cols):
+        if isinstance(f.dataType, TimestampType):
+            col = [v.astimezone() if v is not None and v.tzinfo is None
+                   else v for v in col]
+        arrays.append(pa.array(col, type=to_arrow_type(f.dataType)))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, names=schema.names), schema)

@@ -68,6 +68,7 @@ from ddsketch_spark.operators.textops import (
     shingle_rows, simhash, simhash_dup_pairs, stratified_hash_sample,
     token_count_col,
 )
+from ddsketch_spark.plans.local import local_frame
 from ddsketch_spark.sources.tables import read_table, write_table
 from ddsketch_spark.streaming.sketch_stream import (
     assemble_session_sketches, assemble_window_hll, assemble_window_sketches,
@@ -827,9 +828,9 @@ def stream_sessionized_p90_clicks(spark, sf_dir):
         clicks.coalesce(1).write.parquet(src)
         max_ts = clicks.agg(F.max("ts")).collect()[0][0]
         _time.sleep(1.2)   # file-source batches order by modification time
-        sentinel = spark.createDataFrame(
-            [(max_ts + dt.timedelta(days=30),
-              SESSION_SENTINEL_UID, 0.0)], schema=clicks.schema)
+        sentinel = local_frame(
+            spark, [(max_ts + dt.timedelta(days=30),
+                     SESSION_SENTINEL_UID, 0.0)], clicks.schema)
         sentinel.coalesce(1).write.mode("append").parquet(src)
 
         stream = (spark.readStream.schema(clicks.schema)
@@ -951,9 +952,9 @@ def kmv_user_overlap(spark, sf_dir):
     # (r4 ADVICE), instead of a KeyError
     a = by.get("a", KMV(KMV_K))
     b = by.get("b", KMV(KMV_K))
-    raw = spark.createDataFrame(
-        [(a.estimate(), b.estimate(), union_estimate(a, b),
-          intersection_estimate(a, b))],
+    raw = local_frame(
+        spark, [(a.estimate(), b.estimate(), union_estimate(a, b),
+                 intersection_estimate(a, b))],
         "ra double, rb double, ru double, ri double")
     return raw.select(F.round("ra", 4).alias("est_a"),
                       F.round("rb", 4).alias("est_b"),
@@ -1479,7 +1480,7 @@ def tokens_topk_sketched(spark, sf_dir):
              _in_envelope(acc.get(r["token"]) if acc is not None else None,
                           r["cnt"]))
             for rk, r in enumerate(truth, 1)]
-    return spark.createDataFrame(rows, "rk long, token string, ok boolean")
+    return local_frame(spark, rows, "rk long, token string, ok boolean")
 
 
 def tokens_topk_sketched_by_lang(spark, sf_dir):
@@ -1506,8 +1507,8 @@ def tokens_topk_sketched_by_lang(spark, sf_dir):
         s = sketches.get(r["lang"])
         e = s.get(r["token"]) if s is not None else None
         out.append((r["lang"], r["rk"], r["token"], _in_envelope(e, r["cnt"])))
-    return spark.createDataFrame(
-        out, "lang string, rk long, token string, ok boolean")
+    return local_frame(
+        spark, out, "lang string, rk long, token string, ok boolean")
 
 
 HH_TOPK = 5
@@ -1551,8 +1552,8 @@ def stream_heavy_hitters_events(spark, sf_dir):
              _in_envelope(lookup.get(r["event_type"], {}).get(r["item"]),
                           r["cnt"]))
             for r in _exact_topk(ev, "event_type", "item", HH_TOPK).collect()]
-    return spark.createDataFrame(
-        rows, "event_type string, rk long, item string, ok boolean")
+    return local_frame(
+        spark, rows, "event_type string, rk long, item string, ok boolean")
 
 
 def ann_cosine_topk(spark, sf_dir):

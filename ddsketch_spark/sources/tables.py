@@ -30,6 +30,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from ddsketch_spark.plans.local import local_frame
+
 _LOG_DIR = "_sketch_log"
 _ENTRY = re.compile(r"(\d{20})\.json")
 _THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
@@ -163,10 +165,30 @@ def read_snapshot(spark: SparkSession, path: str) -> DataFrame:
         stream.close()
     schema = StructType.fromJson(entry["schema"])
     if not entry["files"]:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     base = root.toString()
     return load_paths(spark, [f"{base}/{f}" for f in entry["files"]],
                       base, schema, entry["format"])
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers for the parquet file at ``path``, read on
+    the driver from its footer: no Spark job. These are the calls
+    Spark's inference makes inside its job
+    (``ParquetFileFormat.readParquetFootersInParallel`` and
+    ``readSchema``), so the type rules — timestamp vs timestamp_ntz,
+    INT96, ``binaryAsString``, a Spark-written schema in the footer — are
+    Spark's own. The API is Spark-private; a test pins the result to
+    ``spark.read.parquet(path).schema``."""
+    fs, _, p = _fs(spark, path)
+    jvm = spark.sparkContext._jvm
+    pq_fmt = getattr(jvm.org.apache.spark.sql.execution.datasources.parquet,
+                     "ParquetFileFormat$").__getattr__("MODULE$")
+    footers = pq_fmt.readParquetFootersInParallel(
+        spark._jsparkSession.sessionState().newHadoopConf(),
+        jvm.PythonUtils.toSeq([fs.getFileStatus(p)]), False)
+    return StructType.fromJson(json.loads(
+        pq_fmt.readSchema(footers, spark._jsparkSession).get().json()))
 
 
 def load_paths(spark: SparkSession, paths: list[str], base: str,

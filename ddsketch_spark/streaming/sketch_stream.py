@@ -61,6 +61,7 @@ from ddsketch_spark.operators.native import (
     _sum_cells, bloom_cells, cms_cells, dd_bucket_exprs, dd_cells,
     dd_sketches, ddsketch_agg_native, hll_cells, hll_sketches,
 )
+from ddsketch_spark.plans.local import local_frame
 from ddsketch_spark.sources.tables import load_paths
 
 
@@ -536,11 +537,10 @@ def _probe_windows(cell_rows: DataFrame, probes: list, on: Sequence[str],
     row (``item, *on``), left-joined to the window's cells on ``on`` and
     reduced per (window, item) by ``agg``, which reads joined cells as
     ``cell<column>`` (NULL if absent). Pure JVM, no sketch built."""
-    spark = cell_rows.sparkSession
-    # pandas -> Arrow -> LocalTableScan: the literal probe table stays a
-    # JVM-local relation (a plain list would materialize via a Python RDD)
-    probe_df = spark.createDataFrame(
-        pd.DataFrame(probes, columns=["item", *on]))
+    probe_df = local_frame(
+        cell_rows.sparkSession, probes,
+        StructType([StructField("item", StringType()),
+                    *[StructField(c, LongType()) for c in on]]))
     # window list and cells share lineage (a self-join): renaming every
     # cell column mints fresh attribute ids, so the join is unambiguous
     windows = cell_rows.select(F.col("window_start").alias("__ws")).distinct()

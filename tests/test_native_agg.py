@@ -4,6 +4,8 @@ kernel build — including weighted, grouped, negative/zero values, NULLs,
 and overflow behavior.
 """
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -483,3 +485,86 @@ def test_hostile_hash_column_names(spark, sibling_data, name):
                          builds(hostile, name, f"{name} w", f"{name} ")):
         assert sorted(map(tuple, got.collect())) == \
             sorted(map(tuple, want.collect()))
+
+
+@pytest.mark.parametrize("names", [("h-1", "a`b", "my v"),
+                                   ("a`b", "my v", "h-1"),
+                                   ("my v", "h-1", "a`b")],
+                         ids=["v=h-1", "v=a`b", "v=my v"])
+def test_hostile_ddsketch_column_names(spark, sibling_data, names):
+    """Value, weight and key names reach the DDSketch SQL strings
+    backquoted: a value column named ``h-1`` must not parse as ``h - 1``
+    (a decoy ``h`` sits beside it), and ``a`b`` / ``my v`` must not fail
+    to parse. Same cells and sketch bytes as under plain names."""
+    from ddsketch_spark.operators.native import dd_cells
+
+    value, weight, key = names
+    df, _ = sibling_data
+    plain = df.select("k", "v", (F.col("k") + 1).alias("w"))
+    hostile = df.select(F.col("k").alias(key), F.col("v").alias(value),
+                        (F.col("v") * 3).alias("h"),  # decoy
+                        (F.col("k") + 1).alias(weight))
+
+    def builds(d, k, v, w):
+        out = [dd_cells(d, v, ALPHA, [k], w, _extrema=True),
+               ddsketch_agg_native(d, v, ALPHA, NB, weight_col=w)]
+        # a key holding a backquote cannot enter a Python stage: PySpark's
+        # mapInArrow looks its input columns up by unquoted name
+        if "`" not in key:
+            out.append(ddsketch_agg_native(d, v, ALPHA, NB, keys=[k],
+                                           weight_col=w))
+        return out
+
+    for want, got in zip(builds(plain, "k", "v", "w"),
+                         builds(hostile, key, value, weight)):
+        assert sorted(map(tuple, got.collect())) == \
+            sorted(map(tuple, want.collect()))
+
+
+def test_dd_cells_builds_in_few_py4j_calls(spark):
+    """``dd_cells`` is one ``selectExpr`` and one aggregation of SQL
+    strings: building the weighted, keyed plan with extrema makes fewer
+    than 100 py4j round trips (the Column-composed form made ~700)."""
+    from py4j.java_gateway import GatewayClient
+
+    from ddsketch_spark.operators.native import dd_cells
+
+    df = spark.createDataFrame([("a", 1.0, 1)], "k string, v double, w long")
+    dd_cells(df, "v", 0.01, ["k"], "w", _extrema=True)  # warm lookups
+    calls = []
+    send = GatewayClient.send_command
+
+    def counting(client, *args, **kwargs):
+        calls.append(1)
+        return send(client, *args, **kwargs)
+
+    GatewayClient.send_command = counting
+    try:
+        dd_cells(df, "v", 0.01, ["k"], "w", _extrema=True)
+    finally:
+        GatewayClient.send_command = send
+    assert 0 < len(calls) < 100
+
+
+def test_infinite_values_raise(spark):
+    """+inf and -inf have no bucket (their index would overflow the wire
+    format's 32-bit index): the kernel and the JVM build both raise the
+    same error, while NaN and NULL are still skipped."""
+    from ddsketch_spark.core.ddsketch import INFINITE_VALUE
+
+    inf = float("inf")
+    with pytest.raises(ValueError, match=re.escape(INFINITE_VALUE)):
+        DDSketch().update([inf, 1.0])
+    with pytest.raises(ValueError, match=re.escape(INFINITE_VALUE)):
+        DDSketch().add(-inf)
+    with pytest.raises(ValueError, match=re.escape(INFINITE_VALUE)):
+        DDSketch().update([1.0, -inf], [1, 2])
+    assert DDSketch().update([float("nan"), 1.0]).count == 1
+
+    df = spark.createDataFrame([(1.0,), (-inf,), (None,)], "v double")
+    with pytest.raises(Exception, match=re.escape(INFINITE_VALUE)):
+        ddsketch_agg_native(df, "v", ALPHA, NB).collect()
+    live = spark.createDataFrame([(1.0,), (float("nan"),), (None,)],
+                                 "v double")
+    out = ddsketch_agg_native(live, "v", ALPHA, NB).collect()
+    assert DDSketch.from_bytes(bytes(out[0]["sketch"])).count == 1

@@ -20,20 +20,15 @@ from ddsketch_spark.operators.native import ddsketch_agg_native
 from ddsketch_spark.operators.similarity import cosine_topk
 
 
-def test_python_stages_enter_through_two_wrappers():
-    """Python receives Arrow data in exactly two places: scalars through
-    ``rows.vectorize``, batch stages through ``aggregate.map_batches``.
-    A raw ``pandas_udf(`` / ``mapInPandas(`` / ``mapInArrow(`` anywhere
-    else in the library is a stage that bypasses the exact-integer
-    batch reader."""
+def _calls_outside(pattern: str, allowed: set) -> list[str]:
+    """Library lines matching ``pattern`` outside the ``(file, top-level
+    function)`` pairs in ``allowed``."""
     import ast
     import pathlib
 
     import ddsketch_spark
 
-    allowed = {("functions/rows.py", "vectorize"),
-               ("operators/aggregate.py", "map_batches")}
-    raw = re.compile(r"pandas_udf\(|mapInPandas\(|mapInArrow\(")
+    raw = re.compile(pattern)
     root = pathlib.Path(ddsketch_spark.__file__).parent
     stray = []
     for path in sorted(root.rglob("*.py")):
@@ -48,7 +43,51 @@ def test_python_stages_enter_through_two_wrappers():
                              None)
                 if (rel, owner) not in allowed:
                     stray.append(f"{rel}:{n}: {line.strip()}")
+    return stray
+
+
+def test_python_stages_enter_through_two_wrappers():
+    """Python receives Arrow data in exactly two places: scalars through
+    ``rows.vectorize``, batch stages through ``aggregate.map_batches``.
+    A raw ``pandas_udf(`` / ``mapInPandas(`` / ``mapInArrow(`` anywhere
+    else in the library is a stage that bypasses the exact-integer
+    batch reader."""
+    stray = _calls_outside(r"pandas_udf\(|mapInPandas\(|mapInArrow\(",
+                           {("functions/rows.py", "vectorize"),
+                            ("operators/aggregate.py", "map_batches")})
     assert not stray, "\n".join(stray)
+
+
+def test_driver_frames_enter_through_local_frame():
+    """Every DataFrame the library builds from driver data goes through
+    ``plans.local.local_frame``, an Arrow local relation. A raw
+    ``createDataFrame(`` of a list plans as a scan of a Python RDD, and
+    every action on it starts a Python worker."""
+    stray = _calls_outside(r"createDataFrame\(",
+                           {("plans/local.py", "local_frame")})
+    assert not stray, "\n".join(stray)
+
+
+def test_local_frame_equals_a_list_frame(spark):
+    """``local_frame`` gives what ``createDataFrame`` of the same list
+    gives — schema, values, NULLs, a naive timestamp read as local time —
+    as a ``LocalTableScan``, empty rows included."""
+    import datetime as dt
+
+    from ddsketch_spark.plans.local import local_frame
+
+    schema = ("n long, s string, b binary, d double, a array<long>,"
+              " ts timestamp, ok boolean")
+    rows = [(1, "a", b"\x00", 1.5, [1, None], dt.datetime(2024, 1, 1, 12),
+             True), (None,) * 7]
+    got, want = local_frame(spark, rows, schema), spark.createDataFrame(
+        rows, schema)
+    assert got._jdf.queryExecution().executedPlan().nodeName() == \
+        "LocalTableScan"
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    empty = local_frame(spark, [], want.schema)
+    assert empty.schema == want.schema and empty.collect() == []
 
 
 def _plan(df) -> str:

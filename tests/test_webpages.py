@@ -12,11 +12,14 @@
 - one JVM aggregation per batch: one scan and no Python stage, sketches
   assembled on the driver equal to the executor-side build (empty
   batches, NULL keys, NULL and NaN values, bucket overflow)
+- no job outside the batch aggregations: the file provider's schema
+  comes from a footer, and the result is a local relation
 """
 
 import glob
 import hashlib
 import os
+import re
 
 import numpy as np
 import pyarrow as pa
@@ -431,3 +434,82 @@ def test_batch_is_one_scan_without_python(spark, tmp_path, jobs_in_group):
     assert final.count("Scan parquet") == 1, plan
     assert final.count("Exchange") == 1, plan
     assert not [n for n in PYTHON_NODES if n in plan], plan
+
+
+def test_infinite_value_fails_its_batch(spark, tmp_path):
+    """An infinite value raises in the batch that reads it (it has no
+    bucket), so the batch writes no ``_SUCCESS``."""
+    from ddsketch_spark.core.ddsketch import INFINITE_VALUE
+
+    df = spark.createDataFrame([("g", float("inf")), ("g", 1.0)],
+                               "lang string, v double")
+    ckpt = str(tmp_path / "ckpt")
+    with pytest.raises(Exception, match=re.escape(INFINITE_VALUE)):
+        run_job(spark, lambda b: df, ckpt, value_expr="v", n_batches=1)
+    assert not os.path.exists(os.path.join(ckpt, "batch=0", "_SUCCESS"))
+
+
+def test_result_is_a_local_relation(spark, tmp_path):
+    """The result plans as a ``LocalTableScan`` (collecting it starts no
+    Python worker), with the schema, NULL-key row and row order of the
+    ``createDataFrame`` of a list it replaced."""
+    def provider(b):
+        return spark.createDataFrame(
+            [("en", "ab"), (None, "abc"), ("de", "abcd"), ("en", "a")],
+            "lang string, text string")
+
+    res = run_job(spark, provider, str(tmp_path / "ckpt"), n_batches=2,
+                  qs=[0.5, 0.9])["result"]
+    assert res._jdf.queryExecution().executedPlan().nodeName() == \
+        "LocalTableScan"
+    assert res.schema.simpleString() == \
+        "struct<lang:string,n:bigint,q:double,est:double>"
+    assert all(f.nullable for f in res.schema.fields)
+    assert [tuple(r)[:3] for r in res.collect()] == [
+        (None, 2, 0.5), (None, 2, 0.9), ("de", 2, 0.5), ("de", 2, 0.9),
+        ("en", 4, 0.5), ("en", 4, 0.9)]
+
+
+def _spark_timestamp_file(spark, tmp_path):
+    path = str(tmp_path / "spark")
+    (spark.range(0, 40).select(
+        F.col("id").alias("doc_id"),
+        F.timestamp_seconds(F.col("id") * 3600).alias("warc_ts"),
+        F.concat(F.lit("t"), F.col("id").cast("string")).alias("text"),
+        F.lit("en").alias("lang"))
+     .coalesce(1).write.parquet(path))
+    return path
+
+
+def _binary_file(tmp_path):
+    path = tmp_path / "binary"
+    path.mkdir()
+    pq.write_table(pa.table({"lang": ["en", None, "de"],
+                             "text": ["a", "bb", "ccc"],
+                             "html": [b"<p>", None, b"\x00\xff"]}),
+                   str(path / "part-000.parquet"))
+    return str(path)
+
+
+@pytest.mark.parametrize("source", ["pyarrow", "spark", "binary"])
+def test_file_batches_schema_from_footer(spark, tmp_path, jobs_in_group,
+                                         source):
+    """The first ``provider(b)`` call submits no Spark job: the schema
+    comes from the first file's footer on the driver, and equals the one
+    Spark infers for the first group — naive pyarrow timestamps as
+    ``timestamp_ntz``, a Spark ``TIMESTAMP`` as ``timestamp``, binary as
+    binary."""
+    path = {"pyarrow": lambda: _write_corpus(tmp_path, 4),
+            "spark": lambda: _spark_timestamp_file(spark, tmp_path),
+            "binary": lambda: _binary_file(tmp_path)}[source]()
+    provider = file_batches(spark, path, 2)
+    group = f"file-batches-first-read-{source}"
+    spark.sparkContext.setJobGroup(group, group)
+    try:
+        first = provider(0)
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs_in_group(group) == 0
+    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+    assert first.schema == spark.read.parquet(*files[0::2]).schema
+    assert first.count() == spark.read.parquet(*files[0::2]).count()
