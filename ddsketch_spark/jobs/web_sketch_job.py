@@ -39,7 +39,7 @@ Architecture (SURVEY §3.2 + §7.1 step 5):
    first, tiny global merge last.
 3. Finalize runs on the driver and submits no Spark job: it reads the
    checkpoint files, folds each key's sketches
-   (operators/aggregate.merge_serialized — exact, DDSketch is fully
+   (operators/aggregate.fold_key_runs — exact, DDSketch is fully
    mergeable), extracts quantiles with the row function the quantile UDF
    runs (functions/rows.dd_quantile), so estimates are bit-identical, and
    returns them as an Arrow local relation (plans/local.local_frame): a
@@ -72,8 +72,8 @@ from ddsketch_spark.core.ddsketch import (
     from_bytes, validate_alpha, validate_nbuckets,
 )
 from ddsketch_spark.functions.rows import dd_quantile
-from ddsketch_spark.operators.aggregate import merge_serialized
-from ddsketch_spark.operators.native import dd_assemble, dd_cells, sql_ident
+from ddsketch_spark.operators.aggregate import fold_key_runs, sql_ident
+from ddsketch_spark.operators.native import dd_assemble, dd_cells
 from ddsketch_spark.plans.local import local_frame
 from ddsketch_spark.sources.tables import parquet_schema
 
@@ -131,6 +131,13 @@ def _batch_done(checkpoint_dir: str, b: int) -> bool:
     return os.path.exists(os.path.join(_batch_dir(checkpoint_dir, b), "_SUCCESS"))
 
 
+def _batch_schema(key: str) -> pa.Schema:
+    return pa.schema([(key, pa.string()), ("sketch", pa.binary()),
+                      ("n", pa.int64()), ("v_min", pa.float64()),
+                      ("v_max", pa.float64()), ("batch", pa.int32()),
+                      ("wall_s", pa.float64())])
+
+
 def _write_batch(checkpoint_dir: str, b: int, rows: list[dict],
                  key: str) -> None:
     """One parquet file, then ``_SUCCESS``; a stale dir is replaced, never
@@ -139,10 +146,7 @@ def _write_batch(checkpoint_dir: str, b: int, rows: list[dict],
     pdir = _batch_dir(checkpoint_dir, b)
     shutil.rmtree(pdir, ignore_errors=True)
     os.makedirs(pdir)
-    schema = pa.schema([(key, pa.string()), ("sketch", pa.binary()),
-                        ("n", pa.int64()), ("v_min", pa.float64()),
-                        ("v_max", pa.float64()), ("batch", pa.int32()),
-                        ("wall_s", pa.float64())])
+    schema = _batch_schema(key)
     pq.write_table(pa.Table.from_pylist(rows, schema=schema),
                    os.path.join(pdir, "part-00000.parquet"),
                    use_dictionary=False,
@@ -153,29 +157,22 @@ def _write_batch(checkpoint_dir: str, b: int, rows: list[dict],
 def _finalize(spark: SparkSession, checkpoint_dir: str, n_batches: int,
               key: str, qs) -> tuple[DataFrame, dict]:
     """Merge the checkpointed partials per key (NULL is a key of its own)
-    on the driver; no Spark job runs."""
-    parts = [r for b in range(n_batches)
-             for f in sorted(glob.glob(os.path.join(
-                 _batch_dir(checkpoint_dir, b), "*.parquet")))
-             for r in pq.ParquetFile(f).read().to_pylist()]
-    by_key: dict = {}
-    for r in parts:
-        by_key.setdefault(r[key], []).append(r)
+    on the driver with the library's one driver fold; no Spark job runs."""
+    parts = pa.concat_tables(
+        [_batch_schema(key).empty_table()]
+        + [pq.ParquetFile(f).read() for b in range(n_batches)
+           for f in sorted(glob.glob(os.path.join(
+               _batch_dir(checkpoint_dir, b), "*.parquet")))])
     qs = [float(q) for q in qs]
-    out = []
-    for k in sorted(by_key, key=lambda k: (k is not None, k)):
-        blob = merge_serialized([r["sketch"] for r in by_key[k]],
-                                from_bytes).to_bytes()
-        n = sum(r["n"] for r in by_key[k])
-        out += [(k, n, q, e) for q, e in zip(qs, dd_quantile(blob, np.array(qs)))]
+    out = [(run.column(key)[0].as_py(), sum(run.column("n").to_pylist()), q, e)
+           for run, acc in fold_key_runs(parts, [key], from_bytes)
+           for q, e in zip(qs, dd_quantile(acc.to_bytes(), np.array(qs)))]
     schema = (StructType().add(key, StringType()).add("n", LongType())
               .add("q", DoubleType()).add("est", DoubleType()))
-    lineage = {
-        "rows": sum(r["n"] for r in parts),
-        "v_min": min((r["v_min"] for r in parts if r["v_min"] is not None),
-                     default=None),
-        "v_max": max((r["v_max"] for r in parts if r["v_max"] is not None),
-                     default=None)}
+    got = {c: [v for v in parts.column(c).to_pylist() if v is not None]
+           for c in ("n", "v_min", "v_max")}
+    lineage = {"rows": sum(got["n"]), "v_min": min(got["v_min"], default=None),
+               "v_max": max(got["v_max"], default=None)}
     return local_frame(spark, out, schema), lineage
 
 

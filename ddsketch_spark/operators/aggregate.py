@@ -37,14 +37,26 @@ from typing import Callable, Iterable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     BinaryType, DoubleType, LongType, StructField, StructType,
 )
 
 from ddsketch_spark.core.ddsketch import DDSketch, from_bytes as dd_from_bytes
+from ddsketch_spark.plans.local import (
+    bounded_arrow, local_frame, scan_only,
+)
 
-SENTINEL_KEY = "__global__"
+DRIVER_FOLD_MAX_ROWS = 10_000   # see fold_stored and SCALE.md
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as one backquoted Spark SQL identifier, whatever it holds
+    (``h-1``, ``my hash``, a backquote) — for every column name pasted
+    into a SQL string or ``F.col``."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _key_fields(df: DataFrame, keys: Sequence[str]) -> list[StructField]:
@@ -79,7 +91,7 @@ def sketch_partials(
     cols = keys + [value_col] + ([weight_col] if weight_col else [])
     # explicit projection: the Python map is a pruning barrier, so never let
     # wide columns (e.g. html binary) cross into Python (SURVEY §4.1)
-    projected = df.select(*cols)
+    projected = df.select(*map(sql_ident, cols))
     # NULL items contribute nothing to hash/item sketches: drop them
     # JVM-side so the Python batch stays dense (an int64 hash column stays
     # numpy int64 instead of exact-int objects). The float path keeps NULL
@@ -87,7 +99,7 @@ def sketch_partials(
     # counts them.
     input_dtype = getattr(factory(), "input_dtype", "float64")
     if input_dtype in ("int64", "object"):
-        projected = projected.where(F.col(value_col).isNotNull())
+        projected = projected.where(F.col(sql_ident(value_col)).isNotNull())
     projected = projected.withColumn("__pid", F.spark_partition_id())
 
     out_schema = StructType(
@@ -287,7 +299,8 @@ def merge_partials(
         # the combined row keeps its run's first part_id (stable sort)
         combine_fn = _fold_runs(keys, sketch_col, from_bytes, lambda acc, pdf: {
             **merged(acc, pdf), "part_id": [int(pdf["part_id"].iloc[0])]})
-        local = partials.sortWithinPartitions(*keys) if keys else partials
+        local = (partials.sortWithinPartitions(*map(sql_ident, keys))
+                 if keys else partials)
         partials = _apply_sorted_runs(local, keys, combine_fn,
                                       partials.schema)
 
@@ -379,10 +392,10 @@ def _stored_rows_as_partials(df: DataFrame, sketch_col: str,
     place to evolve the lineage fields. ``n_col`` carries each stored
     row's own contributing-row count through the merge (rollup tables);
     default counts merged sketch rows."""
-    n = (F.col(n_col).cast("long") if n_col else F.lit(1).cast("long"))
+    n = F.col(sql_ident(n_col)) if n_col else F.lit(1)
     return (
-        df.select(*(list(keys) + [F.col(sketch_col).alias("sketch"),
-                                  n.alias("n")]))
+        df.select(*map(sql_ident, keys), F.col(sql_ident(sketch_col))
+                  .alias("sketch"), n.cast("long").alias("n"))
         .withColumn("part_id", F.spark_partition_id().cast("long"))
     )
 
@@ -430,8 +443,7 @@ def merge_sketches_extract(
     may have length > 1 (e.g. one row per quantile); key columns repeat."""
     keys = list(keys)
     partials = _stored_rows_as_partials(df, sketch_col, keys)
-    out_schema = StructType(
-        [f for f in df.schema.fields if f.name in keys] + list(out_fields))
+    out_schema = StructType(_key_fields(df, keys) + list(out_fields))
     return grouped_apply_sorted(
         partials, keys,
         _fold_runs(keys, "sketch", from_bytes, lambda acc, pdf: extract(acc)),
@@ -445,6 +457,54 @@ def quantile_extract(qs: Sequence[float]):
     return (lambda s: {"q": qs, "est": [float(e) for e in s.quantile(qs)]},
             [StructField("q", DoubleType(), False),
              StructField("est", DoubleType(), True)])
+
+
+def fold_key_runs(tbl: pa.Table, keys: Sequence[str],
+                  from_bytes: Callable[[bytes], object]):
+    """``(run, merged sketch)`` per key run of ``tbl``'s ``sketch`` column
+    sorted NULL-first, split by :func:`key_runs` over exact keys as in
+    :func:`map_batches`: the driver twin of :func:`_fold_runs`."""
+    if not tbl.num_rows:
+        return
+    if keys:
+        tbl = tbl.sort_by([(k, "ascending") for k in keys],
+                          null_placement="at_start")
+    _, starts = key_runs(tbl.select(keys).to_pandas(integer_object_nulls=True))
+    blobs = tbl.column("sketch").to_pylist()
+    for a, b in zip(starts, [*starts[1:], tbl.num_rows]):
+        yield tbl.slice(a, b - a), merge_serialized(blobs[a:b], from_bytes)
+
+
+def fold_stored(df: DataFrame, sketch_col: str, keys: Sequence[str],
+                from_bytes: Callable[[bytes], object] = dd_from_bytes,
+                extract=None, out_fields: Sequence[StructField] = (),
+                n_col: str | None = None) -> DataFrame:
+    """:func:`merge_sketches`, or :func:`merge_sketches_extract` given
+    ``extract``, folded on the driver into a ``local_frame`` when ``df``
+    only reads stored rows (``scan_only``) and at most
+    ``DRIVER_FOLD_MAX_ROWS`` of them fetch at call time. Otherwise that
+    lazy plan, same rows: a table still to be built is not fetched, as
+    the plan would build it again."""
+    keys = list(keys)
+    fetch = _stored_rows_as_partials(df, sketch_col, keys, n_col)
+    tbl = bounded_arrow(fetch.drop("part_id"), DRIVER_FOLD_MAX_ROWS) \
+        if scan_only(df) else None
+    if tbl is None:
+        return (merge_sketches_extract(df, sketch_col, keys, extract,
+                                       out_fields, from_bytes) if extract
+                else merge_sketches(df, sketch_col, keys, from_bytes,
+                                    n_col=n_col))
+    fields = _key_fields(df, keys) + (list(out_fields) if extract else [
+        StructField("sketch", BinaryType(), False),
+        StructField("n", LongType(), False)])
+    rows = []
+    for run, acc in fold_key_runs(tbl, keys, from_bytes):
+        cols = extract(acc) if extract else {
+            "sketch": [acc.to_bytes()], "n": [pc.sum(run.column("n")).as_py()]}
+        m = len(next(iter(cols.values())))
+        cols.update({k: [run.column(k)[0].as_py()] * m for k in keys})
+        rows += zip(*(cols[f.name] for f in fields))
+    return local_frame(df.sparkSession, rows, StructType(fields))
 
 
 def key_runs(kdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
@@ -482,8 +542,8 @@ def grouped_apply_sorted(df: DataFrame, keys: Sequence[str], fn,
     keys = list(keys)
     if not keys:
         return df.groupBy().applyInPandas(fn, schema)
-    rep = df.repartition(*[F.col(k) for k in keys]) \
-            .sortWithinPartitions(*keys)
+    quoted = list(map(sql_ident, keys))
+    rep = df.repartition(*quoted).sortWithinPartitions(*quoted)
     return _apply_sorted_runs(rep, keys, fn, schema, per_run)
 
 
@@ -533,21 +593,23 @@ def map_batches(df: DataFrame, fn, schema: StructType) -> DataFrame:
     int64. Timestamps cross as instants whatever the session timezone:
     they arrive tz-aware, and naive values ``fn`` returns are read as UTC
     (``mapInPandas`` reads them as session-local). Empty batches and
-    results are skipped."""
-    int_cols = [f.name for f in df.schema.fields
+    results are skipped. Input is read by position: ``mapInArrow``
+    parses each input name, which a backquote breaks."""
+    names = df.columns
+    int_cols = [i for i, f in enumerate(df.schema.fields)
                 if f.dataType.typeName() in ("long", "integer", "short", "byte")]
 
     def run(batches):
-        import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
         arrow_out = to_arrow_schema(schema)
 
         def to_pdf(ab: "pa.RecordBatch") -> pd.DataFrame:
             pdf = ab.to_pandas()
-            for c in int_cols:
-                col = ab.column(ab.schema.get_field_index(c))
-                if col.null_count:
-                    pdf[c] = col.to_pandas(integer_object_nulls=True)
+            for i in int_cols:
+                if ab.column(i).null_count:
+                    pdf[f"_{i}"] = ab.column(i).to_pandas(
+                        integer_object_nulls=True)
+            pdf.columns = names
             return pdf
 
         for res in fn(to_pdf(ab) for ab in batches if ab.num_rows):
@@ -556,4 +618,5 @@ def map_batches(df: DataFrame, fn, schema: StructType) -> DataFrame:
                                                  preserve_index=False)
 
     run.__name__ = fn.__name__      # the stage's name in EXPLAIN
-    return df.mapInArrow(run, schema)
+    return df.toDF(*(f"_{i}" for i in range(len(names)))).mapInArrow(
+        run, schema)

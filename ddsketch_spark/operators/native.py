@@ -59,7 +59,9 @@ from ddsketch_spark.core.ddsketch import (
     validate_nbuckets,
 )
 from ddsketch_spark.core.hashing import H1_BITS, H64_BITS
-from ddsketch_spark.operators.aggregate import grouped_apply_sorted, key_runs
+from ddsketch_spark.operators.aggregate import (
+    grouped_apply_sorted, key_runs, sql_ident,
+)
 
 _LOG2 = math.log(2.0)
 
@@ -260,7 +262,8 @@ def dd_assemble(pdf: pd.DataFrame, keys: Sequence[str], alpha: float,
 
     pack = struct.Struct(">iqqdiii").pack  # _HEADER (Structs don't pickle)
     runs = np.flatnonzero(count > 0)  # all-NULL groups: no output row
-    out = {k: list(pdf[k].iloc[run_starts[runs]]) for k in keys}
+    # numpy keeps keys >= 2^53 exact: pandas reads [int, None] as float64
+    out = {k: pdf[k].to_numpy()[run_starts[runs]] for k in keys}
     out["sketch"], out["n"] = [], nrows[runs]
     for r in runs:
         if nbk[r] > nbuckets:
@@ -293,13 +296,6 @@ def dd_assemble(pdf: pd.DataFrame, keys: Sequence[str], alpha: float,
 # native partial aggregation, assembled from O(registers) rows per key.
 # ---------------------------------------------------------------------------
 
-def sql_ident(name: str) -> str:
-    """``name`` as one backquoted Spark SQL identifier, whatever it holds
-    (``h-1``, ``my hash``, a backquote) — for every column name pasted
-    into a SQL string or ``F.col``."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def hll_cells(df: DataFrame, hash_col: str, p: int = 12,
               keys: Sequence[str] = ()) -> DataFrame:
     """``keys..., __j, __r, __rows`` — the HLL register cells of ``df``
@@ -312,7 +308,7 @@ def hll_cells(df: DataFrame, hash_col: str, p: int = 12,
     per row on the scan's hot path (identical integers, measured ~9% on
     hll_ndv_orderkeys at sf1.0; stages keep the expression linear so
     codegen never sees an exponential tree)."""
-    keys = list(keys)
+    keys = list(map(sql_ident, keys))
     m = 1 << p
     Q = H64_BITS - p + 1
     h = F.col(sql_ident(hash_col))
@@ -346,7 +342,7 @@ def hll_sketches(cells: DataFrame, keys: Sequence[str],
             pdf["__r"].to_numpy(np.int64)
         cnt = np.add.reduceat(pdf["__rows"].to_numpy(np.int64), run_starts)
         hpack = struct.Struct(">4sBq").pack
-        out = {k: list(pdf[k].iloc[run_starts]) for k in keys}
+        out = {k: pdf[k].to_numpy()[run_starts] for k in keys}
         out["sketch"] = [hpack(b"HLL1", p, int(cnt[r])) + regs[r].tobytes()
                          for r in range(len(run_starts))]
         out["n"] = cnt
@@ -369,12 +365,12 @@ def hll_ndv_native(df: DataFrame, hash_col: str, p: int = 12,
     core.hll.HLL.estimate)."""
     from ddsketch_spark.core.hll import _alpha
 
-    keys = list(keys)
+    quoted = list(map(sql_ident, keys))
     m = 1 << p
     Q = H64_BITS - p + 1
     # same evaluation order as HLL.estimate() and oracles.hll_ndv_sql
     C = _alpha(m) * m * m * float(1 << Q)
-    agg = hll_cells(df, hash_col, p, keys).groupBy(*keys).agg(
+    agg = hll_cells(df, hash_col, p, keys).groupBy(*quoted).agg(
         F.count(F.lit(1)).alias("__np"),
         # coalesce: a global aggregate over an EMPTY input still emits one
         # row (count 0, sum NULL) — 0 keeps the math on the kernel's path
@@ -388,7 +384,7 @@ def hll_ndv_native(df: DataFrame, hash_col: str, p: int = 12,
                  F.lit(float(m))
                  * F.log(F.lit(float(m)) / zeros.cast("double"))
                  ).otherwise(raw)
-    return agg.select(*keys, est.alias(alias))
+    return agg.select(*quoted, est.alias(alias))
 
 
 def hll_agg_native(df: DataFrame, hash_col: str, p: int = 12,
@@ -491,7 +487,7 @@ def _position_cells(df: DataFrame, hash_col: str, k: int, width: int,
     stride of every non-null hash (JVM mirror of core.hashing.positions),
     weighted by ``weight_col`` (NULL => 1) or 1. The one cell projection
     of the batch and windowed CMS and Bloom builds."""
-    keys = list(keys)
+    keys = list(map(sql_ident, keys))
     h1, h2 = _double_hash_sql(hash_col)
     ip = F.expr(f"explode(transform(sequence(0, {k - 1}),"
                 f" i -> struct(i AS i, ({h1} + i * {h2}) % {width} AS pos)))")
@@ -553,7 +549,7 @@ def bloom_cells(df: DataFrame, hash_col: str, nbits: int = 1 << 16,
     set the bit (each non-null hash makes ``k``)."""
     keys = list(keys)
     return (_position_cells(df, hash_col, k, nbits, keys)
-            .groupBy(*keys, "__pos")
+            .groupBy(*map(sql_ident, keys), "__pos")
             .agg(F.count(F.lit(1)).alias("__rows")))
 
 

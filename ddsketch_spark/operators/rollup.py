@@ -16,9 +16,11 @@ answer bit-identical to a direct build at the coarser grain.
 six orders of magnitude smaller than the raw events. Building it is one
 partial-aggregated groupBy over the raw scan (the JVM-native bucket-cell
 path, operators/native.py); every question afterwards touches only the
-tiny table: a rollup is one shuffle of kB rows, and a range query's
-bucket predicate pushes down to the stored table's parquet scan so only
-in-range partials are read at all.
+tiny table: a range query's bucket predicate pushes down to the stored
+table's parquet scan so only in-range partials are read at all, and a
+rollup or range merges those kB rows on the driver (``fold_stored``).
+Past ``aggregate.DRIVER_FOLD_MAX_ROWS`` rows, or over a table still to
+be built, the merge is one shuffle of kB rows.
 
 Stored tables describe themselves: :func:`store_sketch_table` commits a
 manifest (``_sketch_log/<version>.json``: format, schema, data files)
@@ -39,7 +41,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from ddsketch_spark.core.ddsketch import from_bytes as dd_from_bytes
 from ddsketch_spark.operators import api
 from ddsketch_spark.operators.aggregate import (
-    merge_sketches, merge_sketches_extract, quantile_extract,
+    fold_stored, quantile_extract, sql_ident,
 )
 from ddsketch_spark.sources import tables
 
@@ -93,10 +95,10 @@ def build_sketch_table(df: DataFrame, ts_col: str, value_col: str,
     every later rollup/range call over the table — the policy is not
     serialized in the sketch bytes."""
     keys = list(keys)
+    cols = [*keys, value_col] + ([weight_col] if weight_col else [])
     base = df.select(
-        time_bucket(ts_col, granularity_seconds).alias("bucket"),
-        *keys, value_col,
-        *( [weight_col] if weight_col else [] ))
+        time_bucket(F.col(sql_ident(ts_col)), granularity_seconds)
+        .alias("bucket"), *map(sql_ident, cols))
     return api.ddsketch(base, value_col, alpha, nbuckets,
                         keys=["bucket"] + keys, weight_col=weight_col,
                         on_overflow=on_overflow)
@@ -179,8 +181,10 @@ def rollup(sketch_table: DataFrame, coarse_granularity_seconds: int,
     """Coarsen a sketch table: merge fine buckets into
     ``coarse_granularity_seconds`` buckets — ``bucket, keys..., sketch,
     n`` again, so rollups chain (hourly -> daily -> weekly). The merge
-    is the reference's N-way ``ddsketch(sketch)`` per coarse bucket; one
-    shuffle of kilobyte rows."""
+    is the reference's N-way ``ddsketch(sketch)`` per coarse bucket:
+    over stored rows, folded on the driver when called
+    (``aggregate.fold_stored``); past ``aggregate.DRIVER_FOLD_MAX_ROWS``
+    rows, or over a table still to be built, one shuffle of kB rows."""
     g = int(coarse_granularity_seconds)
     _check_multiple(g, int(fine_granularity_seconds))
     keys = list(keys)
@@ -188,9 +192,9 @@ def rollup(sketch_table: DataFrame, coarse_granularity_seconds: int,
         "bucket", F.col("bucket") - F.pmod(F.col("bucket"), F.lit(g)))
     # n_col: a rollup row's n = sum of its children's contributing
     # rows, not the number of merged sketch rows
-    return merge_sketches(coarse, "sketch", keys=["bucket"] + keys,
-                          from_bytes=_deser(on_overflow, from_bytes),
-                          n_col="n" if "n" in sketch_table.columns else None)
+    return fold_stored(coarse, "sketch", ["bucket"] + keys,
+                       _deser(on_overflow, from_bytes),
+                       n_col="n" if "n" in sketch_table.columns else None)
 
 
 def _epoch(t: "int | dt.datetime") -> int:
@@ -214,7 +218,7 @@ def range_percentile(sketch_table: DataFrame, t0, t1, qs: Sequence[float],
     timestamp membership and the answer is bit-identical to sketching the
     raw rows in the range. The bucket predicate is a plain column filter,
     so on a stored table it pushes down to the parquet scan: only
-    in-range kB rows are ever read."""
+    in-range kB rows are ever read, and merged as in :func:`rollup`."""
     e0, e1 = _epoch(t0), _epoch(t1)
     fine = int(fine_granularity_seconds)
     if e0 % fine or e1 % fine:
@@ -234,9 +238,8 @@ def range_percentile(sketch_table: DataFrame, t0, t1, qs: Sequence[float],
         g = int(partition_granularity_seconds)
         in_range = in_range.where(
             (F.col("pbucket") >= (e0 // g) * g) & (F.col("pbucket") < e1))
-    return merge_sketches_extract(
-        in_range, "sketch", list(keys),
-        *quantile_extract(qs), from_bytes=_deser(on_overflow))
+    return fold_stored(in_range, "sketch", keys, _deser(on_overflow),
+                       *quantile_extract(qs))
 
 
 def compact_sketch_table(sketch_table: DataFrame, boundary,
@@ -254,7 +257,8 @@ def compact_sketch_table(sketch_table: DataFrame, boundary,
     keeping full resolution where queries want it; re-compacting later
     with a newer boundary just moves the tier edge (rollups compose).
     ``boundary`` must be aligned to the coarse grain so no coarse bucket
-    straddles the tier edge."""
+    straddles the tier edge. The old region is coarsened by
+    :func:`rollup`: on a stored table, when this is called."""
     e_b = _epoch(boundary)
     fine = int(fine_granularity_seconds)
     coarse = int(coarse_granularity_seconds)
@@ -267,8 +271,8 @@ def compact_sketch_table(sketch_table: DataFrame, boundary,
     keys = list(keys)
     # n (lineage row count) is optional, mirroring rollup()'s contract —
     # a sketch table built without lineage compacts fine (r5 ADVICE)
-    cols = (["bucket"] + keys + ["sketch"]
-            + (["n"] if "n" in sketch_table.columns else []))
+    cols = [sql_ident(c) for c in ["bucket", *keys, "sketch"]
+            + (["n"] if "n" in sketch_table.columns else [])]
     old = sketch_table.where(F.col("bucket") < e_b).select(*cols)
     recent = sketch_table.where(F.col("bucket") >= e_b).select(*cols)
     compacted = rollup(old, coarse, fine, keys,
@@ -292,7 +296,8 @@ def range_percentile_tiered(tiered: DataFrame, t0, t1, qs: Sequence[float],
     gran <= t1`` — so each edge must be aligned to the grain of the TIER
     it falls in (coarse-aligned below ``boundary``, fine-aligned above),
     or the straddled bucket's rows would be silently dropped. Validated
-    up front; the data itself never needs rescanning."""
+    up front; the data itself never needs rescanning. Merged as in
+    :func:`rollup`."""
     e0, e1 = _epoch(t0), _epoch(t1)
     e_b = _epoch(boundary)
     fine = int(fine_granularity_seconds)
@@ -310,6 +315,5 @@ def range_percentile_tiered(tiered: DataFrame, t0, t1, qs: Sequence[float],
     in_range = tiered.where(
         (F.col("bucket") >= e0)
         & ((F.col("bucket") + F.col("gran")) <= e1))
-    return merge_sketches_extract(
-        in_range, "sketch", list(keys),
-        *quantile_extract(qs), from_bytes=_deser(on_overflow))
+    return fold_stored(in_range, "sketch", keys, _deser(on_overflow),
+                       *quantile_extract(qs))

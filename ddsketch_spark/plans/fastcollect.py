@@ -139,17 +139,16 @@ class FastCollectDataFrame(_ClassicDataFrame):
             fast = _fast_schema_ok(schema)
         except Exception:
             fast = False   # let the stock path surface the analysis error
+        # the stock path keeps the collector on (a pause is process-wide)
         if not fast:
-            with _gc_paused():
-                return super().collect()
+            return super().collect()
         try:
             tbl = self.toArrow()
         except CapturedException:
             raise   # the query itself failed: running it again fails again
         except Exception:
             # Arrow transfer hiccup: the stock path is the contract
-            with _gc_paused():
-                return super().collect()
+            return super().collect()
         names = list(tbl.column_names)
         row_cls = type("Row", (Row,), {
             "__fields__": names, "__slots__": (), "__new__": tuple.__new__,

@@ -35,3 +35,27 @@ def local_frame(spark: SparkSession, rows: Sequence[Sequence],
         arrays.append(pa.array(col, type=to_arrow_type(f.dataType)))
     return spark.createDataFrame(
         pa.Table.from_arrays(arrays, names=schema.names), schema)
+
+
+def bounded_arrow(df: DataFrame, max_rows: int) -> pa.Table | None:
+    """``df.toArrow()`` if ``df`` has at most ``max_rows`` rows, else
+    None: one ``limit(max_rows + 1)`` job, so more never reach the driver."""
+    tbl = df.limit(max_rows + 1).toArrow()
+    return tbl if tbl.num_rows <= max_rows else None
+
+
+# plan nodes that read stored or in-memory rows, or only filter, project
+# or union them: such a plan runs again at the price of a scan
+_SCAN_ONLY = {"LogicalRelation", "LocalRelation", "Project", "Filter",
+              "Union"}
+
+
+def scan_only(df: DataFrame) -> bool:
+    """True when ``df``'s optimized plan holds ``_SCAN_ONLY`` nodes only:
+    no aggregate, join or Python stage to build again. Never streaming."""
+    nodes = [] if df.isStreaming else [
+        df._jdf.queryExecution().optimizedPlan()]
+    for node in nodes:      # grows as it is walked: every descendant
+        kids = node.children()
+        nodes += [kids.apply(i) for i in range(kids.size())]
+    return bool(nodes) and {n.nodeName() for n in nodes} <= _SCAN_ONLY

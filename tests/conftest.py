@@ -21,3 +21,34 @@ def jobs_in_group(spark):
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     return count
+
+
+# any Python stage or UDF node in a formatted plan
+PYTHON_NODE = r"Python|Pandas|MapIn"
+
+
+@pytest.fixture
+def fetch_plans(monkeypatch):
+    """The formatted plans of the frames ``operators.aggregate.fold_stored``
+    fetches to the driver, in call order."""
+    from ddsketch_spark.operators import aggregate
+
+    plans = []
+    fetch = aggregate.bounded_arrow
+
+    def recording(df, max_rows):
+        plans.append(df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"))
+        return fetch(df, max_rows)
+
+    monkeypatch.setattr(aggregate, "bounded_arrow", recording)
+    return plans
+
+
+@pytest.fixture
+def executor_merge(monkeypatch):
+    """Sends every ``fold_stored`` call to its executor plan: a bound of
+    0 rows is exceeded by any non-empty input."""
+    from ddsketch_spark.operators import aggregate
+
+    monkeypatch.setattr(aggregate, "DRIVER_FOLD_MAX_ROWS", 0)

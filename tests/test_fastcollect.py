@@ -184,3 +184,29 @@ def test_arrow_transfer_error_falls_back(spark, monkeypatch):
 
     monkeypatch.setattr(FastCollectDataFrame, "toArrow", broken_to_arrow)
     _assert_identical(df.collect(), ref)
+
+
+@pytest.mark.parametrize("cause", ["schema", "arrow"])
+def test_fallback_collect_keeps_the_collector_on(spark, monkeypatch, cause):
+    """The stock collect of a fallback runs with the cyclic collector
+    enabled; only the fast path's Row construction pauses it."""
+    import gc
+
+    seen = []
+    stock = ClassicDF.collect
+
+    def recording(self):
+        seen.append(gc.isenabled())
+        return stock(self)
+
+    col = F.col("id")
+    df = fast_collect(spark.range(3).select(
+        col.cast("decimal(10,2)") if cause == "schema" else col))
+    if cause == "arrow":
+        def broken_to_arrow(self):
+            raise RuntimeError("arrow hiccup")
+
+        monkeypatch.setattr(FastCollectDataFrame, "toArrow", broken_to_arrow)
+    monkeypatch.setattr(ClassicDF, "collect", recording)
+    assert gc.isenabled()
+    assert len(df.collect()) == 3 and seen == [True]

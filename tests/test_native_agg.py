@@ -506,17 +506,31 @@ def test_hostile_ddsketch_column_names(spark, sibling_data, names):
                         (F.col("k") + 1).alias(weight))
 
     def builds(d, k, v, w):
-        out = [dd_cells(d, v, ALPHA, [k], w, _extrema=True),
-               ddsketch_agg_native(d, v, ALPHA, NB, weight_col=w)]
-        # a key holding a backquote cannot enter a Python stage: PySpark's
-        # mapInArrow looks its input columns up by unquoted name
-        if "`" not in key:
-            out.append(ddsketch_agg_native(d, v, ALPHA, NB, keys=[k],
-                                           weight_col=w))
-        return out
+        return [dd_cells(d, v, ALPHA, [k], w, _extrema=True),
+                ddsketch_agg_native(d, v, ALPHA, NB, weight_col=w),
+                ddsketch_agg_native(d, v, ALPHA, NB, keys=[k], weight_col=w)]
 
     for want, got in zip(builds(plain, "k", "v", "w"),
                          builds(hostile, key, value, weight)):
+        assert sorted(map(tuple, got.collect())) == \
+            sorted(map(tuple, want.collect()))
+
+
+@pytest.mark.parametrize("key", ["h-1", "a`b", "my v"])
+def test_hostile_key_names_every_keyed_native(sibling_data, key):
+    """Every keyed ``*_agg_native`` (and ``hll_ndv_native``) takes a key
+    named ``h-1``, ``a`b`` or ``my v``: its Python stage reads columns by
+    position, and its projections quote the name. Same rows as under the
+    plain key ``k``."""
+    from ddsketch_spark.operators.native import hll_ndv_native
+
+    df, _ = sibling_data
+    hostile = df.withColumnRenamed("k", key)
+    for build in [lambda d, k, kind=kind: _native_build(kind, d, [k])
+                  for kind in ("dd", "hll", "cms", "bloom")] + [
+            lambda d, k: hll_ndv_native(d, "h", p=10, keys=[k])]:
+        got, want = build(hostile, key), build(df, "k")
+        assert got.columns == [key] + want.columns[1:]
         assert sorted(map(tuple, got.collect())) == \
             sorted(map(tuple, want.collect()))
 

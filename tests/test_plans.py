@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ddsketch_spark.operators.native import ddsketch_agg_native
 from ddsketch_spark.operators.similarity import cosine_topk
+from tests.conftest import PYTHON_NODE
 
 
 def _calls_outside(pattern: str, allowed: set) -> list[str]:
@@ -88,6 +89,34 @@ def test_local_frame_equals_a_list_frame(spark):
     assert got.collect() == want.collect()
     empty = local_frame(spark, [], want.schema)
     assert empty.schema == want.schema and empty.collect() == []
+
+
+def test_bounded_arrow_returns_none_past_its_bound(spark):
+    """``bounded_arrow`` fetches a frame of at most ``max_rows`` rows,
+    and answers None for one row more."""
+    from ddsketch_spark.plans.local import bounded_arrow
+
+    df = spark.range(5)
+    assert bounded_arrow(df, 5).column("id").to_pylist() == [0, 1, 2, 3, 4]
+    assert bounded_arrow(df, 4) is None
+    assert bounded_arrow(df.where("id < 0"), 0).num_rows == 0
+
+
+def test_scan_only_reads_stored_or_local_rows(spark, tmp_path):
+    """``scan_only`` holds for filters, projections and unions of stored
+    or local rows, and not for an aggregate or a streaming frame."""
+    from ddsketch_spark.plans.local import local_frame, scan_only
+
+    spark.range(10).write.parquet(str(tmp_path / "t"))
+    stored = spark.read.parquet(str(tmp_path / "t"))
+    local = local_frame(spark, [(1,)], "id long")
+    assert scan_only(stored.where("id > 2").select((F.col("id") + 1)
+                                                   .alias("id")))
+    assert scan_only(stored.unionByName(local))
+    assert not scan_only(stored.groupBy("id").count())
+    stream = spark.readStream.schema(stored.schema).parquet(
+        str(tmp_path / "t"))
+    assert not scan_only(stream)
 
 
 def _plan(df) -> str:
@@ -363,13 +392,11 @@ def test_cms_bloom_probe_native_pure_jvm_and_kernel_equal(spark):
     assert [sgot[f"member_{j}"] for j in range(3)] == [bool(x) for x in swant]
 
 
-def test_rollup_range_filter_pushes_to_stored_scan(spark, pages_path,
-                                                   tmp_path_factory):
-    """The rollup layer's 100 TB claim: a range query over a STORED
-    sketch table must push its bucket predicate into the parquet scan
-    (only in-range kB rows read) and must not rescan the raw corpus."""
-    from ddsketch_spark.operators.rollup import (
-        build_sketch_table, range_percentile)
+@pytest.fixture(scope="module")
+def stored_hourly(spark, pages_path, tmp_path_factory):
+    """``(stored hourly x lang sketch table, first whole day)`` of the
+    pages, written as plain parquet."""
+    from ddsketch_spark.operators.rollup import build_sketch_table
 
     docs = spark.read.parquet(pages_path).select(
         "warc_ts", "lang", F.length("text").cast("double").alias("v"))
@@ -379,7 +406,18 @@ def test_rollup_range_filter_pushes_to_stored_scan(spark, pages_path,
     hourly.write.parquet(store)
     stored = spark.read.parquet(store)
     lo = stored.agg(F.min("bucket")).first()[0]
-    t0 = (lo // 86400) * 86400 + 86400
+    return stored, (lo // 86400) * 86400 + 86400
+
+
+def test_rollup_range_filter_pushes_to_stored_scan(stored_hourly,
+                                                   executor_merge):
+    """The rollup layer's 100 TB claim: a range query over a STORED
+    sketch table must push its bucket predicate into the parquet scan
+    (only in-range kB rows read) and must not rescan the raw corpus.
+    This is the executor merge, taken past the driver-fold bound."""
+    from ddsketch_spark.operators.rollup import range_percentile
+
+    stored, t0 = stored_hourly
     q = range_percentile(stored, t0, t0 + 2 * 86400, [0.5], 3600,
                          keys=["lang"])
     plan = _plan(q)
@@ -391,10 +429,48 @@ def test_rollup_range_filter_pushes_to_stored_scan(spark, pages_path,
     assert "text" not in re.search(r"ReadSchema: ([^\n]+)", plan).group(1)
 
 
-def test_rollup_is_single_shuffle_of_sketch_rows(spark, pages_path):
+def test_range_driver_fold_fetches_from_stored_scan(stored_hourly,
+                                                    fetch_plans):
+    """Under the driver-fold bound a range query fetches the in-range
+    stored rows with the same pushed-down scan and no Python node, and
+    its result is a local relation."""
+    from ddsketch_spark.operators.rollup import range_percentile
+
+    stored, t0 = stored_hourly
+    q = range_percentile(stored, t0, t0 + 2 * 86400, [0.5], 3600,
+                         keys=["lang"])
+    (plan,) = fetch_plans
+    assert re.search(r"PushedFilters: \[.*GreaterThanOrEqual\(bucket",
+                     plan), plan
+    assert re.search(r"PushedFilters: \[.*LessThan\(bucket", plan), plan
+    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
+    assert not re.search(PYTHON_NODE, plan), plan
+    assert q._jdf.queryExecution().executedPlan().nodeName() == \
+        "LocalTableScan"
+
+
+def test_rollup_driver_fold_reads_stored_rows_only(stored_hourly,
+                                                   fetch_plans):
+    """Coarsening a stored table under the driver-fold bound fetches its
+    kB rows in one scan with no shuffle and no Python node, and the
+    result is a local relation."""
+    from ddsketch_spark.operators.rollup import rollup
+
+    stored, _ = stored_hourly
+    daily = rollup(stored, 86400, 3600, keys=["lang"])
+    (plan,) = fetch_plans
+    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
+    assert "Exchange" not in plan and not re.search(PYTHON_NODE, plan), plan
+    assert daily._jdf.queryExecution().executedPlan().nodeName() == \
+        "LocalTableScan"
+
+
+def test_rollup_is_single_shuffle_of_sketch_rows(spark, pages_path,
+                                                 executor_merge):
     """Coarsening hourly -> daily shuffles only the kB sketch rows: one
     Exchange, keyed by (coarse bucket, lang), with the raw corpus scanned
-    exactly once upstream (by the table build, not the rollup)."""
+    exactly once upstream (by the table build, not the rollup). This is
+    the executor merge, taken past the driver-fold bound."""
     from ddsketch_spark.operators.rollup import build_sketch_table, rollup
 
     docs = spark.read.parquet(pages_path).select(

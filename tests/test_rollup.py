@@ -13,11 +13,13 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from ddsketch_spark.operators import aggregate
 from ddsketch_spark.operators.api import ddsketch as dd_api
 from ddsketch_spark.operators.rollup import (
     build_sketch_table, range_percentile, read_sketch_table, rollup,
     store_sketch_table, time_bucket,
 )
+from tests.conftest import PYTHON_NODE
 
 ALPHA, NB = 0.05, 1024
 HOUR, DAY = 3600, 86400
@@ -163,20 +165,26 @@ def test_streaming_maintained_table_feeds_rollup(spark, events, tmp_path):
         by_key(ddirect, ["bucket", "etype"])
 
 
-def test_partitioned_store_prunes_and_matches(spark, events, tmp_path):
-    """store_sketch_table writes day-partitioned directories; a range
-    query given the partition grain returns the identical answer AND its
-    scan prunes to the in-range partitions only."""
-    import re
-
-    from ddsketch_spark.operators.rollup import (
-        read_sketch_table, store_sketch_table)
-
+@pytest.fixture(scope="module")
+def day_store(spark, events, tmp_path_factory):
+    """``(hourly sketch table, its day-partitioned stored copy's path)``."""
     df, _ = events
     hourly = build_sketch_table(df, "ts", "v", ALPHA, NB, HOUR,
                                 keys=["etype"])
-    path = str(tmp_path / "stored")
+    path = str(tmp_path_factory.mktemp("days") / "stored")
     store_sketch_table(hourly, path, partition_granularity_seconds=DAY)
+    return hourly, path
+
+
+def test_partitioned_store_prunes_and_matches(spark, day_store,
+                                              executor_merge):
+    """store_sketch_table writes day-partitioned directories; a range
+    query given the partition grain returns the identical answer AND its
+    scan prunes to the in-range partitions only. This is the executor
+    merge, taken past the driver-fold bound."""
+    import re
+
+    hourly, path = day_store
     stored = read_sketch_table(spark, path)
     assert "pbucket" in stored.columns
 
@@ -194,6 +202,69 @@ def test_partitioned_store_prunes_and_matches(spark, events, tmp_path):
         pruned._jdf.queryExecution(), "formatted")
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "pbucket" in m.group(1), plan[:2000]
+
+
+def test_partitioned_store_driver_fold_prunes_and_matches(spark, day_store,
+                                                          fetch_plans):
+    """Under the driver-fold bound the same range query gives the same
+    answer; its fetch prunes to the in-range partitions, pushes the
+    bucket bounds, reads the stored table only and runs no Python."""
+    import re
+
+    hourly, path = day_store
+    t0, t1 = T0 + dt.timedelta(days=2), T0 + dt.timedelta(days=5)
+    pruned = range_percentile(read_sketch_table(spark, path), t0, t1,
+                              [0.5, 0.9], HOUR, keys=["etype"],
+                              partition_granularity_seconds=DAY)
+    plan = fetch_plans[0]
+    plain = range_percentile(hourly, t0, t1, [0.5, 0.9], HOUR,
+                             keys=["etype"])
+    gp = {(r["etype"], r["q"]): r["est"] for r in pruned.collect()}
+    gd = {(r["etype"], r["q"]): r["est"] for r in plain.collect()}
+    assert gp == gd and len(gp) == 6
+
+    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
+    assert m and "pbucket" in m.group(1), plan
+    assert re.search(r"PushedFilters: \[.*GreaterThanOrEqual\(bucket",
+                     plan), plan
+    assert re.search(r"PushedFilters: \[.*LessThan\(bucket", plan), plan
+    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
+    assert not re.search(PYTHON_NODE, plan), plan
+    assert pruned._jdf.queryExecution().executedPlan().nodeName() == \
+        "LocalTableScan"
+
+
+@pytest.mark.parametrize("bound", [None, 0], ids=["driver", "executor"])
+def test_range_reads_no_out_of_range_day(spark, day_store, tmp_path,
+                                         monkeypatch, bound):
+    """Pruning without reading a plan: once every day file outside the
+    range holds garbage, the range still gives its answer, on the driver
+    fold and on the executor merge alike."""
+    import glob
+
+    _, golden = day_store
+    path = str(tmp_path / "stored")
+    shutil.copytree(golden, path)
+    if bound is not None:
+        monkeypatch.setattr(aggregate, "DRIVER_FOLD_MAX_ROWS", bound)
+    t0, t1 = T0 + dt.timedelta(days=2), T0 + dt.timedelta(days=5)
+
+    def answer():
+        return sorted(map(tuple, range_percentile(
+            read_sketch_table(spark, path), t0, t1, [0.5, 0.9], HOUR,
+            keys=["etype"], partition_granularity_seconds=DAY).collect()))
+
+    want = answer()
+    lo, hi = int(t0.timestamp()), int(t1.timestamp())
+    spoiled = [f for f in glob.glob(os.path.join(path, "pbucket=*", "*"))
+               if not lo <= int(f.split("pbucket=")[1].split(os.sep)[0]) < hi]
+    for f in spoiled:
+        with open(f, "wb") as out:
+            out.write(b"not a parquet file")
+    assert len(spoiled) >= 7 and len(want) == 6
+    assert answer() == want
+    with pytest.raises(Exception):      # the garbage is unreadable
+        read_sketch_table(spark, path).collect()
 
 
 def test_compact_without_lineage_n(spark, events):
@@ -484,3 +555,190 @@ def test_directory_without_manifest_raises(spark, tmp_path):
     _days_table(spark, 1).write.parquet(path)
     with pytest.raises(FileNotFoundError, match="plain"):
         read_sketch_table(spark, path)
+
+
+# -------------------------------------------------------------- driver fold
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def _node(df):
+    return df._jdf.queryExecution().executedPlan().nodeName()
+
+
+def _in_memory(df):
+    """``df``'s rows as an in-memory local relation: a table already
+    built, as a stored one is, so questions over it fold on the driver."""
+    return df.sparkSession.createDataFrame(df.toArrow(), df.schema)
+
+
+def _both_paths(monkeypatch, question):
+    """``(driver fold, executor merge)`` results of ``question()``."""
+    driver = question()
+    with monkeypatch.context() as m:
+        m.setattr(aggregate, "DRIVER_FOLD_MAX_ROWS", 0)
+        executor = question()
+    assert _node(driver) == "LocalTableScan" != _node(executor)
+    return driver, executor
+
+
+def test_driver_fold_equals_executor_merge(spark, monkeypatch):
+    """The driver fold gives the executor merge's schema and rows: a
+    NULL key is a run of its own, and int64 keys past 2^53 beside it stay
+    distinct and exact. Merged bytes, summed or counted ``n``, and
+    extracted quantiles alike."""
+    from ddsketch_spark.operators.aggregate import (
+        fold_stored, quantile_extract)
+
+    big = 2 ** 53
+    ks = [None, big + 1, big + 2, 7]
+    rng = np.random.default_rng(3)
+    raw = spark.createDataFrame(
+        [(ks[i % 4], i % 3, float(v))
+         for i, v in enumerate(rng.lognormal(2.0, 1.0, 600))],
+        "k long, part int, v double")
+    table = _in_memory(dd_api(raw, "v", ALPHA, NB, keys=["part", "k"]))
+    extract, fields = quantile_extract([0.5, 0.99])
+    for question in (
+            lambda: fold_stored(table, "sketch", ["k"]),
+            lambda: fold_stored(table, "sketch", ["k"], n_col="n"),
+            lambda: fold_stored(table, "sketch", ["k"], extract=extract,
+                                out_fields=fields)):
+        driver, executor = _both_paths(monkeypatch, question)
+        assert driver.schema == executor.schema
+        assert _rows(driver) == _rows(executor)
+        assert {r["k"] for r in driver.collect()} == set(ks)
+
+
+def test_driver_fold_reconciles_collapse_levels(spark, events, monkeypatch):
+    """A collapse-mode table whose hourly partials collapsed a different
+    number of times rolls up to the executor merge's bytes."""
+    from ddsketch_spark.core.ddsketch import from_bytes
+
+    df, _ = events
+    wide = df.withColumn(
+        "v", F.when(F.col("v").isNotNull(),
+                    F.pow(F.col("v") + 1.0, 5.0)).otherwise(F.lit(None)))
+    hourly = _in_memory(build_sketch_table(
+        wide, "ts", "v", 0.01, 32, HOUR, keys=["etype"],
+        on_overflow="collapse"))
+    alphas = {}
+    for r in hourly.collect():
+        day = (r["bucket"] - r["bucket"] % DAY, r["etype"])
+        alphas.setdefault(day, set()).add(
+            from_bytes(bytes(r["sketch"]), "collapse").alpha)
+    assert any(len(a) > 1 for a in alphas.values())
+    driver, executor = _both_paths(monkeypatch, lambda: rollup(
+        hourly, DAY, HOUR, keys=["etype"], on_overflow="collapse"))
+    assert by_key(driver, ["bucket", "etype"]) == \
+        by_key(executor, ["bucket", "etype"])
+
+
+def test_driver_fold_hll_rollup(spark, events, monkeypatch):
+    """A rollup through another kernel's ``from_bytes`` (HLL register
+    max) folds on the driver to the executor merge's bytes."""
+    from ddsketch_spark.core import hll as hll_mod
+    from ddsketch_spark.core.hashing import spark_h64
+    from ddsketch_spark.operators.native import hll_agg_native
+
+    df, _ = events
+    hashed = df.select(
+        time_bucket("ts", HOUR).alias("bucket"), "etype",
+        spark_h64(F.col("v").cast("string")).alias("__h"))
+    hourly = _in_memory(
+        hll_agg_native(hashed, "__h", p=10, keys=["bucket", "etype"]))
+    driver, executor = _both_paths(monkeypatch, lambda: rollup(
+        hourly, DAY, HOUR, keys=["etype"], from_bytes=hll_mod.from_bytes))
+    got = by_key(driver, ["bucket", "etype"])
+    assert got == by_key(executor, ["bucket", "etype"]) and len(got) >= 20
+
+
+def test_driver_fold_empty_range(spark, day_store):
+    """A range holding no stored row gives zero rows with the executor
+    plan's schema."""
+    from ddsketch_spark.operators.aggregate import (
+        merge_sketches_extract, quantile_extract)
+
+    _, path = day_store
+    stored = read_sketch_table(spark, path)
+    t0 = T0 + dt.timedelta(days=40)
+    got = range_percentile(stored, t0, t0 + dt.timedelta(days=1), [0.5],
+                           HOUR, keys=["etype"],
+                           partition_granularity_seconds=DAY)
+    lazy = merge_sketches_extract(stored.where(F.lit(False)), "sketch",
+                                  ["etype"], *quantile_extract([0.5]))
+    assert _node(got) == "LocalTableScan"
+    assert got.schema == lazy.schema and got.collect() == []
+
+
+def test_streaming_frame_takes_executor_merge(spark, day_store, tmp_path,
+                                              fetch_plans):
+    """A streaming sketch table is never fetched: the rollup is the
+    executor plan, still a streaming frame."""
+    hourly, _ = day_store
+    src = str(tmp_path / "src")
+    hourly.write.parquet(src)
+    stream = spark.readStream.schema(hourly.schema).parquet(src)
+    daily = rollup(stream, DAY, HOUR, keys=["etype"])
+    assert daily.isStreaming and fetch_plans == []
+
+
+def test_built_table_takes_executor_merge(spark, day_store, fetch_plans):
+    """A table still to be built is never fetched: a fetch past the bound
+    would build it twice, so its questions are the executor plan."""
+    hourly, _ = day_store
+    daily = rollup(hourly, DAY, HOUR, keys=["etype"])
+    t0 = T0 + dt.timedelta(days=2)
+    rng = range_percentile(hourly, t0, t0 + dt.timedelta(days=3), [0.5],
+                           HOUR, keys=["etype"])
+    assert fetch_plans == []
+    assert _node(daily) != "LocalTableScan" != _node(rng)
+    assert by_key(daily, ["bucket", "etype"]) == by_key(
+        rollup(_in_memory(hourly), DAY, HOUR, keys=["etype"]),
+        ["bucket", "etype"])
+
+
+def test_one_row_past_the_bound_takes_executor_merge(spark, day_store,
+                                                     monkeypatch):
+    """A table of exactly ``DRIVER_FOLD_MAX_ROWS`` rows folds on the
+    driver; one row more takes the executor merge, with the same rows."""
+    hourly = _in_memory(day_store[0])
+    n = hourly.count()
+    results = []
+    for bound, local in ((n, True), (n - 1, False)):
+        monkeypatch.setattr(aggregate, "DRIVER_FOLD_MAX_ROWS", bound)
+        daily = rollup(hourly, DAY, HOUR, keys=["etype"])
+        assert (_node(daily) == "LocalTableScan") is local
+        results.append(_rows(daily))
+    assert results[0] == results[1] and len(results[0]) >= 20
+
+
+def _key_questions(df, key):
+    """A daily rollup and a 3-day range over ``df``'s hourly table."""
+    hourly = _in_memory(
+        build_sketch_table(df, "ts", "v", ALPHA, NB, HOUR, keys=[key]))
+    t0, t1 = T0 + dt.timedelta(days=2), T0 + dt.timedelta(days=5)
+    return [rollup(hourly, DAY, HOUR, keys=[key]),
+            range_percentile(hourly, t0, t1, [0.5], HOUR, keys=[key])]
+
+
+@pytest.fixture(scope="module")
+def plain_key_answers(events):
+    return [(q.columns, _rows(q)) for q in _key_questions(events[0], "etype")]
+
+
+@pytest.mark.parametrize("name", ["h-1", "a`b", "my v"])
+@pytest.mark.parametrize("bound", [None, 0], ids=["driver", "executor"])
+def test_hostile_key_names(events, plain_key_answers, monkeypatch, name,
+                           bound):
+    """A key named ``h-1``, ``a`b`` or ``my v`` builds, rolls up and
+    answers a range on the driver fold and on the executor merge, as the
+    plain key ``etype`` does."""
+    if bound is not None:
+        monkeypatch.setattr(aggregate, "DRIVER_FOLD_MAX_ROWS", bound)
+    hostile = events[0].withColumnRenamed("etype", name)
+    got = _key_questions(hostile, name)
+    for q, (columns, rows) in zip(got, plain_key_answers):
+        assert q.columns == [name if c == "etype" else c for c in columns]
+        assert _rows(q) == rows

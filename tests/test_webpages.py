@@ -257,6 +257,17 @@ def test_finalize_submits_no_spark_job(spark, tmp_path, jobs_in_group):
     assert again["result"].collect() == first["result"].collect()
 
 
+def test_zero_batches_finalize_empty(spark, tmp_path):
+    """``n_batches=0`` is a complete job with no partials: an empty
+    result with the result schema, and zero rows of lineage."""
+    out = run_job(spark, lambda b: None, str(tmp_path / "ckpt"),
+                  n_batches=0)
+    m = out["metrics"]
+    assert m["complete"] and out["result"].collect() == []
+    assert out["result"].columns == ["lang", "n", "q", "est"]
+    assert (m["rows"], m["v_min"], m["v_max"]) == (0, None, None)
+
+
 def test_driver_finalize_matches_spark_merge(spark, tmp_path):
     """The driver finalize equals the Spark finalize it replaced
     (``merge_partials`` + ``sketch_quantile`` over the same checkpoint)
