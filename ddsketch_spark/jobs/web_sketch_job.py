@@ -27,18 +27,23 @@ Architecture (SURVEY §3.2 + §7.1 step 5):
    (operators/native.dd_assemble), reduces ``v_min``/``v_max`` per key
    from the cells, and writes those rows — plus lineage (batch id, row
    count, wall seconds) — with pyarrow as one file,
-   ``checkpoint_dir/batch=K/part-00000.parquet``, then creates ``_SUCCESS``
-   last; a ``batch=K`` left without ``_SUCCESS`` by a killed run is removed
-   and replayed. The driver holds one batch's cells, at most keys x
-   distinct bucket indexes rows (a few thousand for a low-cardinality
-   key), and a key whose buckets exceed ``nbuckets`` raises the kernel's
-   "bucket overflow" error there. Map-side partial aggregation bounds
-   the shuffle to O(keys x nbuckets) rows per map task; Zipf-skewed keys
-   cannot create a hot reduce key because bucket rows, not raw rows, are
-   shuffled. The batch loop is the two-round merge: batch-local partials
-   first, tiny global merge last.
-3. Finalize runs on the driver and submits no Spark job: it reads the
-   checkpoint files, folds each key's sketches
+   ``checkpoint_dir/batch=K/part-00000.parquet``. The driver holds one
+   batch's cells, at most keys x distinct bucket indexes rows (a few
+   thousand for a low-cardinality key), and a key whose buckets exceed
+   ``nbuckets`` raises the kernel's "bucket overflow" error there.
+   Map-side partial aggregation bounds the shuffle to O(keys x nbuckets)
+   rows per map task; Zipf-skewed keys cannot create a hot reduce key
+   because bucket rows, not raw rows, are shuffled. The batch loop is
+   the two-round merge: batch-local partials first, tiny global merge
+   last.
+3. Each written batch is committed as one version of the checkpoint's
+   log (sources/tables.commit, under the directory's local ``file:``
+   URI), whose entry names every finished batch file. A batch is done
+   if and only if the newest entry names it, so a ``batch=K`` that a
+   killed run left uncommitted is replaced and replayed, never merged.
+   A ``run_job`` call reads the log once and lists no directory.
+4. Finalize runs on the driver and submits no Spark job: it reads the
+   files the log names, folds each key's sketches
    (operators/aggregate.fold_key_runs — exact, DDSketch is fully
    mergeable), extracts quantiles with the row function the quantile UDF
    runs (functions/rows.dd_quantile), so estimates are bit-identical, and
@@ -49,7 +54,7 @@ Architecture (SURVEY §3.2 + §7.1 step 5):
    already require. ``checkpoint_dir`` is a POSIX path.
 
 Killing the job between batches loses nothing; killing mid-batch loses only
-that batch's work (no batch dir counts without _SUCCESS).
+that batch's work.
 """
 
 from __future__ import annotations
@@ -66,6 +71,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import DoubleType, LongType, StringType, StructType
 
 from ddsketch_spark.core.ddsketch import (
@@ -75,7 +81,7 @@ from ddsketch_spark.functions.rows import dd_quantile
 from ddsketch_spark.operators.aggregate import fold_key_runs, sql_ident
 from ddsketch_spark.operators.native import dd_assemble, dd_cells
 from ddsketch_spark.plans.local import local_frame
-from ddsketch_spark.sources.tables import parquet_schema
+from ddsketch_spark.sources import tables
 
 DEFAULT_QS = [0.5, 0.9, 0.99]
 
@@ -114,21 +120,13 @@ def file_batches(spark: SparkSession, path: str,
     def provider(b: int) -> DataFrame:
         nonlocal schema
         if schema is None:
-            schema = parquet_schema(spark, files[0])
+            schema = tables.parquet_schema(spark, files[0])
         reader = spark.read.schema(schema)
         if not groups[b]:
             return reader.parquet(*files).limit(0)
         return reader.parquet(*groups[b])
 
     return provider
-
-
-def _batch_dir(checkpoint_dir: str, b: int) -> str:
-    return os.path.join(checkpoint_dir, f"batch={b}")
-
-
-def _batch_done(checkpoint_dir: str, b: int) -> bool:
-    return os.path.exists(os.path.join(_batch_dir(checkpoint_dir, b), "_SUCCESS"))
 
 
 def _batch_schema(key: str) -> pa.Schema:
@@ -139,30 +137,31 @@ def _batch_schema(key: str) -> pa.Schema:
 
 
 def _write_batch(checkpoint_dir: str, b: int, rows: list[dict],
-                 key: str) -> None:
-    """One parquet file, then ``_SUCCESS``; a stale dir is replaced, never
-    merged. No dictionary and no statistics on the sketch blobs: their
-    page-header min/max would add about half again to the file."""
-    pdir = _batch_dir(checkpoint_dir, b)
+                 key: str) -> str:
+    """One parquet file, named relative to ``checkpoint_dir``; a stale
+    dir is replaced, never merged. No dictionary and no statistics on
+    the sketch blobs: their page-header min/max would add about half
+    again to the file."""
+    name = f"batch={b}/part-00000.parquet"
+    pdir = os.path.join(checkpoint_dir, f"batch={b}")
     shutil.rmtree(pdir, ignore_errors=True)
     os.makedirs(pdir)
     schema = _batch_schema(key)
     pq.write_table(pa.Table.from_pylist(rows, schema=schema),
-                   os.path.join(pdir, "part-00000.parquet"),
+                   os.path.join(checkpoint_dir, name),
                    use_dictionary=False,
                    write_statistics=[c for c in schema.names if c != "sketch"])
-    open(os.path.join(pdir, "_SUCCESS"), "w").close()
+    return name
 
 
-def _finalize(spark: SparkSession, checkpoint_dir: str, n_batches: int,
+def _finalize(spark: SparkSession, checkpoint_dir: str, files: list[str],
               key: str, qs) -> tuple[DataFrame, dict]:
-    """Merge the checkpointed partials per key (NULL is a key of its own)
+    """Merge the committed partials per key (NULL is a key of its own)
     on the driver with the library's one driver fold; no Spark job runs."""
     parts = pa.concat_tables(
         [_batch_schema(key).empty_table()]
-        + [pq.ParquetFile(f).read() for b in range(n_batches)
-           for f in sorted(glob.glob(os.path.join(
-               _batch_dir(checkpoint_dir, b), "*.parquet")))])
+        + [pq.ParquetFile(os.path.join(checkpoint_dir, f)).read()
+           for f in files])
     qs = [float(q) for q in qs]
     out = [(run.column(key)[0].as_py(), sum(run.column("n").to_pylist()), q, e)
            for run, acc in fold_key_runs(parts, [key], from_bytes)
@@ -199,9 +198,12 @@ def run_job(
     validate_alpha(alpha)
     validate_nbuckets(nbuckets)
     t_start = time.perf_counter()
+    log = "file:" + os.path.abspath(checkpoint_dir)
+    entry = tables.read_entry(spark, log)
+    done = {f.split("/")[0]: f for f in (entry["files"] if entry else [])}
     ran, skipped = [], []
     for b in range(n_batches):
-        if _batch_done(checkpoint_dir, b):
+        if f"batch={b}" in done:
             skipped.append(b)
             continue
         if max_batches is not None and len(ran) >= max_batches:
@@ -219,21 +221,23 @@ def run_job(
         wall = round(time.perf_counter() - t0, 3)
         rows = [dict(r, batch=b, wall_s=wall)
                 for r in out.to_dict("records")]
-        _write_batch(checkpoint_dir, b, rows, key)
+        done[f"batch={b}"] = _write_batch(checkpoint_dir, b, rows, key)
+        tables.commit(spark, log, list(done.values()),
+                      from_arrow_schema(_batch_schema(key)))
         ran.append(b)
 
-    done = [b for b in range(n_batches) if _batch_done(checkpoint_dir, b)]
+    files = [done.get(f"batch={b}") for b in range(n_batches)]
     metrics = {
         "batches_total": n_batches,
         "batches_ran": ran,
         "batches_skipped_checkpointed": skipped,
-        "complete": len(done) == n_batches,
+        "complete": None not in files,
         "wall_s": round(time.perf_counter() - t_start, 3),
     }
     if not metrics["complete"]:
         return {"result": None, "metrics": metrics}
 
-    result, lineage = _finalize(spark, checkpoint_dir, n_batches, key, qs)
+    result, lineage = _finalize(spark, checkpoint_dir, files, key, qs)
     metrics.update(lineage)
     return {"result": result, "metrics": metrics}
 

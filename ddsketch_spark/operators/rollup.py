@@ -23,8 +23,8 @@ Past ``aggregate.DRIVER_FOLD_MAX_ROWS`` rows, or over a table still to
 be built, the merge is one shuffle of kB rows.
 
 Stored tables describe themselves: :func:`store_sketch_table` commits a
-manifest (``_sketch_log/<version>.json``: format, schema, data files)
-after each write, and :func:`read_sketch_table` loads the files it
+log entry (``sources.tables.commit``: format, schema, data files) after
+each write, and :func:`read_sketch_table` loads the files it
 names with the schema it holds. Opening a stored table therefore costs
 no Spark job — no directory-listing job, no schema-inference job —
 however many day partitions it has, so a question over stored partials
@@ -134,11 +134,12 @@ def store_sketch_table(df: DataFrame, path: str,
     The data write is ``sources.tables.write_table``'s (mode overwrite;
     with ``spark.sql.sources.partitionOverwriteMode=dynamic`` only the
     day partitions ``df`` touches are replaced). After it succeeds,
-    ``sources.tables.commit_snapshot`` commits
-    ``_sketch_log/<version>.json``: a full snapshot naming the format,
-    the written schema (``pbucket`` a long, as computed here) and every
-    data file, relative to ``path`` so the table can be copied or moved.
-    :func:`read_sketch_table` reads only that entry.
+    it lists the table's data files and commits them as the newest
+    version of the table's log (``sources.tables.commit``): a full
+    snapshot naming the format, the written schema (``pbucket`` a long,
+    as computed here) and every data file, relative to ``path`` so the
+    table can be copied or moved. :func:`read_sketch_table` reads only
+    that entry.
 
     Not in the log: the overflow policy and the granularities — pass the
     same ``on_overflow`` and grains to every later call. Not isolated: a
@@ -150,7 +151,9 @@ def store_sketch_table(df: DataFrame, path: str,
     out = df.withColumn(
         "pbucket", F.col("bucket") - F.pmod(F.col("bucket"), F.lit(g)))
     tables.write_table(out, path, partition_by=["pbucket"])
-    tables.commit_snapshot(df.sparkSession, path, out.schema)
+    spark = df.sparkSession
+    tables.commit(spark, path, tables.data_files(spark, path), out.schema,
+                  tables.table_format())
 
 
 def read_sketch_table(spark, path: str) -> DataFrame:

@@ -1,5 +1,5 @@
-"""Generic table IO for stored sketch tables, and the commit log that
-makes a stored table self-describing.
+"""Generic table IO for stored sketch tables, and the commit log every
+persisted sketch state commits through.
 
 Iceberg note (SURVEY §7.2): the sandbox has no Iceberg runtime jar, so the
 table layer is parquet with the same layout Iceberg would use (partition
@@ -7,16 +7,19 @@ columns, binary sketch columns). `write_table`/`read_table` isolate that
 choice so an Iceberg catalog can be dropped in by changing the format
 string only.
 
-Commit log (Delta Lake's idea, VLDB 2020, at its smallest):
-:func:`commit_snapshot` records a written table in
-``<table>/_sketch_log/<version>.json`` — its format, Spark schema and
-data files relative to the table root — and :func:`read_snapshot` loads
-exactly those files with that schema (:func:`load_paths`, which the
-streaming state reads share). Spark then neither lists the table's
-directories (a parallel-listing job past 32 paths) nor infers its schema
-(a second job): reading a snapshot submits no Spark job. All
-log IO runs on the driver through the Hadoop ``FileSystem`` API of the
-JVM, so it works on any Hadoop store.
+Commit log (Delta Lake's idea, VLDB 2020, at its smallest), the one
+commit of every persisted sketch state: a stored table, a ``run_job``
+checkpoint and a streaming state. A writer writes its data, then
+:func:`commit` records ``<root>/_sketch_log/<version>.json``: the
+format, the Spark schema, the paths the writer names relative to the
+root (files, or directories of files) and fields of its own (a
+micro-batch id). :func:`read_entry` returns the newest entry, and
+:func:`read_snapshot` loads exactly its paths with its schema
+(:func:`load_paths`): Spark neither lists the table's directories (a
+parallel-listing job past 32 paths) nor infers its schema (a second
+job), so reading a snapshot submits no Spark job. Data written but not
+committed is invisible. All log IO runs on the driver through the
+Hadoop ``FileSystem`` API of the JVM, so it works on any Hadoop store.
 """
 
 from __future__ import annotations
@@ -60,7 +63,7 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.format(table_format()).load(path)
 
 
-def _fs(spark: SparkSession, path: str):
+def filesystem(spark: SparkSession, path: str):
     """``(FileSystem, Path class, qualified Path)`` of ``path``. Callers
     keep the class: each ``jvm.a.b.C`` lookup is a py4j round trip."""
     path_cls = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
@@ -72,17 +75,18 @@ def _fs(spark: SparkSession, path: str):
 def _hidden(name: str) -> bool:
     """Spark's rule for names a file source skips
     (``HadoopFSUtils.shouldFilterOutPathName``): ``_`` metadata such as
-    ``_SUCCESS`` and this log, ``.`` staging and checksum files, and
+    job markers and this log, ``.`` staging and checksum files, and
     half-copied ``._COPYING_`` files. A ``_col=v`` directory is data."""
     return ((name.startswith("_") and "=" not in name)
             or name.startswith(".") or name.endswith("._COPYING_"))
 
 
-def _data_files(fs, root) -> list[str]:
-    """The data files under ``root``, relative to it and sorted, listed
+def data_files(spark: SparkSession, path: str) -> list[str]:
+    """The data files under ``path``, relative to it and sorted, listed
     serially on the driver. ``listStatus``, not ``listFiles``: on the
     local file system a ``LocatedFileStatus`` forks a process per file to
     read its permissions."""
+    fs, _, root = filesystem(spark, path)
     out, todo = [], [(root, "")]
     while todo:
         d, rel = todo.pop()
@@ -107,22 +111,22 @@ def _versions(fs, log) -> list[int]:
                   if m), reverse=True)
 
 
-def commit_snapshot(spark: SparkSession, path: str,
-                    schema: StructType) -> int:
-    """Commit the table at ``path`` as it now is on storage: its data
-    files, ``schema`` and :func:`table_format` become log version
-    ``latest + 1``, which is returned. The entry is written to a hidden
-    temp file and renamed into place, so no reader sees a partial entry;
-    a rename that finds the version taken (a concurrent commit) raises.
-    Entries older than the previous one are deleted, so the log a reader
-    lists stays two entries long however often the table is written."""
-    fs, path_cls, root = _fs(spark, path)
+def commit(spark: SparkSession, path: str, files: list[str],
+           schema: StructType, fmt: str = "parquet", **fields) -> int:
+    """Commit ``files`` (relative to ``path``) of format ``fmt``,
+    ``schema`` and ``fields`` as log version ``latest + 1`` of the table
+    at ``path``, which is returned. The entry is written to a
+    hidden temp file and renamed into place, so no reader sees a partial
+    entry; a rename that finds the version taken (a concurrent commit)
+    raises. Entries older than the previous one are deleted, so the log
+    a reader lists stays two entries long however often it is written."""
+    fs, path_cls, root = filesystem(spark, path)
     log = path_cls(root, _LOG_DIR)
     versions = _versions(fs, log)
     version = versions[0] + 1 if versions else 0
-    body = json.dumps({"format": table_format(),
+    body = json.dumps({"format": fmt,
                        "schema": schema.jsonValue(),
-                       "files": _data_files(fs, root)},
+                       "files": list(files), **fields},
                       separators=(",", ":")).encode()
     tmp = path_cls(log, f".{version:020d}.{uuid.uuid4().hex}.tmp")
     out = fs.create(tmp, False)
@@ -141,32 +145,41 @@ def commit_snapshot(spark: SparkSession, path: str,
     return version
 
 
-def read_snapshot(spark: SparkSession, path: str) -> DataFrame:
-    """The newest committed snapshot of the table at ``path``: its logged
-    files loaded with its logged schema, partition columns (found from
-    the ``col=v`` directories under ``basePath``) typed as written. An
-    empty snapshot is zero rows with that schema. Raises
-    ``FileNotFoundError`` when ``path`` has no log."""
-    fs, path_cls, root = _fs(spark, path)
+def read_entry(spark: SparkSession, path: str) -> dict | None:
+    """The newest committed log entry of the table at ``path`` —
+    ``format``, ``schema`` (Spark JSON), ``files`` and the committer's
+    fields — or None when ``path`` has no log."""
+    fs, path_cls, root = filesystem(spark, path)
     log = path_cls(root, _LOG_DIR)
     versions = _versions(fs, log)
     if not versions:
-        raise FileNotFoundError(
-            f"{path} has no {_LOG_DIR}/ commit log: not a table written "
-            f"by store_sketch_table, or written before the log existed")
+        return None
     stream = fs.open(path_cls(log, f"{versions[0]:020d}.json"))
     try:
         # a py4j reply longer than 8 kB leaves the JVM in two writes and
         # waits ~40 ms for a delayed ACK (measured on Linux loopback):
         # read the entry in 4 KiB chunks
-        entry = json.loads(b"".join(
+        return json.loads(b"".join(
             iter(lambda: stream.readNBytes(4096), b"")))
     finally:
         stream.close()
+
+
+def read_snapshot(spark: SparkSession, path: str) -> DataFrame:
+    """The newest committed snapshot of the table at ``path``: the paths
+    its log entry names, loaded with its logged schema, partition
+    columns (found from the ``col=v`` directories under ``basePath``)
+    typed as written. An empty snapshot is zero rows with that schema.
+    Raises ``FileNotFoundError`` when ``path`` has no log."""
+    entry = read_entry(spark, path)
+    if entry is None:
+        raise FileNotFoundError(
+            f"{path} has no {_LOG_DIR}/ commit log: not a table written "
+            f"by store_sketch_table, or written before the log existed")
     schema = StructType.fromJson(entry["schema"])
     if not entry["files"]:
         return local_frame(spark, [], schema)
-    base = root.toString()
+    base = filesystem(spark, path)[2].toString()
     return load_paths(spark, [f"{base}/{f}" for f in entry["files"]],
                       base, schema, entry["format"])
 
@@ -180,7 +193,7 @@ def parquet_schema(spark: SparkSession, path: str) -> StructType:
     INT96, ``binaryAsString``, a Spark-written schema in the footer — are
     Spark's own. The API is Spark-private; a test pins the result to
     ``spark.read.parquet(path).schema``."""
-    fs, _, p = _fs(spark, path)
+    fs, _, p = filesystem(spark, path)
     jvm = spark.sparkContext._jvm
     pq_fmt = getattr(jvm.org.apache.spark.sql.execution.datasources.parquet,
                      "ParquetFileFormat$").__getattr__("MODULE$")

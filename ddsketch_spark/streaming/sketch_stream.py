@@ -8,8 +8,9 @@ ddsketch.c:2402-2648). The shapes:
    HASH-PARTITIONED sketch table. State never transits the driver: the
    micro-batch reads (by explicit path) only the bucket partitions its
    keys touch and writes the merged buckets to a fresh batch-versioned
-   directory, committed by an atomic manifest rename — idempotent under
-   foreachBatch's at-least-once replay. This is the reference's
+   directory, committed as one version of the state's log
+   (sources/tables.commit) — idempotent under foreachBatch's
+   at-least-once replay. This is the reference's
    "UPDATE summary SET d = ddsketch_union(d, new)" pattern, amortized
    per micro-batch instead of per row, and it scales to 100 M keys: per
    batch, work is O(touched partitions), not O(state).
@@ -42,9 +43,6 @@ finalized windows).
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
 from typing import Iterator, Sequence
 
 import pandas as pd
@@ -56,82 +54,51 @@ from pyspark.sql.types import (
 )
 
 from ddsketch_spark.core.ddsketch import DDSketch
-from ddsketch_spark.operators.aggregate import merge_partials
+from ddsketch_spark.operators.aggregate import merge_partials, sql_ident
 from ddsketch_spark.operators.native import (
     _sum_cells, bloom_cells, cms_cells, dd_bucket_exprs, dd_cells,
     dd_sketches, ddsketch_agg_native, hll_cells, hll_sketches,
 )
 from ddsketch_spark.plans.local import local_frame
-from ddsketch_spark.sources.tables import load_paths
+from ddsketch_spark.sources import tables
 
 
-def _read_manifest(state_dir: str) -> dict | None:
-    """Latest committed state manifest, or None before the first commit.
-    ``{"batch_id": int, "buckets": {"<bucket>": <version>}, "schema":
-    <Spark schema JSON>}`` — a bucket's version is the batch_id whose
-    ``v=<version>`` directory holds its current sketch rows; ``schema``
-    (``keys..., sketch, n``) is absent from manifests written before it
-    was logged."""
-    path = os.path.join(state_dir, "_manifest.json")
-    if not os.path.isfile(path):
-        return None
-    with open(path) as f:
-        return json.load(f)
+def _state_entry(spark, state_dir: str) -> dict | None:
+    """The state log's newest entry (``files``: each live bucket's
+    ``v=<version>/__bucket=<b>`` directory; ``batch_id``; ``schema``:
+    ``keys..., sketch, n``), or None before the first commit.
 
-
-def _check_no_orphan_state(state_dir: str) -> None:
-    """A state_dir holding bucket data but NO manifest is not 'no state':
-    it is state written by an earlier layout (or a torn manual copy), and
-    treating it as empty would silently discard every accumulated sketch
-    on the next commit. Fail loudly instead."""
-    if not os.path.isdir(state_dir):
-        return
-    # only TOP-LEVEL __bucket= dirs are foreign (the pre-manifest layout
-    # wrote them via dynamic partition overwrite). Manifest-less v=N dirs
-    # are NOT flagged: a crash after writing v=<first batch> but before
-    # the first manifest commit legitimately leaves one, and replay
-    # deterministically rewrites it.
-    orphans = [e for e in os.listdir(state_dir) if e.startswith("__bucket=")]
-    if orphans:
-        raise RuntimeError(
-            f"state dir {state_dir} contains pre-manifest bucket data "
-            f"({orphans[:3]}...) but no _manifest.json — refusing to "
-            f"treat it as empty state; migrate or remove the directory")
-
-
-def _load_buckets(spark, state_dir: str, version: int,
-                  buckets: Sequence, schema: StructType | None) -> DataFrame:
-    """``keys..., sketch, n, __bucket`` of ``buckets`` in the state's
-    ``v=<version>`` directory."""
-    base = os.path.join(state_dir, f"v={version}")
-    return load_paths(spark, [os.path.join(base, f"__bucket={b}")
-                              for b in buckets], base, schema)
+    A state_dir holding an older layout's state — a pre-log
+    ``_manifest.json`` or TOP-LEVEL ``__bucket=`` dirs — but no log is
+    not 'no state': treating it as empty would silently discard every
+    accumulated sketch on the next commit, so it raises. Log-less
+    ``v=N`` dirs are not flagged: a crash between writing ``v=<first
+    batch>`` and its commit leaves one, and replay rewrites it."""
+    entry = tables.read_entry(spark, state_dir)
+    if entry is None:
+        fs, _, root = tables.filesystem(spark, state_dir)
+        names = ([st.getPath().getName() for st in fs.listStatus(root)]
+                 if fs.exists(root) else [])
+        foreign = [n for n in names
+                   if n == "_manifest.json" or n.startswith("__bucket=")]
+        if foreign:
+            raise RuntimeError(
+                f"state dir {state_dir} holds state of an older layout "
+                f"({foreign[:3]}) but no commit log — refusing to treat "
+                f"it as empty state; migrate or remove the directory")
+    return entry
 
 
 def read_state(spark, state_dir: str) -> DataFrame | None:
-    """Read the committed sketch-state table (``keys..., sketch, n``)
-    assembled from each bucket's latest committed version. Returns None
-    before the first commit. Partially-written (uncommitted) version
-    directories are invisible: only buckets named by the manifest load.
-    With the manifest's schema, the read submits no Spark job."""
-    man = _read_manifest(state_dir)
-    if man is None:
-        _check_no_orphan_state(state_dir)
+    """The committed sketch-state table (``keys..., sketch, n``): the
+    newest snapshot of the state's log, each bucket from its latest
+    committed version, read with no Spark job. None before the first
+    commit and for a committed-but-empty state (e.g. a first micro-batch
+    with no rows). Uncommitted version directories are invisible."""
+    entry = _state_entry(spark, state_dir)
+    if entry is None or not entry["files"]:
         return None
-    if not man["buckets"]:
-        # committed-but-empty state (e.g. the first micro-batch carried no
-        # rows): a valid manifest with nothing to read
-        return None
-    by_ver: dict[int, list[str]] = {}
-    for b, v in man["buckets"].items():
-        by_ver.setdefault(int(v), []).append(b)
-    schema = StructType.fromJson(man["schema"]) if "schema" in man else None
-    parts = [_load_buckets(spark, state_dir, v, sorted(bs), schema)
-             .drop("__bucket") for v, bs in sorted(by_ver.items())]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return tables.read_snapshot(spark, state_dir).drop("v", "__bucket")
 
 
 def foreach_batch_maintainer(
@@ -154,24 +121,28 @@ def foreach_batch_maintainer(
 
     Scale contract (no sketch rows transit the driver): the batch's
     partials determine the touched buckets (only their IDs — at most
-    ``state_buckets`` ints — reach the driver for the manifest); previous
-    state is read ONLY for touched buckets, by explicit path, and the
-    merged result is written to a fresh ``v=<batch_id>`` directory. Per
-    batch, work is O(touched buckets), not O(state).
+    ``state_buckets`` ints — reach the driver for the log entry);
+    previous state is read ONLY for touched buckets, by explicit path,
+    and the merged result is written to a fresh ``v=<batch_id>``
+    directory. Per batch, work is O(touched buckets), not O(state).
 
     Idempotent under foreachBatch's AT-LEAST-ONCE contract: state is
-    versioned by batch_id and committed via an atomically-renamed
-    manifest. A replayed micro-batch either (a) finds the manifest already
-    at ``batch_id`` and no-ops, or (b) re-reads the SAME previous versions
-    the failed attempt read (the manifest still names them) and rewrites
-    the same ``v=<batch_id>`` directory — a deterministic overwrite, never
-    a double merge. Superseded version directories are vacuumed after each
-    commit. The single non-atomic primitive assumed is file rename
-    (POSIX/HDFS); on S3-like stores, swap the manifest rename for a
-    conditional put.
+    versioned by batch_id, and each micro-batch commits one version of
+    the state's log (``sources.tables.commit``) naming every live
+    ``v=<version>/__bucket=<b>`` directory and its ``batch_id``. A
+    replayed micro-batch either (a) finds the log already at
+    ``batch_id`` and no-ops, or (b) re-reads the SAME previous versions
+    the failed attempt read (the log still names them) and rewrites the
+    same ``v=<batch_id>`` directory — a deterministic overwrite, never a
+    double merge. Superseded version directories are vacuumed after each
+    commit, through the same Hadoop ``FileSystem`` that Spark writes the
+    state with. The single non-atomic primitive assumed is file rename
+    (POSIX/HDFS); on S3-like stores, swap the log rename for a
+    conditional put. ``v`` and ``__bucket`` name the state's
+    directories, so neither may be a key.
 
-    ``state_dir`` is coupled to ``checkpoint_dir``: the manifest's
-    batch_id lives in the checkpoint's batch numbering, so deleting the
+    ``state_dir`` is coupled to ``checkpoint_dir``: the log's batch_id
+    lives in the checkpoint's batch numbering, so deleting the
     checkpoint while keeping the state (or vice versa) breaks the replay
     contract — retire them together.
     """
@@ -194,19 +165,23 @@ def make_maintainer_process(
 ):
     """The ``foreachBatch`` function behind :func:`foreach_batch_maintainer`
     — exposed so the commit protocol (skip-replayed-batch, deterministic
-    rewrite after a crash between write and manifest commit) is directly
-    testable with hand-fed (batch_df, batch_id) pairs."""
+    rewrite after a crash between write and commit) is directly testable
+    with hand-fed (batch_df, batch_id) pairs."""
     keys = list(keys)
+    if {"v", "__bucket"} & set(keys):
+        raise ValueError(f"keys {keys}: 'v' and '__bucket' name the "
+                         f"state's directories")
+
+    quoted = list(map(sql_ident, keys))
 
     def bucket_expr():
-        return F.pmod(F.xxhash64(*keys), F.lit(state_buckets)).alias("__bucket")
+        return F.pmod(F.xxhash64(*map(F.col, quoted)),
+                      F.lit(state_buckets)).alias("__bucket")
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        man = _read_manifest(state_dir)
-        if man is None:
-            _check_no_orphan_state(state_dir)
-        if man is not None and man["batch_id"] >= batch_id:
+        entry = _state_entry(spark, state_dir)
+        if entry is not None and entry["batch_id"] >= batch_id:
             return  # replay of an already-committed batch: no-op
         partial = (ddsketch_agg_native(batch_df, value_col, alpha, nbuckets,
                                        keys)
@@ -217,51 +192,39 @@ def make_maintainer_process(
         touched = sorted(r[0] for r in
                          partial.select("__bucket").distinct().collect())
 
-        prev_buckets = man["buckets"] if man else {}
-        by_ver: dict[int, list[int]] = {}
-        for b in touched:
-            v = prev_buckets.get(str(b))
-            if v is not None:
-                by_ver.setdefault(int(v), []).append(b)
-        both = partial.select(*keys, "sketch", "n")
-        schema = both.schema  # the state's, logged in the manifest
-        for v, bs in sorted(by_ver.items()):
-            both = both.unionByName(
-                _load_buckets(spark, state_dir, v, bs, schema)
-                .select(*keys, "sketch", "n"))
+        # bucket -> its live "v=<version>/__bucket=<b>" directory
+        live = {int(f.rsplit("=", 1)[1]): f
+                for f in (entry["files"] if entry else [])}
+        fs, _, root = tables.filesystem(spark, state_dir)
+        base = root.toString()
+        both = partial.select(*quoted, "sketch", "n")
+        schema = both.schema  # the state's, logged in each entry
+        prev = [f"{base}/{live[b]}" for b in touched if b in live]
+        if prev:
+            both = both.unionByName(tables.load_paths(
+                spark, prev, base, schema).select(*quoted, "sketch", "n"))
 
         merged = (merge_partials(
             both.withColumn("part_id", F.monotonically_increasing_id())
-                .select(*keys, "sketch", "part_id", "n"), keys=keys)
+                .select(*quoted, "sketch", "part_id", "n"), keys=keys)
             .withColumn("__bucket", bucket_expr()))
         if touched:
             (merged.repartition("__bucket")
              .write.mode("overwrite")
              .partitionBy("__bucket")
-             .parquet(os.path.join(state_dir, f"v={batch_id}")))
+             .parquet(f"{base}/v={batch_id}"))
 
-        new_buckets = dict(prev_buckets)
-        for b in touched:
-            new_buckets[str(b)] = batch_id
-        os.makedirs(state_dir, exist_ok=True)
-        tmp = os.path.join(state_dir, f"_manifest.{batch_id}.tmp")
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, "buckets": new_buckets,
-                       "schema": schema.jsonValue()}, f)
-        os.replace(tmp, os.path.join(state_dir, "_manifest.json"))  # commit
+        live.update((b, f"v={batch_id}/__bucket={b}") for b in touched)
+        tables.commit(spark, state_dir, [live[b] for b in sorted(live)],
+                      schema, batch_id=batch_id)
 
         # vacuum versions no bucket references anymore (best-effort:
-        # a leftover dir is garbage, never read — the manifest is truth)
-        live = {batch_id} | {int(v) for v in new_buckets.values()}
-        for entry in os.listdir(state_dir):
-            if entry.startswith("v="):
-                try:
-                    ver = int(entry[2:])
-                except ValueError:
-                    continue
-                if ver not in live:
-                    shutil.rmtree(os.path.join(state_dir, entry),
-                                  ignore_errors=True)
+        # a leftover dir is garbage, never read — the log is truth)
+        keep = {f.split("/")[0] for f in live.values()}
+        for st in fs.listStatus(root):
+            name = st.getPath().getName()
+            if name.startswith("v=") and name not in keep:
+                fs.delete(st.getPath(), True)
 
     return process
 
@@ -275,15 +238,19 @@ def _window_cells(stream_df: DataFrame, ts_col: str, window_duration: str,
                   slide_duration: str | None = None) -> DataFrame:
     """``keys..., window_start, window_end, <cell columns>`` — the batch
     cell function ``cells(df, keys)`` (operators.native) over the
-    watermarked stream, with its event-time window as one more key."""
+    watermarked stream, with its event-time window as one more key.
+    Every column name is quoted (``aggregate.sql_ident``), so a key such
+    as ``h-1`` or ``a`b`` is one column."""
     keys = list(keys)
-    win = F.window(ts_col, window_duration, slide_duration)
-    out = cells(stream_df.withWatermark(ts_col, watermark_delay)
+    ts = sql_ident(ts_col)
+    win = F.window(F.col(ts), window_duration, slide_duration)
+    out = cells(stream_df.withWatermark(ts, watermark_delay)
                 .withColumn("__window", win), keys + ["__window"])
     return out.select(
-        *keys, F.col("__window.start").alias("window_start"),
+        *map(sql_ident, keys), F.col("__window.start").alias("window_start"),
         F.col("__window.end").alias("window_end"),
-        *[c for c in out.columns if c not in keys and c != "__window"])
+        *[sql_ident(c) for c in out.columns
+          if c not in keys and c != "__window"])
 
 
 def windowed_bucket_counts(
@@ -493,14 +460,16 @@ def sessionized_bucket_counts(
     (part, bidx) struct per live event (bounded by the gap);
     :func:`assemble_session_sketches` sums them into bucket counts."""
     part, bidx = dd_bucket_exprs(value_col, alpha)
-    v = F.col(value_col)
+    v = F.col(sql_ident(value_col))
+    ts = sql_ident(ts_col)
     keep = ~(v.isNull() | F.isnan(v.cast("double")))
     return (
         stream_df
-        .withWatermark(ts_col, watermark_delay)
+        .withWatermark(ts, watermark_delay)
         .where(keep)
-        .select(F.col(ts_col), F.col(key_col).alias("key"), part, bidx)
-        .groupBy(F.session_window(F.col(ts_col), gap), "key")
+        .select(F.col(ts), F.col(sql_ident(key_col)).alias("key"), part,
+                bidx)
+        .groupBy(F.session_window(F.col(ts), gap), "key")
         .agg(F.collect_list(F.struct(F.col("__part").alias("part"),
                                      F.col("__bidx").alias("bidx")))
              .alias("cells"),

@@ -69,6 +69,23 @@ def test_driver_frames_enter_through_local_frame():
     assert not stray, "\n".join(stray)
 
 
+def test_every_state_commits_through_one_log():
+    """The store, ``run_job`` checkpoints and streaming state commit
+    through ``sources.tables.commit``, the one log writer. No rename
+    commit, job marker or manifest file is left, save the streaming
+    guard that refuses a state of the pre-log layout by its manifest;
+    only ``sources/tables.py`` names the log's directory, and only its
+    ``commit`` creates or renames a file through a ``FileSystem``."""
+    assert not _calls_outside(r"os\.replace\(|_SUCCESS", set())
+    assert not _calls_outside(
+        r"_manifest\.json", {("streaming/sketch_stream.py", "_state_entry")})
+    tables = {("sources/tables.py", f) for f in
+              (None, "commit", "read_entry", "read_snapshot")}
+    assert not _calls_outside(r"_sketch_log|_LOG_DIR", tables)
+    assert not _calls_outside(r"\.create\(|\.rename\(",
+                              {("sources/tables.py", "commit")})
+
+
 def test_local_frame_equals_a_list_frame(spark):
     """``local_frame`` gives what ``createDataFrame`` of the same list
     gives — schema, values, NULLs, a naive timestamp read as local time —

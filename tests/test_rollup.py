@@ -523,22 +523,32 @@ def test_failed_commit_keeps_previous_snapshot(spark, tmp_path,
                                                dynamic_overwrite,
                                                monkeypatch):
     """An ingest of a new day whose commit fails leaves its files on
-    storage but out of the manifest: readers see the previous rows."""
+    storage but out of the log: readers see the previous rows, byte for
+    byte, and a retried ingest gives the rows of an uninterrupted one."""
     from ddsketch_spark.sources import tables
 
-    path = str(tmp_path / "stored")
+    path, clean = str(tmp_path / "stored"), str(tmp_path / "clean")
+    day5 = _days_table(spark, 1, T0 + dt.timedelta(days=5))
     store_sketch_table(_days_table(spark, 3), path)
     before = _stored_rows(read_sketch_table(spark, path))
+    entry = tables.read_entry(spark, path)
 
-    def failing_commit(*args):
+    def failing_commit(*args, **kwargs):
         raise RuntimeError("commit failed")
 
-    monkeypatch.setattr(tables, "commit_snapshot", failing_commit)
-    with pytest.raises(RuntimeError, match="commit failed"):
-        store_sketch_table(
-            _days_table(spark, 1, T0 + dt.timedelta(days=5)), path)
+    with monkeypatch.context() as m:
+        m.setattr(tables, "commit", failing_commit)
+        with pytest.raises(RuntimeError, match="commit failed"):
+            store_sketch_table(day5, path)
     assert spark.read.parquet(path).count() > len(before)
     assert _stored_rows(read_sketch_table(spark, path)) == before
+    assert tables.read_entry(spark, path) == entry
+
+    store_sketch_table(day5, path)
+    store_sketch_table(_days_table(spark, 3), clean)
+    store_sketch_table(day5, clean)
+    assert _stored_rows(read_sketch_table(spark, path)) == \
+        _stored_rows(read_sketch_table(spark, clean))
 
 
 def test_empty_table_reads_zero_rows(spark, tmp_path):

@@ -3,7 +3,6 @@ the streamed state after N batches must equal a batch build over the same
 rows (the identity the reference tests for its incremental API,
 test/sql/ddsketch.sql:2434-2505)."""
 
-import json
 import os
 from pathlib import Path
 
@@ -13,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ddsketch_spark.core.ddsketch import DDSketch
+from ddsketch_spark.sources import tables
 from ddsketch_spark.streaming.sketch_stream import (
     foreach_batch_maintainer, make_maintainer_process, read_state,
     stateful_quantiles,
@@ -460,16 +460,66 @@ def test_windowed_agg_with_keys(spark, tmp_path):
         DDSketch(0.01, 2048).update(np.array([2.0, 4.0]))
 
 
+def test_windowed_cells_take_hostile_names(spark, tmp_path):
+    """Column names such as ``h-1`` and ``a`b`` are quoted: over a batch
+    frame, the windowed cells of one window are ``dd_cells`` of the same
+    rows, a session window keyed by such a column counts its rows, and
+    the maintainer's state over two micro-batches is the batch build."""
+    from pyspark.sql.types import (
+        DoubleType, StringType, StructField, StructType, TimestampType,
+    )
+
+    from ddsketch_spark.operators.native import dd_cells, ddsketch_agg_native
+    from ddsketch_spark.streaming.sketch_stream import (
+        sessionized_bucket_counts, windowed_bucket_counts,
+    )
+
+    base = pd.Timestamp("2025-06-01 10:00:00")
+    keys = ["h-1", "a`b"]
+    schema = StructType([StructField("t-s", TimestampType()),
+                         *[StructField(k, StringType()) for k in keys],
+                         StructField("v-1", DoubleType())])
+    df = spark.createDataFrame(
+        [((base + pd.Timedelta(minutes=m)).to_pydatetime(), h, a, v)
+         for m, h, a, v in
+         [(0, "x", "p", 1.0), (5, "y", "p", 2.0), (9, "x", "q", 3.0),
+          (14, None, "q", 4.0), (20, "y", "p", None), (31, "x", None, 6.0)]],
+        schema)
+    got = windowed_bucket_counts(df, "t-s", "v-1", "1 hour", "30 minutes",
+                                 alpha=0.02, keys=keys)
+    want = dd_cells(df, "v-1", 0.02, keys)
+
+    def rows(out):
+        return sorted((tuple(r[c] for c in want.columns)
+                       for r in out.collect()), key=repr)
+
+    assert {r["window_start"] for r in got.collect()} == {base}
+    assert rows(got) == rows(want) and rows(want)
+    sessions = sessionized_bucket_counts(df, "t-s", "h-1", "v-1",
+                                         "1 hour", "30 minutes").collect()
+    assert sorted((r["key"], r["cnt"]) for r in sessions
+                  if r["key"]) == [("x", 3), ("y", 1)]
+
+    state = str(tmp_path / "state")
+    process = make_maintainer_process(state, "v-1", keys, state_buckets=4)
+    process(df, 0)
+    process(df, 1)
+    built = ddsketch_agg_native(df.union(df), "v-1", 0.01, 2048, keys)
+    assert sorted(map(tuple, read_state(spark, state).collect()), key=repr) \
+        == sorted(map(tuple, built.collect()), key=repr)
+
+
 def test_empty_first_batch_and_orphan_state_guard(spark, tmp_path):
     """Two state-layer edge cases:
 
-    - a first micro-batch with zero rows commits an empty manifest;
+    - a first micro-batch with zero rows commits an empty log entry;
       read_state must return None (regression: it indexed parts[0] of an
       empty list), and a following non-empty batch must build state
       normally on top;
-    - a state dir holding pre-manifest-layout bucket data but no
-      manifest is NOT 'no state' — reading or writing it must raise
-      rather than silently discarding the accumulated sketches.
+    - a state dir holding the state of an older layout — top-level
+      bucket data, or a pre-log ``_manifest.json`` — but no commit log
+      is NOT 'no state': reading or writing it must raise rather than
+      silently discarding the accumulated sketches.
     """
     from ddsketch_spark.streaming.sketch_stream import (
         make_maintainer_process, read_state,
@@ -488,29 +538,45 @@ def test_empty_first_batch_and_orphan_state_guard(spark, tmp_path):
 
     orphan = tmp_path / "orphan_state"
     (orphan / "__bucket=3").mkdir(parents=True)
-    with pytest.raises(RuntimeError, match="no _manifest"):
-        read_state(spark, str(orphan))
-    proc2 = make_maintainer_process(str(orphan), "v", ["k"],
-                                    state_buckets=8)
-    with pytest.raises(RuntimeError, match="no _manifest"):
-        proc2(spark.createDataFrame(pdf), 0)
+    old_log = tmp_path / "manifest_state"
+    (old_log / "v=0" / "__bucket=3").mkdir(parents=True)
+    (old_log / "_manifest.json").write_text(
+        '{"batch_id": 0, "buckets": {"3": 0}}')
+    for state_dir, name in ((orphan, "__bucket=3"),
+                            (old_log, "_manifest.json")):
+        with pytest.raises(RuntimeError, match=f"{name}.*no commit log"):
+            read_state(spark, str(state_dir))
+        proc2 = make_maintainer_process(str(state_dir), "v", ["k"],
+                                        state_buckets=8)
+        with pytest.raises(RuntimeError, match=f"{name}.*no commit log"):
+            proc2(spark.createDataFrame(pdf), 0)
+    assert sorted(os.listdir(old_log)) == ["_manifest.json", "v=0"]
 
 
-def test_foreach_batch_replay_is_idempotent(spark, tmp_path):
+def test_maintainer_rejects_keys_naming_its_directories(spark, tmp_path):
+    """The state's ``v=<version>/__bucket=<b>`` directories are read as
+    partition columns, so a key named ``v`` or ``__bucket`` is refused
+    rather than silently overwritten on read."""
+    for key in ("v", "__bucket"):
+        with pytest.raises(ValueError, match="name the state's directories"):
+            make_maintainer_process(str(tmp_path / "s"), "x", ["k", key])
+
+
+def test_foreach_batch_replay_is_idempotent(spark, tmp_path, monkeypatch):
     """foreachBatch is AT-LEAST-ONCE: a micro-batch that fails after its
-    state write (but before the manifest commit) is re-run with the same
+    state write (but before its log commit) is re-run with the same
     (batch_df, batch_id). The versioned-state commit protocol must make
     both replay shapes safe:
 
-    - replay AFTER commit  -> no-op (manifest already at batch_id);
+    - replay AFTER commit  -> no-op (log already at batch_id);
     - replay after a crash BETWEEN the v=<batch_id> write and the
-      manifest rename -> deterministic rewrite from the OLD manifest's
+      commit -> the previous snapshot still reads byte-identical, and
+      the replay rewrites deterministically from the OLD entry's
       state, never a double merge.
     """
     from ddsketch_spark.streaming.sketch_stream import (
         make_maintainer_process, read_state,
     )
-    from ddsketch_spark.streaming import sketch_stream as mod
 
     state = str(tmp_path / "idem_state")
     process = make_maintainer_process(state, "v", ["k"], state_buckets=8)
@@ -545,30 +611,32 @@ def test_foreach_batch_replay_is_idempotent(spark, tmp_path):
     process(d2, 1)
     check([p1, p2])
 
-    # crash between state write and manifest commit, then replay
-    real_replace = os.replace
+    # crash between state write and commit, then replay
+    def snapshot():
+        return sorted((r["k"], bytes(r["sketch"]), r["n"])
+                      for r in read_state(spark, state).collect())
 
-    def crash_replace(src, dst):
-        raise OSError("injected crash before manifest commit")
+    before, entry = snapshot(), tables.read_entry(spark, state)
 
-    mod.os.replace = crash_replace
-    try:
+    def crash_commit(*args, **kwargs):
+        raise OSError("injected crash before commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(tables, "commit", crash_commit)
         with pytest.raises(OSError, match="injected crash"):
             process(d3, 2)
-    finally:
-        mod.os.replace = real_replace
     # v=2 files exist on disk but are uncommitted: readers see old state
     assert os.path.isdir(os.path.join(state, "v=2"))
-    check([p1, p2])
+    assert snapshot() == before
+    assert tables.read_entry(spark, state) == entry
 
-    # replay of batch 2 re-reads the OLD manifest's versions and
+    # replay of batch 2 re-reads the OLD entry's versions and
     # rewrites v=2 -> exactly-once result
     process(d3, 2)
     check([p1, p2, p3])
 
-    # and vacuum keeps only versions the manifest still references
-    man = mod._read_manifest(state)
-    live = {f"v={v}" for v in man["buckets"].values()}
+    # and vacuum keeps only versions the log still references
+    live = {f.split("/")[0] for f in tables.read_entry(spark, state)["files"]}
     on_disk = {e for e in os.listdir(state) if e.startswith("v=")}
     assert on_disk == live
 
@@ -576,13 +644,11 @@ def test_foreach_batch_replay_is_idempotent(spark, tmp_path):
 def test_state_read_runs_no_listing_or_inference_job(
         spark, tmp_path, jobs_in_group, monkeypatch):
     """A micro-batch whose keys touch more than 32 state buckets reads
-    the touched buckets with the state schema it logs in the manifest:
+    the touched buckets with the state schema it logs in its entry:
     it runs no parallel-listing job and no schema-inference job, and
     ``read_state`` runs no job at all. The state it writes is
     byte-identical to the state written when the previous buckets are
     read with an inferred schema."""
-    from ddsketch_spark.streaming import sketch_stream as mod
-
     def batch(seed):
         rng = np.random.default_rng(seed)
         return spark.createDataFrame(pd.DataFrame({
@@ -604,7 +670,7 @@ def test_state_read_runs_no_listing_or_inference_job(
     store = sc._jsc.sc().statusStore()
     jobs = [(j.name(), j.description().get() if j.description().isDefined()
              else "") for j in map(store.job, ids)]
-    assert len(mod._read_manifest(new)["buckets"]) > 32 and jobs
+    assert len(tables.read_entry(spark, new)["files"]) > 32 and jobs
     # the listing job says so; the inference job is named after the read
     # call (``parquet(...)`` or ``load(...)``)
     assert not [j for j in jobs if j[0].startswith(("parquet at", "load at"))
@@ -619,16 +685,11 @@ def test_state_read_runs_no_listing_or_inference_job(
     assert jobs_in_group(group) == 0
     assert state.schema.simpleString() == \
         "struct<k:string,sketch:binary,n:bigint>"
-    # a manifest written before the schema was logged reads the same rows
-    man = mod._read_manifest(new)
-    with open(os.path.join(new, "_manifest.json"), "w") as f:
-        json.dump({k: v for k, v in man.items() if k != "schema"}, f)
-    assert sorted(read_state(spark, new).collect()) == sorted(state.collect())
 
     def inferred(spark, paths, base, schema=None, fmt="parquet"):
         return spark.read.option("basePath", base).parquet(*paths)
 
-    monkeypatch.setattr(mod, "load_paths", inferred)
+    monkeypatch.setattr(tables, "load_paths", inferred)
     process = make_maintainer_process(old, "v", ["k"], state_buckets=64)
     process(batch(1), 0)
     process(batch(2), 1)

@@ -7,8 +7,9 @@
   only unfinished batches, and produces the identical result
 - quantile estimates within the alpha relative-error bound vs exact
 - driver-side checkpoints and finalize: the checkpoint layout readers rely
-  on, no Spark job after the last batch, and a finalize identical to the
-  Spark merge of the same checkpoint
+  on, one log version per committed batch (a batch whose commit fails is
+  replayed), no Spark job after the last batch, and a finalize identical
+  to the Spark merge of the same checkpoint
 - one JVM aggregation per batch: one scan and no Python stage, sketches
   assembled on the driver equal to the executor-side build (empty
   batches, NULL keys, NULL and NaN values, bucket overflow)
@@ -31,6 +32,7 @@ from ddsketch_spark.jobs.web_sketch_job import (
     file_batches, range_batches, run_job,
 )
 from ddsketch_spark.operators.native import ddsketch_agg_native
+from ddsketch_spark.sources import tables
 from ddsketch_spark.sources.webpages import (
     LANGS, extract_text, generate_batch, synthesize, synthesize_range,
 )
@@ -213,16 +215,23 @@ def test_job_keeps_null_key_group(spark, tmp_path):
     assert {r.lang: r.n for r in res} == {None: 4, "en": 4}
 
 
+def _committed(spark, ckpt):
+    """The checkpoint files the newest entry of ``ckpt``'s log names."""
+    entry = tables.read_entry(spark, "file:" + ckpt)
+    return entry["files"] if entry else []
+
+
 def test_checkpoint_layout_contract(spark, tmp_path):
-    """Each ``batch=K`` holds ``_SUCCESS`` and exactly one parquet file
-    with the checkpoint schema, readable by pyarrow's directory reader
-    (without partition discovery) and by Spark; the sketch column carries
-    no statistics, which would bloat the file."""
+    """Each ``batch=K`` holds exactly one parquet file, named by the
+    checkpoint's log, with the checkpoint schema, readable by pyarrow's
+    directory reader (without partition discovery) and by Spark; the
+    sketch column carries no statistics, which would bloat the file."""
     ckpt = str(tmp_path / "ckpt")
     run_job(spark, range_batches(spark, 3_000, 2, seed=42), ckpt, n_batches=2)
+    assert _committed(spark, ckpt) == [f"batch={b}/part-00000.parquet"
+                                       for b in range(2)]
     for b in range(2):
         d = os.path.join(ckpt, f"batch={b}")
-        assert os.path.exists(os.path.join(d, "_SUCCESS"))
         files = glob.glob(os.path.join(d, "*.parquet"))
         assert len(files) == 1
         assert pq.read_schema(files[0]).remove_metadata() == CHECKPOINT_SCHEMA
@@ -297,7 +306,7 @@ def test_driver_finalize_matches_spark_merge(spark, tmp_path):
 
 
 def test_stale_batch_dir_is_replaced(spark, tmp_path):
-    """A ``batch=K`` without ``_SUCCESS`` (a run killed mid-write) is
+    """A ``batch=K`` the log does not name (a run killed mid-write) is
     replayed and replaced: its junk file is neither kept nor merged."""
     ckpt = str(tmp_path / "ckpt")
     provider = range_batches(spark, 4_000, 2, seed=42)
@@ -311,12 +320,42 @@ def test_stale_batch_dir_is_replaced(spark, tmp_path):
 
     resumed = run_job(spark, provider, ckpt, n_batches=2)
     assert resumed["metrics"]["batches_ran"] == [1]
-    assert os.path.exists(os.path.join(stale, "_SUCCESS"))
+    assert "batch=1/part-00000.parquet" in _committed(spark, ckpt)
     assert [os.path.basename(f) for f in glob.glob(
         os.path.join(stale, "*.parquet"))] == ["part-00000.parquet"]
     assert resumed["metrics"]["rows"] == 4_000
     clean = run_job(spark, provider, str(tmp_path / "clean"), n_batches=2)
     assert resumed["result"].collect() == clean["result"].collect()
+
+
+def test_failed_commit_replays_its_batch(spark, tmp_path, monkeypatch):
+    """A batch whose commit fails after its file is written leaves the
+    previous snapshot as it was, byte for byte; the rerun replays only
+    that batch, and its checkpoint rows (less ``wall_s``) and result
+    equal an uninterrupted run's."""
+    ckpt, clean = str(tmp_path / "ckpt"), str(tmp_path / "clean")
+    provider = range_batches(spark, 4_000, 2, seed=42)
+    run_job(spark, provider, ckpt, n_batches=2, max_batches=1)
+    before = tables.read_entry(spark, "file:" + ckpt)
+    first = _checkpoint_rows(ckpt, 0)
+
+    def failing_commit(*args, **kwargs):
+        raise RuntimeError("injected crash before commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(tables, "commit", failing_commit)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            run_job(spark, provider, ckpt, n_batches=2)
+    assert os.path.exists(os.path.join(ckpt, "batch=1", "part-00000.parquet"))
+    assert tables.read_entry(spark, "file:" + ckpt) == before
+    assert _checkpoint_rows(ckpt, 0) == first
+
+    resumed = run_job(spark, provider, ckpt, n_batches=2)
+    assert resumed["metrics"]["batches_ran"] == [1]
+    want = run_job(spark, provider, clean, n_batches=2)
+    assert resumed["result"].collect() == want["result"].collect()
+    for b in range(2):
+        assert _checkpoint_rows(ckpt, b) == _checkpoint_rows(clean, b)
 
 
 def _executor_rows(df, key="lang", value_expr="length(text)", alpha=0.01,
@@ -392,7 +431,7 @@ def test_empty_file_group_writes_empty_checkpoint(spark, tmp_path):
     assert out["metrics"]["complete"] and out["metrics"]["rows"] == 600
     for b in range(3):
         assert _checkpoint_rows(ckpt, b) == _executor_rows(provider(b))
-    assert os.path.exists(os.path.join(ckpt, "batch=2", "_SUCCESS"))
+    assert "batch=2/part-00000.parquet" in _committed(spark, ckpt)
     assert _checkpoint_rows(ckpt, 2) == []
 
 
@@ -409,7 +448,7 @@ def test_bucket_overflow_raises_on_driver(spark, tmp_path):
     with pytest.raises(ValueError, match="bucket overflow"):
         run_job(spark, lambda b: df, ckpt, value_expr="v", nbuckets=16,
                 n_batches=1)
-    assert not os.path.exists(os.path.join(ckpt, "batch=0", "_SUCCESS"))
+    assert _committed(spark, ckpt) == []
 
 
 PYTHON_NODES = ("MapInArrow", "ArrowEvalPython", "BatchEvalPython",
@@ -449,7 +488,7 @@ def test_batch_is_one_scan_without_python(spark, tmp_path, jobs_in_group):
 
 def test_infinite_value_fails_its_batch(spark, tmp_path):
     """An infinite value raises in the batch that reads it (it has no
-    bucket), so the batch writes no ``_SUCCESS``."""
+    bucket), so the batch commits nothing."""
     from ddsketch_spark.core.ddsketch import INFINITE_VALUE
 
     df = spark.createDataFrame([("g", float("inf")), ("g", 1.0)],
@@ -457,7 +496,7 @@ def test_infinite_value_fails_its_batch(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     with pytest.raises(Exception, match=re.escape(INFINITE_VALUE)):
         run_job(spark, lambda b: df, ckpt, value_expr="v", n_batches=1)
-    assert not os.path.exists(os.path.join(ckpt, "batch=0", "_SUCCESS"))
+    assert _committed(spark, ckpt) == []
 
 
 def test_result_is_a_local_relation(spark, tmp_path):

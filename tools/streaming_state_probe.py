@@ -32,9 +32,8 @@ def run_probe(spark, n_keys: int, runs: int, workdir: str,
               state_buckets: int = 256) -> dict:
     from pyspark.sql import functions as F
 
-    from ddsketch_spark.streaming.sketch_stream import (
-        _read_manifest, make_maintainer_process,
-    )
+    from ddsketch_spark.sources.tables import read_entry
+    from ddsketch_spark.streaming.sketch_stream import make_maintainer_process
 
     state = os.path.join(workdir, f"state_{n_keys}_{state_buckets}")
     shutil.rmtree(state, ignore_errors=True)
@@ -71,8 +70,7 @@ def run_probe(spark, n_keys: int, runs: int, workdir: str,
         t_big.append(time.perf_counter() - t0)
         bid += 1
 
-    man = _read_manifest(state)
-    touched_small = len(man["buckets"])
+    live_buckets = len(read_entry(spark, state)["files"])
     shutil.rmtree(state, ignore_errors=True)
     return {
         "n_keys": n_keys,
@@ -82,7 +80,7 @@ def run_probe(spark, n_keys: int, runs: int, workdir: str,
         "big_batch_sec_best": round(min(t_big), 3),
         "small_batch_rows": 10_000,
         "small_batch_distinct_keys": 8,
-        "manifest_buckets": touched_small,
+        "manifest_buckets": live_buckets,
     }
 
 
