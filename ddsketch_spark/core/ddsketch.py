@@ -62,6 +62,9 @@ INFINITE_VALUE = "invalid value: +inf and -inf cannot be added to a sketch"
 _HEADER = struct.Struct(">iqqdiii")   # flags, count, zero_count, alpha, maxbuckets, nbuckets, nbuckets_negative
 _BUCKET = struct.Struct(">iq")        # index, count
 _BUCKET_DT = np.dtype([("index", ">i4"), ("count", ">i8")])
+_HEADER_DT = np.dtype([(f, t) for f, t in zip(
+    ("flags", "count", "zero_count", "alpha", "maxbuckets", "nbuckets",
+     "nbuckets_negative"), (">i4", ">i8", ">i8", ">f8", ">i4", ">i4", ">i4"))])
 
 
 def validate_alpha(alpha: float) -> None:

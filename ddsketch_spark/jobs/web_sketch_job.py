@@ -44,11 +44,11 @@ Architecture (SURVEY §3.2 + §7.1 step 5):
    A ``run_job`` call reads the log once and lists no directory.
 4. Finalize runs on the driver and submits no Spark job: it reads the
    files the log names, folds each key's sketches
-   (operators/aggregate.fold_key_runs — exact, DDSketch is fully
-   mergeable), extracts quantiles with the row function the quantile UDF
-   runs (functions/rows.dd_quantile), so estimates are bit-identical, and
-   returns them as an Arrow local relation (plans/local.local_frame): a
-   ``LocalTableScan``, so collecting the result starts no Python worker.
+   (operators/aggregate.fold_key_runs: one numpy pass over the sketch
+   bytes — exact, DDSketch is fully mergeable), extracts quantiles with
+   the row function the quantile UDF runs (functions/rows.dd_quantile),
+   so estimates are bit-identical, and returns them as an Arrow local
+   relation (plans/local.local_frame), whose collect runs no Spark job.
    The driver holds ``n_batches x keys`` sketch rows, so the key must be
    a low-cardinality dimension — the same bound each batch's cells
    already require. ``checkpoint_dir`` is a POSIX path.
@@ -164,8 +164,8 @@ def _finalize(spark: SparkSession, checkpoint_dir: str, files: list[str],
            for f in files])
     qs = [float(q) for q in qs]
     out = [(run.column(key)[0].as_py(), sum(run.column("n").to_pylist()), q, e)
-           for run, acc in fold_key_runs(parts, [key], from_bytes)
-           for q, e in zip(qs, dd_quantile(acc.to_bytes(), np.array(qs)))]
+           for run, blob in fold_key_runs(parts, [key], from_bytes)
+           for q, e in zip(qs, dd_quantile(blob, np.array(qs)))]
     schema = (StructType().add(key, StringType()).add("n", LongType())
               .add("q", DoubleType()).add("est", DoubleType()))
     got = {c: [v for v in parts.column(c).to_pylist() if v is not None]

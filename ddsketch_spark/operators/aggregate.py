@@ -384,20 +384,19 @@ def sketch_agg(
                           merge_fanout)
 
 
-def _stored_rows_as_partials(df: DataFrame, sketch_col: str,
-                             keys: Sequence[str],
-                             n_col: str | None = None) -> DataFrame:
-    """Project stored sketch rows into the partial-row contract
-    (``keys..., sketch, part_id, n``) shared by merge_partials — one
-    place to evolve the lineage fields. ``n_col`` carries each stored
-    row's own contributing-row count through the merge (rollup tables);
-    default counts merged sketch rows."""
-    n = F.col(sql_ident(n_col)) if n_col else F.lit(1)
-    return (
-        df.select(*map(sql_ident, keys), F.col(sql_ident(sketch_col))
-                  .alias("sketch"), n.cast("long").alias("n"))
-        .withColumn("part_id", F.spark_partition_id().cast("long"))
-    )
+def _stored_rows(df: DataFrame, sketch_col: str, keys: Sequence[str],
+                 n_col: str | None = None,
+                 cols: Sequence[str] = ("n", "part_id")) -> DataFrame:
+    """``keys..., sketch, cols...`` of stored sketch rows, one
+    ``selectExpr``: with both ``cols``, the partial-row contract shared
+    by merge_partials. ``n`` carries each row's own contributing-row
+    count (``n_col``, rollup tables) or 1, ``part_id`` its partition."""
+    n = f"CAST({sql_ident(n_col)} AS BIGINT)" if n_col else "CAST(1 AS BIGINT)"
+    sql = {"n": f"{n} AS n",
+           "part_id": "CAST(spark_partition_id() AS BIGINT) AS part_id"}
+    return df.selectExpr(*map(sql_ident, keys),
+                         f"{sql_ident(sketch_col)} AS sketch",
+                         *(sql[c] for c in cols))
 
 
 def merge_sketches(
@@ -418,7 +417,7 @@ def merge_sketches(
     """
     keys = list(keys)
     # treat each stored sketch row as a "partial" with synthetic lineage
-    partials = _stored_rows_as_partials(df, sketch_col, keys, n_col)
+    partials = _stored_rows(df, sketch_col, keys, n_col)
     # map_side_combine pays off when many stored sketch rows per key share
     # a scan partition (see merge_partials; measured on hot keys in
     # tools/skew_bench.py) — keep it off for small reagg jobs
@@ -442,7 +441,7 @@ def merge_sketches_extract(
     (measured ~0.3s/query of stage overhead at sf0.1). ``extract``'s lists
     may have length > 1 (e.g. one row per quantile); key columns repeat."""
     keys = list(keys)
-    partials = _stored_rows_as_partials(df, sketch_col, keys)
+    partials = _stored_rows(df, sketch_col, keys)
     out_schema = StructType(_key_fields(df, keys) + list(out_fields))
     return grouped_apply_sorted(
         partials, keys,
@@ -461,18 +460,29 @@ def quantile_extract(qs: Sequence[float]):
 
 def fold_key_runs(tbl: pa.Table, keys: Sequence[str],
                   from_bytes: Callable[[bytes], object]):
-    """``(run, merged sketch)`` per key run of ``tbl``'s ``sketch`` column
-    sorted NULL-first, split by :func:`key_runs` over exact keys as in
-    :func:`map_batches`: the driver twin of :func:`_fold_runs`."""
+    """``(run, merged sketch bytes)`` per key run of ``tbl``'s ``sketch``
+    column sorted NULL-first, split by :func:`key_runs` over exact keys
+    as in :func:`map_batches`: the driver twin of :func:`_fold_runs`.
+    DDSketch rows (the default ``from_bytes``) fold in one numpy pass,
+    ``native.dd_fold``; what it leaves, row by row."""
+    # native imports this module
+    from ddsketch_spark.operators.native import dd_fold
+
     if not tbl.num_rows:
         return
     if keys:
         tbl = tbl.sort_by([(k, "ascending") for k in keys],
                           null_placement="at_start")
     _, starts = key_runs(tbl.select(keys).to_pandas(integer_object_nulls=True))
-    blobs = tbl.column("sketch").to_pylist()
-    for a, b in zip(starts, [*starts[1:], tbl.num_rows]):
-        yield tbl.slice(a, b - a), merge_serialized(blobs[a:b], from_bytes)
+    ends = [*starts[1:], tbl.num_rows]
+    merged = (dd_fold(tbl.column("sketch"), starts)
+              if from_bytes is dd_from_bytes else None)
+    if merged is None:
+        blobs = tbl.column("sketch").to_pylist()
+        merged = [merge_serialized(blobs[a:b], from_bytes).to_bytes()
+                  for a, b in zip(starts, ends)]
+    for a, b, blob in zip(starts, ends, merged):
+        yield tbl.slice(a, b - a), blob
 
 
 def fold_stored(df: DataFrame, sketch_col: str, keys: Sequence[str],
@@ -482,25 +492,27 @@ def fold_stored(df: DataFrame, sketch_col: str, keys: Sequence[str],
     """:func:`merge_sketches`, or :func:`merge_sketches_extract` given
     ``extract``, folded on the driver into a ``local_frame`` when ``df``
     only reads stored rows (``scan_only``) and at most
-    ``DRIVER_FOLD_MAX_ROWS`` of them fetch at call time. Otherwise that
-    lazy plan, same rows: a table still to be built is not fetched, as
-    the plan would build it again."""
+    ``DRIVER_FOLD_MAX_ROWS`` of them fetch at call time (one task,
+    ``bounded_arrow``). Otherwise that lazy plan, same rows: a table
+    still to be built is not fetched, as the plan would build it again."""
     keys = list(keys)
-    fetch = _stored_rows_as_partials(df, sketch_col, keys, n_col)
-    tbl = bounded_arrow(fetch.drop("part_id"), DRIVER_FOLD_MAX_ROWS) \
-        if scan_only(df) else None
+    fetch = _stored_rows(df, sketch_col, keys, n_col,
+                         () if extract else ["n"])
+    tbl = (bounded_arrow(fetch, DRIVER_FOLD_MAX_ROWS) if scan_only(fetch)
+           else None)
     if tbl is None:
         return (merge_sketches_extract(df, sketch_col, keys, extract,
                                        out_fields, from_bytes) if extract
                 else merge_sketches(df, sketch_col, keys, from_bytes,
                                     n_col=n_col))
-    fields = _key_fields(df, keys) + (list(out_fields) if extract else [
-        StructField("sketch", BinaryType(), False),
-        StructField("n", LongType(), False)])
+    fields = fetch.schema.fields[:len(keys)] + (
+        list(out_fields) if extract else [
+            StructField("sketch", BinaryType(), False),
+            StructField("n", LongType(), False)])
     rows = []
-    for run, acc in fold_key_runs(tbl, keys, from_bytes):
-        cols = extract(acc) if extract else {
-            "sketch": [acc.to_bytes()], "n": [pc.sum(run.column("n")).as_py()]}
+    for run, blob in fold_key_runs(tbl, keys, from_bytes):
+        cols = extract(from_bytes(blob)) if extract else {
+            "sketch": [blob], "n": [pc.sum(run.column("n")).as_py()]}
         m = len(next(iter(cols.values())))
         cols.update({k: [run.column(k)[0].as_py()] * m for k in keys})
         rows += zip(*(cols[f.name] for f in fields))

@@ -49,13 +49,15 @@ from typing import Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from ddsketch_spark.core.bloom import Bloom
 from ddsketch_spark.core.cms import CMS
 from ddsketch_spark.core.ddsketch import (
-    _BUCKET_DT, INFINITE_VALUE, DDSketch, mapping_params, validate_alpha,
+    _BUCKET_DT, _HEADER_DT, INFINITE_VALUE, MAX_SKETCH_BUCKETS,
+    MIN_SKETCH_BUCKETS, DDSketch, mapping_params, validate_alpha,
     validate_nbuckets,
 )
 from ddsketch_spark.core.hashing import H1_BITS, H64_BITS
@@ -221,6 +223,8 @@ def dd_assemble(pdf: pd.DataFrame, keys: Sequence[str], alpha: float,
     or UDDSketch collapse). Bit-identical to a kernel build (pinned by
     the native==kernel identity tests).
 
+    ``alpha`` and ``nbuckets`` are scalars or one value per run.
+
     Cells carrying ``__vmin``/``__vmax`` (``dd_cells(..., _extrema=True)``)
     also give each run's ``v_min``/``v_max`` in Spark's order, where NaN
     sorts above +inf: ``min`` skips NaN unless every value is NaN, ``max``
@@ -232,6 +236,8 @@ def dd_assemble(pdf: pd.DataFrame, keys: Sequence[str], alpha: float,
             {"v_min": [], "v_max": []} if extrema else {}))
     run_id, run_starts = key_runs(pdf[keys])
     run_ends = np.append(run_starts[1:], len(pdf))
+    alphas = np.broadcast_to(alpha, run_starts.shape)
+    nbs = np.broadcast_to(nbuckets, run_starts.shape)
 
     part = pdf["__part"].to_numpy(np.int64)
     bidx = pdf["__bidx"].to_numpy(np.int64)
@@ -266,10 +272,10 @@ def dd_assemble(pdf: pd.DataFrame, keys: Sequence[str], alpha: float,
     out = {k: pdf[k].to_numpy()[run_starts[runs]] for k in keys}
     out["sketch"], out["n"] = [], nrows[runs]
     for r in runs:
-        if nbk[r] > nbuckets:
+        if nbk[r] > nbs[r]:
             # rare overflow: the kernel handles error/collapse exactly
             lo, hi = run_starts[r], run_ends[r]
-            s = DDSketch(alpha, nbuckets, on_overflow)
+            s = DDSketch(float(alphas[r]), int(nbs[r]), on_overflow)
             s.count, s.zero_count = int(count[r]), int(zero[r])
             for store, code in ((s.neg, 0), (s.pos, 2)):
                 m = part[lo:hi] == code
@@ -278,8 +284,8 @@ def dd_assemble(pdf: pd.DataFrame, keys: Sequence[str], alpha: float,
             s._enforce_maxbuckets()
             out["sketch"].append(s.to_bytes())
             continue
-        hdr = pack(0, int(count[r]), int(zero[r]), alpha, nbuckets,
-                   int(nbk[r]), int(nneg[r]))
+        hdr = pack(0, int(count[r]), int(zero[r]), float(alphas[r]),
+                   int(nbs[r]), int(nbk[r]), int(nneg[r]))
         out["sketch"].append(hdr + bbytes[starts[r] * 12: ends[r] * 12])
     if extrema:
         # a cell's NULLs are the identities here: NaN (pandas' NULL) for
@@ -289,6 +295,69 @@ def dd_assemble(pdf: pd.DataFrame, keys: Sequence[str], alpha: float,
         out["v_max"] = np.maximum.reduceat(
             pdf["__vmax"].to_numpy(np.float64), run_starts)[runs]
     return pd.DataFrame(out)
+
+
+def dd_fold(sketches: pa.ChunkedArray, starts: np.ndarray
+            ) -> list[bytes] | None:
+    """The merged wire bytes of each run of DDSketch ``sketches`` (runs
+    begin at rows ``starts``), as ``from_bytes`` and ``merge`` row by row
+    give them: one numpy pass over the Arrow buffers runs every
+    ``from_bytes`` check, sums the counts per (run, part, index) and lays
+    them out with :func:`dd_assemble`. None where that identity is not
+    proven, for the caller to fold row by row: a NULL or malformed row,
+    alpha or maxbuckets that differ inside a run, a run past its
+    maxbuckets, counts that near the int64 limit in total."""
+    arr = sketches.combine_chunks()
+    w = 8 if pa.types.is_large_binary(arr.type) else 4
+    hsz = _HEADER_DT.itemsize
+    off = np.frombuffer(arr.buffers()[1], f"<i{w}", len(arr) + 1,
+                        arr.offset * w).astype(np.int64)
+    if arr.null_count or not len(arr) or (np.diff(off) < hsz).any():
+        return None
+    data = np.frombuffer(arr.buffers()[2], np.uint8)[off[0]:off[-1]]
+    head = (off[:-1] - off[0])[:, None] + np.arange(hsz)
+    hdr = data[head].view(_HEADER_DT)[:, 0]
+    flags, count, zero, maxb, nb, nneg = (
+        hdr[f].astype(np.int64) for f in _HEADER_DT.names if f != "alpha")
+    alpha = hdr["alpha"].astype(np.float64)
+    run = np.repeat(np.arange(len(starts)), np.diff([*starts, len(arr)]))
+    if not ((flags == 0) & (alpha > 0) & (alpha < 1) & (count > 0)
+            & (maxb >= MIN_SKETCH_BUCKETS) & (maxb <= MAX_SKETCH_BUCKETS)
+            & (nneg >= 0) & (nneg <= nb) & (zero >= 0) & (zero <= count)
+            & (np.diff(off) == hsz + nb * _BUCKET_DT.itemsize)
+            & (alpha == alpha[starts][run]) & (maxb == maxb[starts][run])
+            ).all():
+        return None
+    body = np.ones(len(data), bool)
+    body[head] = False
+    bk = data[body].view(_BUCKET_DT)
+    idx, cnt = bk["index"].astype(np.int64), bk["count"].astype(np.int64)
+    row, first = np.repeat(np.arange(len(arr)), nb), np.cumsum(nb) - nb
+    neg = np.arange(len(idx)) - first[row] < nneg[row]
+    step, csum = np.diff(idx), np.append(0, np.cumsum(cnt))
+    total = cnt.sum(dtype=float) + zero.sum(dtype=float)
+    if ((cnt <= 0).any() or total >= 2.0 ** 62
+            or (csum[first + nb] - csum[first] + zero != count).any()
+            or ((row[1:] == row[:-1]) & (neg[1:] == neg[:-1])
+                & np.where(neg[1:], step >= 0, step <= 0)).any()):
+        return None
+    # a cell per bucket and a zero-count cell (part 1) per row, keyed
+    # (run, part, index) in one int64 and summed per key
+    key = ((np.append(run[row], run) << 34)
+           | (np.append(np.where(neg, 0, 2), np.ones_like(run)) << 32)
+           | (np.append(idx, np.zeros_like(run)) + 2 ** 31))
+    order = np.argsort(key)
+    key, c = key[order], np.append(cnt, zero)[order]
+    cell = np.flatnonzero(np.append(True, key[1:] != key[:-1]))
+    key, part = key[cell], (key[cell] >> 32) & 3
+    if (np.bincount(key[part != 1] >> 34, minlength=len(starts))
+            > maxb[starts]).any():
+        return None
+    cells = pd.DataFrame({"__run": key >> 34, "__part": part,
+                          "__bidx": (key & 0xFFFFFFFF) - 2 ** 31,
+                          "__c": np.add.reduceat(c, cell), "__rows": 0})
+    return dd_assemble(cells, ["__run"], alpha[starts],
+                       maxb[starts])["sketch"].tolist()
 
 
 # ---------------------------------------------------------------------------

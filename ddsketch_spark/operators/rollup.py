@@ -18,9 +18,10 @@ partial-aggregated groupBy over the raw scan (the JVM-native bucket-cell
 path, operators/native.py); every question afterwards touches only the
 tiny table: a range query's bucket predicate pushes down to the stored
 table's parquet scan so only in-range partials are read at all, and a
-rollup or range merges those kB rows on the driver (``fold_stored``).
-Past ``aggregate.DRIVER_FOLD_MAX_ROWS`` rows, or over a table still to
-be built, the merge is one shuffle of kB rows.
+rollup or range merges those kB rows on the driver (``fold_stored``):
+one single-task fetch built from SQL strings, then one numpy pass over
+the sketch bytes. Past ``aggregate.DRIVER_FOLD_MAX_ROWS`` rows, or over
+a table still to be built, the merge is one shuffle of kB rows.
 
 Stored tables describe themselves: :func:`store_sketch_table` commits a
 log entry (``sources.tables.commit``: format, schema, data files) after
@@ -57,6 +58,9 @@ def _deser(on_overflow: str, from_bytes=None):
     keyed N-way merge."""
     if from_bytes is not None:
         return from_bytes
+    if on_overflow == "error":
+        # the plain deserializer, whose rows fold_key_runs folds in one pass
+        return dd_from_bytes
     return lambda b: dd_from_bytes(b, on_overflow)
 
 __all__ = [
@@ -192,7 +196,7 @@ def rollup(sketch_table: DataFrame, coarse_granularity_seconds: int,
     _check_multiple(g, int(fine_granularity_seconds))
     keys = list(keys)
     coarse = sketch_table.withColumn(
-        "bucket", F.col("bucket") - F.pmod(F.col("bucket"), F.lit(g)))
+        "bucket", F.expr(f"bucket - pmod(bucket, {g})"))
     # n_col: a rollup row's n = sum of its children's contributing
     # rows, not the number of merged sketch rows
     return fold_stored(coarse, "sketch", ["bucket"] + keys,
@@ -231,18 +235,16 @@ def range_percentile(sketch_table: DataFrame, t0, t1, qs: Sequence[float],
             f"rows of the straddled bucket, which the table no longer has")
     if e1 <= e0:
         raise ValueError("empty range: t1 must be > t0")
-    in_range = sketch_table.where(
-        (F.col("bucket") >= e0) & (F.col("bucket") < e1))
+    cond = f"bucket >= {e0} AND bucket < {e1}"
     if (partition_granularity_seconds
             and "pbucket" in sketch_table.columns):
         # tables written by store_sketch_table: an equivalent predicate
         # on the partition directory column prunes whole partitions
         # (implied by the bucket bounds, but Spark cannot derive it)
         g = int(partition_granularity_seconds)
-        in_range = in_range.where(
-            (F.col("pbucket") >= (e0 // g) * g) & (F.col("pbucket") < e1))
-    return fold_stored(in_range, "sketch", keys, _deser(on_overflow),
-                       *quantile_extract(qs))
+        cond += f" AND pbucket >= {(e0 // g) * g} AND pbucket < {e1}"
+    return fold_stored(sketch_table.where(cond), "sketch", keys,
+                       _deser(on_overflow), *quantile_extract(qs))
 
 
 def compact_sketch_table(sketch_table: DataFrame, boundary,
@@ -276,8 +278,8 @@ def compact_sketch_table(sketch_table: DataFrame, boundary,
     # a sketch table built without lineage compacts fine (r5 ADVICE)
     cols = [sql_ident(c) for c in ["bucket", *keys, "sketch"]
             + (["n"] if "n" in sketch_table.columns else [])]
-    old = sketch_table.where(F.col("bucket") < e_b).select(*cols)
-    recent = sketch_table.where(F.col("bucket") >= e_b).select(*cols)
+    old = sketch_table.where(f"bucket < {e_b}").select(*cols)
+    recent = sketch_table.where(f"bucket >= {e_b}").select(*cols)
     compacted = rollup(old, coarse, fine, keys,
                        on_overflow=on_overflow).select(*cols)
     return (compacted.withColumn("gran", F.lit(coarse).cast("long"))
@@ -315,8 +317,6 @@ def range_percentile_tiered(tiered: DataFrame, t0, t1, qs: Sequence[float],
                 f"{'coarse' if e < e_b else 'fine'} tier and must be "
                 f"aligned to its {g}s grain — an unaligned edge would "
                 f"drop the straddled bucket's data")
-    in_range = tiered.where(
-        (F.col("bucket") >= e0)
-        & ((F.col("bucket") + F.col("gran")) <= e1))
+    in_range = tiered.where(f"bucket >= {e0} AND bucket + gran <= {e1}")
     return fold_stored(in_range, "sketch", keys, _deser(on_overflow),
                        *quantile_extract(qs))

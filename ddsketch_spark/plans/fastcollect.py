@@ -15,7 +15,9 @@ arrays thereof) or binary (``bytes``, or ``bytearray`` where
 ``spark.sql.execution.pyspark.binaryAsBytes`` is false, as the pickle
 path yields them), rows are fetched with ``toArrow()`` (parallel,
 columnar, zero-copy into pyarrow) and materialized into ``Row`` objects
-with a bulk constructor. Any other schema — timestamps, dates,
+with a bulk constructor. A ``plans.local.local_frame`` is materialized
+from the Arrow table it sent, with no Spark job (``toArrow()`` would run
+one over its ``LocalTableScan``). Any other schema — timestamps, dates,
 decimals, structs, maps — falls back to the stock pickle path, so the
 returned rows are always indistinguishable from
 ``DataFrame.collect()``'s: same class behaviour
@@ -130,6 +132,8 @@ def _gc_paused():
 class FastCollectDataFrame(_ClassicDataFrame):
     """Classic DataFrame whose ``collect()`` uses Arrow for simple schemas."""
 
+    _local_rows = None     # the Arrow table of a plans.local.local_frame
+
     def collect(self):  # type: ignore[override]
         # the stock-path calls live OUTSIDE the try: a failure inside
         # super().collect() (maxResultSize, task failure) must propagate,
@@ -142,8 +146,9 @@ class FastCollectDataFrame(_ClassicDataFrame):
         # the stock path keeps the collector on (a pause is process-wide)
         if not fast:
             return super().collect()
+        tbl = self._local_rows
         try:
-            tbl = self.toArrow()
+            tbl = self.toArrow() if tbl is None else tbl
         except CapturedException:
             raise   # the query itself failed: running it again fails again
         except Exception:
@@ -173,4 +178,7 @@ def fast_collect(df) -> FastCollectDataFrame:
     to the caller."""
     if isinstance(df, FastCollectDataFrame):
         return df
-    return FastCollectDataFrame(df._jdf, df.sparkSession)
+    out = FastCollectDataFrame(df._jdf, df.sparkSession)
+    # vars: DataFrame.__getattr__ would read a missing name as a column
+    out._local_rows = vars(df).get("_local_rows")
+    return out

@@ -5,7 +5,9 @@ ExistingRDD`` of a Python RDD, so every action on it starts a Python
 worker to unpickle the rows. :func:`local_frame` sends the rows to the
 JVM once, as a ``pyarrow.Table`` with the exact Spark types; under
 ``spark.sql.execution.arrow.localRelationThreshold`` it plans as a
-``LocalTableScan``, and actions on it run no Python.
+``LocalTableScan``, and actions on it run no Python. The frame keeps
+the table it sent (``_local_rows``): ``plans.fastcollect`` collects it
+with no Spark job, a frame derived from it as any other.
 """
 
 from __future__ import annotations
@@ -33,14 +35,17 @@ def local_frame(spark: SparkSession, rows: Sequence[Sequence],
             col = [v.astimezone() if v is not None and v.tzinfo is None
                    else v for v in col]
         arrays.append(pa.array(col, type=to_arrow_type(f.dataType)))
-    return spark.createDataFrame(
-        pa.Table.from_arrays(arrays, names=schema.names), schema)
+    tbl = pa.Table.from_arrays(arrays, names=schema.names)
+    df = spark.createDataFrame(tbl, schema)
+    df._local_rows = tbl
+    return df
 
 
 def bounded_arrow(df: DataFrame, max_rows: int) -> pa.Table | None:
     """``df.toArrow()`` if ``df`` has at most ``max_rows`` rows, else
-    None: one ``limit(max_rows + 1)`` job, so more never reach the driver."""
-    tbl = df.limit(max_rows + 1).toArrow()
+    None: one task with no Exchange (``coalesce(1)``) that stops reading
+    at row ``max_rows + 1`` (and its columnar batch)."""
+    tbl = df.coalesce(1).limit(max_rows + 1).toArrow()
     return tbl if tbl.num_rows <= max_rows else None
 
 

@@ -19,7 +19,9 @@ micro-batch id). :func:`read_entry` returns the newest entry, and
 parallel-listing job past 32 paths) nor infers its schema (a second
 job), so reading a snapshot submits no Spark job. Data written but not
 committed is invisible. All log IO runs on the driver through the
-Hadoop ``FileSystem`` API of the JVM, so it works on any Hadoop store.
+Hadoop ``FileSystem`` API of the JVM, so it works on any Hadoop store;
+on the local file system the log is listed, read and its temp entries
+written with POSIX calls, and renamed and deleted through that API.
 """
 
 from __future__ import annotations
@@ -30,6 +32,7 @@ import re
 import threading
 import uuid
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -64,11 +67,14 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
 
 
 def filesystem(spark: SparkSession, path: str):
-    """``(FileSystem, Path class, qualified Path)`` of ``path``. Callers
-    keep the class: each ``jvm.a.b.C`` lookup is a py4j round trip."""
-    path_cls = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    """``(FileSystem, Path class, qualified Path)`` of ``path``. The class
+    is named, not looked up: each step of a ``jvm.a.b.C`` lookup is a
+    py4j round trip."""
+    sc = spark.sparkContext
+    path_cls = JavaClass("org.apache.hadoop.fs.Path",
+                         sc._gateway._gateway_client)
     p = path_cls(path)
-    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
     return fs, path_cls, fs.makeQualified(p)
 
 
@@ -102,11 +108,19 @@ def data_files(spark: SparkSession, path: str) -> list[str]:
     return sorted(out)
 
 
-def _versions(fs, log) -> list[int]:
+def _local(fs, log) -> str | None:
+    """The POSIX directory of ``log`` on the local file system, where the
+    ``FileSystem`` forks a chmod per created file and .crc, else None."""
+    return log.toUri().getPath() if fs.getScheme() == "file" else None
+
+
+def _versions(fs, log, local: str | None) -> list[int]:
     """Committed log versions, newest first."""
-    if not fs.exists(log):
-        return []
-    names = (st.getPath().getName() for st in fs.listStatus(log))
+    if local is not None:
+        names = os.listdir(local) if os.path.isdir(local) else []
+    else:
+        names = ([st.getPath().getName() for st in fs.listStatus(log)]
+                 if fs.exists(log) else [])
     return sorted((int(m.group(1)) for m in map(_ENTRY.fullmatch, names)
                   if m), reverse=True)
 
@@ -122,19 +136,25 @@ def commit(spark: SparkSession, path: str, files: list[str],
     a reader lists stays two entries long however often it is written."""
     fs, path_cls, root = filesystem(spark, path)
     log = path_cls(root, _LOG_DIR)
-    versions = _versions(fs, log)
+    local = _local(fs, log)
+    versions = _versions(fs, log, local)
     version = versions[0] + 1 if versions else 0
     body = json.dumps({"format": fmt,
                        "schema": schema.jsonValue(),
                        "files": list(files), **fields},
                       separators=(",", ":")).encode()
-    tmp = path_cls(log, f".{version:020d}.{uuid.uuid4().hex}.tmp")
-    out = fs.create(tmp, False)
-    try:
-        out.write(body)
-    finally:
-        out.close()
-    dst = path_cls(log, f"{version:020d}.json")
+    name = f".{version:020d}.{uuid.uuid4().hex}.tmp"
+    if local is not None:
+        os.makedirs(local, exist_ok=True)
+        with open(os.path.join(local, name), "xb") as f:
+            f.write(body)
+    else:
+        out = fs.create(path_cls(log, name), False)
+        try:
+            out.write(body)
+        finally:
+            out.close()
+    tmp, dst = path_cls(log, name), path_cls(log, f"{version:020d}.json")
     if fs.exists(dst) or not fs.rename(tmp, dst):
         fs.delete(tmp, False)
         raise RuntimeError(
@@ -151,10 +171,15 @@ def read_entry(spark: SparkSession, path: str) -> dict | None:
     fields — or None when ``path`` has no log."""
     fs, path_cls, root = filesystem(spark, path)
     log = path_cls(root, _LOG_DIR)
-    versions = _versions(fs, log)
+    local = _local(fs, log)
+    versions = _versions(fs, log, local)
     if not versions:
         return None
-    stream = fs.open(path_cls(log, f"{versions[0]:020d}.json"))
+    name = f"{versions[0]:020d}.json"
+    if local is not None:
+        with open(os.path.join(local, name), "rb") as f:
+            return json.loads(f.read())
+    stream = fs.open(path_cls(log, name))
     try:
         # a py4j reply longer than 8 kB leaves the JVM in two writes and
         # waits ~40 ms for a delayed ACK (measured on Linux loopback):

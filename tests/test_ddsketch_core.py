@@ -499,3 +499,171 @@ def test_collapse_levels_chain_probe():
     assert collapse_levels(0.02, 0.01) is None   # wrong direction
     # chain stalls below 1.0 in float: unreachable target -> None, no crash
     assert collapse_levels(0.01, 0.9999999) is None
+
+
+# ------------------------------------------------- stored-row decode-fold
+
+def _wire(s: DDSketch, **header) -> bytes:
+    """``s.to_bytes()`` with header fields replaced (names of
+    ``core.ddsketch._HEADER_DT``)."""
+    from ddsketch_spark.core.ddsketch import _HEADER_DT
+
+    b = bytearray(s.to_bytes())
+    hdr = np.frombuffer(bytes(b[:_HEADER_DT.itemsize]), _HEADER_DT).copy()
+    for name, value in header.items():
+        hdr[name] = value
+    b[:_HEADER_DT.itemsize] = hdr.tobytes()
+    return bytes(b)
+
+
+def _bucket_patch(s: DDSketch, i: int, index=None, count=None) -> bytes:
+    """``s.to_bytes()`` with bucket ``i``'s index or count replaced."""
+    from ddsketch_spark.core.ddsketch import _BUCKET_DT, _HEADER_DT
+
+    b = bytearray(s.to_bytes())
+    at = _HEADER_DT.itemsize + i * _BUCKET_DT.itemsize
+    bk = np.frombuffer(bytes(b[at:at + _BUCKET_DT.itemsize]), _BUCKET_DT).copy()
+    if index is not None:
+        bk["index"] = index
+    if count is not None:
+        bk["count"] = count
+    b[at:at + _BUCKET_DT.itemsize] = bk.tobytes()
+    return bytes(b)
+
+
+_MIXED = DDSketch(0.05, 1024).update([-30.0, -2.0, 0.0, 3.0, 40.0, 40.0])
+# one case per check of DDSketch.from_bytes, in its order
+CORRUPT_BYTES = {
+    "truncated header": _MIXED.to_bytes()[:39],
+    "flags": _wire(_MIXED, flags=1),
+    "alpha zero": _wire(_MIXED, alpha=0.0),
+    "alpha one": _wire(_MIXED, alpha=1.0),
+    "alpha nan": _wire(_MIXED, alpha=float("nan")),
+    "maxbuckets low": _wire(_MIXED, maxbuckets=15),
+    "maxbuckets high": _wire(_MIXED, maxbuckets=32769),
+    "negative nneg": _wire(_MIXED, nbuckets_negative=-1),
+    "nneg past nbuckets": _wire(_MIXED, nbuckets_negative=5),
+    "nbuckets past maxbuckets": _wire(DDSketch(0.05, 32).update(
+        np.arange(1.0, 18.0) ** 3), maxbuckets=16),
+    "count zero": _wire(_MIXED, count=0),
+    "zero_count negative": _wire(_MIXED, zero_count=-1),
+    "zero_count past count": _wire(_MIXED, zero_count=7),
+    "size short": _MIXED.to_bytes()[:-1],
+    "size long": _MIXED.to_bytes() + b"\x00",
+    "bucket count zero": _bucket_patch(_MIXED, 0, count=0),
+    "bucket count negative": _bucket_patch(_MIXED, 3, count=-1),
+    "negative part ascending": _bucket_patch(_MIXED, 1, index=10 ** 6),
+    "positive part descending": _bucket_patch(_MIXED, 2, index=10 ** 6),
+    "total mismatch": _wire(_MIXED, count=9),
+}
+
+
+def _stored(keys, blobs, ktype=None):
+    import pyarrow as pa
+
+    return pa.table({"k": pa.array(keys, ktype or pa.int64()),
+                     "sketch": pa.array(blobs, pa.binary())})
+
+
+def _row_fold(tbl, keys):
+    """The oracle: each key's stored rows (NULL first, then ascending, in
+    table order within a key) deserialized and merged one by one."""
+    from ddsketch_spark.core.ddsketch import from_bytes
+    from ddsketch_spark.operators.aggregate import merge_serialized
+
+    rows = tbl.to_pylist()
+    groups = {}
+    for r in rows:
+        groups.setdefault(tuple(r[k] for k in keys), []).append(r["sketch"])
+    order = sorted(groups, key=lambda t: [(v is not None, v) for v in t])
+    return [(k, merge_serialized(groups[k], from_bytes).to_bytes())
+            for k in order]
+
+
+def _decode_fold(tbl, keys):
+    from ddsketch_spark.core.ddsketch import from_bytes
+    from ddsketch_spark.operators.aggregate import fold_key_runs
+
+    return [(tuple(run.column(k)[0].as_py() for k in keys), blob)
+            for run, blob in fold_key_runs(tbl, keys, from_bytes)]
+
+
+def _rand_sketches(rng, n, signs=(-1, 0, 1), maxbuckets=(2048,)):
+    out = []
+    for _ in range(n):
+        v = rng.lognormal(2.0, 2.0, int(rng.integers(1, 40)))
+        s = DDSketch(0.01, int(rng.choice(maxbuckets)))
+        out.append(s.update(v * rng.choice(signs, v.size)).to_bytes())
+    return out
+
+
+@pytest.mark.parametrize("signs", [(-1,), (0,), (1,), (-1, 0, 1)],
+                         ids=["negative", "zero", "positive", "mixed"])
+def test_decode_fold_equals_row_fold(signs):
+    """Stored DDSketch rows fold in one numpy pass (``native.dd_fold``)
+    to the bytes of a ``from_bytes`` + ``merge`` fold row by row:
+    keyless and keyed, a NULL key, int64 keys past 2^53, negative and
+    zero values, and maxbuckets that differ between keys."""
+    from ddsketch_spark.operators.aggregate import key_runs
+    from ddsketch_spark.operators.native import dd_fold
+
+    rng = np.random.default_rng(len(signs) * 7 + signs[0])
+    big = 2 ** 53
+    blobs = _rand_sketches(rng, 400, signs)
+    ks = [[None, big + 1, big + 2, 7][i % 4] for i in range(400)]
+    for tbl, keys in ((_stored(ks, blobs), []), (_stored(ks, blobs), ["k"])):
+        assert _decode_fold(tbl, keys) == _row_fold(tbl, keys)
+    # one maxbuckets per key, differing between keys
+    mb = {None: 1024, big + 1: 2048, big + 2: 4096, 7: 16384}
+    by_key = [DDSketch.from_bytes(b).with_maxbuckets(mb[k]).to_bytes()
+              for k, b in zip(ks, blobs)]
+    tbl = _stored(ks, by_key)
+    assert _decode_fold(tbl, ["k"]) == _row_fold(tbl, ["k"])
+    # the pass itself gave them, not the row-by-row fallback
+    srt = tbl.sort_by([("k", "ascending")], null_placement="at_start")
+    _, starts = key_runs(srt.select(["k"]).to_pandas(
+        integer_object_nulls=True))
+    assert dd_fold(srt.column("sketch"), starts) is not None
+
+
+def test_decode_fold_leaves_unproven_runs_to_the_row_fold():
+    """maxbuckets that differ inside a key, alphas that differ inside a
+    key, a merged key past its maxbuckets, a NULL sketch and counts that
+    near the int64 limit are left to the row fold, with its bytes or its
+    error."""
+    from ddsketch_spark.operators.native import dd_fold
+
+    rng = np.random.default_rng(11)
+    blobs = _rand_sketches(rng, 30, maxbuckets=(1024, 2048))
+    tbl = _stored([i % 2 for i in range(30)], blobs)
+    assert _decode_fold(tbl, ["k"]) == _row_fold(tbl, ["k"])
+    sort = tbl.sort_by("k")
+    assert dd_fold(sort.column("sketch"), np.array([0, 15])) is None
+    mixed = [DDSketch(a, 1024).update([1.0, 2.0]).to_bytes()
+             for a in (0.01, 0.02)]
+    with pytest.raises(ValueError, match="different alpha"):
+        _decode_fold(_stored([1, 1], mixed), ["k"])
+    wide = [DDSketch(0.05, 16).update(np.arange(1, 12) * m ** 4.0)
+            .to_bytes() for m in (1, 50)]
+    with pytest.raises(ValueError, match="too many buckets"):
+        _decode_fold(_stored([1, 1], wide), ["k"])
+    with pytest.raises(TypeError):
+        _decode_fold(_stored([1, 1], [blobs[0], None]), ["k"])
+    heavy = _stored([1] * 3, [DDSketch(0.05, 1024).update(
+        [1.0], [2.0 ** 61]).to_bytes()] * 3)
+    assert dd_fold(heavy.column("sketch"), np.array([0])) is None
+    assert _decode_fold(heavy, ["k"]) == _row_fold(heavy, ["k"])
+
+
+@pytest.mark.parametrize("case", sorted(CORRUPT_BYTES))
+def test_decode_fold_raises_from_bytes_error(case):
+    """A malformed stored row raises the error text ``from_bytes`` gives
+    it, wherever it sits among valid rows."""
+    bad = CORRUPT_BYTES[case]
+    with pytest.raises(ValueError) as want:
+        DDSketch.from_bytes(bad)
+    good = _rand_sketches(np.random.default_rng(3), 6)
+    tbl = _stored([1, 1, 2, 2, 2, 3, 3], good[:4] + [bad] + good[4:])
+    with pytest.raises(ValueError) as got:
+        _decode_fold(tbl, ["k"])
+    assert str(got.value) == str(want.value)

@@ -210,3 +210,40 @@ def test_fallback_collect_keeps_the_collector_on(spark, monkeypatch, cause):
     monkeypatch.setattr(ClassicDF, "collect", recording)
     assert gc.isenabled()
     assert len(df.collect()) == 3 and seen == [True]
+
+
+@pytest.mark.parametrize("as_bytes", ["true", "false"])
+def test_driver_held_collect_runs_no_job(spark, jobs_in_group, as_bytes):
+    """A ``local_frame`` collects from the Arrow table it sent: no Spark
+    job, and the stock ``collect()``'s rows — NULLs, NaN, arrays, binary
+    as ``bytes`` or ``bytearray``. A frame derived from it collects the
+    same rows through Spark."""
+    from ddsketch_spark.plans.local import local_frame
+
+    schema = ("n long, s string, b binary, d double, a array<long>,"
+              " ok boolean")
+    rows = [(1, "a", b"\x00", 1.5, [1, None], True),
+            (2, "", b"", float("nan"), [], False), (None,) * 6]
+    key = "spark.sql.execution.pyspark.binaryAsBytes"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, as_bytes)
+    group = f"fastcollect-held-{as_bytes}"
+    try:
+        df = local_frame(spark, rows, schema)
+        spark.sparkContext.setJobGroup(group, group)
+        try:
+            got = fast_collect(df).collect()
+        finally:
+            spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+        want = spark.createDataFrame(rows, schema).collect()
+        derived = fast_collect(df.select("*")).collect()
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert jobs_in_group(group) == 0
+    _assert_identical(got, want)
+    _assert_identical(derived, want)
+    binary = bytes if as_bytes == "true" else bytearray
+    assert type(got[0].b) is binary

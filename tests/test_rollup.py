@@ -6,6 +6,7 @@ grain — merge associativity driven through the real time dimension.
 
 import datetime as dt
 import os
+import re
 import shutil
 
 import numpy as np
@@ -752,3 +753,58 @@ def test_hostile_key_names(events, plain_key_answers, monkeypatch, name,
     for q, (columns, rows) in zip(got, plain_key_answers):
         assert q.columns == [name if c == "etype" else c for c in columns]
         assert _rows(q) == rows
+
+
+def _stage_input_records(spark, stage_id):
+    """Input records of stage ``stage_id`` from the driver's status store."""
+    sc = spark.sparkContext
+    jvm = sc._jvm
+    data = sc._jsc.sc().statusStore().stageData(
+        stage_id, False, jvm.java.util.ArrayList(), False,
+        sc._gateway.new_array(jvm.double, 0))
+    return sum(data.apply(i).inputRecords() for i in range(data.size()))
+
+
+def test_stored_fetch_is_one_task_that_stops_past_its_bound(
+        spark, day_store, monkeypatch, jobs_in_group):
+    """The stored fetch runs as ``CollectLimit -> Coalesce 1 -> scan``:
+    one job of one stage and one task, with no Exchange and no Python
+    node. Past the bound it stops reading: at most bound + 1 rows plus
+    one columnar batch, where a limit over a shuffle read every row."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    plans = []
+    to_arrow = DataFrame.toArrow
+
+    def recording(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return to_arrow(df)
+
+    monkeypatch.setattr(DataFrame, "toArrow", recording)
+    stored = read_sketch_table(spark, day_store[1])
+    batch = "spark.sql.parquet.columnarReaderBatchSize"
+    sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
+    for bound, group in ((10_000, "fetch-under"), (10, "fetch-past")):
+        monkeypatch.setattr(aggregate, "DRIVER_FOLD_MAX_ROWS", bound)
+        spark.conf.set(batch, "16")
+        sc.setJobGroup(group, group)
+        try:
+            rollup(stored, DAY, HOUR, keys=["etype"])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            spark.conf.unset(batch)
+        assert jobs_in_group(group) == 1
+        (job,) = tracker.getJobIdsForGroup(group)
+        (stage,) = tracker.getJobInfo(job).stageIds
+        assert tracker.getStageInfo(stage).numTasks == 1
+        plan = plans.pop()
+        lines = plan.splitlines()
+        assert lines[0].startswith("CollectLimit"), plan
+        assert lines[1].strip() == "+- Coalesce 1", plan
+        assert "Exchange" not in plan and not re.search(PYTHON_NODE, plan)
+        assert plan.count("FileScan parquet") == 1, plan
+        read = _stage_input_records(spark, stage)
+        if bound == 10:
+            assert read <= bound + 1 + 16 < stored.count()
+        else:
+            assert read == stored.count()
