@@ -15,11 +15,11 @@ aggregate protocol (SFUNC / COMBINEFUNC / SERIALFUNC / FINALFUNC,
 
   stage 2 (COMBINEFUNC): :func:`grouped_apply_sorted` folds each key's
       partial sketches with :func:`merge_serialized` over key-sorted runs.
-      Because stage 1 already collapsed each partition to ≤1 row per key,
-      the worst-case rows per reduce key equals the input partition count
-      — Zipf-skewed keys (web-data ``lang``) are already bounded; for
-      extreme partition counts a fan-out pre-merge round
-      (``merge_fanout``) caps it further (two-round merge per SURVEY §3.2).
+      Stage 1 already collapsed each partition to one row per key, so at
+      most one partial per map task per key reaches the reducer: Zipf-
+      skewed keys (web-data ``lang``) are bounded by the task count.
+      DDSketch merges are exact integer bucket sums, so any merge tree
+      gives the same bytes; the merge has one shape and no options.
 
   final (FINALFUNC): scalar pandas UDF on the merged sketch column
       (quantile / rank / trimmed extraction) — see
@@ -185,17 +185,14 @@ def sketch_partials(
 AUTO_FANOUT_THRESHOLD = 512
 
 
-def auto_merge_fanout(n_partitions: int,
-                      threshold: int = AUTO_FANOUT_THRESHOLD) -> int | None:
+def auto_merge_fanout(n_partitions: int) -> int | None:
     """Default pre-merge fanout for a scan with ``n_partitions`` tasks.
 
-    Below ``threshold`` map tasks, a single gather/merge of one partial
-    per task is cheaper than an extra shuffle round — return None. Above
-    it (10k-task scans at 100 TB), return ~sqrt(n) so both the pre-merge
-    groups and the final gather see O(sqrt(n)) rows — the fanout the
-    docstrings of ``merge_partials``/``_gather_estimates`` previously told
-    callers to pick by hand (r3 review item 9)."""
-    if n_partitions <= threshold:
+    Up to ``AUTO_FANOUT_THRESHOLD`` map tasks, a single gather of one
+    partial per task is cheaper than an extra shuffle round — return
+    None. Above it (10k-task scans at 100 TB), return ~sqrt(n) so both
+    the pre-merge groups and the final gather see O(sqrt(n)) rows."""
+    if n_partitions <= AUTO_FANOUT_THRESHOLD:
         return None
     return max(2, min(4096, int(np.ceil(np.sqrt(n_partitions)))))
 
@@ -228,13 +225,13 @@ def merge_serialized(blobs: Iterable, from_bytes: Callable[[bytes], object]):
     return acc
 
 
-def _fold_runs(keys: Sequence[str], sketch_col: str,
-               from_bytes: Callable[[bytes], object], finish):
+def _fold_runs(keys: Sequence[str], from_bytes: Callable[[bytes], object],
+               finish):
     """Per-run fn for :func:`grouped_apply_sorted`: fold the run's
-    sketches and emit ``keys..., **finish(acc, run)`` — ``finish``'s lists
-    may hold several rows (key columns repeat)."""
+    ``sketch`` column and emit ``keys..., **finish(acc, run)`` —
+    ``finish``'s lists may hold several rows (key columns repeat)."""
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = finish(merge_serialized(pdf[sketch_col], from_bytes), pdf)
+        cols = finish(merge_serialized(pdf["sketch"], from_bytes), pdf)
         nrows = len(next(iter(cols.values())))
         row = {k: [pdf[k].iloc[0]] * nrows for k in keys}
         row.update(cols)
@@ -246,21 +243,16 @@ def premerge_partials(
     partials: DataFrame,
     fanout: int,
     from_bytes: Callable[[bytes], object] = dd_from_bytes,
-    keys: Sequence[str] = (),
-    sketch_col: str = "sketch",
 ) -> DataFrame:
-    """One executor pre-merge round: group partial rows by
-    ``(keys, part_id % fanout)`` and merge each group to a single row,
-    bounding whatever consumes the partials next (a driver gather or the
-    final per-key merge) to ``fanout`` rows per key. Output keeps the
-    partial-row contract (``keys..., sketch, n, part_id``) with
-    ``part_id`` = the salt."""
+    """One executor pre-merge round over keyless partials: merge the rows
+    of each ``part_id % fanout`` group to one, bounding the driver gather
+    that consumes them to ``fanout`` rows. Output keeps the partial-row
+    contract (``sketch, n, part_id``) with ``part_id`` = the salt."""
     # coalesce only marks the salt non-NULL, like the part_id it replaces
     salt = F.coalesce(F.pmod(F.col("part_id"), F.lit(fanout)), F.lit(0))
     return (
-        merge_partials(partials.withColumn("__salt", salt),
-                       list(keys) + ["__salt"], from_bytes,
-                       sketch_col=sketch_col)
+        merge_partials(partials.withColumn("__salt", salt), ["__salt"],
+                       from_bytes)
         .withColumn("part_id", F.col("__salt")).drop("__salt")
     )
 
@@ -269,52 +261,21 @@ def merge_partials(
     partials: DataFrame,
     keys: Sequence[str] = (),
     from_bytes: Callable[[bytes], object] = dd_from_bytes,
-    merge_fanout: int | None = None,
-    sketch_col: str = "sketch",
-    map_side_combine: bool = False,
 ) -> DataFrame:
-    """Stage 2: merge partial sketches per key.
-
-    ``map_side_combine=True`` first merges same-key partials WITHIN each
-    input partition (a sort + sorted-run fold, no shuffle) — the sketch
-    analogue of Spark's partial aggregation. This is the lever that
-    matters when partial rows are large or plentiful: it divides both the
-    shuffle bytes and the hot reducer's serial merge chain by the
-    partials-per-partition factor (measured on a 99.9%-hot-key corpus:
-    tools/skew_bench.py).
-
-    ``merge_fanout=k`` additionally inserts a pre-merge round grouped by
-    ``(keys, part_id % k)`` — the post-shuffle two-round pattern: with P
-    surviving partial rows, the final merge per key sees min(P, k) rows.
-    Reach for it when even the combined per-key row count (one per map
-    task) overwhelms a single reducer, e.g. tens of thousands of map tasks
-    at 100 TB.
-    """
+    """Stage 2: merge the ``sketch`` partials of each key and sum their
+    ``n``: ``keys..., sketch binary, n long``. One shuffle by key, one
+    sorted-run fold (:func:`grouped_apply_sorted`)."""
     keys = list(keys)
 
     def merged(acc, pdf):
-        return {sketch_col: [acc.to_bytes()], "n": [int(pdf["n"].sum())]}
-
-    if map_side_combine:
-        # the combined row keeps its run's first part_id (stable sort)
-        combine_fn = _fold_runs(keys, sketch_col, from_bytes, lambda acc, pdf: {
-            **merged(acc, pdf), "part_id": [int(pdf["part_id"].iloc[0])]})
-        local = (partials.sortWithinPartitions(*map(sql_ident, keys))
-                 if keys else partials)
-        partials = _apply_sorted_runs(local, keys, combine_fn,
-                                      partials.schema)
-
-    if merge_fanout and merge_fanout > 1:
-        partials = premerge_partials(partials, merge_fanout, from_bytes,
-                                     keys, sketch_col)
+        return {"sketch": [acc.to_bytes()], "n": [int(pdf["n"].sum())]}
 
     out_schema = StructType(
-        [f for f in partials.schema.fields if f.name in keys]
-        + [StructField(sketch_col, BinaryType(), False),
+        _key_fields(partials, keys)
+        + [StructField("sketch", BinaryType(), False),
            StructField("n", LongType(), False)])
     return grouped_apply_sorted(
-        partials, keys, _fold_runs(keys, sketch_col, from_bytes, merged),
-        out_schema)
+        partials, keys, _fold_runs(keys, from_bytes, merged), out_schema)
 
 
 def resolve_from_bytes(factory: Callable[[], object],
@@ -346,7 +307,6 @@ def sketch_agg(
     factory: Callable[[], object] = DDSketch,
     from_bytes: Callable[[bytes], object] = dd_from_bytes,
     weight_col: str | None = None,
-    merge_fanout: int | None = None,
     precombine: bool = False,
 ) -> DataFrame:
     """Full 2-stage aggregation: ``keys..., sketch binary, n long``.
@@ -380,23 +340,18 @@ def sketch_agg(
     partials = sketch_partials(df, value_col, keys, factory, weight_col,
                                n_from_weight=precombine)
     return merge_partials(partials, keys,
-                          resolve_from_bytes(factory, from_bytes),
-                          merge_fanout)
+                          resolve_from_bytes(factory, from_bytes))
 
 
 def _stored_rows(df: DataFrame, sketch_col: str, keys: Sequence[str],
-                 n_col: str | None = None,
-                 cols: Sequence[str] = ("n", "part_id")) -> DataFrame:
-    """``keys..., sketch, cols...`` of stored sketch rows, one
-    ``selectExpr``: with both ``cols``, the partial-row contract shared
-    by merge_partials. ``n`` carries each row's own contributing-row
-    count (``n_col``, rollup tables) or 1, ``part_id`` its partition."""
+                 n_col: str | None, with_n: bool) -> DataFrame:
+    """``keys..., sketch[, n]`` of stored sketch rows, one ``selectExpr``:
+    with ``n``, the partial-row contract of :func:`merge_partials`, each
+    row's own contributing-row count (``n_col``, rollup tables) or 1."""
     n = f"CAST({sql_ident(n_col)} AS BIGINT)" if n_col else "CAST(1 AS BIGINT)"
-    sql = {"n": f"{n} AS n",
-           "part_id": "CAST(spark_partition_id() AS BIGINT) AS part_id"}
     return df.selectExpr(*map(sql_ident, keys),
                          f"{sql_ident(sketch_col)} AS sketch",
-                         *(sql[c] for c in cols))
+                         *([f"{n} AS n"] if with_n else []))
 
 
 def merge_sketches(
@@ -404,58 +359,40 @@ def merge_sketches(
     sketch_col: str,
     keys: Sequence[str] = (),
     from_bytes: Callable[[bytes], object] = dd_from_bytes,
-    map_side_combine: bool = False,
     n_col: str | None = None,
+    extract=None,
+    out_fields: Sequence[StructField] = (),
 ) -> DataFrame:
     """Re-aggregate stored sketches (``ddsketch(sketch)`` N-way merge,
-    reference ddsketch.c:1439-1520): ``keys..., sketch binary, n long``.
+    reference ddsketch.c:1439-1520): ``keys..., sketch binary, n long``,
+    one shuffle of already-tiny sketch rows. ``n`` counts the merged rows,
+    or sums their ``n_col``.
 
-    Spark-side this is one shuffle of already-tiny sketch rows; partial
-    merging happens map-side too via a pre-merge by input partition.
-    ``n_col`` propagates summed per-row lineage counts instead of
-    counting merged rows.
-    """
+    Given ``extract(acc) -> dict[col, list]``, its columns
+    (``out_fields``) replace ``sketch, n``, computed in the SAME Python
+    stage — the reference's FINALFUNC-inside-the-aggregate shape
+    (``ddsketch_percentile(sketch, q)``, ddsketch--1.0.0.sql:62-70): no
+    scalar-UDF extraction stage after the merge. ``extract``'s lists may
+    have length > 1 (e.g. one row per quantile); key columns repeat."""
     keys = list(keys)
-    # treat each stored sketch row as a "partial" with synthetic lineage
-    partials = _stored_rows(df, sketch_col, keys, n_col)
-    # map_side_combine pays off when many stored sketch rows per key share
-    # a scan partition (see merge_partials; measured on hot keys in
-    # tools/skew_bench.py) — keep it off for small reagg jobs
-    return merge_partials(partials, keys, from_bytes,
-                          map_side_combine=map_side_combine)
-
-
-def merge_sketches_extract(
-    df: DataFrame,
-    sketch_col: str,
-    keys: Sequence[str],
-    extract,
-    out_fields: Sequence[StructField],
-    from_bytes: Callable[[bytes], object] = dd_from_bytes,
-) -> DataFrame:
-    """Merge stored sketches per key and apply ``extract(acc) ->
-    dict[col, list]`` in the SAME Python stage — the reference's
-    FINALFUNC-inside-the-aggregate shape (``ddsketch_percentile(sketch,
-    q)``, ddsketch--1.0.0.sql:62-70): one shuffle + one Python stage
-    instead of a merge stage followed by a scalar-UDF extraction stage
-    (measured ~0.3s/query of stage overhead at sf0.1). ``extract``'s lists
-    may have length > 1 (e.g. one row per quantile); key columns repeat."""
-    keys = list(keys)
-    partials = _stored_rows(df, sketch_col, keys)
-    out_schema = StructType(_key_fields(df, keys) + list(out_fields))
+    partials = _stored_rows(df, sketch_col, keys, n_col, extract is None)
+    if extract is None:
+        return merge_partials(partials, keys, from_bytes)
     return grouped_apply_sorted(
         partials, keys,
-        _fold_runs(keys, "sketch", from_bytes, lambda acc, pdf: extract(acc)),
-        out_schema)
+        _fold_runs(keys, from_bytes, lambda acc, pdf: extract(acc)),
+        StructType(_key_fields(partials, keys) + list(out_fields)))
 
 
-def quantile_extract(qs: Sequence[float]):
-    """``(extract, out_fields)`` for :func:`merge_sketches_extract`: one
-    ``(q, est)`` row per requested quantile of the merged sketch."""
+def quantile_extract(qs: Sequence[float]) -> dict:
+    """``extract`` and ``out_fields`` of :func:`merge_sketches` and
+    :func:`fold_stored`: one ``(q, est)`` row per requested quantile of
+    the merged sketch."""
     qs = [float(q) for q in qs]
-    return (lambda s: {"q": qs, "est": [float(e) for e in s.quantile(qs)]},
-            [StructField("q", DoubleType(), False),
-             StructField("est", DoubleType(), True)])
+    return {"extract": lambda s: {"q": qs,
+                                  "est": [float(e) for e in s.quantile(qs)]},
+            "out_fields": [StructField("q", DoubleType(), False),
+                           StructField("est", DoubleType(), True)]}
 
 
 def fold_key_runs(tbl: pa.Table, keys: Sequence[str],
@@ -487,24 +424,21 @@ def fold_key_runs(tbl: pa.Table, keys: Sequence[str],
 
 def fold_stored(df: DataFrame, sketch_col: str, keys: Sequence[str],
                 from_bytes: Callable[[bytes], object] = dd_from_bytes,
-                extract=None, out_fields: Sequence[StructField] = (),
-                n_col: str | None = None) -> DataFrame:
-    """:func:`merge_sketches`, or :func:`merge_sketches_extract` given
-    ``extract``, folded on the driver into a ``local_frame`` when ``df``
-    only reads stored rows (``scan_only``) and at most
-    ``DRIVER_FOLD_MAX_ROWS`` of them fetch at call time (one task,
-    ``bounded_arrow``). Otherwise that lazy plan, same rows: a table
-    still to be built is not fetched, as the plan would build it again."""
+                n_col: str | None = None, extract=None,
+                out_fields: Sequence[StructField] = ()) -> DataFrame:
+    """:func:`merge_sketches`, folded on the driver into a
+    ``local_frame`` when ``df`` only reads stored rows (``scan_only``)
+    and at most ``DRIVER_FOLD_MAX_ROWS`` of them fetch at call time (one
+    task, ``bounded_arrow``). Otherwise that lazy plan, same rows: a
+    table still to be built is not fetched, as the plan would build it
+    again."""
     keys = list(keys)
-    fetch = _stored_rows(df, sketch_col, keys, n_col,
-                         () if extract else ["n"])
+    fetch = _stored_rows(df, sketch_col, keys, n_col, extract is None)
     tbl = (bounded_arrow(fetch, DRIVER_FOLD_MAX_ROWS) if scan_only(fetch)
            else None)
     if tbl is None:
-        return (merge_sketches_extract(df, sketch_col, keys, extract,
-                                       out_fields, from_bytes) if extract
-                else merge_sketches(df, sketch_col, keys, from_bytes,
-                                    n_col=n_col))
+        return merge_sketches(df, sketch_col, keys, from_bytes, n_col,
+                              extract, out_fields)
     fields = fetch.schema.fields[:len(keys)] + (
         list(out_fields) if extract else [
             StructField("sketch", BinaryType(), False),
@@ -531,8 +465,8 @@ def key_runs(kdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
 
 def grouped_apply_sorted(df: DataFrame, keys: Sequence[str], fn,
                          schema: StructType, per_run: bool = True) -> DataFrame:
-    """``groupBy(keys).applyInPandas(fn, schema)`` with O(Arrow batch)
-    overhead instead of O(groups).
+    """Spark's grouped ``applyInPandas`` of ``fn`` by ``keys``, with
+    O(Arrow batch) overhead instead of O(groups).
 
     FlatMapGroupsInPandas ships EVERY group as its own Arrow batch through
     the Python worker — ~0.15 ms per group, which dominates when there are
@@ -541,7 +475,8 @@ def grouped_apply_sorted(df: DataFrame, keys: Sequence[str], fn,
     Arrow batches, and ``fn`` is applied per contiguous key run, carrying
     a run that spans a batch boundary. Output is identical: same shuffle
     (groupBy's exec is also sort-based), same per-group fn, exact integer
-    results.
+    results. Zero keys make one run: every row goes to one partition (no
+    sort) and ``fn`` sees its batches concatenated once.
 
     ``per_run=False`` hands ``fn`` the whole complete-runs SLICE of each
     batch instead of one call per key run — for fns that vectorize across
@@ -552,20 +487,16 @@ def grouped_apply_sorted(df: DataFrame, keys: Sequence[str], fn,
     even when a batch holds a NULL key.
     """
     keys = list(keys)
-    if not keys:
-        return df.groupBy().applyInPandas(fn, schema)
     quoted = list(map(sql_ident, keys))
-    rep = df.repartition(*quoted).sortWithinPartitions(*quoted)
-    return _apply_sorted_runs(rep, keys, fn, schema, per_run)
+    rep = (df.repartition(*quoted).sortWithinPartitions(*quoted) if keys
+           else df.repartition(1, F.lit(0)))
 
-
-def _apply_sorted_runs(df: DataFrame, keys: Sequence[str], fn,
-                       schema: StructType, per_run: bool = True) -> DataFrame:
-    """The body of :func:`grouped_apply_sorted` over partitions that are
-    already sorted by ``keys``: no shuffle, so a key's runs in different
-    partitions stay separate (the map-side combine of
-    :func:`merge_partials`). Zero keys make each partition one run."""
     def run(pdfs):
+        if not keys:
+            pdfs = list(pdfs)
+            if pdfs:
+                yield fn(pd.concat(pdfs, ignore_index=True))
+            return
         pending = None
         for pdf in pdfs:
             if pending is not None:
@@ -592,7 +523,7 @@ def _apply_sorted_runs(df: DataFrame, keys: Sequence[str], fn,
         if pending is not None and len(pending):
             yield fn(pending)
 
-    return map_batches(df, run, schema)
+    return map_batches(rep, run, schema)
 
 
 def map_batches(df: DataFrame, fn, schema: StructType) -> DataFrame:

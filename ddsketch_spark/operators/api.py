@@ -72,7 +72,7 @@ def ddsketch_percentile_from_sketches(df: DataFrame, sketch_col: str, q,
     """Aggregates #6/#7: merge stored sketches, extract quantile(s)."""
     validate_quantiles([q] if not isinstance(q, (list, tuple)) else q)
     merged = merge_sketches(df, sketch_col, keys)
-    return _finalize(merged, keys, sketch_quantile(F.col(sketch_col), q), alias)
+    return _finalize(merged, keys, sketch_quantile(F.col("sketch"), q), alias)
 
 
 def ddsketch_percentile_of_from_sketches(df: DataFrame, sketch_col: str, x,
@@ -80,7 +80,7 @@ def ddsketch_percentile_of_from_sketches(df: DataFrame, sketch_col: str, x,
                                          alias: str = "percentile_of") -> DataFrame:
     """Aggregates #8/#9."""
     merged = merge_sketches(df, sketch_col, keys)
-    return _finalize(merged, keys, sketch_rank_of(F.col(sketch_col), x), alias)
+    return _finalize(merged, keys, sketch_rank_of(F.col("sketch"), x), alias)
 
 
 def ddsketch_avg(df: DataFrame, value_col: str, alpha: float, nbuckets: int,
@@ -115,7 +115,7 @@ def ddsketch_avg_from_sketches(df: DataFrame, sketch_col: str, low: float,
     """Aggregate #18."""
     validate_trim(low, high)
     merged = merge_sketches(df, sketch_col, keys)
-    return _finalize(merged, keys, sketch_trimmed(F.col(sketch_col), low, high, "avg"), alias)
+    return _finalize(merged, keys, sketch_trimmed(F.col("sketch"), low, high, "avg"), alias)
 
 
 def ddsketch_sum_from_sketches(df: DataFrame, sketch_col: str, low: float,
@@ -124,7 +124,7 @@ def ddsketch_sum_from_sketches(df: DataFrame, sketch_col: str, low: float,
     """Aggregate #21."""
     validate_trim(low, high)
     merged = merge_sketches(df, sketch_col, keys)
-    return _finalize(merged, keys, sketch_trimmed(F.col(sketch_col), low, high, "sum"), alias)
+    return _finalize(merged, keys, sketch_trimmed(F.col("sketch"), low, high, "sum"), alias)
 
 
 def kll_percentile(df: DataFrame, value_col: str, q,

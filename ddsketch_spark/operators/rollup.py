@@ -244,7 +244,7 @@ def range_percentile(sketch_table: DataFrame, t0, t1, qs: Sequence[float],
         g = int(partition_granularity_seconds)
         cond += f" AND pbucket >= {(e0 // g) * g} AND pbucket < {e1}"
     return fold_stored(sketch_table.where(cond), "sketch", keys,
-                       _deser(on_overflow), *quantile_extract(qs))
+                       _deser(on_overflow), **quantile_extract(qs))
 
 
 def compact_sketch_table(sketch_table: DataFrame, boundary,
@@ -319,4 +319,4 @@ def range_percentile_tiered(tiered: DataFrame, t0, t1, qs: Sequence[float],
                 f"drop the straddled bucket's data")
     in_range = tiered.where(f"bucket >= {e0} AND bucket + gran <= {e1}")
     return fold_stored(in_range, "sketch", keys, _deser(on_overflow),
-                       *quantile_extract(qs))
+                       **quantile_extract(qs))

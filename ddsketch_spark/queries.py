@@ -43,8 +43,8 @@ from ddsketch_spark.functions.sketch_udfs import (
 )
 from ddsketch_spark.operators import api
 from ddsketch_spark.operators.aggregate import (
-    gather_partials, merge_serialized, merge_sketches, merge_sketches_extract,
-    quantile_extract, sketch_agg,
+    gather_partials, merge_serialized, merge_sketches, quantile_extract,
+    sketch_agg,
 )
 from ddsketch_spark.operators.multimodal import (
     extract_features, resize_images, sample_frames, synthesize_media_arith,
@@ -294,13 +294,13 @@ def dd_reagg_p90_by_flag(spark, sf_dir):
     """Lifecycle B (README.md:121-124): pre-aggregate sketches at a finer
     grouping, then merge up and extract — must equal the direct build.
     Merge + quantile extraction run as ONE aggregate stage
-    (merge_sketches_extract), mirroring the reference's
+    (``merge_sketches`` with ``extract``), mirroring the reference's
     ddsketch_percentile(sketch, q) FINALFUNC shape."""
     df = _t(spark, sf_dir, "lineitem")
     fine = api.ddsketch(df, "l_extendedprice", 0.01, 2048,
                         keys=["l_returnflag", "l_linestatus"])
-    return merge_sketches_extract(fine, "sketch", ["l_returnflag"],
-                                  *quantile_extract([0.9]))
+    return merge_sketches(fine, "sketch", ["l_returnflag"],
+                          **quantile_extract([0.9]))
 
 
 # derived from the package location, not a hardcoded checkout path, so
@@ -408,8 +408,8 @@ def dd_sketch_store_roundtrip(spark, sf_dir):
     write_table(fine, path)
     _mark_scratch_owner(path)
     stored = read_table(spark, path)
-    return merge_sketches_extract(stored, "sketch", ["l_returnflag"],
-                                  *quantile_extract([0.9]))
+    return merge_sketches(stored, "sketch", ["l_returnflag"],
+                          **quantile_extract([0.9]))
 
 
 def dd_textlen_by_lang(spark, sf_dir):

@@ -43,6 +43,7 @@ _ENTRY = re.compile(r"(\d{20})\.json")
 _THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 # the threshold is a session conf: raise it for one load at a time
 _THRESHOLD_LOCK = threading.Lock()
+_PATH_SEP = "\n"   # joins the paths of one load_paths call
 
 
 def table_format() -> str:
@@ -239,15 +240,27 @@ def load_paths(spark: SparkSession, paths: list[str], base: str,
     serially on the driver, not with the parallel-listing job it runs for
     more than ``spark.sql.sources.parallelPartitionDiscovery.threshold``
     (32) paths: the threshold is raised to ``len(paths)`` for this one
-    load and restored after."""
+    load and restored after.
+
+    The paths cross py4j as one newline-joined string split in the JVM:
+    a Python list crosses as one ``ArrayList.add`` round trip per path. A
+    path holding a newline raises ``ValueError``."""
+    bad = [p for p in paths if _PATH_SEP in p]
+    if bad:
+        raise ValueError(f"paths hold a newline: {bad!r}")
     reader = spark.read.format(fmt).option("basePath", base)
     if schema is not None:
         reader = reader.schema(schema)
+    if not paths:
+        return reader.load(paths)
+    pattern = JavaClass("java.util.regex.Pattern",
+                        spark.sparkContext._gateway._gateway_client)
+    jpaths = pattern.compile(_PATH_SEP).split(_PATH_SEP.join(paths))
     with _THRESHOLD_LOCK:
         prev = spark.conf.get(_THRESHOLD, None)
         spark.conf.set(_THRESHOLD, str(len(paths)))
         try:
-            return reader.load(paths)
+            return reader._df(reader._jreader.load(jpaths))
         finally:
             if prev is None:
                 spark.conf.unset(_THRESHOLD)

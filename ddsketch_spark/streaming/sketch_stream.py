@@ -204,10 +204,8 @@ def make_maintainer_process(
             both = both.unionByName(tables.load_paths(
                 spark, prev, base, schema).select(*quoted, "sketch", "n"))
 
-        merged = (merge_partials(
-            both.withColumn("part_id", F.monotonically_increasing_id())
-                .select(*quoted, "sketch", "part_id", "n"), keys=keys)
-            .withColumn("__bucket", bucket_expr()))
+        merged = (merge_partials(both, keys)
+                  .withColumn("__bucket", bucket_expr()))
         if touched:
             (merged.repartition("__bucket")
              .write.mode("overwrite")

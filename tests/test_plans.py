@@ -50,12 +50,13 @@ def _calls_outside(pattern: str, allowed: set) -> list[str]:
 def test_python_stages_enter_through_two_wrappers():
     """Python receives Arrow data in exactly two places: scalars through
     ``rows.vectorize``, batch stages through ``aggregate.map_batches``.
-    A raw ``pandas_udf(`` / ``mapInPandas(`` / ``mapInArrow(`` anywhere
-    else in the library is a stage that bypasses the exact-integer
-    batch reader."""
-    stray = _calls_outside(r"pandas_udf\(|mapInPandas\(|mapInArrow\(",
-                           {("functions/rows.py", "vectorize"),
-                            ("operators/aggregate.py", "map_batches")})
+    A raw ``pandas_udf(`` / ``mapInPandas(`` / ``mapInArrow(`` /
+    ``applyInPandas(`` anywhere else in the library is a stage that
+    bypasses the exact-integer batch reader."""
+    stray = _calls_outside(
+        r"pandas_udf\(|mapInPandas\(|mapInArrow\(|applyInPandas\(",
+        {("functions/rows.py", "vectorize"),
+         ("operators/aggregate.py", "map_batches")})
     assert not stray, "\n".join(stray)
 
 
@@ -295,11 +296,13 @@ def test_windowed_streaming_agg_is_jvm_native(spark, tmp_path):
 
 
 def test_keyed_merge_single_exchange_single_python_stage(spark):
-    """The keyed sketch-merge path (grouped_apply_sorted) must stay ONE
+    """The sketch-merge path (grouped_apply_sorted) must stay ONE
     repartition Exchange + ONE MapInArrow: a refactor that silently
     double-shuffles or adds a second Python stage would double the
     dominant cost at high key cardinality. Pinned on merge_partials
-    standalone (stored partial rows in, merged sketches out)."""
+    standalone (stored partial rows in, merged sketches out), keyed and
+    keyless: zero keys gather every row into one partition with no sort
+    and no per-group ``FlatMapGroupsInPandas``."""
     import pandas as pd
 
     from ddsketch_spark.core.ddsketch import DDSketch
@@ -308,18 +311,22 @@ def test_keyed_merge_single_exchange_single_python_stage(spark):
     rows = []
     for k in ("a", "b"):
         s = DDSketch(0.05, 1024).update(np.array([1.0, 2.0]))
-        rows.append((k, s.to_bytes(), 0, 2))
+        rows.append((k, s.to_bytes(), 2))
     partials = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["k", "sketch", "part_id", "n"]))
-    merged = merge_partials(partials, keys=["k"])
-    plan = _plan(merged)
-    # keep only the tree portion (the detail section repeats node names)
-    tree = plan.split("(1) ")[0]
-    assert tree.count("MapInArrow") == 1, tree[:2000]
-    assert tree.count("Exchange") == 1, tree[:2000]
-    assert "FlatMapGroupsInPandas" not in tree
-    rows_out = merged.collect()
-    assert {r["k"] for r in rows_out} == {"a", "b"}
+        pd.DataFrame(rows, columns=["k", "sketch", "n"]))
+    for keys in (["k"], []):
+        merged = merge_partials(partials, keys=keys)
+        # keep only the tree portion (the detail section repeats node names)
+        tree = _plan(merged).split("(1) ")[0]
+        assert tree.count("MapInArrow") == 1, tree[:2000]
+        assert tree.count("Exchange") == 1, tree[:2000]
+        assert "FlatMapGroupsInPandas" not in tree
+        assert keys or "Sort" not in tree, tree[:2000]
+        rows_out = merged.collect()
+        if keys:
+            assert {r["k"] for r in rows_out} == {"a", "b"}
+        else:
+            assert [r["n"] for r in rows_out] == [4]
 
 
 def test_sketch_store_roundtrip_scans_written_table(spark):

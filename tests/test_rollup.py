@@ -552,6 +552,46 @@ def test_failed_commit_keeps_previous_snapshot(spark, tmp_path,
         _stored_rows(read_sketch_table(spark, clean))
 
 
+def test_load_paths_round_trips_do_not_grow_with_paths(spark, tmp_path):
+    """``tables.load_paths`` hands its paths to the JVM in a fixed number
+    of py4j round trips: loading 50 partition directories makes as many
+    main-thread calls as loading 5, and every row comes back. A path
+    holding the newline that joins them is refused."""
+    import threading
+
+    from py4j.java_gateway import GatewayClient
+
+    from ddsketch_spark.sources import tables
+
+    base = str(tmp_path / "t")
+    spark.range(50).selectExpr("id", "id AS p").write.partitionBy(
+        "p").parquet(base)
+    paths = [f"{base}/p={i}" for i in range(50)]
+    schema = spark.read.parquet(base).schema
+    tables.load_paths(spark, paths[:5], base, schema)  # warm lookups
+    main, send = threading.get_ident(), GatewayClient.send_command
+
+    def calls(n):
+        made = []
+
+        def counting(client, *args, **kwargs):
+            if threading.get_ident() == main:
+                made.append(1)
+            return send(client, *args, **kwargs)
+
+        GatewayClient.send_command = counting
+        try:
+            df = tables.load_paths(spark, paths[:n], base, schema)
+        finally:
+            GatewayClient.send_command = send
+        assert sorted(r.p for r in df.collect()) == list(range(n))
+        return len(made)
+
+    assert calls(5) == calls(50)
+    with pytest.raises(ValueError, match="newline"):
+        tables.load_paths(spark, [f"{base}/p=0\nx"], base, schema)
+
+
 def test_empty_table_reads_zero_rows(spark, tmp_path):
     path = str(tmp_path / "empty")
     table = _days_table(spark, 1).where(F.lit(False))
@@ -610,12 +650,11 @@ def test_driver_fold_equals_executor_merge(spark, monkeypatch):
          for i, v in enumerate(rng.lognormal(2.0, 1.0, 600))],
         "k long, part int, v double")
     table = _in_memory(dd_api(raw, "v", ALPHA, NB, keys=["part", "k"]))
-    extract, fields = quantile_extract([0.5, 0.99])
+    quantiles = quantile_extract([0.5, 0.99])
     for question in (
             lambda: fold_stored(table, "sketch", ["k"]),
             lambda: fold_stored(table, "sketch", ["k"], n_col="n"),
-            lambda: fold_stored(table, "sketch", ["k"], extract=extract,
-                                out_fields=fields)):
+            lambda: fold_stored(table, "sketch", ["k"], **quantiles)):
         driver, executor = _both_paths(monkeypatch, question)
         assert driver.schema == executor.schema
         assert _rows(driver) == _rows(executor)
@@ -669,7 +708,7 @@ def test_driver_fold_empty_range(spark, day_store):
     """A range holding no stored row gives zero rows with the executor
     plan's schema."""
     from ddsketch_spark.operators.aggregate import (
-        merge_sketches_extract, quantile_extract)
+        merge_sketches, quantile_extract)
 
     _, path = day_store
     stored = read_sketch_table(spark, path)
@@ -677,8 +716,8 @@ def test_driver_fold_empty_range(spark, day_store):
     got = range_percentile(stored, t0, t0 + dt.timedelta(days=1), [0.5],
                            HOUR, keys=["etype"],
                            partition_granularity_seconds=DAY)
-    lazy = merge_sketches_extract(stored.where(F.lit(False)), "sketch",
-                                  ["etype"], *quantile_extract([0.5]))
+    lazy = merge_sketches(stored.where(F.lit(False)), "sketch", ["etype"],
+                          **quantile_extract([0.5]))
     assert _node(got) == "LocalTableScan"
     assert got.schema == lazy.schema and got.collect() == []
 

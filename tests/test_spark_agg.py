@@ -70,14 +70,6 @@ def test_partitioning_invariance(data):
     assert bytes(b1) == bytes(b16)
 
 
-def test_merge_fanout_identical(data):
-    df, _ = data
-    plain = sketch_agg(df, "v", keys=["k"], merge_fanout=None).collect()
-    fan = sketch_agg(df, "v", keys=["k"], merge_fanout=3).collect()
-    assert {r["k"]: bytes(r["sketch"]) for r in plain} == \
-           {r["k"]: bytes(r["sketch"]) for r in fan}
-
-
 def test_auto_merge_fanout_threshold():
     from ddsketch_spark.operators.aggregate import auto_merge_fanout
 
@@ -86,13 +78,12 @@ def test_auto_merge_fanout_threshold():
     assert auto_merge_fanout(513) == 23            # ceil(sqrt(513))
     assert auto_merge_fanout(10_000) == 100        # 10k-task scan -> 100
     assert auto_merge_fanout(100_000_000) == 4096  # capped
-    assert auto_merge_fanout(8, threshold=4) == 3  # threshold override
 
 
 def test_premerge_partials_identical_result(data):
-    """An executor pre-merge round must not change the final sketch —
-    same guarantee as merge_fanout, exercised through the standalone
-    premerge_partials used by the auto-escalating gather path."""
+    """An executor pre-merge round must not change the final sketch:
+    the standalone premerge_partials of the auto-escalating gather
+    path."""
     from ddsketch_spark.core.ddsketch import from_bytes as dd_from_bytes
     from ddsketch_spark.operators.aggregate import (
         premerge_partials, sketch_partials)
@@ -136,13 +127,25 @@ def test_percentile_within_alpha(data):
 
 
 def test_reaggregate_stored_sketches(spark, data):
+    """The ``*_from_sketches`` aggregates read a stored sketch column of
+    any name: ``merge_sketches`` names its output ``sketch``."""
     df, pdf = data
-    stored = sketch_agg(df, "v", keys=["k"])  # keys..., sketch, n
-    merged = api.ddsketch_percentile_from_sketches(stored, "sketch", 0.9, alias="p90")
-    got = merged.collect()[0]["p90"]
     allv = pdf[pdf["v"].notna()]["v"].to_numpy()
-    want = float(kernel_sketch(allv).quantile(0.9))
-    assert got == pytest.approx(want, rel=1e-12)
+    want = kernel_sketch(allv)
+    built = sketch_agg(df, "v", keys=["k"])  # keys..., sketch, n
+    for col in ("sketch", "sk", "my `sk"):
+        stored = built.withColumnRenamed("sketch", col)
+        got = api.ddsketch_percentile_from_sketches(
+            stored, col, 0.9, alias="p90").collect()[0]["p90"]
+        assert got == pytest.approx(float(want.quantile(0.9)), rel=1e-12)
+        rank = api.ddsketch_percentile_of_from_sketches(
+            stored, col, 100.0).collect()[0]["percentile_of"]
+        assert rank == pytest.approx(float(want.rank_of(100.0)), rel=1e-12)
+        for fn, kind, exact in (
+                (api.ddsketch_avg_from_sketches, "avg", want.trimmed_avg),
+                (api.ddsketch_sum_from_sketches, "sum", want.trimmed_sum)):
+            got = fn(stored, col, 0.1, 0.9).collect()[0][kind]
+            assert got == pytest.approx(exact(0.1, 0.9), rel=1e-12), col
 
 
 def test_scalar_udfs(spark, data):
@@ -301,35 +304,12 @@ def test_table_format_switch_roundtrip(spark, tmp_path, data, monkeypatch):
         write_table(fine, str(tmp_path / "nope"))
 
 
-def test_map_side_combine_identical_result(spark, data):
-    """merge_partials(map_side_combine=True) and the fanout variants are
-    bit-identical to the single-round merge (exact integer bucket sums)."""
-    from ddsketch_spark.core.ddsketch import from_bytes
-    from ddsketch_spark.operators.aggregate import (
-        merge_partials, sketch_partials,
-    )
-
-    df, pdf = data
-    parts = sketch_partials(df, "v", keys=["k"],
-                            factory=lambda: DDSketch(ALPHA, NB))
-    base = {r["k"]: (bytes(r["sketch"]), r["n"])
-            for r in merge_partials(parts, keys=["k"]).collect()}
-    for fanout, combine in [(None, True), (4, True), (4, False)]:
-        got = {r["k"]: (bytes(r["sketch"]), r["n"])
-               for r in merge_partials(parts, keys=["k"], merge_fanout=fanout,
-                                       map_side_combine=combine).collect()}
-        assert got.keys() == base.keys()
-        for k in base:
-            assert from_bytes(got[k][0]) == from_bytes(base[k][0]), (k, fanout, combine)
-            assert got[k][1] == base[k][1]
-
-
 @pytest.mark.parametrize("key", ["__bucket", "lang code"])
 def test_map_side_combine_any_key_name(spark, key):
-    """map_side_combine must work for key columns whose names are not
+    """A keyed merge_partials works for key columns whose names are not
     plain Python identifiers: a leading underscore (the maintainer's
     ``__bucket``) or a space. Several same-key partials share each input
-    partition, so the combine really merges."""
+    partition."""
     from ddsketch_spark.operators.aggregate import merge_partials
 
     rng = np.random.default_rng(31)
@@ -338,12 +318,11 @@ def test_map_side_combine_any_key_name(spark, key):
         k = "ab"[i % 2]
         v = np.exp(rng.standard_normal(50))
         vals[k].append(v)
-        rows.append((k, DDSketch(ALPHA, NB).update(v).to_bytes(), i % 3, 50))
+        rows.append((k, DDSketch(ALPHA, NB).update(v).to_bytes(), 50))
     partials = spark.createDataFrame(
-        pd.DataFrame(rows, columns=[key, "sketch", "part_id", "n"])
-    ).coalesce(2)
-    got = {r[key]: (bytes(r["sketch"]), r["n"]) for r in merge_partials(
-        partials, keys=[key], map_side_combine=True).collect()}
+        pd.DataFrame(rows, columns=[key, "sketch", "n"])).coalesce(2)
+    got = {r[key]: (bytes(r["sketch"]), r["n"])
+           for r in merge_partials(partials, keys=[key]).collect()}
     assert got.keys() == {"a", "b"}
     for k, vs in vals.items():
         want = DDSketch(ALPHA, NB).update(np.concatenate(vs))
@@ -611,8 +590,7 @@ def test_gather_auto_premerge_wiring(spark, monkeypatch):
           .select(F.col("l_extendedprice").alias("v")).repartition(8))
     plain = _gather_estimates(df, lambda: DDSketch(0.01, 2048),
                               dd_from_bytes)
-    monkeypatch.setattr(agg_mod, "auto_merge_fanout",
-                        lambda n, threshold=512: 3)
+    monkeypatch.setattr(agg_mod, "auto_merge_fanout", lambda n: 3)
     forced = _gather_estimates(df, lambda: DDSketch(0.01, 2048),
                                dd_from_bytes)
     assert list(plain) == list(forced)

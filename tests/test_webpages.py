@@ -290,10 +290,8 @@ def test_driver_finalize_matches_spark_merge(spark, tmp_path):
                   n_batches=3, qs=qs)
     partials = spark.read.parquet(
         *[os.path.join(ckpt, f"batch={b}") for b in range(3)])
-    merged = merge_partials(
-        partials.select("lang", "sketch",
-                        F.col("batch").cast("long").alias("part_id"), "n"),
-        keys=["lang"])
+    merged = merge_partials(partials.select("lang", "sketch", "n"),
+                            keys=["lang"])
     qarr = F.array(*[F.lit(float(q)) for q in qs]).alias("q")
     earr = sketch_quantile(F.col("sketch"), qs).alias("est")
     spark_result = (

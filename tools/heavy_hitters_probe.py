@@ -39,8 +39,7 @@ def main() -> None:
 
     from ddsketch_spark.core.spacesaving import SpaceSaving
     from ddsketch_spark.core.spacesaving import from_bytes as ss_from_bytes
-    from ddsketch_spark.operators.aggregate import (
-        auto_merge_fanout, premerge_partials, sketch_partials)
+    from ddsketch_spark.operators.aggregate import gather_partials
     from ddsketch_spark.plans.session import get_spark
 
     spark = get_spark("hh-probe", master="local[32]", shuffle_partitions=64)
@@ -69,11 +68,8 @@ def main() -> None:
 
     # sketched path: O(capacity) partials + gather merge
     t0 = time.perf_counter()
-    parts_df = sketch_partials(
-        tokens, "token", factory=lambda: SpaceSaving(args.capacity))
-    fan = auto_merge_fanout(64)
-    if fan:
-        parts_df = premerge_partials(parts_df, fan, ss_from_bytes)
+    parts_df = gather_partials(
+        tokens, "token", lambda: SpaceSaving(args.capacity), ss_from_bytes)
     acc = None
     gathered_bytes = 0
     for r in parts_df.collect():
